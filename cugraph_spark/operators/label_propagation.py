@@ -43,12 +43,11 @@ instead of all E, and the restricted-edges⋈state label join keeps the
 dense path's broadcast/shuffle-hash strategy (only the frontier-sized
 side exchanges).
 
-``mode="csr"`` (round 5): the per-(dst,label) score sums run as a
-per-block factorize+bincount over packed mmap CSR blocks
-(``plans/csr_blocks.py``) with only the O(V) label vector crossing
-Arrow; the argmax reduce stays the same Catalyst aggregation, and the
-synchronous-update cycle detection above supplies the early
-termination the (csr-disabled) frontier path used to cheapen.
+There is no packed-CSR mode (``plans/csr_blocks.py``): the argmax
+needs every (dst, label) weight sum, which has no compact per-dst
+accumulator, and the per-block factorize+bincount variant measured
+205.0s vs the dataframe plan's 76.1s at RMAT-23 (round 5), so it was
+deleted.
 """
 
 from __future__ import annotations
@@ -79,85 +78,6 @@ _FRONTIER_CAND_CAP = 32_000_000
 _FRONTIER_CAND_FRAC_DEN = 8  # n_cand must be < n_edges / this
 
 
-def _csr_lpa_scores(block_dir: str, manifest: dict, meta: dict, identity: bool):
-    """Per-pid dense LPA superstep over a packed CSR block
-    (``plans/csr_blocks.py``): expand the incoming label slice to a
-    per-edge candidate array with ``np.repeat`` over the indptr, then
-    compute the per-(dst, candidate-label) weight sums with ONE
-    hash-factorize + bincount — the in-UDF partial combine. Emits
-    ``(dst, cand, w)`` partials; the argmax stays a Catalyst
-    aggregation (map-side combinable) so the reduce semantics are
-    byte-identical to the dataframe plan. ``identity=True`` is
-    superstep 0 (labels(v) = v ⇒ no slice ships)."""
-
-    def fn(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from ..plans.csr_blocks import (
-            load_block,
-            scatter_state_for_srcs,
-            state_values_for_srcs,
-        )
-
-        pid = int(pdf["pid"].iloc[0])
-        empty = pd.DataFrame(
-            {
-                "dst": pd.Series([], dtype="int64"),
-                "cand": pd.Series([], dtype="int64"),
-                "w": pd.Series([], dtype="float64"),
-            }
-        )
-        if pid not in manifest:
-            return empty
-        blk = load_block(block_dir, pid, meta)
-        su = np.asarray(blk["su"])
-        indptr = np.asarray(blk["indptr"])
-        w = np.asarray(blk["w"])
-        if identity:
-            lab_src = su.astype(np.int64, copy=False)
-        elif meta["ids"] == "dense":
-            lab_src = scatter_state_for_srcs(
-                pdf["vertex"].to_numpy(np.int64),
-                pdf["labels"].to_numpy(np.int64),
-                su,
-                meta["hi1"],
-            )
-        else:
-            lab_src = state_values_for_srcs(
-                pdf["vertex"].to_numpy(np.int64),
-                pdf["labels"].to_numpy(np.int64),
-                su,
-            )
-        cand = np.repeat(lab_src, np.diff(indptr))
-        if meta["ids"] == "dense":
-            # labels are vertex ids < hi1, so (dst, cand) packs into
-            # one int64 key (hi1 ≤ 2^26 ⇒ key < 2^52)
-            dstv = np.asarray(blk["dr"]).astype(np.int64, copy=False)
-            key = dstv * np.int64(meta["hi1"]) + cand
-            codes, uniq = pd.factorize(key, sort=False)
-            sums = np.bincount(codes, weights=w)
-            uniq = np.asarray(uniq)
-            u_dst = uniq // np.int64(meta["hi1"])
-            u_cand = uniq - u_dst * np.int64(meta["hi1"])
-        else:
-            # arbitrary id space: factorize the candidate labels first
-            # (L = distinct labels in this block, shrinks as
-            # communities form), then pack with the int32 dst codes
-            ccode, cu = pd.factorize(cand, sort=False)
-            L = np.int64(len(cu))
-            key = np.asarray(blk["dc"]).astype(np.int64) * L + ccode
-            codes, uniq = pd.factorize(key, sort=False)
-            sums = np.bincount(codes, weights=w)
-            uniq = np.asarray(uniq)
-            du = np.asarray(blk["du"])
-            u_dst = du[(uniq // L)].astype(np.int64, copy=False)
-            u_cand = np.asarray(cu)[(uniq % L).astype(np.int64)]
-        return pd.DataFrame({"dst": u_dst, "cand": u_cand, "w": sums})
-
-    return fn
-
-
 def label_propagation(
     G: Graph,
     max_iter: int = 20,
@@ -171,8 +91,6 @@ def label_propagation(
     superstep_metrics: list | None = None,
     detect_cycle: bool = True,
     tie_break: str = "min",
-    mode: str = "dataframe",
-    block_dir: str | None = None,
 ) -> DataFrame:
     """Returns DataFrame ``[vertex, labels]``. Requires an undirected
     (symmetrized) graph — incident weight means both directions.
@@ -226,25 +144,9 @@ def label_propagation(
     label wins. The literature's standard oscillation damper — a
     2-cycle requires a strictly-better foreign label, so bipartite
     flip-flop dies out. Changes which labeling converges, hence
-    opt-in.
-
-    ``mode="csr"``: pack the edges ONCE into per-pid mmap CSR blocks
-    (``plans/csr_blocks.py``) and run every superstep's per-(dst,
-    label) weight sums as a per-block factorize+bincount with only the
-    O(V) label vector crossing Arrow; the argmax reduce stays the same
-    Catalyst aggregation, so labels are identical iteration-for-
-    iteration. The affected-set frontier path is DISABLED in csr mode
-    (exact-argmax recomputation needs in-edges of affected vertices,
-    which live across all src-keyed blocks — a dst-keyed second block
-    set would double the pack; the cycle-stop above already removes
-    the oscillating tail the frontier mode existed to cheapen).
-    ``block_dir`` must be shared storage on a multi-node cluster;
-    default a local temp dir, cleaned up on return; manifest-listed
-    blocks missing at read time RAISE (torn-deployment guard)."""
+    opt-in."""
     if tie_break not in ("min", "hold"):
         raise ValueError(f"unknown tie_break: {tie_break!r}")
-    if mode not in ("dataframe", "csr"):
-        raise ValueError(f"unknown mode: {mode!r}")
     if G.directed:
         raise ValueError(
             "label_propagation requires an undirected (symmetrized) graph"
@@ -272,48 +174,12 @@ def label_propagation(
     # distribution) and the state⋈best join run exchange-free; small V
     # scans the cache in place.
     e = G.edges.select(SRC, DST, WGT)
-    edges = None
-    block_cleanup = None
-    manifest = None
-    block_meta = None
-    if mode == "csr":
-        # pack ONCE; supersteps never touch the edge frame again (and
-        # the frontier path — the only other edge consumer — is
-        # disabled in csr mode, module docstring)
-        import tempfile
-
-        from ..plans.csr_blocks import pack_edges, read_meta
-
-        if block_dir is None:
-            block_dir = tempfile.mkdtemp(prefix="cugraph_lpa_csr_")
-            block_cleanup = block_dir
-        _, lo, hi = G.vertex_stats()
-        hash_t = e.schema[SRC].dataType.simpleString()
-        import os as _os
-
-        if _os.path.exists(_os.path.join(block_dir, "meta.json")):
-            # pack-once-per-stored-graph reuse (same contract as wcc:
-            # P/hash-dtype validated; the caller owns the guarantee the
-            # blocks were packed from THIS graph)
-            block_meta = read_meta(block_dir, expect_P=P)
-            manifest = {int(k): v for k, v in block_meta["manifest"].items()}
-            if not block_meta.get("weighted"):
-                raise RuntimeError(
-                    f"CSR block_dir {block_dir} was packed without weights"
-                )
-        else:
-            manifest = pack_edges(
-                e, block_dir, P, src=SRC, dst=DST, weight=WGT,
-                id_bounds=(lo, hi), hash_type=hash_t,
-            )
-            block_meta = read_meta(block_dir, expect_P=P)
-    else:
-        if not bcast:
-            if not G.partitioned_on(SRC):  # select preserves a bucketed layout
-                e = e.repartition(P, SRC)
-        elif V >= DST_PARTITION_MIN_V and not G.partitioned_on(DST):
-            e = e.repartition(P, DST)
-        edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+    if not bcast:
+        if not G.partitioned_on(SRC):  # select preserves a bucketed layout
+            e = e.repartition(P, SRC)
+    elif V >= DST_PARTITION_MIN_V and not G.partitioned_on(DST):
+        e = e.repartition(P, DST)
+    edges = e.persist(StorageLevel.MEMORY_AND_DISK)
 
     start_iter = 0
     state = None
@@ -335,8 +201,6 @@ def label_propagation(
         if frontier_threshold is None
         else int(frontier_threshold)
     )
-    if mode == "csr":
-        fthr = 0  # frontier disabled in csr mode (docstring)
     last_changed: int | None = None
     prev_full = None  # (vertex, labels, old) of the last checked superstep
     deg = None  # lazily-built in-degree frame for the frontier guard
@@ -427,51 +291,10 @@ def label_propagation(
             # graph is symmetrized every vertex appears as dst, so no
             # initial vertices() distinct is needed either. Semantics
             # identical to the join path (own label only matters when a
-            # vertex has no in-edges, impossible here). csr: one task
-            # per manifest pid, no label slice ships.
-            if mode == "csr":
-                import pandas as _pd
-
-                pids = spark.createDataFrame(
-                    _pd.DataFrame({"pid": sorted(manifest)})
-                ).repartition(P, "pid")
-                scores = (
-                    pids.groupBy("pid")
-                    .applyInPandas(
-                        _csr_lpa_scores(
-                            block_dir, manifest, block_meta, identity=True
-                        ),
-                        schema="dst long, cand long, w double",
-                    )
-                    .groupBy(DST, "cand")
-                    .agg(F.sum("w").alias("w"))
-                )
-            else:
-                scores = edges.groupBy(
-                    F.col(DST), F.col(SRC).alias("cand")
-                ).agg(F.sum(WGT).alias("w"))
-        elif mode == "csr":
-            # only the O(V) label vector crosses Arrow (routed by the
-            # packer's hash(·)%P); per-block factorize+bincount is the
-            # partial combine, the argmax reduce below is unchanged
-            scores = (
-                state.withColumn(
-                    "pid",
-                    F.pmod(
-                        F.hash(F.col("vertex").cast(block_meta["hash_t"])),
-                        F.lit(P),
-                    ),
-                )
-                .groupBy("pid")
-                .applyInPandas(
-                    _csr_lpa_scores(
-                        block_dir, manifest, block_meta, identity=False
-                    ),
-                    schema="dst long, cand long, w double",
-                )
-                .groupBy(DST, "cand")
-                .agg(F.sum("w").alias("w"))
-            )
+            # vertex has no in-edges, impossible here).
+            scores = edges.groupBy(
+                F.col(DST), F.col(SRC).alias("cand")
+            ).agg(F.sum(WGT).alias("w"))
         else:
             sside = vertex_join_side(state, V, limit=blimit)
             scores = (
@@ -585,10 +408,7 @@ def label_propagation(
             superstep_metrics.append(
                 {
                     "iteration": it,
-                    "mode": (
-                        ("csr-" if mode == "csr" else "")
-                        + ("frontier" if use_frontier else "dense")
-                    ),
+                    "mode": "frontier" if use_frontier else "dense",
                     "changed": int(changed),
                     "cycle_detected": cycle,
                     "seconds": round(_time.perf_counter() - _t0, 3),
@@ -622,16 +442,9 @@ def label_propagation(
                 )
             break
 
-    if edges is not None:
-        edges.unpersist()
+    edges.unpersist()
     if deg is not None:
         deg.unpersist()
-    if block_cleanup is not None:
-        # every loop path ends in a checking action, so the terminal
-        # state RDD is already materialized — the blocks can go
-        import shutil
-
-        shutil.rmtree(block_cleanup, ignore_errors=True)
     if state is None:  # max_iter == 0: the identity labeling
         state = G.vertices().withColumn("labels", F.col("vertex"))
     return state.select("vertex", "labels")

@@ -25,11 +25,11 @@ Two physical strategies, same semantics (validated equal in tests):
   ``reduce_op::plus`` shuffle combine).
 - ``mode="csr"``: the north-star architecture — edges hash-partitioned
   by ``pid = hash(src) % P`` into per-partition CSR blocks built ONCE
-  by the shared packer (``plans/csr_blocks.py`` — src-sorted indptr
-  layout, dense-id or dictionary dst format, weights), then each
-  superstep ships ONLY the O(V) rank vector through the Python
-  boundary: a ``groupBy(pid).applyInPandas`` maps ranks onto the
-  block's srcs (scatter / searchsorted) and runs the SpMV as a single
+  by the shared block store (``plans/csr_blocks.py:CsrBlocks`` —
+  src-sorted indptr layout, dense-id or dictionary dst format,
+  weights), then each superstep ships ONLY the O(V) rank vector
+  through the Python boundary: the store's per-pid task maps ranks
+  onto the block's srcs and runs the SpMV as a single
   ``np.bincount`` — in-UDF partial combine — followed by the
   shuffle-based ``(dst, partial)`` message exchange. The O(E) side
   never crosses the Arrow boundary again after setup
@@ -61,7 +61,9 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
-import pandas as pd
+import contextlib
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
@@ -76,63 +78,20 @@ class FailedToConvergeError(RuntimeError):
     (mirrors cugraph's error at pagerank.py:290-293)."""
 
 
-def _csr_spmv(block_dir: str, manifest: dict, meta: dict):
-    """Per-pid gather-scatter for mode='csr' over the shared packed
-    blocks (``plans/csr_blocks.py``): map the incoming rank vector onto
-    the block's src dictionary (scatter for dense-id blocks, one
-    searchsorted for dict blocks — both RAISE on a slice that does not
-    cover the block's srcs, the torn-state contract), then the whole
-    SpMV + in-UDF partial combine is a single ``np.bincount``. Only
-    O(V/P) ranks cross the Arrow boundary — the O(E/P) block arrays
-    are mmap'd from ``block_dir``. A manifest-listed pid whose block
-    files are missing RAISES (torn deployment — ADVICE r4: silent
-    empty-returns here silently zeroed ranks); only pids absent from
-    the manifest legitimately have no edges."""
-
-    def spmv(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from ..plans.csr_blocks import (
-            load_block,
-            scatter_state_for_srcs,
-            state_values_for_srcs,
-        )
-
-        empty = pd.DataFrame(
-            {
-                "dst": pd.Series([], dtype="int64"),
-                "contrib": pd.Series([], dtype="float64"),
-            }
-        )
-        if len(pdf) == 0:
-            return empty
-        pid = int(pdf["pid"].iloc[0])
-        if pid not in manifest:
-            return empty  # pid with ranks but genuinely no edges
-        blk = load_block(block_dir, pid, meta)
-        su = np.asarray(blk["su"])
-        indptr = np.asarray(blk["indptr"])
-        w = np.asarray(blk["w"])
-        v = pdf["vertex"].to_numpy(np.int64)
-        r = pdf["rank_div"].to_numpy(np.float64)
-        if meta["ids"] == "dense":
-            rank_src = scatter_state_for_srcs(v, r, su, meta["hi1"])
-            contrib = np.bincount(
-                np.asarray(blk["dr"]),
-                weights=np.repeat(rank_src, np.diff(indptr)) * w,
-                minlength=meta["hi1"],
-            )
-            touched = np.flatnonzero(contrib)
-            return pd.DataFrame({"dst": touched, "contrib": contrib[touched]})
-        rank_src = state_values_for_srcs(v, r, su)
-        contrib = np.bincount(
-            np.asarray(blk["dc"]),
-            weights=np.repeat(rank_src, np.diff(indptr)) * w,
-            minlength=len(blk["du"]),
-        )
-        return pd.DataFrame({"dst": np.asarray(blk["du"]), "contrib": contrib})
-
-    return spmv
+def _csr_spmv(blk, rank_src):
+    """Per-block pull SpMV for mode='csr' (``CsrBlocks.map_blocks``
+    supplies the rank slice aligned with the block's srcs): the whole
+    SpMV + in-UDF partial combine is a single ``np.bincount`` into the
+    block's dst slots. Only slots with a nonzero contribution are
+    emitted — an absent dst reads as 0.0 in the state join's coalesce,
+    and dropping exact zeros leaves every partial sum bit-identical."""
+    contrib = np.bincount(
+        blk.dst_index,
+        weights=np.repeat(rank_src, blk.deg) * blk.w,
+        minlength=blk.n_dst,
+    )
+    touched = np.flatnonzero(contrib)
+    return {"dst": blk.dst_ids(touched), "contrib": contrib[touched]}
 
 
 def pagerank(
@@ -165,7 +124,9 @@ def pagerank(
     ``block_dir`` (mode='csr' only): directory for the packed CSR
     blocks — MUST be shared storage on a multi-node cluster; default a
     fresh local temp dir (correct for local mode), cleaned up on
-    return.
+    return. A dir that already holds a weighted pack of THIS graph is
+    reused; one packed from another graph or P raises
+    (``plans/csr_blocks.py:CsrBlocks``).
 
     ``chained`` (default auto): fixed-iteration runs (tol == 0.0,
     dataframe mode, no checkpointing) carry the dangling mass as a
@@ -200,267 +161,223 @@ def pagerank(
             )
 
     # --- invariant side: edges + out-weight sums, partitioned once ---
-    block_cleanup = None
+    # csr: the block store packs (or validates and reuses) per-pid CSR
+    # blocks ONCE; supersteps never touch the edge frame again, so it
+    # is not persisted — the single ows aggregate below is its only
+    # other scan. The blocks live until the with-block below exits,
+    # after the last action that reads them.
     if mode == "csr":
-        # Pack per-pid CSR blocks ONCE (docstring above); supersteps
-        # never touch the edge frame again, so it is not persisted —
-        # the single ows aggregate below is its only other scan.
-        # block_dir must be shared storage on a multi-node cluster.
-        import tempfile
+        from ..plans.csr_blocks import CsrBlocks
 
-        from ..plans.csr_blocks import pack_edges, read_meta
-
-        if block_dir is None:
-            block_dir = tempfile.mkdtemp(prefix="cugraph_pr_csr_")
-            block_cleanup = block_dir
+        store = CsrBlocks(G, P, block_dir, weighted=True)
         edges = G.edges
-        _, lo, hi = G.vertex_stats()
-        # one setup job writes every block file and returns the
-        # manifest; readers raise on a manifest-listed block that is
-        # missing (torn deployment) instead of contributing zeros
-        import os as _os
-
-        if _os.path.exists(_os.path.join(block_dir, "meta.json")):
-            # pack-once-per-stored-graph reuse (same contract as wcc:
-            # P/hash-dtype validated; the caller owns the guarantee the
-            # blocks were packed from THIS graph)
-            block_meta = read_meta(block_dir, expect_P=P)
-            manifest = {int(k): v for k, v in block_meta["manifest"].items()}
-            if not block_meta.get("weighted"):
-                raise RuntimeError(
-                    f"CSR block_dir {block_dir} was packed without weights"
-                )
-        else:
-            manifest = pack_edges(
-                edges, block_dir, P, src=SRC, dst=DST, weight=WGT,
-                id_bounds=(lo, hi),
-            )
-            block_meta = read_meta(block_dir, expect_P=P)
     else:
+        store = contextlib.nullcontext()
         e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
         edges = e.persist(StorageLevel.MEMORY_AND_DISK)
-
-    if precomputed_vertex_out_weight is not None:
-        ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
-        vstate = G.vertices().join(ows, "vertex", "left").select(
-            "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
-    else:
-        vstate = (
-            G.vertices()
-            .join(
-                edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("ows")),
-                "vertex", "left")
-            .select("vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
-        )
-    vstate = vstate.repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
-    V = vstate.count()
-    if V == 0:
-        raise ValueError("empty graph")
-
-    # --- personalization normalization (pagerank_impl.cuh:299-319) ---
-    psum = None
-    pers = None
-    if personalization is not None:
-        pers = personalization.select(
-            "vertex", F.col("values").cast("double").alias("pval"))
-        psum = pers.agg(F.sum("pval")).first()[0]
-        if not psum or psum <= 0:
-            raise ValueError("personalization values must sum to > 0")
-        pers = F.broadcast(pers.withColumn("pnorm", F.col("pval") / F.lit(psum))
-                           .select("vertex", "pnorm"))
-
-    # --- init ranks (pagerank_impl.cuh:363-386) ---
-    start_iter = 0
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        it0 = checkpoint.latest_iteration()
-        saved, meta = checkpoint.load(spark, it0)
-        state = saved.repartition(P, "vertex").transform(truncate_plan)
-        start_iter = meta["iteration"] + 1
-        dangling = float(meta["metrics"]["dangling_sum"])
-    elif nstart is not None:
-        ns = nstart.select("vertex", F.col("values").cast("double").alias("nsval"))
-        nsum = ns.agg(F.sum("nsval")).first()[0]
-        if not nsum or nsum <= 0:
-            raise ValueError("nstart values must sum to > 0")
-        state = (
-            vstate.join(ns, "vertex", "left")
-            .select("vertex", "ows",
-                    (F.coalesce("nsval", F.lit(0.0)) / F.lit(nsum)).alias("rank"))
-            .transform(truncate_plan)
-        )
-        dangling = None if chained else (
-            state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
-    else:
-        state = vstate.withColumn("rank", F.lit(1.0 / V)).transform(truncate_plan)
-        dangling = None if chained else (
-            state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
-
-    import time as _time
-
-    converged = False
-    final_iter = start_iter
-    for it in range(start_iter, max_iter):
-        final_iter = it
-        _t0 = _time.perf_counter()
-        # rank' = rank / ows (dangling divisor 1.0) — impl.cuh:250-262
-        rank_div = state.select(
-            "vertex",
-            (F.col("rank") / F.when(F.col("ows") == 0.0, F.lit(1.0)).otherwise(F.col("ows"))
-             ).alias("rank_div"),
-        )
-
-        if mode == "csr":
-            # only the O(V) rank vector crosses the Python boundary;
-            # the writer and this reader key on the same Catalyst
-            # hash(·) % P expression, so ranks land on their block
-            ranks_parted = rank_div.withColumn(
-                "pid",
-                F.pmod(
-                    F.hash(
-                        F.col("vertex").cast(
-                            block_meta.get("hash_t", "bigint")
-                        )
-                    ),
-                    F.lit(P),
-                ),
-            )
-            partials = ranks_parted.groupBy("pid").applyInPandas(
-                _csr_spmv(block_dir, manifest, block_meta),
-                schema="dst long, contrib double",
-            )
-            contribs = partials.groupBy(DST).agg(F.sum("contrib").alias("contrib"))
+    with store as blocks:
+        if precomputed_vertex_out_weight is not None:
+            ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
+            vstate = G.vertices().join(ows, "vertex", "left").select(
+                "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
         else:
-            # broadcast (small V) / shuffle-hash (large V) keeps the
-            # persisted O(E) side unmoved and unsorted every superstep
-            rank_side = vertex_join_side(rank_div, V)
-            joined = edges.join(rank_side, edges[SRC] == rank_side["vertex"])
-            if salt:
-                from ..plans.skew import salted_sum
-
-                msgs = joined.select(
-                    F.col(DST), F.col(SRC),
-                    (rank_side["rank_div"] * edges[WGT]).alias("msg"),
-                )
-                contribs = salted_sum(
-                    msgs, DST, "msg", out_col="contrib", salt=salt, salt_on=SRC
-                )
-            else:
-                contribs = joined.groupBy(DST).agg(
-                    F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib")
-                )
-
-        if chained:
-            # zero actions: the dangling mass stays a broadcast 1-row
-            # aggregate, so this superstep is just more lazy plan —
-            # everything executes inside the terminal action. Same
-            # partial-aggregation tree → bit-identical to the scalar path.
-            dang_df = F.broadcast(
-                state.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("dang")
-                )
+            vstate = (
+                G.vertices()
+                .join(
+                    edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("ows")),
+                    "vertex", "left")
+                .select("vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
             )
+        vstate = vstate.repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
+        V = vstate.count()
+        if V == 0:
+            raise ValueError("empty graph")
+
+        # --- personalization normalization (pagerank_impl.cuh:299-319) ---
+        psum = None
+        pers = None
+        if personalization is not None:
+            pers = personalization.select(
+                "vertex", F.col("values").cast("double").alias("pval"))
+            psum = pers.agg(F.sum("pval")).first()[0]
+            if not psum or psum <= 0:
+                raise ValueError("personalization values must sum to > 0")
+            pers = F.broadcast(pers.withColumn("pnorm", F.col("pval") / F.lit(psum))
+                               .select("vertex", "pnorm"))
+
+        # --- init ranks (pagerank_impl.cuh:363-386) ---
+        start_iter = 0
+        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
+            it0 = checkpoint.latest_iteration()
+            saved, meta = checkpoint.load(spark, it0)
+            state = saved.repartition(P, "vertex").transform(truncate_plan)
+            start_iter = meta["iteration"] + 1
+            dangling = float(meta["metrics"]["dangling_sum"])
+        elif nstart is not None:
+            ns = nstart.select("vertex", F.col("values").cast("double").alias("nsval"))
+            nsum = ns.agg(F.sum("nsval")).first()[0]
+            if not nsum or nsum <= 0:
+                raise ValueError("nstart values must sum to > 0")
+            state = (
+                vstate.join(ns, "vertex", "left")
+                .select("vertex", "ows",
+                        (F.coalesce("nsval", F.lit(0.0)) / F.lit(nsum)).alias("rank"))
+                .transform(truncate_plan)
+            )
+            dangling = None if chained else (
+                state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
+        else:
+            state = vstate.withColumn("rank", F.lit(1.0 / V)).transform(truncate_plan)
+            dangling = None if chained else (
+                state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
+
+        import time as _time
+
+        converged = False
+        final_iter = start_iter
+        for it in range(start_iter, max_iter):
+            final_iter = it
+            _t0 = _time.perf_counter()
+            # rank' = rank / ows (dangling divisor 1.0) — impl.cuh:250-262
+            rank_div = state.select(
+                "vertex",
+                (F.col("rank") / F.when(F.col("ows") == 0.0, F.lit(1.0)).otherwise(F.col("ows"))
+                 ).alias("rank_div"),
+            )
+
+            if blocks is not None:
+                # only the O(V) rank vector crosses the Python boundary
+                partials = blocks.map_blocks(
+                    _csr_spmv, "dst long, contrib double", rank_div, value="rank_div"
+                )
+                contribs = partials.groupBy(DST).agg(F.sum("contrib").alias("contrib"))
+            else:
+                # broadcast (small V) / shuffle-hash (large V) keeps the
+                # persisted O(E) side unmoved and unsorted every superstep
+                rank_side = vertex_join_side(rank_div, V)
+                joined = edges.join(rank_side, edges[SRC] == rank_side["vertex"])
+                if salt:
+                    from ..plans.skew import salted_sum
+
+                    msgs = joined.select(
+                        F.col(DST), F.col(SRC),
+                        (rank_side["rank_div"] * edges[WGT]).alias("msg"),
+                    )
+                    contribs = salted_sum(
+                        msgs, DST, "msg", out_col="contrib", salt=salt, salt_on=SRC
+                    )
+                else:
+                    contribs = joined.groupBy(DST).agg(
+                        F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib")
+                    )
+
+            if chained:
+                # zero actions: the dangling mass stays a broadcast 1-row
+                # aggregate, so this superstep is just more lazy plan —
+                # everything executes inside the terminal action. Same
+                # partial-aggregation tree → bit-identical to the scalar path.
+                dang_df = F.broadcast(
+                    state.agg(
+                        F.coalesce(
+                            F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
+                            F.lit(0.0),
+                        ).alias("dang")
+                    )
+                )
+                base = state.join(
+                    contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
+                ).crossJoin(dang_df)
+                dang_mass = F.col("dang") * F.lit(alpha) + F.lit(1.0 - alpha)
+                if pers is None:
+                    new_rank = (
+                        F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
+                        + dang_mass / F.lit(float(V))
+                    )
+                else:
+                    base = base.join(pers, state["vertex"] == pers["vertex"], "left")
+                    new_rank = (
+                        F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
+                        + dang_mass * F.coalesce("pnorm", F.lit(0.0))
+                    )
+                # truncate_plan per superstep keeps Catalyst work linear in
+                # max_iter (state is referenced 3x per superstep — without
+                # the LogicalRDD leaf the plan tree grows 3^k) while staying
+                # lazy: the checkpoint RDDs materialize inside the terminal job.
+                state = base.select(
+                    state["vertex"].alias("vertex"),
+                    state["ows"].alias("ows"),
+                    new_rank.alias("rank"),
+                ).transform(truncate_plan)
+                if superstep_seconds is not None:
+                    superstep_seconds.append(_time.perf_counter() - _t0)
+                continue
+
+            # state update joins contribs against the PREVIOUS state (which
+            # already carries the old rank), so the L1 convergence diff needs
+            # no second join — one plan, one action per superstep.
             base = state.join(
                 contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
-            ).crossJoin(dang_df)
-            dang_mass = F.col("dang") * F.lit(alpha) + F.lit(1.0 - alpha)
+            )
             if pers is None:
-                new_rank = (
-                    F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                    + dang_mass / F.lit(float(V))
-                )
+                unvarying = (dangling * alpha + (1.0 - alpha)) / V
+                new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + F.lit(unvarying)
             else:
+                pmass = dangling * alpha + (1.0 - alpha)
                 base = base.join(pers, state["vertex"] == pers["vertex"], "left")
                 new_rank = (
                     F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                    + dang_mass * F.coalesce("pnorm", F.lit(0.0))
+                    + F.lit(pmass) * F.coalesce("pnorm", F.lit(0.0))
                 )
-            # truncate_plan per superstep keeps Catalyst work linear in
-            # max_iter (state is referenced 3x per superstep — without
-            # the LogicalRDD leaf the plan tree grows 3^k) while staying
-            # lazy: the checkpoint RDDs materialize inside the terminal job.
-            state = base.select(
+            new_full = base.select(
                 state["vertex"].alias("vertex"),
                 state["ows"].alias("ows"),
                 new_rank.alias("rank"),
-            ).transform(truncate_plan)
+                state["rank"].alias("old_rank"),
+            )
+            # truncate_plan (stats-clean localCheckpoint) truncates lineage so superstep N's plan does not
+            # re-analyze supersteps 0..N-1 (SURVEY.md §7.3.1) — the lazy variant
+            # materializes inside the convergence action below (one job/superstep).
+            new_full = new_full.transform(truncate_plan)
+
+            # one action per superstep: L1 diff + next dangling sum together
+            # (the host_scalar_allreduce analog, pagerank_impl.cuh:239-248,321-330)
+            row = new_full.agg(
+                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
+                F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
+                      ).alias("dang"),
+            ).first()
+            l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
+            state = new_full.select("vertex", "ows", "rank")
             if superstep_seconds is not None:
                 superstep_seconds.append(_time.perf_counter() - _t0)
-            continue
 
-        # state update joins contribs against the PREVIOUS state (which
-        # already carries the old rank), so the L1 convergence diff needs
-        # no second join — one plan, one action per superstep.
-        base = state.join(
-            contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
-        )
-        if pers is None:
-            unvarying = (dangling * alpha + (1.0 - alpha)) / V
-            new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + F.lit(unvarying)
-        else:
-            pmass = dangling * alpha + (1.0 - alpha)
-            base = base.join(pers, state["vertex"] == pers["vertex"], "left")
-            new_rank = (
-                F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                + F.lit(pmass) * F.coalesce("pnorm", F.lit(0.0))
-            )
-        new_full = base.select(
-            state["vertex"].alias("vertex"),
-            state["ows"].alias("ows"),
-            new_rank.alias("rank"),
-            state["rank"].alias("old_rank"),
-        )
-        # truncate_plan (stats-clean localCheckpoint) truncates lineage so superstep N's plan does not
-        # re-analyze supersteps 0..N-1 (SURVEY.md §7.3.1) — the lazy variant
-        # materializes inside the convergence action below (one job/superstep).
-        new_full = new_full.transform(truncate_plan)
+            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+                state = checkpoint.save(
+                    state.select("vertex", "ows", "rank"), it,
+                    {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
 
-        # one action per superstep: L1 diff + next dangling sum together
-        # (the host_scalar_allreduce analog, pagerank_impl.cuh:239-248,321-330)
-        row = new_full.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
-            F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
-                  ).alias("dang"),
-        ).first()
-        l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
-        state = new_full.select("vertex", "ows", "rank")
-        if superstep_seconds is not None:
-            superstep_seconds.append(_time.perf_counter() - _t0)
+            if l1 < tol:
+                converged = True
+                break
 
-        if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-            state = checkpoint.save(
-                state.select("vertex", "ows", "rank"), it,
-                {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
+        if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
+            checkpoint.save(state.select("vertex", "ows", "rank"), final_iter,
+                            {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
+                             "tol": tol, "final": True})
 
-        if l1 < tol:
-            converged = True
-            break
-
-    if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
-        checkpoint.save(state.select("vertex", "ows", "rank"), final_iter,
-                        {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
-                         "tol": tol, "final": True})
-
-    if chained:
-        # the chained loop ran ZERO actions, so nothing has executed
-        # yet — materialize the whole superstep chain NOW (one terminal
-        # job, the same single job the design promises) while the
-        # persisted edges/vstate caches are still registered; the
-        # unpersist below would otherwise drop them BEFORE the caller's
-        # first action, recomputing the O(E) edge shuffle every superstep
-        state = truncate_plan(state.select("vertex", "ows", "rank"), eager=True)
+        if chained:
+            # the chained loop ran ZERO actions, so nothing has executed
+            # yet — materialize the whole superstep chain NOW (one terminal
+            # job, the same single job the design promises) while the
+            # persisted edges/vstate caches are still registered; the
+            # unpersist below would otherwise drop them BEFORE the caller's
+            # first action, recomputing the O(E) edge shuffle every superstep
+            # (and, in csr mode, before the blocks it reads are removed)
+            state = truncate_plan(state.select("vertex", "ows", "rank"), eager=True)
     result = state.select("vertex", F.col("rank").alias("pagerank"))
     if mode != "csr":
         edges.unpersist()
     vstate.unpersist()
-    if block_cleanup is not None:
-        # the final state RDD is already materialized (every csr
-        # superstep ends in an action), so the blocks can go
-        import shutil
-
-        shutil.rmtree(block_cleanup, ignore_errors=True)
     if not converged and fail_on_nonconvergence and tol > 0.0:
         raise FailedToConvergeError(
             f"PageRank did not converge to tol={tol} within {max_iter} iterations")

@@ -25,11 +25,15 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
+import contextlib
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
+from ..plans.strategy import resolve_partitions
+from .wcc import _csr_min_frontier
 
 
 def bfs_edges(
@@ -53,7 +57,7 @@ def bfs(
     G: Graph,
     source: int,
     max_depth: int | None = None,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
     mode: str = "dataframe",
     block_dir: str | None = None,
 ) -> DataFrame:
@@ -84,44 +88,24 @@ def bfs(
     ordered pass over the blocks, the same bound bottom-up achieves
     (minus its per-vertex early-exit, which no join/aggregation model
     can express). ``block_dir``: shared storage on a cluster; a dir
-    holding a matching pack is reused (pack once per stored graph)."""
+    holding a pack of THIS graph is validated and reused (pack once per
+    stored graph; ``plans/csr_blocks.py:CsrBlocks``).
+
+    ``num_partitions``: an int, ``"auto"`` (sized from plan
+    statistics) or None (``spark.sql.shuffle.partitions``) — the
+    shared ``resolve_partitions`` rule."""
     if mode not in ("dataframe", "csr"):
         raise ValueError(f"unknown mode: {mode!r}")
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
 
     edges = None
-    kernel = None
-    block_meta = None
-    block_cleanup = None
     if mode == "csr":
-        import os as _os
-        import tempfile
+        from ..plans.csr_blocks import CsrBlocks
 
-        from ..plans.csr_blocks import pack_edges, read_meta
-        from .wcc import _csr_min_frontier
-
-        if block_dir is None:
-            block_dir = tempfile.mkdtemp(prefix="cugraph_bfs_csr_")
-            block_cleanup = block_dir
-        if _os.path.exists(_os.path.join(block_dir, "meta.json")):
-            block_meta = read_meta(block_dir, expect_P=P)
-            manifest = {
-                int(k): v for k, v in block_meta["manifest"].items()
-            }
-        else:
-            _, lo, hi = G.vertex_stats()
-            manifest = pack_edges(
-                G.edges.select(SRC, DST), block_dir, P, id_bounds=(lo, hi)
-            )
-            block_meta = read_meta(block_dir, expect_P=P)
-        # bound_mask=False: the message is a min-id PREDECESSOR, which
-        # may exceed the dst id (the WCC label bound does not apply)
-        kernel = _csr_min_frontier(
-            block_dir, manifest, block_meta, bound_mask=False
-        )
+        store = CsrBlocks(G, P, block_dir)
         src_frame = G.edges.select(SRC, DST)
     else:
+        store = contextlib.nullcontext()
         edges = (
             G.edges.select(SRC, DST)
             .repartition(P, SRC)
@@ -148,62 +132,39 @@ def bfs(
     levels: list[DataFrame] = []  # (vertex, pred) per depth, disjoint by construction
     depth = 0
     limit = max_depth if max_depth is not None else 2**31
-    while depth < limit:
-        depth += 1
-        if mode == "csr":
-            # frontier routed to its own blocks; min-id pred gathered
-            # from frontier-adjacent edges only (indptr slices)
-            cand = (
-                frontier.select(
-                    F.col("vertex").alias("dv"),
-                    F.col("vertex").alias("dl"),
+    # every level ends in a count action, so the per-level frames are
+    # materialized before the store removes its blocks on exit
+    with store as blocks:
+        while depth < limit:
+            depth += 1
+            if blocks is not None:
+                # frontier routed to its own blocks; min-id pred gathered
+                # from frontier-adjacent edges only (indptr slices)
+                cand = blocks.map_blocks(
+                    _csr_min_frontier("vertex", bound=False),
+                    f"dst {blocks.id_t}, nbr_min {blocks.id_t}",
+                    frontier,
+                ).select(DST, F.col("nbr_min").alias(SRC))
+            else:
+                cand = frontier.join(edges, frontier["vertex"] == edges[SRC])
+            cand = cand.groupBy(DST).agg(F.min(SRC).alias("pred"))
+            nxt = (
+                cand.join(visited, cand[DST] == visited["vertex"], "left_anti")
+                .select(
+                    F.col(DST).cast("long").alias("vertex"),
+                    F.col("pred").cast("long"),
                 )
-                .withColumn(
-                    "pid",
-                    F.pmod(
-                        F.hash(F.col("dv").cast(block_meta["hash_t"])),
-                        F.lit(P),
-                    ),
-                )
-                .groupBy("pid")
-                .applyInPandas(
-                    kernel,
-                    # the kernel emits the block arrays' dtype: int32
-                    # when the packer narrowed the ids, else int64
-                    schema=(
-                        "dst int, nbr_min int"
-                        if block_meta.get(
-                            "narrow", block_meta["ids"] == "dense"
-                        )
-                        else "dst long, nbr_min long"
-                    ),
-                )
-                .groupBy(DST)
-                .agg(F.min("nbr_min").alias("pred"))
+                .transform(truncate_plan)
             )
-        else:
-            cand = (
-                frontier.join(edges, frontier["vertex"] == edges[SRC])
-                .groupBy(DST)
-                .agg(F.min(SRC).alias("pred"))
-            )
-        nxt = (
-            cand.join(visited, cand[DST] == visited["vertex"], "left_anti")
-            .select(
-                F.col(DST).cast("long").alias("vertex"),
-                F.col("pred").cast("long"),
-            )
-            .transform(truncate_plan)
-        )
-        n_new = nxt.count()
-        if n_new == 0:
-            break
-        levels.append(nxt.withColumn("distance", F.lit(depth).cast("long")))
-        visited = visited.unionByName(nxt.select("vertex"))
-        if depth % 8 == 0:
-            # bound the visited union's plan depth on high-diameter graphs
-            visited = visited.transform(truncate_plan)
-        frontier = nxt.select("vertex")
+            n_new = nxt.count()
+            if n_new == 0:
+                break
+            levels.append(nxt.withColumn("distance", F.lit(depth).cast("long")))
+            visited = visited.unionByName(nxt.select("vertex"))
+            if depth % 8 == 0:
+                # bound the visited union's plan depth on high-diameter graphs
+                visited = visited.transform(truncate_plan)
+            frontier = nxt.select("vertex")
     reached = f0.select(
         "vertex", F.lit(0).cast("long").alias("distance"),
         F.lit(-1).cast("long").alias("predecessor"),
@@ -224,12 +185,6 @@ def bfs(
     )
     if edges is not None:
         edges.unpersist()
-    if block_cleanup is not None:
-        # every level ends in a count action, so the per-level frames
-        # are materialized before the blocks go
-        import shutil
-
-        shutil.rmtree(block_cleanup, ignore_errors=True)
     return out
 
 

@@ -81,6 +81,9 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
+import contextlib
+
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -99,146 +102,69 @@ from ..plans.strategy import NARROW_STATE_BROADCAST_LIMIT as WCC_BROADCAST_VERTE
 from ..plans.strategy import DST_PARTITION_MIN_V as _DST_PARTITION_MIN_V  # noqa: E402
 
 
-def _csr_min_dense(block_dir: str, manifest: dict, meta: dict, identity: bool):
-    """Per-pid dense hash-min superstep over a packed CSR block
-    (``plans/csr_blocks.py``): expand the incoming label slice to
-    per-edge with ``np.repeat`` over the indptr, then the whole
-    per-dst min + in-UDF partial combine is ONE ``np.minimum.at``
-    (measured 200M edges/s/core on numpy 1.26 — ~10× the JVM
-    join+agg stream this replaces). dense-id blocks reduce straight
-    into an O(hi) scratch array (no per-block dst dictionary); dict
-    blocks reduce through du/dc. Emits only messages that can still
-    lower a label: ``label(v) ≤ v`` always (init v, min-monotone), so
-    a partial with ``nbr_min ≥ dst`` is provably useless and is
-    dropped block-side. ``identity=True`` is superstep 0 (labels(v) =
-    v ⇒ the slice never ships) and emits UNFILTERED so the first
-    state frame covers every vertex."""
+def _min_by_dst(blk, dst_index, vals, bound: bool):
+    """Reduce per-edge ``vals`` into the block's ``n_dst`` slots with ONE
+    ``np.minimum.at`` (measured 200M edges/s/core on numpy 1.26 — ~10×
+    the JVM join+agg stream it replaces) and emit only TOUCHED slots, so
+    the ``iinfo.max`` init value never leaves the block. ``bound=True``
+    also drops minima that cannot lower a label: ``label(v) ≤ v`` always
+    (init v, min-monotone), so a partial with ``nbr_min ≥ dst`` is
+    provably useless."""
+    none = np.iinfo(blk.id_dtype).max
+    out = np.full(blk.n_dst, none, blk.id_dtype)
+    np.minimum.at(out, dst_index, vals.astype(blk.id_dtype, copy=False))
+    touched = np.flatnonzero(out != none)
+    dsts, mins = blk.dst_ids(touched), out[touched]
+    if bound:
+        keep = mins < dsts
+        dsts, mins = dsts[keep], mins[keep]
+    return {"dst": dsts, "nbr_min": mins}
 
-    def fn(pdf):
-        import numpy as np
-        import pandas as pd
 
-        from ..plans.csr_blocks import (
-            load_block,
-            scatter_state_for_srcs,
-            state_values_for_srcs,
+def _csr_min(identity: bool):
+    """Per-block dense hash-min superstep: expand the label slice to
+    per-edge with ``np.repeat`` over the indptr, then one min reduce.
+    ``identity=True`` is superstep 0 (labels(v) = v ⇒ the slice never
+    ships) and emits UNFILTERED so the first state frame covers every
+    vertex."""
+
+    def kernel(blk, labels):
+        lab_src = blk.su if identity else labels
+        return _min_by_dst(
+            blk, blk.dst_index, np.repeat(lab_src, blk.deg), bound=not identity
         )
 
-        pid = int(pdf["pid"].iloc[0])
-        if pid not in manifest:
-            # legitimately edge-free pid (hash gap at small E)
-            return pd.DataFrame({"dst": pdf["pid"][:0], "nbr_min": pdf["pid"][:0]})
-        blk = load_block(block_dir, pid, meta)
-        su = np.asarray(blk["su"])
-        indptr = np.asarray(blk["indptr"])
-        dense = meta["ids"] == "dense"
-        if identity:
-            lab_src = su
-        elif dense:
-            lab_src = scatter_state_for_srcs(
-                pdf["vertex"].to_numpy(), pdf["labels"].to_numpy(), su, meta["hi1"]
-            )
-        else:
-            lab_src = state_values_for_srcs(
-                pdf["vertex"].to_numpy(), pdf["labels"].to_numpy(), su
-            )
-        lab = np.repeat(lab_src, np.diff(indptr))
-        if dense:
-            dr = np.asarray(blk["dr"])
-            hi_t = dr.dtype
-            out = np.full(meta["hi1"], np.iinfo(hi_t).max, hi_t)
-            np.minimum.at(out, dr, lab.astype(hi_t, copy=False))
-            touched = np.flatnonzero(out != np.iinfo(hi_t).max)
-            vals = out[touched]
-            dsts = touched.astype(hi_t, copy=False)
-        else:
-            du = np.asarray(blk["du"])
-            out = np.full(len(du), np.iinfo(du.dtype).max, du.dtype)
-            np.minimum.at(out, np.asarray(blk["dc"]), lab.astype(du.dtype, copy=False))
-            vals, dsts = out, du
-        if identity:
-            return pd.DataFrame({"dst": dsts, "nbr_min": vals})
-        mask = vals < dsts
-        return pd.DataFrame({"dst": dsts[mask], "nbr_min": vals[mask]})
-
-    return fn
+    return kernel
 
 
-def _csr_min_frontier(
-    block_dir: str, manifest: dict, meta: dict, bound_mask: bool = True
-):
-    """Per-pid FRONTIER hash-min superstep: the delta (changed vertices
-    + their labels) routes to its own block (pid = hash(v) is both the
-    state and the edge key), ``searchsorted`` finds each frontier
-    vertex's src-dictionary slot, and the indptr slices gather ONLY
-    frontier-adjacent edges — the reference's frontier-prims contract
-    (``transform_reduce_v_frontier_outgoing_e_by_dst.cuh`` touches only
-    frontier edges). Cost per superstep: O(|Δ| log |su| + Σ deg(Δ)) —
-    no O(E) probe scan (the dataframe frontier mode's floor, VERDICT r4
-    'What's missing' #3)."""
+def _csr_min_frontier(value: str, bound: bool):
+    """Per-block FRONTIER min superstep over a pid's ``[vertex, value]``
+    slice (pid = hash(v) is both the state and the edge key):
+    ``searchsorted`` finds each frontier vertex's src slot and the
+    indptr slices gather ONLY frontier-adjacent edges — the reference's
+    frontier-prims contract (``transform_reduce_v_frontier_outgoing_e_
+    by_dst.cuh`` touches only frontier edges). Cost per superstep:
+    O(|Δ| log |su| + Σ deg(Δ)) — no O(E) probe scan (the dataframe
+    frontier mode's floor, VERDICT r4 'What's missing' #3). WCC sends
+    labels with ``bound=True``; csr BFS sends the vertex itself as a
+    min-id PREDECESSOR, which may exceed dst, so ``bound=False``."""
 
-    def fn(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from ..plans.csr_blocks import load_block
-
-        empty = pd.DataFrame({"dst": pdf["pid"][:0], "nbr_min": pdf["pid"][:0]})
-        pid = int(pdf["pid"].iloc[0])
-        if pid not in manifest:
-            return empty
-        blk = load_block(block_dir, pid, meta)
-        su = np.asarray(blk["su"])
-        indptr = np.asarray(blk["indptr"])
-        dv = pdf["dv"].to_numpy()
-        dl = pdf["dl"].to_numpy()
-        pos = np.searchsorted(su, dv)
-        ok = pos < len(su)
-        ok[ok] = su[pos[ok]] == dv[ok]  # frontier vertex may have no edges here
+    def kernel(blk, pdf):
+        dv = pdf["vertex"].to_numpy()
+        dl = pdf[value].to_numpy()
+        pos = np.searchsorted(blk.su, dv)
+        ok = pos < len(blk.su)
+        ok[ok] = blk.su[pos[ok]] == dv[ok]  # frontier vertex may have no edges here
         pos, dl = pos[ok], dl[ok]
-        starts, ends = indptr[pos], indptr[pos + 1]
-        lens = ends - starts
-        total = int(lens.sum())
-        if total == 0:
-            return empty
-        # multi-range gather: indices of all frontier-adjacent edges
-        cum = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        offs = np.arange(total, dtype=np.int64) - np.repeat(cum, lens) + np.repeat(
-            starts, lens
-        )
-        dense = meta["ids"] == "dense"
-        # fancy-index the memmap directly: reads only the touched pages
-        # (materializing the E/P-sized code array first would re-pay
-        # the O(E) scan the frontier path exists to avoid)
-        if dense:
-            dr = blk["dr"]
-            codes = np.asarray(dr[offs])
-            hi_t = codes.dtype if codes.dtype.kind == "i" else np.int64
-            out = np.full(meta["hi1"], np.iinfo(hi_t).max, hi_t)
-            labs = np.repeat(dl, lens).astype(hi_t, copy=False)
-            np.minimum.at(out, codes, labs)
-            touched = np.flatnonzero(out != np.iinfo(hi_t).max)
-            vals = out[touched]
-            dsts = touched.astype(hi_t, copy=False)
-        else:
-            du = np.asarray(blk["du"])
-            codes = np.asarray(blk["dc"][offs])
-            labs = np.repeat(dl, lens).astype(du.dtype, copy=False)
-            out = np.full(len(du), np.iinfo(du.dtype).max, du.dtype)
-            np.minimum.at(out, codes, labs)
-            vals, dsts = out, du
-        if bound_mask:
-            # WCC-only pruning: labels ≤ id ⇒ a min ≥ dst is useless.
-            # csr BFS reuses this kernel with bound_mask=False (the
-            # value is a min-id PREDECESSOR, which may exceed dst).
-            mask = vals < dsts
-        elif dense:
-            mask = vals != np.iinfo(vals.dtype).max
-        else:
-            mask = np.ones(len(vals), dtype=bool)
-        return pd.DataFrame({"dst": dsts[mask], "nbr_min": vals[mask]})
+        starts = blk.indptr[pos]
+        lens = blk.indptr[pos + 1] - starts
+        # multi-range gather of the frontier-adjacent edge offsets; the
+        # mmap'd dst_index is fancy-indexed directly, so only the touched
+        # pages are read
+        offs = np.arange(lens.sum()) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
+        return _min_by_dst(blk, blk.dst_index[offs], np.repeat(dl, lens), bound)
 
-    return fn
+    return kernel
 
 
 def weakly_connected_components(
@@ -298,18 +224,20 @@ def weakly_connected_components(
     (``plans/metrics.py`` — the instrumented form of the zero-exchange
     claim) plus the superstep's changed-count and mode.
 
-    ``mode="csr"``: pack the edges ONCE into per-pid mmap CSR blocks
-    (``plans/csr_blocks.py`` — the reference's resident-CSR
-    architecture, ``graphs.pyx:52-224``) and run every hash-min
-    superstep as a per-block ``np.minimum.at`` with only the O(V)
-    label vector crossing the Arrow boundary; frontier supersteps
-    become true frontier-sized indptr lookups instead of the dataframe
-    mode's O(E) probe scan. Same labels, iteration-for-iteration (all
-    arithmetic is exact integer min). ``block_dir`` must be shared
-    storage on a multi-node cluster; default a fresh local temp dir
-    (correct for local mode), cleaned up on return. A manifest-listed
-    block missing at read time RAISES (torn deployment) — never a
-    silent zero contribution."""
+    ``mode="csr"``: the block store (``plans/csr_blocks.py:CsrBlocks``
+    — the reference's resident-CSR architecture, ``graphs.pyx:52-224``)
+    packs the edges ONCE into per-pid mmap CSR blocks, and every
+    hash-min superstep runs as a per-block ``np.minimum.at`` with only
+    the O(V) label vector crossing the Arrow boundary; frontier
+    supersteps become true frontier-sized indptr lookups instead of the
+    dataframe mode's O(E) probe scan. Same labels, iteration-for-
+    iteration (all arithmetic is exact integer min), on dense-id and
+    dictionary blocks alike. ``block_dir`` must be shared storage on a
+    multi-node cluster; default a fresh local temp dir (correct for
+    local mode), cleaned up on return. A dir holding a pack of THIS
+    graph is reused; one packed from another graph or P, or a
+    manifest-listed block missing or torn at read time, RAISES — never
+    a silent zero contribution."""
     if mode not in ("dataframe", "csr"):
         raise ValueError(f"unknown mode: {mode!r}")
     if G.directed:
@@ -388,57 +316,24 @@ def weakly_connected_components(
     #   ~P·V rows, which is tiny, and the up-front shuffle would cost
     #   more than it saves.
     id_t = "int" if compact else "long"
-    block_cleanup = None
-    manifest = None
     edges = None
     if mode == "csr":
-        # Pack per-pid CSR blocks ONCE (one Spark job); no edge-frame
-        # persist — supersteps never touch the edge frame again. The
-        # layout analysis below is moot: the only per-superstep data
-        # movement is the O(V) state routed by the same hash(·)%P the
-        # packer used, plus the frontier-or-partial-sized messages.
-        import tempfile
+        # The block store packs (or validates and reuses) per-pid CSR
+        # blocks ONCE (one Spark job); no edge-frame persist —
+        # supersteps never touch the edge frame again. The layout
+        # analysis above is moot: the only per-superstep data movement
+        # is the O(V) state routed by the same hash(·)%P the packer
+        # used, plus the frontier-or-partial-sized messages. The pack
+        # hashes the graph's ORIGINAL id dtype (Murmur3 of int vs long
+        # differ for equal values), so routing stays aligned with any
+        # upstream long-typed layout. It always shuffles into its
+        # groups: a no-shuffle mapInPandas pack of pre-partitioned
+        # edges A/B'd 2× SLOWER at RMAT-23 (50s vs 24s — the per-batch
+        # pandas concat of a streamed partition costs more than the
+        # shuffle's one fused Arrow stream) and was deleted.
+        from ..plans.csr_blocks import CsrBlocks
 
-        from ..plans.csr_blocks import pack_edges, read_meta
-
-        if block_dir is None:
-            block_dir = tempfile.mkdtemp(prefix="cugraph_wcc_csr_")
-            block_cleanup = block_dir
-        # hash on the ORIGINAL id dtype (Murmur3 of int vs long differ
-        # for equal values): the recast frame's pid expression casts
-        # back, so the routing below stays aligned with any upstream
-        # long-typed layout. The pack always takes the shuffle +
-        # applyInPandas path: the no-shuffle mapInPandas variant
-        # (pack_edges(pre_partitioned=True)) A/B'd 2× SLOWER at
-        # RMAT-23 — the per-batch pandas concat of a streamed
-        # partition costs more than the shuffle it saves (measured
-        # 50s vs 24s; the shuffle's group assembly is one fused
-        # Arrow stream). Kept as an opt-in API for genuinely
-        # bucketed storage where the input scan itself is the cost.
-        hash_t = G.edges.schema[SRC].dataType.simpleString()
-        import os as _os
-
-        if _os.path.exists(_os.path.join(block_dir, "meta.json")):
-            # pack-once-per-stored-graph: a block_dir that already
-            # holds a matching pack is REUSED (the deployment story —
-            # blocks are part of the graph's stored physical layout,
-            # like the bucketed table the dataframe mode reads). P and
-            # hash dtype are validated; the CALLER owns the guarantee
-            # that the blocks were packed from THIS graph, exactly as
-            # with any pre-partitioned input declaration.
-            # routing always casts the state ids to meta's hash_t, so
-            # a pack hashed at a different (value-preserving) width
-            # stays self-consistent — no dtype equality check needed
-            block_meta = read_meta(block_dir, expect_P=P)
-            manifest = {
-                int(k): v for k, v in block_meta["manifest"].items()
-            }
-        else:
-            manifest = pack_edges(
-                e, block_dir, P, src=SRC, dst=DST, id_bounds=(lo, hi),
-                hash_type=hash_t,
-            )
-            block_meta = read_meta(block_dir, expect_P=P)
+        store = CsrBlocks(G, P, block_dir)
     else:
         if not bcast and (not G.partitioned_on(SRC) or recast):
             e = e.repartition(P, SRC)
@@ -447,309 +342,273 @@ def weakly_connected_components(
         ):
             e = e.repartition(P, DST)
         edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+        store = contextlib.nullcontext()
 
-    start_iter = 0
-    state = None
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        it0 = checkpoint.latest_iteration()
-        saved, meta = checkpoint.load(spark, it0)
-        state = (
-            saved.select(
-                F.col("vertex").cast(id_t).alias("vertex"),
-                F.col("labels").cast(id_t).alias("labels"),
-            )
-            .repartition(P, "vertex")
-            .transform(truncate_plan)
-        )
-        start_iter = meta["iteration"] + 1
-
-    import time as _time
-
-    # --- frontier/delta machinery (module docstring) ---------------
-    if frontier_threshold is not None:
-        fthr = int(frontier_threshold)
-    elif mode == "csr":
-        # csr frontier supersteps cost O(|Δ| + Σ deg(Δ)) — no O(E)
-        # probe floor and no delta broadcast (the delta ROUTES to its
-        # block via the pid shuffle), so the switch pays off much
-        # earlier than the dataframe mode's V/8 and has no
-        # executor-memory hazard; worst case ≈ one dense block pass.
-        fthr = max(1, min(V // 2, 32_000_000))
-    else:
-        fthr = max(1, min(V // 8, 4_000_000))
-    last_changed: int | None = None  # measured delta size (checking steps)
-    prev_full = None  # (vertex, labels, old) of the last checked superstep
-
-    probe = None
-    if superstep_metrics is not None:
-        from ..plans.metrics import ShuffleProbe
-
-        probe = ShuffleProbe(spark)
-
-    _t0 = _time.perf_counter()
-    for it in range(start_iter, max_iter):
-        use_frontier = (
-            fthr > 0
-            and state is not None
-            and prev_full is not None
-            and last_changed is not None
-            and 0 < last_changed <= fthr
-        )
-        checking = (
-            use_frontier or (it + 1) % check_every == 0 or it == max_iter - 1
-        )
-        if use_frontier:
-            # Frontier superstep: only last round's changed vertices
-            # announce. Broadcast-probe the persisted edge cache with
-            # the delta (|delta| ≤ fthr ≤ 4M rows) — no exchange in any
-            # layout; join output, aggregation, and every state-side
-            # exchange are frontier-sized (the dense path's
-            # co-partitioned shuffle-hash shape is kept, so only the
-            # frontier-sized side ever moves).
-            delta = prev_full.filter(F.col("labels") != F.col("old")).select(
-                F.col("vertex").alias("dv"), F.col("labels").alias("dl")
-            )
-            if mode == "csr":
-                # route each frontier vertex to ITS OWN block (pid =
-                # hash(v) keys both the state and the edges), gather
-                # only frontier-adjacent edges via indptr slices — no
-                # O(E) probe scan, no broadcast of the delta
-                msgs = (
-                    delta.withColumn(
-                        "pid",
-                        F.pmod(
-                            F.hash(F.col("dv").cast(block_meta["hash_t"])),
-                            F.lit(P),
-                        ),
-                    )
-                    .groupBy("pid")
-                    .applyInPandas(
-                        _csr_min_frontier(block_dir, manifest, block_meta),
-                        schema=f"dst {id_t}, nbr_min {id_t}",
-                    )
-                    .groupBy(DST)
-                    .agg(F.min("nbr_min").alias("nbr_min"))
+    # every loop path ends in a checking action, so the terminal state
+    # RDD is materialized before the store removes its blocks on exit
+    with store as blocks:
+        start_iter = 0
+        state = None
+        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
+            it0 = checkpoint.latest_iteration()
+            saved, meta = checkpoint.load(spark, it0)
+            state = (
+                saved.select(
+                    F.col("vertex").cast(id_t).alias("vertex"),
+                    F.col("labels").cast(id_t).alias("labels"),
                 )
-            else:
-                msgs = (
-                    edges.join(F.broadcast(delta), F.col(SRC) == F.col("dv"))
-                    .groupBy(DST)
-                    .agg(F.min("dl").alias("nbr_min"))
-                )
-            # In broadcast-state mode every frontier-side frame (msgs,
-            # ch, jmap — each ≤ V rows, the same budget class as the
-            # state broadcast the dense path pays every superstep)
-            # broadcasts, so the O(V) state never moves and the whole
-            # frontier superstep is exchange-free (measured in
-            # superstep_metrics). Above the cutover keep the
-            # co-partitioned shuffle-hash shape.
-            def _fside(small):
-                return F.broadcast(small) if bcast else small.hint("shuffle_hash")
-
-            lowered_f = state.join(
-                _fside(msgs), state["vertex"] == msgs[DST], "left"
-            ).select(
-                state["vertex"],
-                F.least(
-                    state["labels"], F.coalesce("nbr_min", state["labels"])
-                ).alias("labels"),
-                state["labels"].alias("old"),
-            )
-            # Eager checkpoint: the partial jump below reads this frame
-            # three times — materialize once instead of re-running the
-            # probe plan per read.
-            low_cp = truncate_plan(lowered_f, eager=True)
-            # Partial pointer jump: only rows changed THIS superstep
-            # look up label(label). Skipping unchanged rows loses
-            # acceleration, never correctness (hash-min alone
-            # converges; jump changes re-enter the delta via old).
-            ch = low_cp.filter(F.col("labels") != F.col("old")).select(
-                F.col("vertex").alias("cv"), F.col("labels").alias("cl")
-            )
-            lk = low_cp.select(
-                F.col("vertex").alias("lv"), F.col("labels").alias("ll")
-            )
-            jmap = lk.join(
-                _fside(ch), F.col("lv") == F.col("cl")
-            ).select(F.col("cv"), F.col("ll").alias("jl"))
-            jumped = (
-                low_cp.join(
-                    _fside(jmap),
-                    low_cp["vertex"] == F.col("cv"),
-                    "left",
-                )
-                .select(
-                    low_cp["vertex"],
-                    F.least(
-                        low_cp["labels"], F.coalesce("jl", low_cp["labels"])
-                    ).alias("labels"),
-                    low_cp["old"],
-                )
+                .repartition(P, "vertex")
                 .transform(truncate_plan)
             )
-        elif state is None:
-            # Superstep 0 on the identity labeling collapses to ONE
-            # map-side-combinable aggregation: min over {v} ∪ N(v) is
-            # least(dst, min(src)) grouped by dst — no initial
-            # vertices() distinct, no edges⋈state join. Every vertex
-            # appears as DST because the graph is symmetrized and
-            # self-loops were kept above. This same action also fills
-            # the `edges` persist for the remaining supersteps.
-            # csr: the identity labels never ship (labels(su) IS su) —
-            # one task per manifest pid emits the unfiltered per-block
-            # partials so the first state frame covers every vertex.
-            if mode == "csr":
-                import pandas as _pd
+            start_iter = meta["iteration"] + 1
 
-                pids = spark.createDataFrame(
-                    _pd.DataFrame({"pid": sorted(manifest)})
-                ).repartition(P, "pid")
-                msgs0 = (
-                    pids.groupBy("pid")
-                    .applyInPandas(
-                        _csr_min_dense(block_dir, manifest, block_meta, identity=True),
-                        schema=f"dst {id_t}, nbr_min {id_t}",
-                    )
-                    .groupBy(DST)
-                    .agg(F.min("nbr_min").alias("nbr_min"))
-                )
-                lowered = msgs0.select(
-                    F.col(DST).alias("vertex"),
-                    F.least(F.col(DST), F.col("nbr_min")).alias("labels"),
-                    F.col(DST).alias("old"),
-                ).transform(truncate_plan)
-            else:
-                lowered = (
-                    edges.groupBy(DST)
-                    .agg(F.min(SRC).alias("nbr_min"))
-                    .select(
-                        F.col(DST).alias("vertex"),
-                        F.least(F.col(DST), F.col("nbr_min")).alias("labels"),
-                        F.col(DST).alias("old"),
-                    )
-                    .transform(truncate_plan)
-                )
+        import time as _time
+
+        # --- frontier/delta machinery (module docstring) ---------------
+        if frontier_threshold is not None:
+            fthr = int(frontier_threshold)
+        elif mode == "csr":
+            # csr frontier supersteps cost O(|Δ| + Σ deg(Δ)) — no O(E)
+            # probe floor and no delta broadcast (the delta ROUTES to its
+            # block via the pid shuffle), so the switch pays off much
+            # earlier than the dataframe mode's V/8 and has no
+            # executor-memory hazard; worst case ≈ one dense block pass.
+            fthr = max(1, min(V // 2, 32_000_000))
         else:
-            # hash-min over neighbors — csr: only the O(V) label vector
-            # crosses Arrow (routed by the packer's hash(·)%P); the
-            # per-block np.minimum.at replaces the edges⋈state join +
-            # JVM aggregation stream (measured A/B in BENCH/BASELINE.md
-            # round 5)
-            if mode == "csr":
-                mins = (
-                    state.withColumn(
-                        "pid",
-                        F.pmod(
-                            F.hash(F.col("vertex").cast(block_meta["hash_t"])),
-                            F.lit(P),
-                        ),
+            fthr = max(1, min(V // 8, 4_000_000))
+        last_changed: int | None = None  # measured delta size (checking steps)
+        prev_full = None  # (vertex, labels, old) of the last checked superstep
+
+        probe = None
+        if superstep_metrics is not None:
+            from ..plans.metrics import ShuffleProbe
+
+            probe = ShuffleProbe(spark)
+
+        _t0 = _time.perf_counter()
+        for it in range(start_iter, max_iter):
+            use_frontier = (
+                fthr > 0
+                and state is not None
+                and prev_full is not None
+                and last_changed is not None
+                and 0 < last_changed <= fthr
+            )
+            checking = (
+                use_frontier or (it + 1) % check_every == 0 or it == max_iter - 1
+            )
+            if use_frontier:
+                # Frontier superstep: only last round's changed vertices
+                # announce. Broadcast-probe the persisted edge cache with
+                # the delta (|delta| ≤ fthr ≤ 4M rows) — no exchange in any
+                # layout; join output, aggregation, and every state-side
+                # exchange are frontier-sized (the dense path's
+                # co-partitioned shuffle-hash shape is kept, so only the
+                # frontier-sized side ever moves).
+                delta = prev_full.filter(F.col("labels") != F.col("old")).select(
+                    "vertex", "labels"
+                )
+                if blocks is not None:
+                    # route each frontier vertex to ITS OWN block (pid =
+                    # hash(v) keys both the state and the edges), gather
+                    # only frontier-adjacent edges via indptr slices — no
+                    # O(E) probe scan, no broadcast of the delta
+                    msgs = blocks.map_blocks(
+                        _csr_min_frontier("labels", bound=True),
+                        f"dst {id_t}, nbr_min {id_t}",
+                        delta,
                     )
-                    .groupBy("pid")
-                    .applyInPandas(
-                        _csr_min_dense(block_dir, manifest, block_meta, identity=False),
-                        schema=f"dst {id_t}, nbr_min {id_t}",
-                    )
-                    .groupBy(DST)
-                    .agg(F.min("nbr_min").alias("nbr_min"))
-                )
-            else:
-                sside = vertex_join_side(state, V, limit=blimit)
-                mins = (
-                    edges.join(sside, edges[SRC] == sside["vertex"])
-                    .groupBy(DST)
-                    .agg(F.min("labels").alias("nbr_min"))
-                )
-            # carry the old label through so the changed-count needs no
-            # extra join; checkpoint `lowered` so the pointer-jump
-            # self-join reads one materialized RDD instead of
-            # recomputing the mins join twice
-            lowered = (
-                state.join(
-                    mins.hint("shuffle_hash"), state["vertex"] == mins[DST], "left"
-                )
-                .select(
+                else:
+                    msgs = edges.join(
+                        F.broadcast(delta), F.col(SRC) == F.col("vertex")
+                    ).select(DST, F.col("labels").alias("nbr_min"))
+                msgs = msgs.groupBy(DST).agg(F.min("nbr_min").alias("nbr_min"))
+                # In broadcast-state mode every frontier-side frame (msgs,
+                # ch, jmap — each ≤ V rows, the same budget class as the
+                # state broadcast the dense path pays every superstep)
+                # broadcasts, so the O(V) state never moves and the whole
+                # frontier superstep is exchange-free (measured in
+                # superstep_metrics). Above the cutover keep the
+                # co-partitioned shuffle-hash shape.
+                def _fside(small):
+                    return F.broadcast(small) if bcast else small.hint("shuffle_hash")
+
+                lowered_f = state.join(
+                    _fside(msgs), state["vertex"] == msgs[DST], "left"
+                ).select(
                     state["vertex"],
                     F.least(
                         state["labels"], F.coalesce("nbr_min", state["labels"])
                     ).alias("labels"),
                     state["labels"].alias("old"),
                 )
-                .transform(truncate_plan)
-            )
-        if not use_frontier:
-            # pointer jump: labels ← labels(labels) — contraction-level
-            # analog (the frontier branch did its partial jump above)
-            lab = lowered.select(
-                F.col("vertex").alias("lv"), F.col("labels").alias("ll")
-            )
-            labside = vertex_join_side(lab, V, limit=blimit)
-            jumped = (
-                lowered.join(labside, lowered["labels"] == labside["lv"], "left")
-                .select(
-                    lowered["vertex"],
-                    F.coalesce(labside["ll"], lowered["labels"]).alias("labels"),
-                    lowered["old"],
+                # Eager checkpoint: the partial jump below reads this frame
+                # three times — materialize once instead of re-running the
+                # probe plan per read.
+                low_cp = truncate_plan(lowered_f, eager=True)
+                # Partial pointer jump: only rows changed THIS superstep
+                # look up label(label). Skipping unchanged rows loses
+                # acceleration, never correctness (hash-min alone
+                # converges; jump changes re-enter the delta via old).
+                ch = low_cp.filter(F.col("labels") != F.col("old")).select(
+                    F.col("vertex").alias("cv"), F.col("labels").alias("cl")
                 )
-                .transform(truncate_plan)
-            )
+                lk = low_cp.select(
+                    F.col("vertex").alias("lv"), F.col("labels").alias("ll")
+                )
+                jmap = lk.join(
+                    _fside(ch), F.col("lv") == F.col("cl")
+                ).select(F.col("cv"), F.col("ll").alias("jl"))
+                jumped = (
+                    low_cp.join(
+                        _fside(jmap),
+                        low_cp["vertex"] == F.col("cv"),
+                        "left",
+                    )
+                    .select(
+                        low_cp["vertex"],
+                        F.least(
+                            low_cp["labels"], F.coalesce("jl", low_cp["labels"])
+                        ).alias("labels"),
+                        low_cp["old"],
+                    )
+                    .transform(truncate_plan)
+                )
+            elif state is None:
+                # Superstep 0 on the identity labeling collapses to ONE
+                # map-side-combinable aggregation: min over {v} ∪ N(v) is
+                # least(dst, min(src)) grouped by dst — no initial
+                # vertices() distinct, no edges⋈state join. Every vertex
+                # appears as DST because the graph is symmetrized and
+                # self-loops were kept above. This same action also fills
+                # the `edges` persist for the remaining supersteps.
+                # csr: the identity labels never ship (labels(su) IS su) —
+                # one task per manifest pid emits the unfiltered per-block
+                # partials so the first state frame covers every vertex.
+                if blocks is not None:
+                    msgs0 = (
+                        blocks.map_blocks(
+                            _csr_min(identity=True), f"dst {id_t}, nbr_min {id_t}"
+                        )
+                        .groupBy(DST)
+                        .agg(F.min("nbr_min").alias("nbr_min"))
+                    )
+                else:
+                    msgs0 = edges.groupBy(DST).agg(F.min(SRC).alias("nbr_min"))
+                lowered = msgs0.select(
+                    F.col(DST).alias("vertex"),
+                    F.least(F.col(DST), F.col("nbr_min")).alias("labels"),
+                    F.col(DST).alias("old"),
+                ).transform(truncate_plan)
+            else:
+                # hash-min over neighbors — csr: only the O(V) label vector
+                # crosses Arrow (routed by the packer's hash(·)%P); the
+                # per-block np.minimum.at replaces the edges⋈state join +
+                # JVM aggregation stream (measured A/B in BENCH/BASELINE.md
+                # round 5)
+                if blocks is not None:
+                    mins = (
+                        blocks.map_blocks(
+                            _csr_min(identity=False),
+                            f"dst {id_t}, nbr_min {id_t}",
+                            state,
+                            value="labels",
+                        )
+                        .groupBy(DST)
+                        .agg(F.min("nbr_min").alias("nbr_min"))
+                    )
+                else:
+                    sside = vertex_join_side(state, V, limit=blimit)
+                    mins = (
+                        edges.join(sside, edges[SRC] == sside["vertex"])
+                        .groupBy(DST)
+                        .agg(F.min("labels").alias("nbr_min"))
+                    )
+                # carry the old label through so the changed-count needs no
+                # extra join; checkpoint `lowered` so the pointer-jump
+                # self-join reads one materialized RDD instead of
+                # recomputing the mins join twice
+                lowered = (
+                    state.join(
+                        mins.hint("shuffle_hash"), state["vertex"] == mins[DST], "left"
+                    )
+                    .select(
+                        state["vertex"],
+                        F.least(
+                            state["labels"], F.coalesce("nbr_min", state["labels"])
+                        ).alias("labels"),
+                        state["labels"].alias("old"),
+                    )
+                    .transform(truncate_plan)
+                )
+            if not use_frontier:
+                # pointer jump: labels ← labels(labels) — contraction-level
+                # analog (the frontier branch did its partial jump above)
+                lab = lowered.select(
+                    F.col("vertex").alias("lv"), F.col("labels").alias("ll")
+                )
+                labside = vertex_join_side(lab, V, limit=blimit)
+                jumped = (
+                    lowered.join(labside, lowered["labels"] == labside["lv"], "left")
+                    .select(
+                        lowered["vertex"],
+                        F.coalesce(labside["ll"], lowered["labels"]).alias("labels"),
+                        lowered["old"],
+                    )
+                    .transform(truncate_plan)
+                )
 
-        if not checking:
-            # stay lazy: this superstep executes inside the next
-            # checking superstep's action (no measured delta → the next
-            # superstep cannot go frontier)
+            if not checking:
+                # stay lazy: this superstep executes inside the next
+                # checking superstep's action (no measured delta → the next
+                # superstep cannot go frontier)
+                state = jumped.select("vertex", "labels")
+                last_changed = None
+                prev_full = None
+                continue
+
+            changed = (
+                jumped.agg(
+                    F.sum(
+                        F.when(F.col("labels") != F.col("old"), 1).otherwise(0)
+                    ).alias("c")
+                )
+                .first()["c"]
+            )
+            _step_wall = _time.perf_counter() - _t0
+            _t0 = _time.perf_counter()
+            if superstep_seconds is not None:
+                # wall of the checking action (covers the k batched lazy
+                # supersteps since the previous check) — same contract as
+                # pagerank's chained-mode superstep_seconds
+                superstep_seconds.append(_step_wall)
+            if probe is not None:
+                mtag = "frontier" if use_frontier else "dense"
+                if mode == "csr":
+                    mtag = "csr-" + mtag
+                superstep_metrics.append(
+                    {
+                        "iteration": it,
+                        "mode": mtag,
+                        "changed": int(changed),
+                        "seconds": round(_step_wall, 3),
+                        **probe.delta(),
+                    }
+                )
             state = jumped.select("vertex", "labels")
-            last_changed = None
-            prev_full = None
-            continue
+            prev_full = jumped
+            last_changed = int(changed)
 
-        changed = (
-            jumped.agg(
-                F.sum(
-                    F.when(F.col("labels") != F.col("old"), 1).otherwise(0)
-                ).alias("c")
-            )
-            .first()["c"]
-        )
-        _step_wall = _time.perf_counter() - _t0
-        _t0 = _time.perf_counter()
-        if superstep_seconds is not None:
-            # wall of the checking action (covers the k batched lazy
-            # supersteps since the previous check) — same contract as
-            # pagerank's chained-mode superstep_seconds
-            superstep_seconds.append(_step_wall)
-        if probe is not None:
-            mtag = "frontier" if use_frontier else "dense"
-            if mode == "csr":
-                mtag = "csr-" + mtag
-            superstep_metrics.append(
-                {
-                    "iteration": it,
-                    "mode": mtag,
-                    "changed": int(changed),
-                    "seconds": round(_step_wall, 3),
-                    **probe.delta(),
-                }
-            )
-        state = jumped.select("vertex", "labels")
-        prev_full = jumped
-        last_changed = int(changed)
+            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+                state = checkpoint.save(
+                    state.select("vertex", "labels"), it, {"changed": int(changed)}
+                )
 
-        if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-            state = checkpoint.save(
-                state.select("vertex", "labels"), it, {"changed": int(changed)}
-            )
-
-        if changed == 0 and (it + 1) >= min_iter:
-            break
+            if changed == 0 and (it + 1) >= min_iter:
+                break
 
     if edges is not None:
         edges.unpersist()
-    if block_cleanup is not None:
-        # every loop path ends in a checking action, so the terminal
-        # state RDD is already materialized — the blocks can go
-        import shutil
-
-        shutil.rmtree(block_cleanup, ignore_errors=True)
     if state is None:  # max_iter == 0: the identity labeling
         state = G.vertices().select(
             F.col("vertex").cast(id_t).alias("vertex"),

@@ -36,65 +36,116 @@ frontier-adjacent edges (the analog of the reference's
 ``transform_reduce_v_frontier_outgoing_e_by_dst.cuh`` prims),
 eliminating the O(E) probe scan the dataframe frontier mode pays.
 
-``meta.json`` records {P, ids, hi1, weighted, manifest} and readers
-VALIDATE P against the current run — a reused block_dir from a
-different graph or partition count fails loudly, never silently
-(ADVICE r4). The packer returns a driver-side MANIFEST ``{pid:
-n_edges}``; a manifest-listed pid whose block file is missing at read
-time is a torn deployment (non-shared ``block_dir``, partial pack) and
-raises — it must never contribute silent zeros. Only pids absent from
-the manifest legitimately have no edges (hash gaps at small E).
+``meta.json`` records {P, ids, narrow, hi1, weighted, hash_t, n_edges,
+lo, hi, manifest}. The MANIFEST ``{pid: n_edges}`` lists every pid that
+has edges; a manifest-listed pid whose block file is missing or
+unreadable at read time is a torn deployment (non-shared ``block_dir``,
+partial pack) and raises — it must never contribute silent zeros. Only
+pids absent from the manifest legitimately have no edges (hash gaps at
+small E). Every block file and ``meta.json`` is written to a temp name
+and renamed into place, so a retried or speculative pack task never
+leaves a half-written file under a final name.
 
-Scale notes: blocks are written once per run (one Spark job), read
-mmap'd P times per superstep; at 100 TB the block set is
+The block store (:class:`CsrBlocks`) is the ONE owner of the block
+lifecycle; operators never touch the files. Its contract:
+
+- open it as a context manager from ``(G or edge frame, P, block_dir,
+  weighted)``. ``block_dir=None`` packs into a private temp dir that is
+  removed on exit; a caller's ``block_dir`` is never removed;
+- a ``block_dir`` that already holds ``meta.json`` is REUSED (pack once
+  per stored graph) only after validation: P, weights when the caller
+  needs them, and the graph itself — ``lo``/``hi`` against
+  ``Graph.vertex_stats`` and ``n_edges`` against the edge count (one
+  count job per reuse, none on a fresh pack). A mismatch, or a
+  ``meta.json`` without those fields, raises;
+- :meth:`CsrBlocks.map_blocks` routes vertex-keyed frames by the one
+  ``pmod(hash(v CAST meta.hash_t), P)`` expression the packer used
+  (:func:`pid_of`), so a block's srcs are exactly the state rows its
+  pid receives, and runs a kernel per pid in one
+  ``groupBy(pid).applyInPandas``. State slices are mapped onto the
+  block's srcs with a torn check; kernels see a :class:`Block` view and
+  are written once for both formats;
+- leave the ``with`` block only after the operator's last action that
+  reads the blocks (lazy plans over them are dead once they are gone).
+
+Per-task scratch budget: dense-format kernels allocate O(hi) scratch
+per concurrent task. The pack picks dense only below
+``DENSE_IDS_LIMIT`` = 2^26 ids, where an int32 id array is 256 MB; the
+weighted dense kernels (PageRank's float64 state scatter and
+``np.bincount``) need 2× that, 512 MB. Larger id spaces pack as dict,
+whose scratch is O(distinct dsts in the block).
+
+Scale notes: blocks are written once per stored graph (one Spark job),
+read mmap'd P times per superstep; at 100 TB the block set is
 O(E/P · 4-12 bytes) per executor on shared storage (HDFS-fuse/NFS/EFS)
 and the per-superstep network traffic is the O(V) state exchange only.
-The dense format's scratch arrays cost O(hi) per concurrent task —
-callers gate it via ``dense_limit`` (default 2^26 ids ⇒ ≤256 MB of
-int32 scratch per task) and fall back to ``dict``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
+import uuid
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..graph import DST, SRC, WGT, Graph
+
 DENSE_IDS_LIMIT = 1 << 26  # max hi+1 for the dense-id block format
 
 
-def _pack_fn(block_dir: str, weighted: bool, dense: bool, check_pid: bool = False):
+def pid_of(col: str, hash_t: str, P: int):
+    """The block routing key: ``pmod(hash(col CAST hash_t), P)``.
+    Murmur3 of int and long DIFFER for equal values, so writer and
+    readers must hash the same width — the packer records it in
+    ``meta.json`` as ``hash_t``."""
+    return F.pmod(F.hash(F.col(col).cast(hash_t)), F.lit(P))
+
+
+def _write_atomic(path: str, write) -> None:
+    """Write through a task-unique temp name, then rename into place."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "wb") as f:
+        write(f)
+    os.replace(tmp, path)
+
+
+def _pack_fn(block_dir: str, weighted: bool, dense: bool):
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["pid"].iloc[0])
-        if check_pid and (pdf["pid"].to_numpy() != pid).any():
-            raise RuntimeError(
-                "pack_edges(pre_partitioned=True): a physical partition "
-                "contains more than one pid — the edge frame is NOT "
-                "hash-partitioned by pmod(hash(src), P) into exactly P "
-                "partitions; drop pre_partitioned to pack via shuffle"
-            )
         src = pdf["src"].to_numpy()
         dst = pdf["dst"].to_numpy()
         order = np.argsort(src, kind="stable")  # radix on int32/64
         src, dst = src[order], dst[order]
         su, counts = np.unique(src, return_counts=True)
-        indptr = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
-        base = os.path.join(block_dir, str(pid))
-        np.save(base + ".su.npy", su)
-        np.save(base + ".indptr.npy", indptr)
+        arrays = {
+            "su": su,
+            "indptr": np.concatenate(([0], np.cumsum(counts))).astype(np.int64),
+        }
         if dense:
-            np.save(base + ".dr.npy", dst)
+            arrays["dr"] = dst
         else:
             du, dc = np.unique(dst, return_inverse=True)
-            np.save(base + ".du.npy", du)
-            np.save(base + ".dc.npy", dc.astype(np.int32))
+            arrays["du"], arrays["dc"] = du, dc.astype(np.int32)
         if weighted:
-            np.save(base + ".w.npy", pdf["weight"].to_numpy(np.float64)[order])
-        return pd.DataFrame({"pid": [pid], "n": [len(src)]})
+            arrays["w"] = pdf["weight"].to_numpy(np.float64)[order]
+        base = os.path.join(block_dir, str(pid))
+        for name, arr in arrays.items():
+            _write_atomic(f"{base}.{name}.npy", lambda f, a=arr: np.save(f, a))
+        return pd.DataFrame(
+            {
+                "pid": [pid],
+                "n": [len(src)],
+                "lo": [min(su[0], dst.min())],
+                "hi": [max(su[-1], dst.max())],
+            }
+        )
 
     return pack
 
@@ -103,38 +154,23 @@ def pack_edges(
     edges: DataFrame,
     block_dir: str,
     P: int,
-    src: str = "src",
-    dst: str = "dst",
     weight: str | None = None,
     id_bounds: tuple | None = None,
-    dense_limit: int = DENSE_IDS_LIMIT,
     hash_type: str | None = None,
-    pre_partitioned: bool = False,
 ) -> dict[int, int]:
-    """Pack ``edges`` into per-pid CSR blocks under ``block_dir`` (ONE
-    Spark job) and return the manifest ``{pid: n_edges}``. ``pid`` is
-    ``pmod(hash(src CAST hash_type), P)`` — the SAME Catalyst
-    expression readers use to route the vertex-state vector, so a
-    block's srcs are exactly the state rows its pid receives.
+    """Pack ``edges`` (columns ``src``, ``dst``) into per-pid CSR blocks
+    under ``block_dir`` (ONE Spark job) and return the manifest ``{pid:
+    n_edges}``. ``pid`` is :func:`pid_of` over ``src`` — the SAME
+    Catalyst expression readers use to route the vertex-state vector.
     ``hash_type`` (default: the src column's current type) pins the
-    hash input dtype: Murmur3 of int and long DIFFER for equal values,
-    so writer and readers must hash the same width — it is recorded in
-    meta.json and readers route with it.
+    hash input dtype and is recorded in meta.json.
 
     ``id_bounds=(lo, hi)`` (from ``Graph.vertex_stats``) selects the
-    dense format when ``0 <= lo`` and ``hi < dense_limit``; the id
+    dense format when ``0 <= lo`` and ``hi < DENSE_IDS_LIMIT``; the id
     columns are also narrowed to int32 in the pack transfer when they
-    fit (halves the Arrow bytes of the one O(E) transfer).
-
-    ``pre_partitioned=True``: the edge frame is ALREADY hash-
-    partitioned into exactly P partitions on ``hash(src) % P`` (e.g. a
-    bucketed table or a loop-prepped ``repartition(P, src)`` cache) —
-    pack streams each partition through ``mapInPandas`` with NO
-    shuffle; physical partition index ≡ pid under Spark's
-    HashPartitioning. The claim is verified fail-loud: every row of a
-    partition must carry the partition's pid, else the pack raises
-    (and a wrong claim that somehow passed would still be caught by
-    the readers' src-coverage check at the first superstep)."""
+    fit (halves the Arrow bytes of the one O(E) transfer). The same job
+    returns each pid's edge count and id range, so meta.json records
+    the graph's ``n_edges``, ``lo`` and ``hi`` for reuse validation."""
     os.makedirs(block_dir, exist_ok=True)
     dense = False
     hi1 = 0
@@ -142,57 +178,49 @@ def pack_edges(
     if id_bounds is not None:
         lo, hi = id_bounds
         if isinstance(lo, int) and isinstance(hi, int):
-            dense = 0 <= lo and hi < dense_limit
+            dense = 0 <= lo and hi < DENSE_IDS_LIMIT
             hi1 = hi + 1 if dense else 0
             narrow = -(2**31) < lo and hi < 2**31 - 1
     if hash_type is None:
-        hash_type = edges.schema[src].dataType.simpleString()
+        hash_type = edges.schema[SRC].dataType.simpleString()
 
     def _id(c):
         col = F.col(c)
         return col.cast("int") if narrow else col
 
     cols = [
-        F.pmod(F.hash(F.col(src).cast(hash_type)), F.lit(P)).alias("pid"),
-        _id(src).alias("src"),
-        _id(dst).alias("dst"),
+        pid_of(SRC, hash_type, P).alias("pid"),
+        _id(SRC).alias("src"),
+        _id(DST).alias("dst"),
     ]
     if weight is not None:
         cols.append(F.col(weight).cast("double").alias("weight"))
-    sel = edges.select(*cols)
-    if pre_partitioned:
-        fn = _pack_fn(block_dir, weight is not None, dense, check_pid=True)
-
-        def gen(batches):
-            pdfs = list(batches)
-            if not pdfs:
-                return
-            yield fn(pd.concat(pdfs, ignore_index=True))
-
-        rows = sel.mapInPandas(gen, schema="pid long, n long").collect()
-    else:
-        rows = (
-            sel.groupBy("pid")
-            .applyInPandas(
-                _pack_fn(block_dir, weight is not None, dense),
-                schema="pid long, n long",
-            )
-            .collect()
+    rows = (
+        edges.select(*cols)
+        .groupBy("pid")
+        .applyInPandas(
+            _pack_fn(block_dir, weight is not None, dense),
+            schema="pid long, n long, lo long, hi long",
         )
+        .collect()
+    )
     manifest = {int(r["pid"]): int(r["n"]) for r in rows}
-    with open(os.path.join(block_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "P": P,
-                "ids": "dense" if dense else "dict",
-                "narrow": narrow,
-                "hi1": hi1,
-                "weighted": weight is not None,
-                "hash_t": hash_type,
-                "manifest": {str(k): v for k, v in manifest.items()},
-            },
-            f,
-        )
+    meta = {
+        "P": P,
+        "ids": "dense" if dense else "dict",
+        "narrow": narrow,
+        "hi1": hi1,
+        "weighted": weight is not None,
+        "hash_t": hash_type,
+        "n_edges": sum(manifest.values()),
+        "lo": min((r["lo"] for r in rows), default=None),
+        "hi": max((r["hi"] for r in rows), default=None),
+        "manifest": {str(k): v for k, v in manifest.items()},
+    }
+    _write_atomic(
+        os.path.join(block_dir, "meta.json"),
+        lambda f: f.write(json.dumps(meta).encode()),
+    )
     return manifest
 
 
@@ -214,11 +242,12 @@ def load_block(block_dir: str, pid: int, meta: dict):
     """mmap-load one packed block → dict of arrays (keys: su, indptr,
     and dr [dense] or du+dc [dict], plus w when weighted).
 
-    Raises RuntimeError on a missing file: callers only ask for pids
-    the manifest lists, so absence means a torn deployment (non-shared
-    block_dir or a task placed on a node without the file) — silently
-    returning empty would silently corrupt every downstream result
-    (ADVICE r4: the round-4 pagerank reader did exactly that)."""
+    Raises RuntimeError on a missing, truncated or unreadable file:
+    callers only ask for pids the manifest lists, so such a file means a
+    torn deployment (non-shared block_dir, a task placed on a node
+    without the file, or a torn pack) — silently returning empty would
+    silently corrupt every downstream result (ADVICE r4: the round-4
+    pagerank reader did exactly that)."""
     names = ["su", "indptr"]
     names += ["dr"] if meta["ids"] == "dense" else ["du", "dc"]
     if meta.get("weighted"):
@@ -229,17 +258,18 @@ def load_block(block_dir: str, pid: int, meta: dict):
         path = f"{base}.{name}.npy"
         try:
             out[name] = np.load(path, mmap_mode="r")
-        except FileNotFoundError:
+        except (OSError, ValueError, EOFError) as exc:
             raise RuntimeError(
-                f"CSR block file missing: {path} — the pack manifest lists "
-                f"pid {pid}, so block_dir is not shared storage visible to "
-                "this executor (or the pack was torn). Refusing to "
-                "contribute silent zeros."
+                f"CSR block file missing or unreadable: {path} "
+                f"({type(exc).__name__}) — the pack manifest lists pid "
+                f"{pid}, so block_dir is not shared storage visible to this "
+                "executor, or the pack was torn. Refusing to contribute "
+                "silent zeros."
             ) from None
     return out
 
 
-def state_values_for_srcs(pdf_vertex, pdf_value, su, torn_check: bool = True):
+def state_values_for_srcs(pdf_vertex, pdf_value, su):
     """Map a pid's incoming state slice onto the block's src dictionary
     (one searchsorted). Every block src hashes to this pid, so it MUST
     be present in the slice; a mismatch means corrupted/stale blocks
@@ -248,15 +278,14 @@ def state_values_for_srcs(pdf_vertex, pdf_value, su, torn_check: bool = True):
     order = np.argsort(pdf_vertex, kind="stable")
     vs = pdf_vertex[order]
     pos = np.searchsorted(vs, su)
-    if torn_check:
-        if len(vs) == 0 or pos.max(initial=0) >= len(vs) or not np.array_equal(
-            vs[np.minimum(pos, len(vs) - 1)], su
-        ):
-            raise RuntimeError(
-                "CSR block src dictionary does not match the incoming "
-                "vertex-state slice — stale/corrupt blocks (block_dir "
-                "reused from a different graph or partition count?)"
-            )
+    if len(vs) == 0 or pos.max(initial=0) >= len(vs) or not np.array_equal(
+        vs[np.minimum(pos, len(vs) - 1)], su
+    ):
+        raise RuntimeError(
+            "CSR block src dictionary does not match the incoming "
+            "vertex-state slice — stale/corrupt blocks (block_dir "
+            "reused from a different graph or partition count?)"
+        )
     return pdf_value[order][pos]
 
 
@@ -276,3 +305,180 @@ def scatter_state_for_srcs(pdf_vertex, pdf_value, su, hi1: int):
             "reused from a different graph or partition count?)"
         )
     return arr[su]
+
+
+class Block:
+    """One pid's packed block as kernels see it; the dense/dict dst
+    format is resolved here, so a kernel is written once for both.
+
+    - ``su``, ``indptr``: the src-sorted CSR (``deg`` = out-degree of
+      each ``su`` entry);
+    - ``dst_index``: per-edge dst slot in ``[0, n_dst)`` — ``dr`` or
+      ``dc``, left mmap'd so a frontier gather reads only touched pages;
+    - ``n_dst``: slot count of a per-dst reduce (``hi1`` or ``len(du)``);
+    - ``dst_ids(touched)``: vertex ids of reduce slots;
+    - ``w``: edge weights (weighted packs only)."""
+
+    def __init__(self, arrays: dict, meta: dict):
+        self.su = np.asarray(arrays["su"])
+        self.indptr = np.asarray(arrays["indptr"])
+        self.w = arrays.get("w")
+        if meta["ids"] == "dense":
+            self.dst_index, self._du = arrays["dr"], None
+            self.n_dst, self.id_dtype = meta["hi1"], self.dst_index.dtype
+        else:
+            self.dst_index, self._du = arrays["dc"], np.asarray(arrays["du"])
+            self.n_dst, self.id_dtype = len(self._du), self._du.dtype
+
+    @cached_property
+    def deg(self):
+        return np.diff(self.indptr)
+
+    def dst_ids(self, touched):
+        if self._du is None:
+            return touched.astype(self.id_dtype, copy=False)
+        return self._du[touched]
+
+
+def _block_task(block_dir: str, meta: dict, manifest: dict, kernel, schema: str, value):
+    """The per-pid pandas function behind :meth:`CsrBlocks.map_blocks`.
+    Captures plain values only — it is pickled to the executors."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pid = int(pdf["pid"].iloc[0])
+        if pid not in manifest:  # rows for a pid with no edges (hash gap)
+            return pd.DataFrame({n: np.empty(0, np.int64) for n in names})
+        blk = Block(load_block(block_dir, pid, meta), meta)
+        if value is None:
+            return pd.DataFrame(kernel(blk, pdf))
+        v, x = pdf["vertex"].to_numpy(), pdf[value].to_numpy()
+        if meta["ids"] == "dense":
+            x = scatter_state_for_srcs(v, x, blk.su, meta["hi1"])
+        else:
+            x = state_values_for_srcs(v, x, blk.su)
+        return pd.DataFrame(kernel(blk, x))
+
+    return fn
+
+
+class CsrBlocks:
+    """The block store: pack-or-reuse, validation, routing, per-pid
+    kernel runs and cleanup for one operator call (module docstring has
+    the full contract). ``source`` is a ``Graph`` or an edge frame with
+    ``src``/``dst`` (and ``weight`` when ``weighted``) columns."""
+
+    def __init__(
+        self,
+        source: Graph | DataFrame,
+        P: int,
+        block_dir: str | None = None,
+        weighted: bool = False,
+    ):
+        self.source = source
+        self.edges = source if isinstance(source, DataFrame) else source.edges
+        self.P = P
+        self.block_dir = block_dir
+        self.weighted = weighted
+        self._owned = block_dir is None
+
+    def __enter__(self) -> CsrBlocks:
+        if self._owned:
+            self.block_dir = tempfile.mkdtemp(prefix="cugraph_csr_")
+        try:
+            if os.path.exists(os.path.join(self.block_dir, "meta.json")):
+                self.meta = self._validated_meta()
+            else:
+                cols = [SRC, DST] + ([WGT] if self.weighted else [])
+                pack_edges(
+                    self.edges.select(*cols),
+                    self.block_dir,
+                    self.P,
+                    weight=WGT if self.weighted else None,
+                    id_bounds=self._stats(count=False)[1:],
+                )
+                self.meta = read_meta(self.block_dir)
+        except BaseException:
+            self.__exit__()
+            raise
+        self.manifest = {int(k): v for k, v in self.meta["manifest"].items()}
+        # Spark type of the id arrays kernels emit (int32 when narrowed)
+        self.id_t = "int" if self.meta["narrow"] else "long"
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._owned:
+            shutil.rmtree(self.block_dir, ignore_errors=True)
+
+    def _stats(self, count: bool) -> tuple:
+        """``(n_edges, lo, hi)`` of the source. A Graph answers the id
+        bounds from its memoized ``vertex_stats`` and counts edges only
+        when asked (``n_edges`` is None otherwise); a bare edge frame
+        costs one aggregate."""
+        if isinstance(self.source, DataFrame):
+            r = self.edges.agg(
+                F.count("*"),
+                F.least(F.min(SRC), F.min(DST)),
+                F.greatest(F.max(SRC), F.max(DST)),
+            ).first()
+            return r[0], r[1], r[2]
+        _, lo, hi = self.source.vertex_stats()
+        return (self.edges.count() if count else None), lo, hi
+
+    def _validated_meta(self) -> dict:
+        meta = read_meta(self.block_dir, expect_P=self.P)
+        if self.weighted and not meta["weighted"]:
+            raise RuntimeError(
+                f"CSR block_dir {self.block_dir} was packed without weights"
+            )
+        keys = ("n_edges", "lo", "hi")
+        if not all(k in meta for k in keys):
+            raise RuntimeError(
+                f"CSR block_dir {self.block_dir} has a stale meta.json "
+                "without n_edges/lo/hi — cannot tell which graph it was "
+                "packed from; repack it"
+            )
+        got = dict(zip(keys, self._stats(count=True)))
+        packed = {k: meta[k] for k in keys}
+        if packed != got:
+            raise RuntimeError(
+                f"CSR block_dir {self.block_dir} was packed from a different "
+                f"graph (blocks {packed}, this graph {got}) — stale/reused "
+                "block directory"
+            )
+        return meta
+
+    def task(self, kernel, schema: str, value: str | None = None):
+        """The per-pid pandas function :meth:`map_blocks` runs."""
+        return _block_task(
+            self.block_dir, self.meta, self.manifest, kernel, schema, value
+        )
+
+    def map_blocks(
+        self,
+        kernel,
+        schema: str,
+        frame: DataFrame | None = None,
+        value: str | None = None,
+    ) -> DataFrame:
+        """Run ``kernel(block, x)`` once per pid; it returns a dict of
+        output columns matching ``schema``.
+
+        - ``frame=None``: the identity superstep — one task per manifest
+          pid, no state ships (``x`` is the pid-only slice);
+        - ``frame`` keyed by ``vertex`` and ``value`` given: ``x`` is the
+          ``value`` column aligned with ``block.su`` (raises when the
+          slice does not cover the block's srcs — stale blocks);
+        - ``frame`` keyed by ``vertex``, ``value=None``: ``x`` is the
+          pid's raw pandas slice (frontier kernels)."""
+        if frame is None:
+            frame = self.edges.sparkSession.createDataFrame(
+                [(p,) for p in sorted(self.manifest)], "pid long"
+            ).repartition(self.P, "pid")
+        else:
+            frame = frame.withColumn(
+                "pid", pid_of("vertex", self.meta["hash_t"], self.P)
+            )
+        return frame.groupBy("pid").applyInPandas(
+            self.task(kernel, schema, value), schema=schema
+        )

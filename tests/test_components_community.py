@@ -337,17 +337,26 @@ def test_wcc_large_ids_use_long_path(spark):
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
-def test_wcc_csr_mode_identical(spark, kind):
+def test_wcc_csr_mode_identical(spark, kind, tmp_path):
     """mode='csr' (packed mmap blocks, np.minimum.at supersteps) must
     produce the exact dataframe-mode labels — at the auto frontier
-    threshold, forced-frontier from superstep 1, and forced-dense."""
+    threshold, forced-frontier from superstep 1, and forced-dense; on
+    the dense-id blocks the operator packs itself AND on dictionary
+    blocks (packed externally without id_bounds, reused via
+    block_dir)."""
+    from cugraph_spark.plans.csr_blocks import pack_edges
+
     edges = make_edges(kind)
     G = Graph(edges_df(spark, edges), directed=False)
     base = _as_map(weakly_connected_components(G).collect())
+    dict_dir = str(tmp_path / "dict_blocks")
+    pack_edges(G.edges, dict_dir, 8)
     for kw in (
         {},
         {"frontier_threshold": 10**9},
         {"frontier_threshold": 0},
+        {"block_dir": dict_dir, "num_partitions": 8},
+        {"block_dir": dict_dir, "num_partitions": 8, "frontier_threshold": 10**9},
     ):
         got = _as_map(
             weakly_connected_components(G, mode="csr", **kw).collect()
@@ -417,6 +426,7 @@ def test_csr_block_manifest_and_missing_block_raises(spark, tmp_path):
     pid2 = next(iter(man2))
     blk2 = load_block(bd2, pid2, meta2)
     assert len(blk2["dr"]) == int(blk2["indptr"][-1])
+    assert (meta2["n_edges"], meta2["lo"], meta2["hi"]) == (3, 1, 3)
     # torn state: slice missing one of the block's srcs (both mappers)
     su = np.asarray(blk["su"])
     with pytest.raises(RuntimeError, match="does not match"):
@@ -434,6 +444,11 @@ def test_csr_block_manifest_and_missing_block_raises(spark, tmp_path):
     os.remove(os.path.join(bdir, f"{pid}.su.npy"))
     with pytest.raises(RuntimeError, match="missing"):
         load_block(bdir, pid, meta)
+    # torn pack: a truncated block file raises the same error
+    path = os.path.join(bd2, f"{pid2}.dr.npy")
+    os.truncate(path, os.path.getsize(path) - 1)
+    with pytest.raises(RuntimeError, match="missing or unreadable"):
+        load_block(bd2, pid2, meta2)
 
 
 def test_lpa_cycle_stop_parity_exact(spark):
@@ -513,12 +528,8 @@ def test_lpa_frontier_engages_with_changed_rows(spark, monkeypatch):
 
 
 def test_wcc_csr_pre_partitioned_zero_shuffle_pack(spark):
-    """A loop-prepped cache (hash-partitioned P-ways on src) lets the
-    packer stream partitions with NO shuffle (mapInPandas fast path;
-    physical partition index == pid). Labels must equal dataframe
-    mode; a frame that merely CLAIMS the layout fails loud."""
-    from cugraph_spark.plans.csr_blocks import pack_edges
-
+    """On a loop-prepped cache (hash-partitioned P-ways on src, declared
+    pre_partitioned) csr WCC labels must equal dataframe mode."""
     edges = make_edges("tiny_social")
     sym = edges + [(b, a, w) for a, b, w in edges]
     df = (
@@ -537,13 +548,6 @@ def test_wcc_csr_pre_partitioned_zero_shuffle_pack(spark):
         weakly_connected_components(G, num_partitions=4, mode="csr").collect()
     )
     assert got == base
-    # a shuffled-order frame claiming pre_partitioned must raise
-    bad = spark.createDataFrame(sym, "src long, dst long, weight double")
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        with pytest.raises(Exception, match="NOT[\\s\\S]*hash-partitioned"):
-            pack_edges(bad.coalesce(2), d, 4, pre_partitioned=True)
     df.unpersist()
 
 
@@ -585,58 +589,43 @@ def test_tc_start_list_hub_and_broadcast_gate(spark, monkeypatch):
     assert got3 == got2
 
 
-@pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "hub", "weighted"])
-def test_lpa_csr_mode_identical(spark, kind):
-    """mode='csr' (packed blocks, per-block factorize+bincount scores)
-    must produce the exact dataframe-mode labels iteration-for-
-    iteration — at convergence and at a truncated budget."""
-    edges = make_edges(kind)
-    G = Graph(edges_df(spark, edges), directed=False)
-    for kw in ({"max_iter": 20}, {"max_iter": 3}):
-        base = _as_map(
-            label_propagation(G, frontier_threshold=0, **kw).collect()
-        )
-        got = _as_map(label_propagation(G, mode="csr", **kw).collect())
-        assert got == base, (kind, kw)
-
-
-def test_lpa_csr_cycle_stop_and_hold(spark):
-    """cycle detection and the hold tie-break work unchanged under
-    mode='csr' (the update/argmax reduce is shared)."""
-    sq = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 0, 1.0)]
-    edges = sq + [(b, a, w) for a, b, w in sq]
-    G = Graph(edges_df(spark, edges), directed=False)
-    for mi in (4, 5, 6):
-        full = _as_map(
-            label_propagation(G, max_iter=mi, detect_cycle=False).collect()
-        )
-        fast = _as_map(
-            label_propagation(G, max_iter=mi, mode="csr").collect()
-        )
-        assert fast == full, mi
-
-
 def test_csr_block_reuse_across_runs_and_operators(spark, tmp_path):
-    """A block_dir that already holds a matching pack is REUSED (pack
-    once per stored graph): wcc and lpa on pre-packed weighted blocks
-    return the same labels as self-packed runs, and a second wcc call
-    on the same dir skips the pack (meta.json mtime unchanged)."""
+    """A block_dir that already holds a pack of THIS graph is REUSED
+    (pack once per stored graph): wcc, pagerank and bfs on one
+    pre-packed weighted dir return the same results as the dataframe
+    plans, and none of them repacks (meta.json mtime unchanged). A dir
+    packed from a different graph whose ids are a subset of this
+    graph's (same id bounds, fewer edges), or whose meta.json lacks the
+    graph fields, is rejected instead of silently reused."""
+    import json
     import os
 
+    from pyspark.sql import functions as F
+
+    from cugraph_spark import pagerank
+    from cugraph_spark.operators.traversal import bfs
     from cugraph_spark.plans.csr_blocks import pack_edges
 
     edges = make_edges("tiny_social")
     sym = edges + [(b, a, w) for a, b, w in edges]
     df = spark.createDataFrame(sym, "src long, dst long, weight double")
     G = Graph(df, directed=False, assume_symmetric=True)
+
+    def _bfs(**kw):
+        rows = bfs(G, 1, num_partitions=4, **kw).collect()
+        return {r["vertex"]: (r["distance"], r["predecessor"]) for r in rows}
+
+    def _pr(**kw):
+        rows = pagerank(G, tol=0.0, max_iter=5, num_partitions=4, **kw).collect()
+        return {r["vertex"]: r["pagerank"] for r in rows}
+
     base_wcc = _as_map(weakly_connected_components(G, num_partitions=4).collect())
-    base_lpa = _as_map(label_propagation(G, max_iter=5).collect())
+    base_pr = _pr()
+    base_bfs = _bfs()
 
     bd = str(tmp_path / "shared_blocks")
     # external pack, weighted, int-compacted ids (what wcc's csr path
     # would produce itself for this graph)
-    from pyspark.sql import functions as F
-
     ei = df.select(
         F.col("src").cast("int").alias("src"),
         F.col("dst").cast("int").alias("dst"),
@@ -646,7 +635,8 @@ def test_csr_block_reuse_across_runs_and_operators(spark, tmp_path):
     hi = max(max(a, b) for a, b, _ in sym)
     pack_edges(ei, bd, 4, weight="weight", id_bounds=(lo, hi),
                hash_type="int")
-    meta_mtime = os.path.getmtime(os.path.join(bd, "meta.json"))
+    meta_path = os.path.join(bd, "meta.json")
+    meta_mtime = os.path.getmtime(meta_path)
 
     got_wcc = _as_map(
         weakly_connected_components(
@@ -654,24 +644,40 @@ def test_csr_block_reuse_across_runs_and_operators(spark, tmp_path):
         ).collect()
     )
     assert got_wcc == base_wcc
-    got_lpa = _as_map(
-        label_propagation(
-            G, max_iter=5, num_partitions=4, mode="csr", block_dir=bd
-        ).collect()
-    )
-    assert got_lpa == base_lpa
-    # neither run re-packed
-    assert os.path.getmtime(os.path.join(bd, "meta.json")) == meta_mtime
-    # blocks survive (user-owned dir is never cleaned up)
-    assert os.path.exists(os.path.join(bd, "meta.json"))
+    got_pr = _pr(mode="csr", block_dir=bd)
+    assert got_pr.keys() == base_pr.keys()
+    for v, r in base_pr.items():
+        assert got_pr[v] == pytest.approx(r, abs=1e-12)
+    assert _bfs(mode="csr", block_dir=bd) == base_bfs
+    # no run re-packed, and the user-owned dir is never cleaned up
+    assert os.path.getmtime(meta_path) == meta_mtime
+
+    # wrong graph: drop one undirected edge away from the id bounds
+    a, b = next((a, b) for a, b, _ in edges if {a, b}.isdisjoint({lo, hi}))
+    sub = str(tmp_path / "subgraph_blocks")
+    pack_edges(ei.filter(~F.col("src").isin(a, b) | ~F.col("dst").isin(a, b)),
+               sub, 4, weight="weight", id_bounds=(lo, hi), hash_type="int")
+    with pytest.raises(RuntimeError, match="different graph"):
+        weakly_connected_components(G, num_partitions=4, mode="csr", block_dir=sub)
+    # stale meta.json from before the graph fields existed
+    with open(meta_path) as f:
+        meta = json.load(f)
+    for k in ("n_edges", "lo", "hi"):
+        del meta[k]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(RuntimeError, match="stale"):
+        bfs(G, 1, num_partitions=4, mode="csr", block_dir=bd)
 
 
-def test_bfs_csr_mode_identical(spark):
+def test_bfs_csr_mode_identical(spark, tmp_path):
     """bfs(mode='csr') — packed-block frontier gather per level — must
     equal the dataframe BFS exactly: distances, min-id predecessors,
-    unreachable sentinels; directed and symmetrized graphs; block
+    unreachable sentinels; directed and symmetrized graphs; dense-id
+    AND dictionary blocks; num_partitions="auto" in both modes; block
     reuse across calls."""
     from cugraph_spark.operators.traversal import bfs
+    from cugraph_spark.plans.csr_blocks import pack_edges
 
     def _m(rows):
         return {r["vertex"]: (r["distance"], r["predecessor"]) for r in rows}
@@ -682,7 +688,17 @@ def test_bfs_csr_mode_identical(spark):
         [(a, b, 1.0) for a, b in ed], "src long, dst long, weight double"
     )
     G = Graph(df, directed=True)
-    assert _m(bfs(G, 0, mode="csr").collect()) == _m(bfs(G, 0).collect())
+    want = _m(bfs(G, 0).collect())
+    assert _m(bfs(G, 0, mode="csr").collect()) == want
+    # dictionary blocks (packed without id_bounds); P=1 puts the
+    # frontier's edges in one block with dsts it does not reach, which
+    # must never surface as reached with a sentinel predecessor
+    dict_dir = str(tmp_path / "dict_blocks")
+    pack_edges(G.edges, dict_dir, 1)
+    got = bfs(G, 0, mode="csr", block_dir=dict_dir, num_partitions=1)
+    assert _m(got.collect()) == want
+    for mode in ("dataframe", "csr"):
+        assert _m(bfs(G, 0, num_partitions="auto", mode=mode).collect()) == want
     # symmetrized + depth limit + block reuse
     edges = make_edges("tiny_social")
     sym = edges + [(b, a, w) for a, b, w in edges]

@@ -165,45 +165,57 @@ def test_pagerank_sums_to_one(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_csr_chained_bit_identical(spark):
+def test_pagerank_csr_chained_bit_identical(spark, tmp_path):
     """mode='csr' now composes with the zero-action chained loop
     (tol=0.0 auto-chains): one pack job, every superstep lazy inside
     the terminal action; ranks must equal the unchained csr loop and
-    the dataframe plan to float tolerance."""
+    the dataframe plan to float tolerance — on the dense-id blocks the
+    operator packs itself AND on dictionary blocks (packed externally
+    without id_bounds, reused through block_dir)."""
+    from cugraph_spark.plans.csr_blocks import pack_edges
+
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
-    a, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
-                    fail_on_nonconvergence=False)  # auto-chained
-    b, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
-                    chained=False, fail_on_nonconvergence=False)
     c, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
                     mode="dataframe", chained=False,
                     fail_on_nonconvergence=False)
-    ga = {r.vertex: r.pagerank for r in a.collect()}
-    gb = {r.vertex: r.pagerank for r in b.collect()}
     gc = {r.vertex: r.pagerank for r in c.collect()}
-    assert ga == gb  # same kernel, same order → bit-identical
-    for v in gc:
-        assert ga[v] == pytest.approx(gc[v], abs=1e-12)
+    dict_dir = str(tmp_path / "dict_blocks")
+    pack_edges(G.edges, dict_dir, 8, weight="weight")
+    for kw in ({}, {"block_dir": dict_dir, "num_partitions": 8}):
+        a, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
+                        fail_on_nonconvergence=False, **kw)  # auto-chained
+        b, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
+                        chained=False, fail_on_nonconvergence=False, **kw)
+        ga = {r.vertex: r.pagerank for r in a.collect()}
+        gb = {r.vertex: r.pagerank for r in b.collect()}
+        assert ga == gb, kw  # same kernel, same order → bit-identical
+        for v in gc:
+            assert ga[v] == pytest.approx(gc[v], abs=1e-12), kw
 
 
-def test_pagerank_csr_missing_block_raises():
-    """The spmv reader must RAISE when the manifest lists a pid whose
-    block files are absent (torn deployment / non-shared block_dir) —
-    never return an empty (silent-zero) partial (ADVICE r4)."""
-    import tempfile
+def test_pagerank_csr_missing_block_raises(spark, tmp_path):
+    """The block store's per-pid spmv task must RAISE when the manifest
+    lists a pid whose block files are absent (torn deployment /
+    non-shared block_dir) — never return an empty (silent-zero)
+    partial (ADVICE r4)."""
+    import os
 
     import pandas as pd
-    import pytest as _pytest
 
     from cugraph_spark.operators.pagerank import _csr_spmv
+    from cugraph_spark.plans.csr_blocks import CsrBlocks
 
-    with tempfile.TemporaryDirectory() as d:
-        meta = {"ids": "dict", "hi1": 0, "weighted": True, "P": 4}
-        fn = _csr_spmv(d, {0: 5}, meta)
-        pdf = pd.DataFrame({"pid": [0], "vertex": [1], "rank_div": [1.0]})
-        with _pytest.raises(RuntimeError, match="missing"):
+    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
+    P = 64  # more pids than vertices: some pids hold no edges
+    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=True) as blocks:
+        fn = blocks.task(_csr_spmv, "dst long, contrib double", value="rank_div")
+        listed = next(iter(blocks.manifest))
+        os.remove(os.path.join(blocks.block_dir, f"{listed}.su.npy"))
+        pdf = pd.DataFrame({"pid": [listed], "vertex": [1], "rank_div": [1.0]})
+        with pytest.raises(RuntimeError, match="missing"):
             fn(pdf)
         # a pid ABSENT from the manifest is a legitimate hash gap
-        pdf2 = pd.DataFrame({"pid": [3], "vertex": [1], "rank_div": [1.0]})
+        gap = next(p for p in range(P) if p not in blocks.manifest)
+        pdf2 = pd.DataFrame({"pid": [gap], "vertex": [1], "rank_div": [1.0]})
         assert len(fn(pdf2)) == 0

@@ -1,7 +1,7 @@
 """A/B: round-5 LPA levers at a chosen RMAT scale — same JVM, same
 cached input, same prep protocol as tools/ab_frontier.py.
 
-Three variants, max_iter=12 (the round-4 A/B budget):
+Two variants, max_iter=12 (the round-4 A/B budget):
 
 - ``r4``        — dataframe plan, detect_cycle=False (round-4 behavior:
                   the synchronous 2-cycle burns every remaining
@@ -9,13 +9,10 @@ Three variants, max_iter=12 (the round-4 A/B budget):
 - ``cycle``     — dataframe plan, detect_cycle=True (default): the
                   period-2 cycle is detected inside the changed-count
                   action and the run stops early with labels
-                  bit-identical to the full max_iter run (parity rule);
-- ``csr_cycle`` — mode='csr' + detect_cycle: per-block
-                  factorize+bincount score sums over packed mmap
-                  blocks, only the O(V) label vector crossing Arrow.
+                  bit-identical to the full max_iter run (parity rule).
 
-Label equality across all three is asserted (the cycle stop is
-semantics-preserving; csr is plan-only).
+Label equality across both is asserted (the cycle stop is
+semantics-preserving).
 
 Usage: PYTHONPATH=<repo> python tools/ab_lpa_r5.py [cpus] [reps] [scale]
 """
@@ -52,7 +49,6 @@ print(f"edges={n} V={V}", flush=True)
 VARIANTS = {
     "r4": {"detect_cycle": False},
     "cycle": {"detect_cycle": True},
-    "csr_cycle": {"detect_cycle": True, "mode": "csr"},
 }
 
 out = {}
