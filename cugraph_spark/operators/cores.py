@@ -69,12 +69,15 @@ def core_number(
     # reproduce — run distributed in that case so both sides of the
     # size gate honor the same contract. None means "run to
     # convergence", so it always qualifies.
-    if (max_iter is None or max_iter >= _DEFAULT_MAX_ITER) and local_tail.fits(
-        G.edges, thr
-    ):
+    collected = (
+        local_tail.collect_edges(G.edges, weighted=False, limit=thr)
+        if max_iter is None or max_iter >= _DEFAULT_MAX_ITER
+        else None
+    )
+    if collected is not None:
         import numpy as np
 
-        src, dst, _w = local_tail.collect_edges(G.edges, weighted=False)
+        src, dst, _w = collected
         vertices = np.unique(np.concatenate([src, dst]))
         out = local_tail.core_number_local(src, dst, vertices)
         return G.edges.sparkSession.createDataFrame(

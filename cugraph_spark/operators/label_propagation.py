@@ -134,9 +134,12 @@ def label_propagation(
     ``detect_cycle=False`` for every ``max_iter`` (property-tested);
     only the wall changes. Note the semantics wart this preserves
     honestly: an oscillating vertex's terminal label depends on
-    ``max_iter`` PARITY — deterministic but arbitrary. Detection needs
-    two consecutive checked supersteps, so ``check_every>1`` batches
-    disable it for the batched stretch.
+    ``max_iter`` PARITY — deterministic but arbitrary. Every
+    superstep's frame carries the previous labels, so the test always
+    has the labels of two supersteps ago: under ``check_every>1`` (the
+    lazy supersteps pass them on) and right after a checkpoint save.
+    With batched checks the stop lands on the first checking superstep
+    inside the cycle.
 
     ``tie_break="hold"`` (opt-in; default ``"min"`` is the gated
     reference semantics): a vertex whose current label is among the
@@ -202,7 +205,7 @@ def label_propagation(
         else int(frontier_threshold)
     )
     last_changed: int | None = None
-    prev_full = None  # (vertex, labels, old) of the last checked superstep
+    prev_full = None  # (vertex, labels, old[, old2]) of the last superstep
     deg = None  # lazily-built in-degree frame for the frontier guard
     n_edges = 0
 
@@ -378,10 +381,12 @@ def label_propagation(
             # stay lazy: this superstep executes inside the next
             # checking superstep's action (a stable labeling is a
             # fixpoint, so overshooting convergence cannot change it).
-            # No measured delta → the next superstep cannot go frontier.
+            # No measured delta → the next superstep cannot go frontier,
+            # but new_full still carries this superstep's old labels, so
+            # the next one can compare two supersteps back (old2).
             state = new_full.select("vertex", "labels")
             last_changed = None
-            prev_full = None
+            prev_full = new_full
             continue
 
         have_old2 = detect_cycle and "old2" in new_full.columns
@@ -421,12 +426,12 @@ def label_propagation(
         last_changed = int(changed)
 
         if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+            # prev_full stays new_full (materialized by the check above):
+            # the saved frame holds only the labels, and the next
+            # superstep needs this one's old labels for old2
             state = checkpoint.save(
                 state.select("vertex", "labels"), it, {"changed": int(changed)}
             )
-            # the saved frame has fresh lineage; old2 threading would
-            # bypass it, so detection skips the next superstep
-            prev_full = None
 
         if changed == 0:
             break

@@ -23,11 +23,20 @@ comparisons, and the update expressions mirror the distributed column
 expressions operation-for-operation. ``tests/test_local_tail.py`` pins
 local == distributed on several graphs per operator.
 
+PageRank is the one exception. Its ranks are fractional sums whose last
+bits depend on summation order (``bincount`` here, Spark's
+partial-aggregation tree there), so its contract is **tolerance-equal
+(1e-12 in the tests) with the same superstep count**, the same output
+schema and interchangeable checkpoints — not bit-identical. Every other
+tail stays bit-identical.
+
 Threshold: ``LOCAL_TAIL_EDGES`` (default 150k edge rows ≈ a few MB on
 the driver — far below the footprint of collecting a query result).
 Operators take ``local_tail_edges=``: ``None`` → the default, ``0`` →
 never local (used by the equivalence tests and available to users whose
-driver is memory-constrained).
+driver is memory-constrained). PageRank takes no such parameter; it
+reads ``LOCAL_TAIL_EDGES`` at call time, so setting it to 0 forces the
+distributed plan.
 """
 
 from __future__ import annotations
@@ -44,18 +53,27 @@ def resolve_threshold(local_tail_edges: int | None) -> int:
     return LOCAL_TAIL_EDGES if local_tail_edges is None else int(local_tail_edges)
 
 
-def fits(edges_df, thr: int) -> bool:
-    """Bounded probe: does the edge list fit the driver tail? Scans at
-    most ``thr + 1`` rows (``limit`` early-exits), where a bare
-    ``count()`` gate would pay one full O(E) pass per operator call on
-    exactly the billion-edge graphs that can never take the tail."""
-    return thr > 0 and edges_df.limit(thr + 1).count() <= thr
+def collect_edges(edges_df, weighted: bool = True, limit: int | None = None):
+    """One collect of (src, dst[, weight]) into numpy arrays.
 
-
-def collect_edges(edges_df, weighted: bool = True):
-    """One collect of (src, dst[, weight]) into numpy arrays."""
+    With ``limit`` the same job is also the size gate: it collects at
+    most ``limit + 1`` rows and returns None when the frame holds more
+    than ``limit`` (``limit <= 0`` → None without a job). A separate
+    probe (``limit(thr + 1).count()``) would cost a second job on
+    every graph that takes a tail; the price of folding it in is that
+    an over-limit graph ships up to ``limit + 1`` rows per partition to
+    the collect's single-partition exchange before the operator falls
+    back to its distributed loop."""
     cols = ["src", "dst"] + (["weight"] if weighted else [])
-    pdf = edges_df.select(*cols).toPandas()
+    df = edges_df.select(*cols)
+    if limit is not None:
+        if limit <= 0:
+            return None
+        # Spark limits are int32
+        df = df.limit(min(int(limit), 2**31 - 2) + 1)
+    pdf = df.toPandas()
+    if limit is not None and len(pdf) > limit:
+        return None
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     if weighted:
@@ -377,3 +395,38 @@ def core_number_local(
                 cur_deg[j] -= 1
                 heapq.heappush(heap, (int(cur_deg[j]), int(j)))
     return pd.DataFrame({"vertex": vsort, "core_number": core})
+
+
+# ---------------------------------------------------------------------------
+# PageRank power iteration
+# ---------------------------------------------------------------------------
+
+def pagerank_superstep(
+    si: np.ndarray,
+    di: np.ndarray,
+    w: np.ndarray,
+    ows: np.ndarray,
+    rank: np.ndarray,
+    n_vertices: int,
+    alpha: float,
+    dangling: float,
+    pnorm: np.ndarray | None = None,
+):
+    """Local twin of one dataframe-plan PageRank superstep
+    (``operators/pagerank.py``) over state arrays indexed by ``si`` /
+    ``di``. Same expressions: ``rank / ows`` with a dangling divisor of
+    1.0; ``alpha·Σ contrib + (dangling·α + 1−α)/V``, or
+    ``·pnorm`` with personalization; L1 against the previous rank; the
+    next dangling mass over ``ows == 0``. Returns
+    ``(rank, l1, dangling)``. Tolerance-equal, not bit-identical: the
+    per-dst sums run in ``bincount`` order, not Spark's
+    partial-aggregation order."""
+    rank_div = rank / np.where(ows == 0.0, 1.0, ows)
+    contrib = np.bincount(di, weights=rank_div[si] * w, minlength=len(rank))
+    mass = dangling * alpha + (1.0 - alpha)
+    if pnorm is None:
+        new = alpha * contrib + mass / n_vertices
+    else:
+        new = alpha * contrib + mass * pnorm
+    l1 = float(np.abs(new - rank).sum())
+    return new, l1, float(new[ows == 0.0].sum())

@@ -27,6 +27,17 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def distributed_pagerank(monkeypatch):
+    """Force PageRank's distributed dataframe plan: with the local-tail
+    cutover at 0 edges no graph takes the driver-local plan. For tests
+    of distributed-only machinery (chaining, salting, partitioning,
+    the csr-vs-dataframe comparisons)."""
+    from cugraph_spark.plans import local_tail
+
+    monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", 0)
+
+
 def make_edges(kind: str, seed: int = 42):
     """Deterministic synthetic edge lists as (src, dst, weight) tuples.
 

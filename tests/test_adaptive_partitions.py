@@ -59,7 +59,7 @@ def test_resolve_precedence(spark, tmp_path):
     assert resolve_partitions("auto", df) == adaptive_partitions(df)
 
 
-def test_pagerank_auto_matches_default(spark):
+def test_pagerank_auto_matches_default(spark, distributed_pagerank):
     G = Graph(edges_df(spark, make_edges("tiny_social")), directed=True)
     a = {r.vertex: r.pagerank for r in pagerank(G, max_iter=20).collect()}
     b = {

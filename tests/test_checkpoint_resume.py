@@ -18,24 +18,36 @@ def _ranks(df):
     return {r["vertex"]: r["pagerank"] for r in df.collect()}
 
 
-def test_pagerank_checkpoint_meta(spark, tmp_path):
+def _check_pagerank_checkpoint_meta(spark, tmp_path):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
     cp = CheckpointManager(str(tmp_path), "pr")
     pagerank(G, tol=0.0, max_iter=6, checkpoint=cp, checkpoint_every=3)
     # checkpoints at iterations 2 and 5 (after supersteps 3 and 6)
     assert cp.latest_iteration() == 5
-    with open(os.path.join(str(tmp_path), "pr", "iter=00005", "_meta.json")) as f:
-        meta = json.load(f)
-    assert meta["iteration"] == 5
-    assert "l1" in meta["metrics"] and "dangling_sum" in meta["metrics"]
-    assert len(meta["partitions"]) >= 1
-    assert all("partition_id" in p and "rows" in p for p in meta["partitions"])
-    total_rows = sum(p["rows"] for p in meta["partitions"])
-    assert total_rows == G.number_of_vertices()
+    for it in (2, 5):
+        with open(os.path.join(str(tmp_path), "pr", f"iter={it:05d}", "_meta.json")) as f:
+            meta = json.load(f)
+        assert meta["iteration"] == it
+        assert "l1" in meta["metrics"] and "dangling_sum" in meta["metrics"]
+        assert len(meta["partitions"]) >= 1
+        assert all("partition_id" in p and "rows" in p for p in meta["partitions"])
+        total_rows = sum(p["rows"] for p in meta["partitions"])
+        assert total_rows == G.number_of_vertices()
+    assert [f.name for f in cp.load(spark, 5)[0].schema] == ["vertex", "ows", "rank"]
 
 
-def test_pagerank_resume_exact(spark, tmp_path):
+def test_pagerank_checkpoint_meta(spark, tmp_path, distributed_pagerank):
+    _check_pagerank_checkpoint_meta(spark, tmp_path)
+
+
+def test_pagerank_checkpoint_meta_local(spark, tmp_path):
+    """The driver-local plan (the default at this size) writes the same
+    checkpoints: same iterations, columns, meta keys and row counts."""
+    _check_pagerank_checkpoint_meta(spark, tmp_path)
+
+
+def test_pagerank_resume_exact(spark, tmp_path, distributed_pagerank):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
 
@@ -53,6 +65,37 @@ def test_pagerank_resume_exact(spark, tmp_path):
     assert set(full) == set(resumed)
     for v in full:
         assert abs(full[v] - resumed[v]) < 1e-12
+
+
+@pytest.mark.parametrize("first", ["local", "distributed"])
+def test_pagerank_resume_across_plans(spark, tmp_path, monkeypatch, first):
+    """A run interrupted on one PageRank plan resumes on the other: the
+    driver-local plan and the distributed plan write and read the same
+    (vertex, ows, rank) checkpoints and meta, so the resumed ranks
+    match an uninterrupted run on either plan."""
+    from cugraph_spark.plans import local_tail
+
+    cutover = {"local": local_tail.LOCAL_TAIL_EDGES, "distributed": 0}
+    second = "local" if first == "distributed" else "distributed"
+    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
+    cp = CheckpointManager(str(tmp_path), "pr_cross")
+    full = {}
+    for plan in (first, second):
+        monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover[plan])
+        full[plan] = _ranks(pagerank(G, tol=0.0, max_iter=8))
+    monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover[first])
+    pagerank(G, tol=0.0, max_iter=4, checkpoint=cp, checkpoint_every=2)
+    assert cp.latest_iteration() == 3
+    monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover[second])
+    ss: list = []
+    resumed = _ranks(pagerank(G, tol=0.0, max_iter=8, checkpoint=cp,
+                              checkpoint_every=2, resume=True, superstep_seconds=ss))
+    assert len(ss) == 4  # supersteps 4..7
+    assert cp.latest_iteration() == 7
+    for plan in (first, second):
+        assert set(resumed) == set(full[plan])
+        for v in resumed:
+            assert abs(full[plan][v] - resumed[v]) < 1e-12, (plan, v)
 
 
 def test_wcc_resume(spark, tmp_path):
@@ -88,7 +131,7 @@ def test_lpa_resume(spark, tmp_path):
 
 
 @pytest.mark.parametrize("parts", [3, 16])
-def test_pagerank_parallelism_invariant(spark, parts):
+def test_pagerank_parallelism_invariant(spark, parts, distributed_pagerank):
     """Same job at different partition counts → same result (the
     sandbox analog of MG-vs-SG equivalence, test_pagerank_mg.py)."""
     edges = make_edges("weighted")

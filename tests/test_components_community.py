@@ -472,6 +472,38 @@ def test_lpa_cycle_stop_parity_exact(spark):
     assert len(m) < 12  # stopped early
 
 
+def test_lpa_cycle_stop_batched_and_across_save(spark, tmp_path):
+    """Cycle detection keeps the labels of two supersteps ago through
+    lazy supersteps (check_every=2) and across a checkpoint save in the
+    detection window (checkpoint_every=1): on the 4-cycle both runs
+    stop early with labels bit-identical to the detect_cycle=False run,
+    for either max_iter parity."""
+    from cugraph_spark.plans.checkpoint import CheckpointManager
+
+    sq = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 0, 1.0)]
+    edges = sq + [(b, a, w) for a, b, w in sq]
+    G = Graph(edges_df(spark, edges), directed=False)
+    for mi in (7, 8):
+        full = _as_map(
+            label_propagation(G, max_iter=mi, detect_cycle=False).collect()
+        )
+        cases = {
+            "check_every=2": {"check_every": 2},
+            "save in window": {
+                "checkpoint": CheckpointManager(str(tmp_path), f"lpa_cycle_{mi}"),
+                "checkpoint_every": 1,
+            },
+        }
+        for name, kw in cases.items():
+            m: list = []
+            got = _as_map(
+                label_propagation(G, max_iter=mi, superstep_metrics=m, **kw).collect()
+            )
+            assert got == full, (mi, name)
+            assert m[-1]["cycle_detected"], (mi, name)
+            assert m[-1]["iteration"] < mi - 1, (mi, name)  # stopped early
+
+
 def test_lpa_hold_tie_damps_oscillation(spark):
     """tie_break='hold' (keep the current label when it ties the max
     weight) converges on a fixture where the min-tie rule 2-cycles;
@@ -589,7 +621,9 @@ def test_tc_start_list_hub_and_broadcast_gate(spark, monkeypatch):
     assert got3 == got2
 
 
-def test_csr_block_reuse_across_runs_and_operators(spark, tmp_path):
+def test_csr_block_reuse_across_runs_and_operators(
+    spark, tmp_path, distributed_pagerank
+):
     """A block_dir that already holds a pack of THIS graph is REUSED
     (pack once per stored graph): wcc, pagerank and bfs on one
     pre-packed weighted dir return the same results as the dataframe

@@ -6,6 +6,12 @@ to the distributed loops — same hash stream, same tie-breaks, same
 expression trees. Each operator is run twice on the same graph:
 ``local_tail_edges=0`` (forced distributed) vs a huge threshold (forced
 local), and the sorted row sets compared exactly.
+
+PageRank is the exception: its rank sums depend on summation order, so
+its local plan must match the distributed plan to 1e-12 with the same
+superstep count and output schema. PageRank takes no
+``local_tail_edges``; the distributed side sets the module cutover
+``LOCAL_TAIL_EDGES`` to 0.
 """
 
 from __future__ import annotations
@@ -18,10 +24,12 @@ from cugraph_spark.graph import Graph
 from cugraph_spark.operators.community import ecg, leiden, louvain
 from cugraph_spark.operators.cores import core_number
 from cugraph_spark.operators.mis import maximal_independent_set, vertex_coloring
+from cugraph_spark.operators.pagerank import FailedToConvergeError, pagerank
+from cugraph_spark.plans import local_tail
 from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.plans.xxh64 import pmod2, xxhash64
 
-from .conftest import make_edges
+from .conftest import edges_df, make_edges
 
 BIG = 10**9
 
@@ -193,3 +201,138 @@ def test_leiden_torn_checkpoint_resumes_from_last_complete_level(spark, tmp_path
     resumed, q_res = leiden(G, checkpoint=cp, resume=True)
     assert _rows(resumed) == _rows(full)
     assert q_res == q_full
+
+
+# ---------------------------------------------------------------------------
+# PageRank: driver-local plan == distributed plan (to 1e-12)
+# ---------------------------------------------------------------------------
+
+def _pagerank_plans(monkeypatch, G, **kw):
+    """Run ``pagerank(G, **kw)`` on the driver-local plan (the default
+    cutover) and on the distributed plan (cutover 0). Per plan:
+    ``(ranks, supersteps, schema, converged)``; ``converged`` is None
+    when ``kw`` asks for the bare frame."""
+    out = {}
+    for plan, cutover in (("local", local_tail.LOCAL_TAIL_EDGES), ("distributed", 0)):
+        kernel_calls = []
+        real = local_tail.pagerank_superstep
+        ss: list = []
+        with monkeypatch.context() as m:
+            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
+            m.setattr(local_tail, "pagerank_superstep",
+                      lambda *a: kernel_calls.append(1) or real(*a))
+            res = pagerank(G, superstep_seconds=ss, **kw)
+        df, conv = res if isinstance(res, tuple) else (res, None)
+        # the plan that was asked for is the plan that ran
+        assert len(kernel_calls) == (len(ss) if plan == "local" else 0), plan
+        out[plan] = ({r.vertex: r.pagerank for r in df.collect()}, len(ss), df.schema, conv)
+    return out
+
+
+def _assert_plans_equal(out):
+    (lr, ls, lschema, lconv), (dr, ds, dschema, dconv) = out["local"], out["distributed"]
+    assert ls == ds and ls > 0
+    # names and types: nullability already differs between the
+    # distributed plan's own chained and scalar loops
+    assert [(f.name, f.dataType) for f in lschema] == [(f.name, f.dataType) for f in dschema]
+    assert lconv == dconv
+    assert lr.keys() == dr.keys()
+    for v in lr:
+        assert abs(lr[v] - dr[v]) <= 1e-12, v
+
+
+def _directed(spark, kind):
+    return Graph(edges_df(spark, make_edges(kind)), directed=True)
+
+
+@pytest.mark.parametrize("kind,directed", [
+    ("directed_asym", True),  # dangling vertices
+    ("weighted", False),
+    ("hub", True),
+])
+def test_pagerank_local_equals_distributed(spark, monkeypatch, kind, directed):
+    G = Graph(edges_df(spark, make_edges(kind)), directed=directed)
+    _assert_plans_equal(_pagerank_plans(monkeypatch, G, tol=1e-4, max_iter=500))
+
+
+def test_pagerank_local_equals_distributed_partial_vectors(spark, monkeypatch):
+    """personalization / nstart rows for vertices outside the graph
+    count in the normalizing sum; graph vertices without a row get 0."""
+    G = _directed(spark, "directed_asym")  # vertices 0..33
+    pers = spark.createDataFrame([(1, 1.0), (4, 3.0), (999, 2.0)], "vertex long, values double")
+    nstart = spark.createDataFrame(
+        [(v, float(v + 1)) for v in range(21)] + [(500, 7.0)], "vertex long, values double")
+    _assert_plans_equal(_pagerank_plans(
+        monkeypatch, G, tol=1e-4, max_iter=500, personalization=pers, nstart=nstart))
+
+
+def test_pagerank_local_equals_distributed_precomputed_ows(spark, monkeypatch):
+    """precomputed out-weights are left-joined: a vertex without a row
+    has out-weight 0, rows for vertices outside the graph are ignored.
+    (The rows left out are the dangling vertices', so the rank mass
+    stays 1 and the run converges.)"""
+    G = _directed(spark, "weighted")
+    partial = G.out_weight_sums().filter(F.col("ows") > 0).unionByName(
+        spark.createDataFrame([(777, 3.0)], "vertex long, ows double"))
+    _assert_plans_equal(_pagerank_plans(
+        monkeypatch, G, tol=1e-4, max_iter=500, precomputed_vertex_out_weight=partial))
+
+
+def test_pagerank_local_equals_distributed_fixed_and_nonconvergent(spark, monkeypatch):
+    G = _directed(spark, "tiny_social")
+    fixed = _pagerank_plans(monkeypatch, G, tol=0.0, max_iter=7, fail_on_nonconvergence=False)
+    _assert_plans_equal(fixed)
+    assert fixed["local"][1] == 7 and fixed["local"][3] is False
+    stuck = _pagerank_plans(monkeypatch, G, tol=1e-12, max_iter=3, fail_on_nonconvergence=False)
+    _assert_plans_equal(stuck)
+    assert stuck["local"][1] == 3 and stuck["local"][3] is False
+    for cutover in (local_tail.LOCAL_TAIL_EDGES, 0):
+        ss: list = []
+        with monkeypatch.context() as m:
+            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
+            with pytest.raises(FailedToConvergeError):
+                pagerank(G, tol=1e-12, max_iter=3, superstep_seconds=ss)
+        assert len(ss) == 3
+
+
+@pytest.mark.parametrize("id_type,spark_type", [("int", "int"), ("long", "bigint")])
+def test_pagerank_local_equals_distributed_id_types(spark, monkeypatch, id_type, spark_type):
+    e = spark.createDataFrame(
+        [(int(a), int(b), float(w)) for a, b, w in make_edges("directed_asym")],
+        f"src {id_type}, dst {id_type}, weight double")
+    # a pre-partitioned multigraph keeps int32 ids uncast
+    G = Graph(e, directed=True, multi_edge=True, pre_partitioned=True)
+    out = _pagerank_plans(monkeypatch, G, tol=1e-4, max_iter=500)
+    _assert_plans_equal(out)
+    assert out["local"][2]["vertex"].dataType.simpleString() == spark_type
+
+
+def test_pagerank_local_errors_match_distributed(spark, monkeypatch):
+    empty = Graph(spark.createDataFrame([], "src long, dst long, weight double"), directed=True)
+    G = _directed(spark, "directed_asym")
+    zero = spark.createDataFrame([(1, 0.0)], "vertex long, values double")
+    for cutover in (local_tail.LOCAL_TAIL_EDGES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
+            with pytest.raises(ValueError, match="empty graph"):
+                pagerank(empty)
+            with pytest.raises(ValueError, match="personalization"):
+                pagerank(G, personalization=zero)
+            with pytest.raises(ValueError, match="nstart"):
+                pagerank(G, nstart=zero)
+
+
+def test_pagerank_local_plan_runs_one_collect(spark):
+    """The point of the local plan: a converged run costs the edge
+    collect (a couple of Spark jobs), not ~6 jobs per superstep."""
+    G = _directed(spark, "directed_asym")
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank_local_jobs", "job count")
+    try:
+        ss: list = []
+        pagerank(G, tol=1e-6, max_iter=500, superstep_seconds=ss)
+        jobs = sc.statusTracker().getJobIdsForGroup("pagerank_local_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(ss) > 10
+    assert len(jobs) <= 3, jobs

@@ -19,32 +19,45 @@ def _run(spark, edges, n=None, directed=True, mode="dataframe", **kw):
     return {r.vertex: r.pagerank for r in df.collect()}
 
 
+# "dataframe" is the default mode, which takes the driver-local plan on
+# these small graphs; "distributed" is the same mode forced onto the
+# distributed plan; "csr" is mode="csr"
+PLANS = ["dataframe", "distributed"]
+
+
+def _mode(request, plan):
+    if plan == "distributed":
+        request.getfixturevalue("distributed_pagerank")
+    return "csr" if plan == "csr" else "dataframe"
+
+
 def _check(got, expect_arr, atol=1e-6):
     for v, val in got.items():
         assert val == pytest.approx(expect_arr[v], abs=atol), f"vertex {v}"
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr"])
-def test_pagerank_directed_with_dangling(spark, mode):
+@pytest.mark.parametrize("plan", PLANS + ["csr"])
+def test_pagerank_directed_with_dangling(spark, request, plan):
     edges = make_edges("directed_asym")
-    got = _run(spark, edges, mode=mode)
+    got = _run(spark, edges, mode=_mode(request, plan))
     expect, conv, _ = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
     _check(got, expect)
 
 
-@pytest.mark.parametrize("mode", ["dataframe", "csr"])
-def test_pagerank_undirected_weighted(spark, mode):
+@pytest.mark.parametrize("plan", PLANS + ["csr"])
+def test_pagerank_undirected_weighted(spark, request, plan):
     edges = make_edges("weighted")
-    got = _run(spark, edges, directed=False, mode=mode)
+    got = _run(spark, edges, directed=False, mode=_mode(request, plan))
     expect, conv, _ = pagerank_ref(sym_tuples(edges), alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
     _check(got, expect)
 
 
-def test_pagerank_hub_skew(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_pagerank_hub_skew(spark, request, plan):
     edges = make_edges("hub")
-    got = _run(spark, edges)
+    got = _run(spark, edges, mode=_mode(request, plan))
     expect, conv, _ = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
     _check(got, expect)
@@ -52,7 +65,9 @@ def test_pagerank_hub_skew(spark):
     assert got[0] == max(got.values())
 
 
-def test_pagerank_personalization(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_pagerank_personalization(spark, request, plan):
+    _mode(request, plan)
     edges = make_edges("directed_asym")
     n = max(max(a for a, _, _ in edges), max(b for _, b, _ in edges)) + 1
     pvec = np.zeros(n)
@@ -69,7 +84,9 @@ def test_pagerank_personalization(spark):
     _check(got, expect)
 
 
-def test_pagerank_nstart(spark):
+@pytest.mark.parametrize("plan", PLANS)
+def test_pagerank_nstart(spark, request, plan):
+    _mode(request, plan)
     edges = make_edges("tiny_social")
     n = 34
     ns = np.arange(1, n + 1, dtype=float)
@@ -117,7 +134,7 @@ def test_pagerank_fixed_iterations_matches_oracle(spark):
     _check(got, expect, atol=1e-12)
 
 
-def test_pagerank_chained_bit_identical(spark):
+def test_pagerank_chained_bit_identical(spark, distributed_pagerank):
     """The zero-action chained loop (auto at tol=0) must equal the
     one-action-per-superstep scalar loop BIT-exactly: both compute the
     dangling mass with the same partial-aggregation tree, chained just
@@ -152,7 +169,7 @@ def test_pagerank_chained_bit_identical(spark):
     assert got == ref
 
 
-def test_pagerank_chained_rejects_convergence_mode(spark):
+def test_pagerank_chained_rejects_convergence_mode(spark, distributed_pagerank):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
     with pytest.raises(ValueError, match="chained"):
@@ -165,7 +182,7 @@ def test_pagerank_sums_to_one(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_csr_chained_bit_identical(spark, tmp_path):
+def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_pagerank):
     """mode='csr' now composes with the zero-action chained loop
     (tol=0.0 auto-chains): one pack job, every superstep lazy inside
     the terminal action; ranks must equal the unchained csr loop and
