@@ -69,15 +69,12 @@ def core_number(
     # reproduce — run distributed in that case so both sides of the
     # size gate honor the same contract. None means "run to
     # convergence", so it always qualifies.
-    collected = (
-        local_tail.collect_edges(G.edges, weighted=False, limit=thr)
-        if max_iter is None or max_iter >= _DEFAULT_MAX_ITER
-        else None
-    )
-    if collected is not None:
+    if (max_iter is None or max_iter >= _DEFAULT_MAX_ITER) and local_tail.fits(
+        G.edges, thr
+    ):
         import numpy as np
 
-        src, dst, _w = collected
+        src, dst, _w = local_tail.collect_edges(G.edges, weighted=False)
         vertices = np.unique(np.concatenate([src, dst]))
         out = local_tail.core_number_local(src, dst, vertices)
         return G.edges.sparkSession.createDataFrame(

@@ -37,14 +37,12 @@ def _try_local(G: Graph, local_tail_edges: int | None):
     """Collect (src, dst, vertices) when the edge list fits the driver
     tail (``plans/local_tail.py`` — the single-GPU-handoff analog);
     None when the graph is big and the distributed loop must run. The
-    gate is the bounded collect itself (``local_tail.collect_edges``
-    with ``limit``), not a full count; Luby loops would otherwise pay
-    ≥1 job per round."""
+    gate is a bounded limit-probe (``local_tail.fits``), not a full
+    count; Luby loops would otherwise pay ≥1 job per round."""
     thr = local_tail.resolve_threshold(local_tail_edges)
-    collected = local_tail.collect_edges(G.edges, weighted=False, limit=thr)
-    if collected is None:
+    if not local_tail.fits(G.edges, thr):
         return None
-    src, dst, _w = collected
+    src, dst, _w = local_tail.collect_edges(G.edges, weighted=False)
     import numpy as np
 
     vertices = np.unique(np.concatenate([src, dst]))

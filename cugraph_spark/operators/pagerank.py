@@ -19,10 +19,13 @@ Three plans, same semantics (validated equal in tests). The rule that
 picks between them: ``mode="csr"`` always runs the block plan;
 ``mode="dataframe"`` (the default) runs the driver-local plan when the
 edge frame has at most ``local_tail.LOCAL_TAIL_EDGES`` rows (150k) and
-the distributed dataframe plan otherwise. The size gate is the local
-plan's own edge collect (``limit(thr + 1)``), so choosing costs no
-extra job. No parameter selects the local plan; tests force the
-distributed one by setting the cutover to 0. ``salt``,
+the distributed dataframe plan otherwise. The size gate is a
+``count()`` of the edge frame the distributed plan persists anyway: that
+one job fills the cache, so the O(E) upstream (e.g. the constructor's
+dedup shuffle) runs once whichever plan follows — the local plan
+collects from the cache, the distributed plan's supersteps read it.
+No parameter selects the local plan; tests force the distributed one by
+setting the cutover to 0. ``salt``,
 ``num_partitions``, ``chained`` and ``block_dir`` shape only the Spark
 plans, so the local plan ignores them.
 
@@ -120,12 +123,27 @@ def _csr_spmv(blk, rank_src):
     return {"dst": blk.dst_ids(touched), "contrib": contrib[touched]}
 
 
-def _per_vertex(df: DataFrame, col: str, vertices: np.ndarray):
+def _duplicate_vertices_error(name: str) -> ValueError:
+    return ValueError(f"{name} has more than one row for a vertex")
+
+
+def _reject_duplicate_vertices(df: DataFrame, name: str) -> None:
+    """A per-vertex input (``personalization``, ``nstart``,
+    ``precomputed_vertex_out_weight``) is left-joined onto the vertex
+    state, where two rows for one vertex would duplicate its state row;
+    both plans refuse such a frame with the same error."""
+    if df.groupBy("vertex").count().filter(F.col("count") > 1).limit(1).count():
+        raise _duplicate_vertices_error(name)
+
+
+def _per_vertex(df: DataFrame, col: str, vertices: np.ndarray, name: str):
     """``df[col]`` left-joined onto ``vertices`` with 0 for a missing
     row, and the column's sum over the WHOLE frame (rows for vertices
     outside the graph included) — the dataframe plan's join + coalesce
     and its separate normalizing aggregate."""
     pdf = df.select(F.col("vertex").cast("long"), F.col(col).cast("double")).toPandas()
+    if pdf["vertex"].duplicated().any():
+        raise _duplicate_vertices_error(name)
     vals = pd.Series(pdf[col].to_numpy(), index=pdf["vertex"].to_numpy())
     return vals.reindex(vertices).fillna(0.0).to_numpy(), vals.sum()
 
@@ -169,18 +187,19 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
         si, di, w = si[keep], di[keep], w[keep]
 
     if personalization is not None:
-        pval, psum = _per_vertex(personalization, "values", verts)
+        pval, psum = _per_vertex(personalization, "values", verts, "personalization")
         if not psum or psum <= 0:
             raise ValueError("personalization values must sum to > 0")
         pnorm = pval / psum
 
     if not resuming:
         if precomputed_vertex_out_weight is not None:
-            ows, _ = _per_vertex(precomputed_vertex_out_weight, "ows", verts)
+            ows, _ = _per_vertex(precomputed_vertex_out_weight, "ows", verts,
+                                 "precomputed_vertex_out_weight")
         else:
             ows = np.bincount(si, weights=w, minlength=V)
         if nstart is not None:
-            nsval, nsum = _per_vertex(nstart, "values", verts)
+            nsval, nsum = _per_vertex(nstart, "values", verts, "nstart")
             if not nsum or nsum <= 0:
                 raise ValueError("nstart values must sum to > 0")
             rank = nsval / nsum
@@ -291,15 +310,6 @@ def pagerank(
                 "per superstep)"
             )
 
-    if mode == "dataframe":
-        collected = local_tail.collect_edges(G.edges, limit=local_tail.LOCAL_TAIL_EDGES)
-        if collected is not None:
-            result, converged = _local_plan(
-                G, collected, alpha, max_iter, tol, personalization, nstart,
-                precomputed_vertex_out_weight, checkpoint, checkpoint_every,
-                resume, superstep_seconds)
-            return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
-
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions
 
@@ -320,8 +330,21 @@ def pagerank(
         store = contextlib.nullcontext()
         e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
         edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+        # plan choice: counting the persisted frame fills the cache the
+        # distributed loop reads, so the gate adds no O(E) pass above
+        # the cutover; below it the local plan collects from the cache
+        thr = local_tail.LOCAL_TAIL_EDGES
+        if thr > 0 and edges.count() <= thr:
+            collected = local_tail.collect_edges(edges)
+            edges.unpersist()
+            result, converged = _local_plan(
+                G, collected, alpha, max_iter, tol, personalization, nstart,
+                precomputed_vertex_out_weight, checkpoint, checkpoint_every,
+                resume, superstep_seconds)
+            return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
     with store as blocks:
         if precomputed_vertex_out_weight is not None:
+            _reject_duplicate_vertices(precomputed_vertex_out_weight, "precomputed_vertex_out_weight")
             ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
             vstate = G.vertices().join(ows, "vertex", "left").select(
                 "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
@@ -342,6 +365,7 @@ def pagerank(
         psum = None
         pers = None
         if personalization is not None:
+            _reject_duplicate_vertices(personalization, "personalization")
             pers = personalization.select(
                 "vertex", F.col("values").cast("double").alias("pval"))
             psum = pers.agg(F.sum("pval")).first()[0]
@@ -359,6 +383,7 @@ def pagerank(
             start_iter = meta["iteration"] + 1
             dangling = float(meta["metrics"]["dangling_sum"])
         elif nstart is not None:
+            _reject_duplicate_vertices(nstart, "nstart")
             ns = nstart.select("vertex", F.col("values").cast("double").alias("nsval"))
             nsum = ns.agg(F.sum("nsval")).first()[0]
             if not nsum or nsum <= 0:

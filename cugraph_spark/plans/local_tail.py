@@ -53,27 +53,18 @@ def resolve_threshold(local_tail_edges: int | None) -> int:
     return LOCAL_TAIL_EDGES if local_tail_edges is None else int(local_tail_edges)
 
 
-def collect_edges(edges_df, weighted: bool = True, limit: int | None = None):
-    """One collect of (src, dst[, weight]) into numpy arrays.
+def fits(edges_df, thr: int) -> bool:
+    """Bounded probe: does the edge list fit the driver tail? Scans at
+    most ``thr + 1`` rows (``limit`` early-exits), where a bare
+    ``count()`` gate would pay one full O(E) pass per operator call on
+    exactly the billion-edge graphs that can never take the tail."""
+    return thr > 0 and edges_df.limit(thr + 1).count() <= thr
 
-    With ``limit`` the same job is also the size gate: it collects at
-    most ``limit + 1`` rows and returns None when the frame holds more
-    than ``limit`` (``limit <= 0`` → None without a job). A separate
-    probe (``limit(thr + 1).count()``) would cost a second job on
-    every graph that takes a tail; the price of folding it in is that
-    an over-limit graph ships up to ``limit + 1`` rows per partition to
-    the collect's single-partition exchange before the operator falls
-    back to its distributed loop."""
+
+def collect_edges(edges_df, weighted: bool = True):
+    """One collect of (src, dst[, weight]) into numpy arrays."""
     cols = ["src", "dst"] + (["weight"] if weighted else [])
-    df = edges_df.select(*cols)
-    if limit is not None:
-        if limit <= 0:
-            return None
-        # Spark limits are int32
-        df = df.limit(min(int(limit), 2**31 - 2) + 1)
-    pdf = df.toPandas()
-    if limit is not None and len(pdf) > limit:
-        return None
+    pdf = edges_df.select(*cols).toPandas()
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     if weighted:

@@ -206,6 +206,10 @@ def test_leiden_torn_checkpoint_resumes_from_last_complete_level(spark, tmp_path
 # ---------------------------------------------------------------------------
 # PageRank: driver-local plan == distributed plan (to 1e-12)
 # ---------------------------------------------------------------------------
+# The directed-with-dangling, undirected weighted and hub graphs are
+# compared through the oracle in test_pagerank.py, which runs both plans
+# to the oracle's superstep count and within 5e-13 of its ranks; the
+# cases below are those the oracle tests do not cover.
 
 def _pagerank_plans(monkeypatch, G, **kw):
     """Run ``pagerank(G, **kw)`` on the driver-local plan (the default
@@ -243,16 +247,6 @@ def _assert_plans_equal(out):
 
 def _directed(spark, kind):
     return Graph(edges_df(spark, make_edges(kind)), directed=True)
-
-
-@pytest.mark.parametrize("kind,directed", [
-    ("directed_asym", True),  # dangling vertices
-    ("weighted", False),
-    ("hub", True),
-])
-def test_pagerank_local_equals_distributed(spark, monkeypatch, kind, directed):
-    G = Graph(edges_df(spark, make_edges(kind)), directed=directed)
-    _assert_plans_equal(_pagerank_plans(monkeypatch, G, tol=1e-4, max_iter=500))
 
 
 def test_pagerank_local_equals_distributed_partial_vectors(spark, monkeypatch):
@@ -311,6 +305,7 @@ def test_pagerank_local_errors_match_distributed(spark, monkeypatch):
     empty = Graph(spark.createDataFrame([], "src long, dst long, weight double"), directed=True)
     G = _directed(spark, "directed_asym")
     zero = spark.createDataFrame([(1, 0.0)], "vertex long, values double")
+    twice = spark.createDataFrame([(1, 1.0), (2, 1.0), (1, 2.0)], "vertex long, values double")
     for cutover in (local_tail.LOCAL_TAIL_EDGES, 0):
         with monkeypatch.context() as m:
             m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
@@ -320,11 +315,17 @@ def test_pagerank_local_errors_match_distributed(spark, monkeypatch):
                 pagerank(G, personalization=zero)
             with pytest.raises(ValueError, match="nstart"):
                 pagerank(G, nstart=zero)
+            for name in ("personalization", "nstart", "precomputed_vertex_out_weight"):
+                with pytest.raises(ValueError, match=f"{name} has more than one row"):
+                    pagerank(G, **{name: twice if name != "precomputed_vertex_out_weight"
+                                   else twice.withColumnRenamed("values", "ows")})
 
 
 def test_pagerank_local_plan_runs_one_collect(spark):
-    """The point of the local plan: a converged run costs the edge
-    collect (a couple of Spark jobs), not ~6 jobs per superstep."""
+    """The point of the local plan: a converged run costs a fixed
+    handful of Spark jobs — the size gate's count of the persisted edge
+    frame (with its shuffle stages) and one collect from that cache —
+    not ~6 jobs per superstep."""
     G = _directed(spark, "directed_asym")
     sc = spark.sparkContext
     sc.setJobGroup("pagerank_local_jobs", "job count")
@@ -335,4 +336,4 @@ def test_pagerank_local_plan_runs_one_collect(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(ss) > 10
-    assert len(jobs) <= 3, jobs
+    assert len(jobs) <= 6, jobs

@@ -36,31 +36,42 @@ def _check(got, expect_arr, atol=1e-6):
         assert val == pytest.approx(expect_arr[v], abs=atol), f"vertex {v}"
 
 
+def _check_plan(got, steps, expect_arr, n_iter):
+    """Each plan runs the oracle's superstep count and lands within
+    5e-13 of its ranks, so any two plans agree to 1e-12 with the same
+    number of supersteps."""
+    assert len(steps) == n_iter
+    _check(got, expect_arr, atol=5e-13)
+
+
 @pytest.mark.parametrize("plan", PLANS + ["csr"])
 def test_pagerank_directed_with_dangling(spark, request, plan):
     edges = make_edges("directed_asym")
-    got = _run(spark, edges, mode=_mode(request, plan))
-    expect, conv, _ = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
+    ss: list = []
+    got = _run(spark, edges, mode=_mode(request, plan), superstep_seconds=ss)
+    expect, conv, n_iter = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
-    _check(got, expect)
+    _check_plan(got, ss, expect, n_iter)
 
 
 @pytest.mark.parametrize("plan", PLANS + ["csr"])
 def test_pagerank_undirected_weighted(spark, request, plan):
     edges = make_edges("weighted")
-    got = _run(spark, edges, directed=False, mode=_mode(request, plan))
-    expect, conv, _ = pagerank_ref(sym_tuples(edges), alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
+    ss: list = []
+    got = _run(spark, edges, directed=False, mode=_mode(request, plan), superstep_seconds=ss)
+    expect, conv, n_iter = pagerank_ref(sym_tuples(edges), alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
-    _check(got, expect)
+    _check_plan(got, ss, expect, n_iter)
 
 
 @pytest.mark.parametrize("plan", PLANS)
 def test_pagerank_hub_skew(spark, request, plan):
     edges = make_edges("hub")
-    got = _run(spark, edges, mode=_mode(request, plan))
-    expect, conv, _ = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
+    ss: list = []
+    got = _run(spark, edges, mode=_mode(request, plan), superstep_seconds=ss)
+    expect, conv, n_iter = pagerank_ref(edges, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER)
     assert conv
-    _check(got, expect)
+    _check_plan(got, ss, expect, n_iter)
     # the hub holds most of the mass
     assert got[0] == max(got.values())
 
@@ -76,12 +87,14 @@ def test_pagerank_personalization(spark, request, plan):
     pers_rows = [(1, 1.0), (4, 3.0)]
     G = Graph(edges_df(spark, edges), directed=True)
     pers = spark.createDataFrame(pers_rows, "vertex long, values double")
-    df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, personalization=pers)
+    ss: list = []
+    df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, personalization=pers,
+                  superstep_seconds=ss)
     got = {r.vertex: r.pagerank for r in df.collect()}
-    expect, conv, _ = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
-                                   max_iter=MAX_ITER, personalization=pvec)
+    expect, conv, n_iter = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
+                                        max_iter=MAX_ITER, personalization=pvec)
     assert conv
-    _check(got, expect)
+    _check_plan(got, ss, expect, n_iter)
 
 
 @pytest.mark.parametrize("plan", PLANS)
@@ -93,12 +106,14 @@ def test_pagerank_nstart(spark, request, plan):
     G = Graph(edges_df(spark, edges), directed=True)
     nstart = spark.createDataFrame(
         [(int(v), float(ns[v])) for v in range(n)], "vertex long, values double")
-    df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, nstart=nstart)
+    ss: list = []
+    df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, nstart=nstart,
+                  superstep_seconds=ss)
     got = {r.vertex: r.pagerank for r in df.collect()}
-    expect, conv, _ = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
-                                   max_iter=MAX_ITER, nstart=ns)
+    expect, conv, n_iter = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
+                                        max_iter=MAX_ITER, nstart=ns)
     assert conv
-    _check(got, expect)
+    _check_plan(got, ss, expect, n_iter)
 
 
 def test_pagerank_precomputed_out_weights(spark):
