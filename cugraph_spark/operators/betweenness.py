@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
+from ..plans.strategy import resolve_partitions
 
 
 def _brandes(
@@ -42,13 +43,12 @@ def _brandes(
     k: int | None,
     sources: DataFrame | None,
     seed: int,
-    num_partitions: int | None,
+    num_partitions: int | str | None,
     per_edge: bool,
 ):
     """Shared Brandes sweeps. Returns (acc, verts, edges, V, n_sources)
     where acc is [vertex, bc] (per_edge=False) or [src, dst, bc]."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = (
         G.edges.select(SRC, DST)
         .distinct()
@@ -170,7 +170,7 @@ def betweenness_centrality(
     sources: DataFrame | None = None,
     normalized: bool = True,
     seed: int = 42,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, betweenness_centrality].
 
@@ -226,7 +226,7 @@ def edge_betweenness_centrality(
     sources: DataFrame | None = None,
     normalized: bool = True,
     seed: int = 42,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [src, dst, betweenness_centrality] — one row per directed
     edge of ``G.edges`` (for undirected graphs that is both orientations

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
-from ..plans.strategy import vertex_join_side
+from ..plans.strategy import resolve_partitions, vertex_join_side
 
 
 def _prep_edges(G: Graph, P: int) -> DataFrame:
@@ -43,7 +43,7 @@ def _prep_edges(G: Graph, P: int) -> DataFrame:
 
 def hits(
     G: Graph, max_iter: int = 100, tol: float = 1.0e-5,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, hubs, authorities]; unweighted adjacency
     (hits_impl.cuh ignores weights — the python wrapper warns).
@@ -58,8 +58,7 @@ def hits(
     Stopping state matches the reference exactly: we return the first
     state whose diff < tol (carried in the plan), not the extra
     superstep computed while detecting it."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = _prep_edges(G, P)
     verts = G.vertices().repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
     V = verts.count()
@@ -195,7 +194,7 @@ def hits(
 def katz_centrality(
     G: Graph, alpha: float = 0.1, beta: float = 1.0,
     max_iter: int = 100, tol: float = 1.0e-6,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, katz_centrality] (L2-normalized), semantics of
     katz_centrality_impl.cuh: c ← β + α·Aᵀc from c=0, stop on
@@ -206,8 +205,7 @@ def katz_centrality(
     ZERO Spark actions — the L1-diff agg exists only for the stopping
     test, which tol=0 can never trigger; every superstep is lazy plan
     executing inside the final normalization action."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = _prep_edges(G, P)
     verts = G.vertices().repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
     V = verts.count()
@@ -249,12 +247,11 @@ def katz_centrality(
 
 def eigenvector_centrality(
     G: Graph, max_iter: int = 100, tol: float = 1.0e-6,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, eigenvector_centrality]: power iteration on Aᵀ
     with per-step L2 normalization (eigenvector_centrality_impl.cuh)."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = _prep_edges(G, P)
     verts = G.vertices().repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
     V = verts.count()

@@ -97,7 +97,6 @@ def _move_phase(
     init_labels: DataFrame | None = None,
     move_mask_seed: int | None = None,
     n_edges: int | None = None,
-    local_tail_edges: int | None = None,
     collected=None,
 ) -> DataFrame:
     """Synchronous best-modularity-gain label moves (the louvain_impl.cuh
@@ -123,7 +122,7 @@ def _move_phase(
     ``collected``: pre-collected ``(src, dst, wgt)`` numpy arrays for
     the local branch — ECG's ensemble members all move over the SAME
     edge frame, so the caller collects once instead of 16 times."""
-    if n_edges is not None and n_edges <= local_tail.resolve_threshold(local_tail_edges):
+    if n_edges is not None and n_edges <= local_tail.LOCAL_TAIL_EDGES:
         src, dst, wgt = (
             collected if collected is not None else local_tail.collect_edges(edges)
         )
@@ -232,7 +231,6 @@ def louvain(
     max_iter_per_level: int = 10,
     resolution: float = 1.0,
     min_gain: float = 1.0e-7,
-    local_tail_edges: int | None = None,
     checkpoint=None,
     resume: bool = False,
 ) -> tuple[DataFrame, float]:
@@ -278,7 +276,7 @@ def louvain(
             break
         state = _move_phase(
             edges, two_m, max_iter_per_level, resolution, min_gain,
-            n_edges=n_edges, local_tail_edges=local_tail_edges,
+            n_edges=n_edges,
         )
 
         # push level labels down to original vertices
@@ -325,7 +323,6 @@ def _refine_partition(
     edges: DataFrame,
     labels: DataFrame,
     n_edges: int | None = None,
-    local_tail_edges: int | None = None,
 ) -> DataFrame:
     """Leiden refinement: split every move-community into its connected
     components (hash-min label propagation over edges restricted to
@@ -336,7 +333,7 @@ def _refine_partition(
     phase) — and splitting a disconnected community can only increase
     modularity (in-weights unchanged, Σdeg² strictly drops).
     Returns [vertex, refined]."""
-    if n_edges is not None and n_edges <= local_tail.resolve_threshold(local_tail_edges):
+    if n_edges is not None and n_edges <= local_tail.LOCAL_TAIL_EDGES:
         src, dst, _w = local_tail.collect_edges(edges, weighted=False)
         lab_pdf = labels.select("vertex", "labels").toPandas()
         out = local_tail.refine_partition_local(src, dst, lab_pdf)
@@ -401,7 +398,6 @@ def leiden(
     max_iter_per_level: int = 10,
     resolution: float = 1.0,
     min_gain: float = 1.0e-7,
-    local_tail_edges: int | None = None,
     checkpoint=None,
     resume: bool = False,
 ) -> tuple[DataFrame, float]:
@@ -468,16 +464,14 @@ def leiden(
             break
         moved = _move_phase(
             edges, two_m, max_iter_per_level, resolution, min_gain,
-            init_labels=seed_labels,
-            n_edges=n_edges, local_tail_edges=local_tail_edges,
+            init_labels=seed_labels, n_edges=n_edges,
         )
         # one row per vertex of the level graph — cheaper than a
         # distinct over the edge list for the contraction check
         n_cur = moved.count()
         move_labels = moved.select("vertex", "labels")
         refined = _refine_partition(
-            edges, move_labels,
-            n_edges=n_edges, local_tail_edges=local_tail_edges,
+            edges, move_labels, n_edges=n_edges,
         )  # [vertex, refined]
         n_refined = refined.select("refined").distinct().count()
 
@@ -542,7 +536,6 @@ def ecg(
     ensemble_size: int = 16,
     resolution: float = 1.0,
     seed: int = 42,
-    local_tail_edges: int | None = None,
 ) -> tuple[DataFrame, float]:
     """Ensemble Clustering for Graphs (reference
     ``community/ecg_impl.cuh``, python ``community/ecg.py``; Poulin &
@@ -571,7 +564,7 @@ def ecg(
     # ensemble member (16 concurrent duplicate toPandas otherwise)
     coll = (
         local_tail.collect_edges(edges)
-        if n_edges <= local_tail.resolve_threshold(local_tail_edges)
+        if n_edges <= local_tail.LOCAL_TAIL_EDGES
         else None
     )
 
@@ -585,8 +578,7 @@ def ecg(
         part = _move_phase(
             edges, two_m, max_iter=3, resolution=resolution,
             min_gain=1.0e-7, move_mask_seed=seed + i,
-            n_edges=n_edges, local_tail_edges=local_tail_edges,
-            collected=coll,
+            n_edges=n_edges, collected=coll,
         ).select(F.col("vertex").alias("pv"), F.col("labels").alias("pl"))
         return (
             edges.join(part.withColumnRenamed("pv", SRC)
@@ -629,7 +621,7 @@ def ecg(
         )
     )
     gw = _as_graph(reweighted.transform(truncate_plan), G)
-    labels, _q = louvain(gw, resolution=resolution, local_tail_edges=local_tail_edges)
+    labels, _q = louvain(gw, resolution=resolution)
     edges.unpersist()
     return labels, modularity(G, labels, resolution)
 

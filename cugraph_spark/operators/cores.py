@@ -49,8 +49,7 @@ _DEFAULT_MAX_ITER = 100
 def core_number(
     G: Graph,
     max_iter: int | None = None,
-    num_partitions: int | None = None,
-    local_tail_edges: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, core_number] on the undirected simple graph
     (self-loops ignored, like core_number_impl.cuh).
@@ -62,16 +61,13 @@ def core_number(
         raise ValueError("core_number requires an undirected graph")
     from ..plans import local_tail
 
-    thr = local_tail.resolve_threshold(local_tail_edges)
     # The exact peel equals the h-index fixpoint only at CONVERGENCE; a
     # caller-truncated budget (max_iter below the default) asks for the
     # partially-converged distributed value, which the peel cannot
     # reproduce — run distributed in that case so both sides of the
     # size gate honor the same contract. None means "run to
     # convergence", so it always qualifies.
-    if (max_iter is None or max_iter >= _DEFAULT_MAX_ITER) and local_tail.fits(
-        G.edges, thr
-    ):
+    if (max_iter is None or max_iter >= _DEFAULT_MAX_ITER) and local_tail.fits(G.edges):
         import numpy as np
 
         src, dst, _w = local_tail.collect_edges(G.edges, weighted=False)
@@ -82,8 +78,9 @@ def core_number(
         )
     if max_iter is None:
         max_iter = _DEFAULT_MAX_ITER
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    from ..plans.strategy import resolve_partitions
+
+    P = resolve_partitions(num_partitions, G.edges)
     edges = (
         G.edges.select(SRC, DST)
         .filter(F.col(SRC) != F.col(DST))

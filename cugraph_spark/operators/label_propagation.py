@@ -30,7 +30,7 @@ hash-min — instead it recomputes the argmax EXACTLY, but only for
 superstep). Unaffected vertices see identical scores, hence identical
 argmax, hence identical labels — the frontier superstep is
 row-for-row equal to the dense synchronous update. Once the measured
-changed-count drops below ``frontier_threshold``, a superstep
+changed-count drops to or below ``_frontier_threshold``, a superstep
 broadcast-probes the persisted edge cache twice (no pre-grouped
 adjacency build — its one-time O(E) shuffle would wash out the gain on
 low-diameter graphs; same reasoning as wcc.py): delta → affected dsts
@@ -78,6 +78,19 @@ _FRONTIER_CAND_CAP = 32_000_000
 _FRONTIER_CAND_FRAC_DEN = 8  # n_cand must be < n_edges / this
 
 
+def _frontier_threshold(V: int) -> int:
+    """Changed-count at or below which a superstep recomputes only the
+    affected set (module docstring); 0 keeps every superstep dense.
+
+    ``V/64`` (vs WCC's V/8): LPA's frontier cost is the 2-hop term
+    Σ degree(affected), so a delta the V/8 gate admits can still reach
+    ~all of E through hubs — the measured n_cand guard catches that,
+    but each miss costs a wasted measuring action (~a dense superstep
+    at RMAT-23; round-4 A/B iteration 3). V/64 skips the measure for
+    obviously-too-big deltas."""
+    return max(1, min(V // 64, 4_000_000))
+
+
 def label_propagation(
     G: Graph,
     max_iter: int = 20,
@@ -86,8 +99,6 @@ def label_propagation(
     checkpoint_every: int = 5,
     resume: bool = False,
     check_every: int = 1,
-    broadcast_limit: int | None = None,
-    frontier_threshold: int | None = None,
     superstep_metrics: list | None = None,
     detect_cycle: bool = True,
     tie_break: str = "min",
@@ -106,13 +117,14 @@ def label_propagation(
     k-superstep chains stay linear in Catalyst because truncate_plan
     cuts each superstep's lineage lazily).
 
-    ``frontier_threshold``: changed-count at or below which supersteps
-    switch to affected-set recomputation (module docstring) — identical
-    labels per iteration; join output, aggregations, and exchanges
-    shrink to frontier-incident size (the probe-only edge scan is the
-    remaining fixed cost). Default auto =
-    ``max(1, min(V // 64, 4_000_000))`` (rationale on the constant);
-    ``0`` disables (every superstep dense).
+    The plan is chosen from V and the measured changed-count, with no
+    tuning parameter: broadcast-state mode while V ≤
+    ``NARROW_STATE_BROADCAST_LIMIT`` (shuffle-hash above), and
+    affected-set recomputation (module docstring) once the
+    changed-count drops to or below ``_frontier_threshold(V)`` (V/64)
+    — identical labels per iteration; join output, aggregations, and
+    exchanges shrink to frontier-incident size (the probe-only edge
+    scan is the remaining fixed cost).
 
     ``superstep_metrics``: pass a list to receive one dict per checking
     action with the MEASURED shuffle read/write byte deltas
@@ -164,9 +176,7 @@ def label_propagation(
     # exchanges, so it shares the measured narrow-state cutover (RMAT-23
     # A/B on the strategy constant: 91.1s shuffle-hash vs 62.4s here).
     V = G.number_of_vertices()
-    blimit = (
-        NARROW_STATE_BROADCAST_LIMIT if broadcast_limit is None else broadcast_limit
-    )
+    blimit = NARROW_STATE_BROADCAST_LIMIT
     bcast = V <= blimit
 
     # Edge layout per join mode — same analysis as WCC's (operators/
@@ -193,17 +203,7 @@ def label_propagation(
         start_iter = meta["iteration"] + 1
 
     # --- frontier/delta machinery (module docstring) ---------------
-    # Auto threshold V/64 (vs WCC's V/8): LPA's frontier cost is the
-    # 2-hop term Σ degree(affected), so a delta the V/8 gate admits can
-    # still reach ~all of E through hubs — the measured n_cand guard
-    # below catches that, but each miss costs a wasted measuring
-    # action (~a dense superstep at RMAT-23; round-4 A/B iteration 3).
-    # V/64 skips the measure for obviously-too-big deltas.
-    fthr = (
-        max(1, min(V // 64, 4_000_000))
-        if frontier_threshold is None
-        else int(frontier_threshold)
-    )
+    fthr = _frontier_threshold(V)
     last_changed: int | None = None
     prev_full = None  # (vertex, labels, old[, old2]) of the last superstep
     deg = None  # lazily-built in-degree frame for the frontier guard

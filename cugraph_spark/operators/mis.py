@@ -33,14 +33,13 @@ def _sym_edges(G: Graph) -> DataFrame:
     ).distinct()
 
 
-def _try_local(G: Graph, local_tail_edges: int | None):
+def _try_local(G: Graph):
     """Collect (src, dst, vertices) when the edge list fits the driver
     tail (``plans/local_tail.py`` — the single-GPU-handoff analog);
     None when the graph is big and the distributed loop must run. The
     gate is a bounded limit-probe (``local_tail.fits``), not a full
     count; Luby loops would otherwise pay ≥1 job per round."""
-    thr = local_tail.resolve_threshold(local_tail_edges)
-    if not local_tail.fits(G.edges, thr):
+    if not local_tail.fits(G.edges):
         return None
     src, dst, _w = local_tail.collect_edges(G.edges, weighted=False)
     import numpy as np
@@ -51,10 +50,9 @@ def _try_local(G: Graph, local_tail_edges: int | None):
 
 def maximal_independent_set(
     G: Graph, seed: int = 42, max_rounds: int = 100,
-    local_tail_edges: int | None = None,
 ) -> DataFrame:
     """Returns [vertex, in_mis] over all vertices."""
-    loc = _try_local(G, local_tail_edges)
+    loc = _try_local(G)
     if loc is not None:
         out = local_tail.mis_local(loc[0], loc[1], loc[2], seed, max_rounds)
         return G.edges.sparkSession.createDataFrame(
@@ -118,7 +116,6 @@ def maximal_independent_set(
 
 def vertex_coloring(
     G: Graph, seed: int = 42, max_colors: int = 200, check_every: int = 1,
-    local_tail_edges: int | None = None,
 ) -> DataFrame:
     """Jones–Plassmann greedy coloring: [vertex, color] (0-based),
     proper — no edge joins two vertices of the same color.
@@ -141,7 +138,7 @@ def vertex_coloring(
     any k and the only trade is up to k-1 wasted no-op rounds (empty
     frames) after completion.
     """
-    loc = _try_local(G, local_tail_edges)
+    loc = _try_local(G)
     if loc is not None:
         out = local_tail.coloring_local(loc[0], loc[1], loc[2], seed, max_colors)
         return G.edges.sparkSession.createDataFrame(

@@ -457,9 +457,12 @@ def pagerank(
                 ).crossJoin(dang_df)
                 dang_mass = F.col("dang") * F.lit(alpha) + F.lit(1.0 - alpha)
                 if pers is None:
+                    # a Divide is nullable (x/0 is NULL); V > 0, so the
+                    # coalesce only keeps `pagerank` non-nullable, as on
+                    # every other plan
                     new_rank = (
                         F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                        + dang_mass / F.lit(float(V))
+                        + F.coalesce(dang_mass / F.lit(float(V)), F.lit(0.0))
                     )
                 else:
                     base = base.join(pers, state["vertex"] == pers["vertex"], "left")

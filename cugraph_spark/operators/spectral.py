@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
+from ..plans.strategy import resolve_partitions
 
 
 def _gram_schmidt_cols(X: DataFrame, cols: list[str]) -> DataFrame:
@@ -74,15 +75,14 @@ def spectral_embedding(
     k: int,
     num_iters: int = 30,
     seed: int = 42,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """[vertex, e0..e{k-1}] — the dominant k-dim subspace of
     (I + D^{-1/2} A D^{-1/2})/2, i.e. the smallest-eigenvalue subspace
     of the normalized Laplacian (balanced-cut embedding)."""
     if G.directed:
         raise ValueError("spectral_embedding requires an undirected graph")
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     cols = [f"e{i}" for i in range(k)]
 
     deg = G.edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("d"))
@@ -222,7 +222,7 @@ def modularity_embedding(
     k: int,
     num_iters: int = 30,
     seed: int = 42,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """[vertex, e0..e{k-1}] — the dominant k-dim subspace of the
     modularity matrix B = A − k·kᵀ/2m (the
@@ -235,8 +235,7 @@ def modularity_embedding(
     PSD so power iteration converges to B's top eigenvectors."""
     if G.directed:
         raise ValueError("modularity_embedding requires an undirected graph")
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     cols = [f"e{i}" for i in range(k)]
 
     deg = G.edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("d"))

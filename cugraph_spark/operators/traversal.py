@@ -192,13 +192,12 @@ def sssp(
     G: Graph,
     source: int,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Bellman-Ford to fixpoint; returns [vertex, distance] with NULL for
     unreachable. Negative weights rejected like the reference
     (sssp_impl.cuh requires non-negative)."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = (
         G.edges.select(SRC, DST, WGT).repartition(P, SRC).persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -265,7 +264,7 @@ def multi_source_bfs(
     G: Graph,
     sources: DataFrame,
     max_depth: int | None = None,
-    num_partitions: int | None = None,
+    num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Batched BFS from every source at once (reference
     ``multi_source_bfs`` / ``concurrent_bfs`` exports,
@@ -275,8 +274,7 @@ def multi_source_bfs(
     cost one join per level, not S jobs. Returns
     [source, vertex, distance, predecessor] for REACHED pairs only;
     predecessor is the min-id parent (−1 for the source row itself)."""
-    spark = G.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = resolve_partitions(num_partitions, G.edges)
     edges = (
         G.edges.select(SRC, DST).distinct()
         .repartition(P, SRC).persist(StorageLevel.MEMORY_AND_DISK)

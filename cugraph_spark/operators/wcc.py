@@ -29,8 +29,8 @@ CHANGED last superstep must emit messages. Every dense superstep
 announces all labels, and every change (lower or jump) lands in the
 ``labels != old`` delta, so the announce-invariant holds at any
 dense↔frontier switch point and ``changed == 0`` remains a true
-fixpoint test. When the measured delta drops below
-``frontier_threshold`` the superstep switches to: probe the persisted
+fixpoint test. When the measured delta drops to or below
+``_frontier_threshold`` the superstep switches to: probe the persisted
 edge cache with the BROADCAST delta (a hash probe on the src column —
 no exchange in any layout, no join output and no aggregation input for
 non-frontier edges), so the expensive terms (join materialization, the
@@ -94,12 +94,29 @@ from ..plans.strategy import vertex_join_side
 
 # WCC's broadcast-state cutover: its state is one narrow label column,
 # so it shares the measured NARROW_STATE_BROADCAST_LIMIT (rationale and
-# RMAT-23 A/B on the strategy constant). Kept under the WCC-specific
-# name for the tests/back-compat.
+# RMAT-23 A/B on the strategy constant). Read at call time, like
+# _DST_PARTITION_MIN_V below: setting it to 0 forces the shuffle-hash
+# plan.
 from ..plans.strategy import NARROW_STATE_BROADCAST_LIMIT as WCC_BROADCAST_VERTEX_LIMIT
 
 # re-exported for the tests; rationale lives on the strategy constant
 from ..plans.strategy import DST_PARTITION_MIN_V as _DST_PARTITION_MIN_V  # noqa: E402
+
+
+def _frontier_threshold(V: int, csr: bool) -> int:
+    """Changed-count at or below which a superstep goes frontier
+    (module docstring); 0 keeps every superstep dense.
+
+    Dataframe plan: ``V/8``, capped at 4M because the delta is
+    broadcast — below ~V/8 changed vertices the probe-only scan beats
+    the dense join+aggregation (A/B on RMAT in BENCH/BASELINE.md round
+    4). csr plan: ``V/2``, capped at 32M — a csr frontier superstep
+    costs O(|Δ| + Σ deg(Δ)) with no O(E) probe floor and no broadcast
+    (the delta routes to its block through the pid shuffle), so the
+    switch pays off much earlier; worst case ≈ one dense block pass."""
+    if csr:
+        return max(1, min(V // 2, 32_000_000))
+    return max(1, min(V // 8, 4_000_000))
 
 
 def _min_by_dst(blk, dst_index, vals, bound: bool):
@@ -176,9 +193,6 @@ def weakly_connected_components(
     resume: bool = False,
     check_every: int = 1,
     superstep_seconds: list | None = None,
-    min_iter: int = 0,
-    broadcast_limit: int | None = None,
-    frontier_threshold: int | None = None,
     superstep_metrics: list | None = None,
     mode: str = "dataframe",
     block_dir: str | None = None,
@@ -195,29 +209,21 @@ def weakly_connected_components(
     convergence by up to k−1 supersteps returns identical labels
     (same batching contract as label_propagation's ``check_every``).
 
-    ``min_iter=k`` keeps iterating through at least k supersteps even
-    after the labeling stabilizes (a stable labeling is a fixpoint, so
-    the extra supersteps run the identical O(E) plan and return
-    identical labels). Used by the scaling bench to collect
-    steady-state per-superstep walls on low-diameter graphs that
-    converge in 2-3 rounds.
+    The plan is chosen from V and the measured changed-count, with no
+    tuning parameter (the reference's WCC has none either):
 
-    ``broadcast_limit``: max V for the broadcast-state mode (default
-    ``WCC_BROADCAST_VERTEX_LIMIT``). WCC's label state is 8 bytes/vertex
-    compacted — half of PageRank's (long, double) rank state — so its
-    broadcast stays cheap to twice the generic cutover; and broadcast
-    mode unlocks the dst-partitioned zero-exchange superstep below,
-    which the per-superstep-shuffle P×V analysis (BENCH/BASELINE.md
-    round 3) shows is what restores N→4N scaling at mid-size V.
-
-    ``frontier_threshold``: once the measured changed-count drops to or
-    below this, supersteps switch to frontier/delta messaging (module
-    docstring) whose cost tracks the frontier size instead of O(E).
-    Default auto = ``max(1, min(V // 8, 4_000_000))`` (the broadcast
-    delta must stay executor-memory-small; below ~V/8 changed vertices
-    the frontier plan's probe-only scan beats the dense plan's full
-    join+aggregation — A/B on RMAT in BENCH/BASELINE.md round 4). ``0`` disables
-    frontier mode entirely (every superstep dense — the round-3 plan).
+    - broadcast-state mode while V ≤ ``WCC_BROADCAST_VERTEX_LIMIT``.
+      WCC's label state is 8 bytes/vertex compacted — half of
+      PageRank's (long, double) rank state — so its broadcast stays
+      cheap to twice the generic cutover; and broadcast mode unlocks
+      the dst-partitioned zero-exchange superstep below, which the
+      per-superstep-shuffle P×V analysis (BENCH/BASELINE.md round 3)
+      shows is what restores N→4N scaling at mid-size V. Above it the
+      state joins are shuffle-hash.
+    - frontier/delta supersteps (module docstring), whose cost tracks
+      the frontier size instead of O(E), once the measured
+      changed-count drops to or below ``_frontier_threshold(V, csr)``
+      (V/8 dataframe, V/2 csr).
 
     ``superstep_metrics``: pass a list to receive one dict per checking
     action with the MEASURED shuffle read/write byte deltas
@@ -287,7 +293,7 @@ def weakly_connected_components(
             F.col(SRC).cast("int").alias(SRC),
             F.col(DST).cast("int").alias(DST),
         )
-    blimit = WCC_BROADCAST_VERTEX_LIMIT if broadcast_limit is None else broadcast_limit
+    blimit = WCC_BROADCAST_VERTEX_LIMIT
     bcast = V <= blimit
 
     # Edge-side layout per join mode (the repartition, when any, and the
@@ -365,17 +371,7 @@ def weakly_connected_components(
         import time as _time
 
         # --- frontier/delta machinery (module docstring) ---------------
-        if frontier_threshold is not None:
-            fthr = int(frontier_threshold)
-        elif mode == "csr":
-            # csr frontier supersteps cost O(|Δ| + Σ deg(Δ)) — no O(E)
-            # probe floor and no delta broadcast (the delta ROUTES to its
-            # block via the pid shuffle), so the switch pays off much
-            # earlier than the dataframe mode's V/8 and has no
-            # executor-memory hazard; worst case ≈ one dense block pass.
-            fthr = max(1, min(V // 2, 32_000_000))
-        else:
-            fthr = max(1, min(V // 8, 4_000_000))
+        fthr = _frontier_threshold(V, mode == "csr")
         last_changed: int | None = None  # measured delta size (checking steps)
         prev_full = None  # (vertex, labels, old) of the last checked superstep
 
@@ -604,7 +600,7 @@ def weakly_connected_components(
                     state.select("vertex", "labels"), it, {"changed": int(changed)}
                 )
 
-            if changed == 0 and (it + 1) >= min_iter:
+            if changed == 0:
                 break
 
     if edges is not None:

@@ -32,11 +32,10 @@ tail stays bit-identical.
 
 Threshold: ``LOCAL_TAIL_EDGES`` (default 150k edge rows ≈ a few MB on
 the driver — far below the footprint of collecting a query result).
-Operators take ``local_tail_edges=``: ``None`` → the default, ``0`` →
-never local (used by the equivalence tests and available to users whose
-driver is memory-constrained). PageRank takes no such parameter; it
-reads ``LOCAL_TAIL_EDGES`` at call time, so setting it to 0 forces the
-distributed plan.
+The plan is chosen by size alone: no operator takes a threshold
+parameter. Every operator reads ``LOCAL_TAIL_EDGES`` at call time, so
+setting it to 0 forces every distributed plan (the equivalence tests do
+this; so can a deployment whose driver is memory-constrained).
 """
 
 from __future__ import annotations
@@ -49,15 +48,12 @@ from .xxh64 import pmod2, xxhash64
 LOCAL_TAIL_EDGES = 150_000
 
 
-def resolve_threshold(local_tail_edges: int | None) -> int:
-    return LOCAL_TAIL_EDGES if local_tail_edges is None else int(local_tail_edges)
-
-
-def fits(edges_df, thr: int) -> bool:
+def fits(edges_df) -> bool:
     """Bounded probe: does the edge list fit the driver tail? Scans at
-    most ``thr + 1`` rows (``limit`` early-exits), where a bare
-    ``count()`` gate would pay one full O(E) pass per operator call on
-    exactly the billion-edge graphs that can never take the tail."""
+    most ``LOCAL_TAIL_EDGES + 1`` rows (``limit`` early-exits), where a
+    bare ``count()`` gate would pay one full O(E) pass per operator call
+    on exactly the billion-edge graphs that can never take the tail."""
+    thr = LOCAL_TAIL_EDGES
     return thr > 0 and edges_df.limit(thr + 1).count() <= thr
 
 

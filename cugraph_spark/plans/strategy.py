@@ -36,8 +36,8 @@ BROADCAST_VERTEX_LIMIT = 4_000_000
 # between the two constants; RMAT-22's occupied V is 2.40M, not its
 # 4.19M max id), 32 cores, min-of-2: WCC 63.4s shuffle-hash vs 60.3s
 # broadcast+dst; LPA 91.1s vs 62.4s (1.46x — BOTH of its per-superstep
-# dst-keyed aggregations go exchange-free). tools/ab_lpa_cutover.py,
-# BENCH/BASELINE.md round-3 section.
+# dst-keyed aggregations go exchange-free). BENCH/BASELINE.md round-3
+# section; rerun with tools/ab.py broadcast= arms.
 #
 # Raised 8M → 24M after the RMAT-24 pair regressed: occupied
 # V=8,872,774 sat just ABOVE the 8M cutover, so WCC fell back to
@@ -49,8 +49,8 @@ BROADCAST_VERTEX_LIMIT = 4_000_000
 # 192 MB of ids — per-executor budget class of an AQE broadcast. On a
 # many-node cluster the real bound is broadcast replication
 # (V·8B·n_executors per superstep vs ~E·8B shuffled); executors-many
-# deployments with E/V well under ~n_executors/4 should lower this via
-# the broadcast_limit parameter every operator exposes.
+# deployments with E/V well under ~n_executors/4 should lower this
+# constant; WCC and LPA read it at call time.
 NARROW_STATE_BROADCAST_LIMIT = 24_000_000
 
 # In broadcast-state mode the gather-scatter's edge cache should be

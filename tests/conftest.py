@@ -5,6 +5,8 @@ string ids, disjoint components, power-law hubs)."""
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import sys
 from pathlib import Path
 
@@ -28,14 +30,64 @@ def spark():
 
 
 @pytest.fixture
-def distributed_pagerank(monkeypatch):
-    """Force PageRank's distributed dataframe plan: with the local-tail
-    cutover at 0 edges no graph takes the driver-local plan. For tests
-    of distributed-only machinery (chaining, salting, partitioning,
-    the csr-vs-dataframe comparisons)."""
+def plan_cutover(monkeypatch):
+    """``with plan_cutover(module, name, value):`` runs a block with one
+    plan cutover of an operator module patched: a constant such as
+    ``WCC_BROADCAST_VERTEX_LIMIT`` is set to ``value``; a threshold
+    function such as ``_frontier_threshold`` is replaced by one that
+    returns ``value``; ``None`` leaves the automatic rule in place.
+    Operators read their cutovers at call time and take no parameter
+    for them, so this is how a test reaches each plan."""
+
+    @contextlib.contextmanager
+    def patch(module, name, value):
+        with monkeypatch.context() as m:
+            if value is not None:
+                rule = getattr(module, name)
+                m.setattr(module, name, (lambda *a: value) if callable(rule) else value)
+            yield
+
+    return patch
+
+
+def _spy(calls, name, real, *args, **kwargs):
+    calls.append(name)
+    return real(*args, **kwargs)
+
+
+@pytest.fixture
+def tail_plan(monkeypatch):
+    """``with tail_plan("local") as calls:`` runs a block with the
+    driver-local tail cutover (``local_tail.LOCAL_TAIL_EDGES``) so high
+    that every test graph takes the local plan; ``"distributed"`` sets
+    it to 0, so none does. ``calls`` records the name of every
+    driver-local kernel (``*_local``, ``pagerank_superstep``) the block
+    ran, which proves the plan."""
     from cugraph_spark.plans import local_tail
 
-    monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", 0)
+    kernels = [n for n in vars(local_tail) if n.endswith("_local")]
+    kernels.append("pagerank_superstep")
+
+    @contextlib.contextmanager
+    def plan(name):
+        calls: list = []
+        with monkeypatch.context() as m:
+            m.setattr(local_tail, "LOCAL_TAIL_EDGES", {"local": 10**9, "distributed": 0}[name])
+            for k in kernels:
+                m.setattr(local_tail, k, functools.partial(_spy, calls, k, getattr(local_tail, k)))
+            yield calls
+
+    return plan
+
+
+@pytest.fixture
+def distributed_tail(tail_plan):
+    """Force every operator's distributed plan for the whole test (no
+    graph takes a driver-local tail). For tests of distributed-only
+    machinery (chaining, salting, partitioning, the csr-vs-dataframe
+    comparisons)."""
+    with tail_plan("distributed"):
+        yield
 
 
 def make_edges(kind: str, seed: int = 42):

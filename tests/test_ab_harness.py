@@ -1,0 +1,37 @@
+"""Smoke test of the A/B harness (``tools/ab.py``): two arm sets on a
+tiny RMAT graph, run in the test session."""
+
+from __future__ import annotations
+
+import importlib.util
+from pathlib import Path
+
+
+def _ab():
+    path = Path(__file__).resolve().parents[1] / "tools" / "ab.py"
+    spec = importlib.util.spec_from_file_location("ab_harness", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _modes(rec):
+    return [m["mode"] for m in rec["metrics"][0]]
+
+
+def test_ab_harness_wcc_arms(spark, tmp_path):
+    """Each arm reaches the plan it forces (the superstep mode tags)
+    and all arms give the same labels."""
+    ab = _ab()
+    by_layout = ab.run(spark, "wcc", 8, ["dataframe", "csr"], reps=1, block_root=str(tmp_path))
+    by_frontier = ab.run(spark, "wcc", 8, ["dense", "frontier"], reps=1, block_root=str(tmp_path))
+    for out, arms in ((by_layout, ("dataframe", "csr")), (by_frontier, ("dense", "frontier"))):
+        a, b = (out[arm] for arm in arms)
+        assert a["signature"] == b["signature"] and a["signature"][0] == out["V"]
+        for rec in (a, b):
+            assert len(rec["walls"]) == len(rec["cpu_s"]) == 1
+    assert all(m.startswith("csr-") for m in _modes(by_layout["csr"]))
+    assert not any(m.startswith("csr-") for m in _modes(by_layout["dataframe"]))
+    assert set(_modes(by_frontier["dense"])) == {"dense"}
+    fr = _modes(by_frontier["frontier"])
+    assert fr[0] == "dense" and set(fr[1:]) == {"frontier"}

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+import cugraph_spark as cs
 from cugraph_spark.graph import Graph
 from cugraph_spark.operators.pagerank import pagerank
+from cugraph_spark.operators.spectral import modularity_embedding, spectral_embedding
 from cugraph_spark.plans.strategy import adaptive_partitions, resolve_partitions
 from .conftest import edges_df, make_edges
 
@@ -59,7 +62,7 @@ def test_resolve_precedence(spark, tmp_path):
     assert resolve_partitions("auto", df) == adaptive_partitions(df)
 
 
-def test_pagerank_auto_matches_default(spark, distributed_pagerank):
+def test_pagerank_auto_matches_default(spark, distributed_tail):
     G = Graph(edges_df(spark, make_edges("tiny_social")), directed=True)
     a = {r.vertex: r.pagerank for r in pagerank(G, max_iter=20).collect()}
     b = {
@@ -69,6 +72,37 @@ def test_pagerank_auto_matches_default(spark, distributed_pagerank):
     assert set(a) == set(b)
     for v in a:
         assert abs(a[v] - b[v]) < 1e-12
+
+
+_AUTO_CASES = {
+    "sssp": lambda G, spark, **kw: cs.sssp(G, 0, **kw),
+    "multi_source_bfs": lambda G, spark, **kw: cs.multi_source_bfs(
+        G, spark.createDataFrame([(0,), (5,)], "vertex long"), **kw),
+    "core_number": lambda G, spark, **kw: cs.core_number(G, **kw),
+    "spectral_embedding": lambda G, spark, **kw: spectral_embedding(
+        G, 2, num_iters=8, **kw),
+    "modularity_embedding": lambda G, spark, **kw: modularity_embedding(
+        G, 2, num_iters=8, **kw),
+    "hits": lambda G, spark, **kw: cs.hits(G, **kw),
+    "katz_centrality": lambda G, spark, **kw: cs.katz_centrality(G, **kw),
+    "eigenvector_centrality": lambda G, spark, **kw: cs.eigenvector_centrality(G, **kw),
+    "betweenness_centrality": lambda G, spark, **kw: cs.betweenness_centrality(G, **kw),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_AUTO_CASES))
+def test_auto_partitions_match_default(spark, op, distributed_tail):
+    """``num_partitions="auto"`` sizes P from plan statistics on every
+    operator that takes it (it once reached ``repartition`` as a column
+    name); the result equals the default run's, up to float summation
+    order. The distributed plans run, so P is used."""
+    G = Graph(edges_df(spark, make_edges("tiny_social")), directed=False)
+    run = _AUTO_CASES[op]
+    default = sorted(tuple(r) for r in run(G, spark).collect())
+    auto = sorted(tuple(r) for r in run(G, spark, num_partitions="auto").collect())
+    assert len(auto) == len(default) > 0
+    for a, d in zip(auto, default):
+        assert a == pytest.approx(d, rel=1e-9, abs=1e-12)
 
 
 def test_parse_bytes_suffixes():

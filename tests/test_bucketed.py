@@ -49,7 +49,7 @@ def test_transform_voids_pre_partitioned(spark):
     ).pre_partitioned is True
 
 
-def test_pagerank_matches_on_bucketed_graph(spark, tmp_path, distributed_pagerank):
+def test_pagerank_matches_on_bucketed_graph(spark, tmp_path, distributed_tail):
     e = _setup(spark, tmp_path, "be_pr")
     Gb = read_bucketed_edges(spark, "be_pr")
     Gn = Graph(e, directed=True, multi_edge=True)
@@ -74,7 +74,7 @@ def test_wcc_matches_on_bucketed_symmetric_graph(spark, tmp_path):
     assert ca == cb
 
 
-def test_pagerank_ignores_dst_layout(spark, tmp_path, distributed_pagerank):
+def test_pagerank_ignores_dst_layout(spark, tmp_path, distributed_tail):
     """PageRank's shuffle-hash mode needs a SRC layout; a dst-bucketed
     graph must NOT be treated as pre-partitioned for it (the skip is
     keyed on partitioned_on(SRC)) — ranks must still match the plain

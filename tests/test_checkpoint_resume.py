@@ -37,7 +37,7 @@ def _check_pagerank_checkpoint_meta(spark, tmp_path):
     assert [f.name for f in cp.load(spark, 5)[0].schema] == ["vertex", "ows", "rank"]
 
 
-def test_pagerank_checkpoint_meta(spark, tmp_path, distributed_pagerank):
+def test_pagerank_checkpoint_meta(spark, tmp_path, distributed_tail):
     _check_pagerank_checkpoint_meta(spark, tmp_path)
 
 
@@ -47,7 +47,7 @@ def test_pagerank_checkpoint_meta_local(spark, tmp_path):
     _check_pagerank_checkpoint_meta(spark, tmp_path)
 
 
-def test_pagerank_resume_exact(spark, tmp_path, distributed_pagerank):
+def test_pagerank_resume_exact(spark, tmp_path, distributed_tail):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
 
@@ -131,7 +131,7 @@ def test_lpa_resume(spark, tmp_path):
 
 
 @pytest.mark.parametrize("parts", [3, 16])
-def test_pagerank_parallelism_invariant(spark, parts, distributed_pagerank):
+def test_pagerank_parallelism_invariant(spark, parts, distributed_tail):
     """Same job at different partition counts → same result (the
     sandbox analog of MG-vs-SG equivalence, test_pagerank_mg.py)."""
     edges = make_edges("weighted")

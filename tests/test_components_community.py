@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pytest
 
@@ -16,9 +18,42 @@ from cugraph_spark import (
 from .conftest import edges_df, make_edges, sym_tuples
 from .oracles import lpa_ref, triangle_ref, wcc_ref
 
+# the operators package re-exports each function under its module's
+# name, so attribute-style imports resolve to the function
+wcc_mod = importlib.import_module("cugraph_spark.operators.wcc")
+lpa_mod = importlib.import_module("cugraph_spark.operators.label_propagation")
+
+ALWAYS_FRONTIER = 10**9  # any measured delta is at or below it
+
 
 def _as_map(rows, k="vertex", v="labels"):
     return {r[k]: r[v] for r in rows}
+
+
+def _run(op, G, plan_cutover, fthr=None, **kw):
+    """Labels and per-superstep mode tags of ``op`` (WCC or LPA) with
+    its ``_frontier_threshold`` forced to ``fthr``: 0 keeps every
+    superstep dense, ``ALWAYS_FRONTIER`` goes frontier from superstep
+    1, None keeps the automatic rule."""
+    mod = wcc_mod if op is weakly_connected_components else lpa_mod
+    m: list = []
+    with plan_cutover(mod, "_frontier_threshold", fthr):
+        labels = _as_map(op(G, superstep_metrics=m, **kw).collect())
+    return labels, [e["mode"] for e in m]
+
+
+def _spy_join_sides(monkeypatch, mod):
+    """Record, for every edges⋈state join ``mod`` plans, whether the
+    state side is broadcast (True) or shuffle-hash joined (False)."""
+    seen: list = []
+    real = mod.vertex_join_side
+
+    def spy(state, n_vertices, limit):
+        seen.append(n_vertices <= limit)
+        return real(state, n_vertices, limit=limit)
+
+    monkeypatch.setattr(mod, "vertex_join_side", spy)
+    return seen
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
@@ -45,87 +80,66 @@ def test_wcc_self_loops_ok(spark):
     assert got == {v: int(ref[v]) for v in sorted(got)}
 
 
-def test_wcc_min_iter_identical(spark):
-    """min_iter forces extra supersteps past the fixpoint (the scaling
-    bench's steady-state sampling mode); labels must be unchanged and
-    the superstep walls must show the forced rounds actually ran."""
-    for kind in ("tiny_social", "disjoint", "hub"):
-        edges = make_edges(kind)
-        G = Graph(edges_df(spark, edges), directed=False)
-        a = _as_map(weakly_connected_components(G).collect())
-        walls: list[float] = []
-        b = _as_map(
-            weakly_connected_components(
-                G, min_iter=6, superstep_seconds=walls
-            ).collect()
-        )
-        assert a == b, kind
-        assert len(walls) == 6, kind
-
-
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
-def test_wcc_frontier_mode_identical(spark, kind):
+def test_wcc_frontier_mode_identical(spark, kind, plan_cutover):
     """Frontier/delta supersteps (announce-only-changed + partial
     pointer jump) must produce the exact dense-mode labels — forced on
     from superstep 1 (huge threshold), at the auto threshold, and
-    forced off."""
+    forced off; the mode tags show each forced plan ran."""
     edges = make_edges(kind)
     G = Graph(edges_df(spark, edges), directed=False)
-    dense = _as_map(
-        weakly_connected_components(G, frontier_threshold=0).collect()
-    )
-    auto = _as_map(weakly_connected_components(G).collect())
-    forced = _as_map(
-        weakly_connected_components(G, frontier_threshold=10**9).collect()
-    )
+    wcc = weakly_connected_components
+    dense, dense_modes = _run(wcc, G, plan_cutover, 0)
+    auto, _ = _run(wcc, G, plan_cutover)
+    forced, forced_modes = _run(wcc, G, plan_cutover, ALWAYS_FRONTIER)
+    assert set(dense_modes) == {"dense"}
+    assert forced_modes[0] == "dense" and set(forced_modes[1:]) == {"frontier"}
     assert dense == auto == forced
     ref = wcc_ref(edges)
     assert dense == {v: int(ref[v]) for v in sorted(dense)}
 
 
-def test_wcc_frontier_long_path_converges(spark):
+def test_wcc_frontier_long_path_converges(spark, plan_cutover):
     """A diameter-heavy path under forced-frontier mode: the partial
     jump only accelerates changed rows, so this exercises many frontier
     supersteps; labels must still reach the exact fixpoint."""
     p = [(i, i + 1, 1.0) for i in range(300)]
     edges = p + [(b, a, w) for a, b, w in p]
     G = Graph(edges_df(spark, edges), directed=False)
-    got = _as_map(
-        weakly_connected_components(G, frontier_threshold=10**9).collect()
-    )
+    got, modes = _run(weakly_connected_components, G, plan_cutover, ALWAYS_FRONTIER)
     assert got == {v: 0 for v in range(301)}
+    assert modes.count("frontier") == len(modes) - 1 > 1
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "hub"])
-def test_lpa_frontier_mode_identical(spark, kind):
+def test_lpa_frontier_mode_identical(spark, kind, plan_cutover):
     """Affected-set frontier supersteps recompute the argmax exactly
     for vertices with a changed neighbor — labels must equal the dense
     synchronous update iteration-for-iteration (checked at convergence
     AND at a truncated budget, where any per-iteration divergence
-    would surface)."""
+    would surface). That the forced frontier really engages is shown by
+    test_lpa_frontier_engages_with_changed_rows (here the measured
+    Σdegree guard may send a superstep back to dense)."""
     edges = make_edges(kind)
     G = Graph(edges_df(spark, edges), directed=False)
+    lpa = label_propagation
     for kw in ({"max_iter": 20}, {"max_iter": 3}):
-        dense = _as_map(
-            label_propagation(G, frontier_threshold=0, **kw).collect()
-        )
-        forced = _as_map(
-            label_propagation(G, frontier_threshold=10**9, **kw).collect()
-        )
-        auto = _as_map(label_propagation(G, **kw).collect())
+        dense, dense_modes = _run(lpa, G, plan_cutover, 0, **kw)
+        forced, _ = _run(lpa, G, plan_cutover, ALWAYS_FRONTIER, **kw)
+        auto, _ = _run(lpa, G, plan_cutover, **kw)
+        assert set(dense_modes) == {"dense"}, (kind, kw)
         assert dense == forced == auto, (kind, kw)
 
 
-def test_wcc_superstep_metrics_contract(spark):
+def test_wcc_superstep_metrics_contract(spark, plan_cutover):
     """superstep_metrics emits one dict per checking action with the
     measured shuffle deltas, changed-count, wall, and mode — and
     frontier mode actually engages when forced."""
     edges = make_edges("tiny_social")
     G = Graph(edges_df(spark, edges), directed=False)
     m: list = []
-    weakly_connected_components(
-        G, frontier_threshold=10**9, superstep_metrics=m
-    ).count()
+    with plan_cutover(wcc_mod, "_frontier_threshold", ALWAYS_FRONTIER):
+        weakly_connected_components(G, superstep_metrics=m).count()
     assert m, "no metrics emitted"
     for entry in m:
         assert set(entry) >= {
@@ -182,7 +196,7 @@ def test_tc_packed_closing_leg_identical(spark, monkeypatch):
 
 def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
     """The broadcast-mode dst-partitioned layout (taken when
-    _DST_PARTITION_MIN_V ≤ V ≤ broadcast_limit) must produce labels
+    _DST_PARTITION_MIN_V ≤ V ≤ WCC_BROADCAST_VERTEX_LIMIT) must produce labels
     identical to the default path — exercised here by dropping the
     threshold so the sf-test-size graphs take the big-V branch, at two
     partition counts (partitioning invariance)."""
@@ -204,33 +218,30 @@ def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
         assert got3 == base, kind
 
 
-def test_wcc_shuffle_mode_forced_identical(spark):
-    """broadcast_limit=0 forces the shuffle-hash path on graphs that
-    would otherwise broadcast; labels must match."""
+def test_wcc_shuffle_mode_forced_identical(spark, plan_cutover, monkeypatch):
+    """A broadcast cutover of 0 forces the shuffle-hash path on graphs
+    that would otherwise broadcast; labels must match, and the join
+    spy shows which plan each run took."""
+    sides = _spy_join_sides(monkeypatch, wcc_mod)
     for kind in ("tiny_social", "hub"):
         edges = make_edges(kind)
         G = Graph(edges_df(spark, edges), directed=False)
         base = _as_map(weakly_connected_components(G).collect())
-        forced = _as_map(
-            weakly_connected_components(G, broadcast_limit=0).collect()
-        )
+        assert sides and all(sides), kind
+        sides.clear()
+        with plan_cutover(wcc_mod, "WCC_BROADCAST_VERTEX_LIMIT", 0):
+            forced = _as_map(weakly_connected_components(G).collect())
+        assert sides and not any(sides), kind
+        sides.clear()
         assert forced == base, kind
 
 
-def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
+def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch, plan_cutover):
     """Same layout-invariance contract as WCC's: dropping the dst-
     partition threshold so small graphs take the big-V broadcast branch
     must not change labels, at two partition counts; forcing the
-    shuffle path (broadcast_limit=0) must not either."""
-    import sys
-
-    import cugraph_spark.operators.label_propagation  # noqa: F401
-
-    # the operators package re-exports the function under the module's
-    # own name, so attribute-style imports resolve to the function —
-    # grab the real module from sys.modules
-    lpa_mod = sys.modules["cugraph_spark.operators.label_propagation"]
-
+    shuffle path (a broadcast cutover of 0, shown by the join spy)
+    must not either."""
     for kind in ("tiny_social", "weighted", "hub"):
         edges = make_edges(kind)
         G = Graph(edges_df(spark, edges), directed=False)
@@ -243,9 +254,11 @@ def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
             label_propagation(G, max_iter=20, num_partitions=3).collect()
         )
         monkeypatch.undo()
-        forced = _as_map(
-            label_propagation(G, max_iter=20, broadcast_limit=0).collect()
-        )
+        sides = _spy_join_sides(monkeypatch, lpa_mod)
+        with plan_cutover(lpa_mod, "NARROW_STATE_BROADCAST_LIMIT", 0):
+            forced = _as_map(label_propagation(G, max_iter=20).collect())
+        monkeypatch.undo()
+        assert sides and not any(sides), kind
         assert got8 == base, kind
         assert got3 == base, kind
         assert forced == base, kind
@@ -337,13 +350,13 @@ def test_wcc_large_ids_use_long_path(spark):
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
-def test_wcc_csr_mode_identical(spark, kind, tmp_path):
+def test_wcc_csr_mode_identical(spark, kind, tmp_path, plan_cutover):
     """mode='csr' (packed mmap blocks, np.minimum.at supersteps) must
     produce the exact dataframe-mode labels — at the auto frontier
     threshold, forced-frontier from superstep 1, and forced-dense; on
     the dense-id blocks the operator packs itself AND on dictionary
     blocks (packed externally without id_bounds, reused via
-    block_dir)."""
+    block_dir). The mode tags show each forced plan ran."""
     from cugraph_spark.plans.csr_blocks import pack_edges
 
     edges = make_edges(kind)
@@ -351,22 +364,28 @@ def test_wcc_csr_mode_identical(spark, kind, tmp_path):
     base = _as_map(weakly_connected_components(G).collect())
     dict_dir = str(tmp_path / "dict_blocks")
     pack_edges(G.edges, dict_dir, 8)
-    for kw in (
-        {},
-        {"frontier_threshold": 10**9},
-        {"frontier_threshold": 0},
-        {"block_dir": dict_dir, "num_partitions": 8},
-        {"block_dir": dict_dir, "num_partitions": 8, "frontier_threshold": 10**9},
+    dict_kw = {"block_dir": dict_dir, "num_partitions": 8}
+    for fthr, kw in (
+        (None, {}),
+        (ALWAYS_FRONTIER, {}),
+        (0, {}),
+        (None, dict_kw),
+        (ALWAYS_FRONTIER, dict_kw),
     ):
-        got = _as_map(
-            weakly_connected_components(G, mode="csr", **kw).collect()
+        got, modes = _run(
+            weakly_connected_components, G, plan_cutover, fthr, mode="csr", **kw
         )
-        assert got == base, (kind, kw)
+        assert got == base, (kind, fthr, kw)
+        if fthr == 0:
+            assert set(modes) == {"csr-dense"}, (kind, kw)
+        elif fthr == ALWAYS_FRONTIER:
+            assert modes[0] == "csr-dense", (kind, kw)
+            assert set(modes[1:]) == {"csr-frontier"}, (kind, kw)
     ref = wcc_ref(edges)
     assert base == {v: int(ref[v]) for v in sorted(base)}
 
 
-def test_wcc_csr_frontier_engages_and_long_path(spark):
+def test_wcc_csr_frontier_engages_and_long_path(spark, plan_cutover):
     """csr frontier supersteps (indptr-sliced, frontier-sized lookups)
     must engage when forced and still reach the exact fixpoint on a
     diameter-heavy path — the case the O(E) probe floor used to pay
@@ -375,11 +394,10 @@ def test_wcc_csr_frontier_engages_and_long_path(spark):
     edges = p + [(b, a, w) for a, b, w in p]
     G = Graph(edges_df(spark, edges), directed=False)
     m: list = []
-    got = _as_map(
-        weakly_connected_components(
-            G, mode="csr", frontier_threshold=10**9, superstep_metrics=m
-        ).collect()
-    )
+    with plan_cutover(wcc_mod, "_frontier_threshold", ALWAYS_FRONTIER):
+        got = _as_map(
+            weakly_connected_components(G, mode="csr", superstep_metrics=m).collect()
+        )
     assert got == {v: 0 for v in range(301)}
     assert m[0]["mode"] == "csr-dense"
     assert any(
@@ -526,33 +544,20 @@ def test_lpa_hold_tie_damps_oscillation(spark):
         label_propagation(G, tie_break="nope")
 
 
-def test_lpa_frontier_engages_with_changed_rows(spark, monkeypatch):
+def test_lpa_frontier_engages_with_changed_rows(spark, monkeypatch, plan_cutover):
     """The affected-set frontier path must actually ENGAGE (mode ==
     'frontier' with changed > 0) under a forced threshold — not only at
     the final changed==0 superstep (ADVICE r4: the equality check was
     near-vacuous without this)."""
-    import importlib
-
-    # the operators package re-exports the function under the module's
-    # name, so attribute-style import resolves to the function
-    lp_mod = importlib.import_module(
-        "cugraph_spark.operators.label_propagation"
-    )
-    monkeypatch.setattr(lp_mod, "_FRONTIER_CAND_FRAC_DEN", 1)
+    monkeypatch.setattr(lpa_mod, "_FRONTIER_CAND_FRAC_DEN", 1)
     edges = make_edges("hub")
     G = Graph(edges_df(spark, edges), directed=False)
-    dense = _as_map(
-        label_propagation(G, frontier_threshold=0, max_iter=20).collect()
-    )
+    dense, _ = _run(label_propagation, G, plan_cutover, 0, max_iter=20)
     m: list = []
-    forced = _as_map(
-        label_propagation(
-            G,
-            frontier_threshold=10**9,
-            max_iter=20,
-            superstep_metrics=m,
-        ).collect()
-    )
+    with plan_cutover(lpa_mod, "_frontier_threshold", ALWAYS_FRONTIER):
+        forced = _as_map(
+            label_propagation(G, max_iter=20, superstep_metrics=m).collect()
+        )
     assert forced == dense
     assert any(
         e["mode"] == "frontier" and e["changed"] > 0 for e in m
@@ -622,7 +627,7 @@ def test_tc_start_list_hub_and_broadcast_gate(spark, monkeypatch):
 
 
 def test_csr_block_reuse_across_runs_and_operators(
-    spark, tmp_path, distributed_pagerank
+    spark, tmp_path, distributed_tail
 ):
     """A block_dir that already holds a pack of THIS graph is REUSED
     (pack once per stored graph): wcc, pagerank and bfs on one

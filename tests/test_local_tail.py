@@ -3,15 +3,15 @@ checkpoint-resume.
 
 The driver-local tails (``plans/local_tail.py``) must be BIT-IDENTICAL
 to the distributed loops — same hash stream, same tie-breaks, same
-expression trees. Each operator is run twice on the same graph:
-``local_tail_edges=0`` (forced distributed) vs a huge threshold (forced
-local), and the sorted row sets compared exactly.
+expression trees. Each operator is run twice on the same graph, under the ``tail_plan``
+fixture: the module cutover ``LOCAL_TAIL_EDGES`` at 0 (forced
+distributed) vs a huge value (forced local), with a spy on the local
+kernels proving which plan ran; the sorted row sets are compared
+exactly.
 
 PageRank is the exception: its rank sums depend on summation order, so
 its local plan must match the distributed plan to 1e-12 with the same
-superstep count and output schema. PageRank takes no
-``local_tail_edges``; the distributed side sets the module cutover
-``LOCAL_TAIL_EDGES`` to 0.
+superstep count and output schema.
 """
 
 from __future__ import annotations
@@ -25,14 +25,10 @@ from cugraph_spark.operators.community import ecg, leiden, louvain
 from cugraph_spark.operators.cores import core_number
 from cugraph_spark.operators.mis import maximal_independent_set, vertex_coloring
 from cugraph_spark.operators.pagerank import FailedToConvergeError, pagerank
-from cugraph_spark.plans import local_tail
 from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.plans.xxh64 import pmod2, xxhash64
 
 from .conftest import edges_df, make_edges
-
-BIG = 10**9
-
 
 def _graph(spark, kind="weighted"):
     e = spark.createDataFrame(make_edges(kind), "src long, dst long, weight double")
@@ -67,66 +63,75 @@ def test_xxhash64_matches_spark(spark):
     assert np.array_equal(got3, pmod2(xxhash64(vals, ("int", 5), ("int", 7))))
 
 
+def _local_and_distributed(tail_plan, run):
+    """``run()`` on the driver-local tail, then on the distributed plan;
+    asserts that each ran the plan asked for and returns both results."""
+    out = []
+    for plan in ("local", "distributed"):
+        with tail_plan(plan) as calls:
+            out.append(run())
+        assert bool(calls) == (plan == "local"), (plan, calls)
+    return out
+
+
 @pytest.mark.parametrize("kind", ["weighted", "disjoint", "self_loops"])
-def test_coloring_local_equals_distributed(spark, kind):
+def test_coloring_local_equals_distributed(spark, kind, tail_plan):
     G = _graph(spark, kind)
-    assert _rows(vertex_coloring(G, local_tail_edges=BIG)) == _rows(
-        vertex_coloring(G, local_tail_edges=0)
-    )
+    local, dist = _local_and_distributed(tail_plan, lambda: _rows(vertex_coloring(G)))
+    assert local == dist
 
 
 @pytest.mark.parametrize("kind", ["weighted", "disjoint"])
-def test_mis_local_equals_distributed(spark, kind):
+def test_mis_local_equals_distributed(spark, kind, tail_plan):
     G = _graph(spark, kind)
-    assert _rows(maximal_independent_set(G, local_tail_edges=BIG)) == _rows(
-        maximal_independent_set(G, local_tail_edges=0)
-    )
+    local, dist = _local_and_distributed(
+        tail_plan, lambda: _rows(maximal_independent_set(G)))
+    assert local == dist
 
 
-def test_mis_local_equals_distributed_wide_seed(spark):
+def test_mis_local_equals_distributed_wide_seed(spark, tail_plan):
     """Seeds >= 2**31 type as LongType through F.lit, so the local
     twin must hash them on the 8-byte path too — forcing the int path
     silently int32-wraps and diverges from the JVM stream."""
     G = _graph(spark, "weighted")
     wide = 2**31 + 12345
-    assert _rows(maximal_independent_set(G, seed=wide, local_tail_edges=BIG)) == _rows(
-        maximal_independent_set(G, seed=wide, local_tail_edges=0)
-    )
+    local, dist = _local_and_distributed(
+        tail_plan, lambda: _rows(maximal_independent_set(G, seed=wide)))
+    assert local == dist
 
 
 @pytest.mark.parametrize("kind", ["weighted", "self_loops"])
-def test_core_number_local_equals_distributed(spark, kind):
+def test_core_number_local_equals_distributed(spark, kind, tail_plan):
     G = _graph(spark, kind)
-    assert _rows(core_number(G, local_tail_edges=BIG)) == _rows(
-        core_number(G, local_tail_edges=0)
-    )
+    local, dist = _local_and_distributed(tail_plan, lambda: _rows(core_number(G)))
+    assert local == dist
 
 
-def test_louvain_local_equals_distributed(spark):
+def _labels_and_q(res):
+    labels, q = res
+    return _rows(labels), q
+
+
+def test_louvain_local_equals_distributed(spark, tail_plan):
     G = _graph(spark)
-    la, qa = louvain(G, local_tail_edges=BIG)
-    lb, qb = louvain(G, local_tail_edges=0)
-    assert _rows(la) == _rows(lb)
-    assert qa == qb
+    local, dist = _local_and_distributed(tail_plan, lambda: _labels_and_q(louvain(G)))
+    assert local == dist
 
 
-def test_leiden_local_equals_distributed(spark):
+def test_leiden_local_equals_distributed(spark, tail_plan):
     G = _graph(spark, "disjoint")
-    la, qa = leiden(G, local_tail_edges=BIG)
-    lb, qb = leiden(G, local_tail_edges=0)
-    assert _rows(la) == _rows(lb)
-    assert qa == qb
+    local, dist = _local_and_distributed(tail_plan, lambda: _labels_and_q(leiden(G)))
+    assert local == dist
 
 
-def test_ecg_local_equals_distributed(spark):
+def test_ecg_local_equals_distributed(spark, tail_plan):
     G = _graph(spark)
-    la, qa = ecg(G, ensemble_size=3, local_tail_edges=BIG)
-    lb, qb = ecg(G, ensemble_size=3, local_tail_edges=0)
-    assert _rows(la) == _rows(lb)
-    assert qa == qb
+    local, dist = _local_and_distributed(
+        tail_plan, lambda: _labels_and_q(ecg(G, ensemble_size=3)))
+    assert local == dist
 
 
-def test_move_phase_partial_init_labels_local_equals_distributed(spark):
+def test_move_phase_partial_init_labels_local_equals_distributed(spark, tail_plan):
     """init_labels missing some vertices: the distributed move phase
     drops those vertices via its INNER init join (k still grouped over
     the FULL edge frame first); the local twin's filtering branch
@@ -147,11 +152,10 @@ def test_move_phase_partial_init_labels_local_equals_distributed(spark):
     )
     kw = dict(two_m=two_m, max_iter=5, resolution=1.0, min_gain=1e-9,
               init_labels=init, n_edges=n_edges)
-    local = _move_phase(e, local_tail_edges=BIG, **kw)
-    dist = _move_phase(e, local_tail_edges=0, **kw)
-    assert _rows(local) == _rows(dist)
+    local, dist = _local_and_distributed(tail_plan, lambda: _rows(_move_phase(e, **kw)))
+    assert local == dist
     # the branch under test actually filtered something
-    assert local.count() < G.vertices().count()
+    assert len(local) < G.vertices().count()
 
 
 def test_louvain_checkpoint_resume_exact(spark, tmp_path):
@@ -211,24 +215,19 @@ def test_leiden_torn_checkpoint_resumes_from_last_complete_level(spark, tmp_path
 # to the oracle's superstep count and within 5e-13 of its ranks; the
 # cases below are those the oracle tests do not cover.
 
-def _pagerank_plans(monkeypatch, G, **kw):
-    """Run ``pagerank(G, **kw)`` on the driver-local plan (the default
-    cutover) and on the distributed plan (cutover 0). Per plan:
-    ``(ranks, supersteps, schema, converged)``; ``converged`` is None
-    when ``kw`` asks for the bare frame."""
+def _pagerank_plans(tail_plan, G, **kw):
+    """Run ``pagerank(G, **kw)`` on the driver-local plan and on the
+    distributed plan. Per plan: ``(ranks, supersteps, schema,
+    converged)``; ``converged`` is None when ``kw`` asks for the bare
+    frame."""
     out = {}
-    for plan, cutover in (("local", local_tail.LOCAL_TAIL_EDGES), ("distributed", 0)):
-        kernel_calls = []
-        real = local_tail.pagerank_superstep
+    for plan in ("local", "distributed"):
         ss: list = []
-        with monkeypatch.context() as m:
-            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
-            m.setattr(local_tail, "pagerank_superstep",
-                      lambda *a: kernel_calls.append(1) or real(*a))
+        with tail_plan(plan) as calls:
             res = pagerank(G, superstep_seconds=ss, **kw)
         df, conv = res if isinstance(res, tuple) else (res, None)
         # the plan that was asked for is the plan that ran
-        assert len(kernel_calls) == (len(ss) if plan == "local" else 0), plan
+        assert len(calls) == (len(ss) if plan == "local" else 0), plan
         out[plan] = ({r.vertex: r.pagerank for r in df.collect()}, len(ss), df.schema, conv)
     return out
 
@@ -236,9 +235,8 @@ def _pagerank_plans(monkeypatch, G, **kw):
 def _assert_plans_equal(out):
     (lr, ls, lschema, lconv), (dr, ds, dschema, dconv) = out["local"], out["distributed"]
     assert ls == ds and ls > 0
-    # names and types: nullability already differs between the
-    # distributed plan's own chained and scalar loops
-    assert [(f.name, f.dataType) for f in lschema] == [(f.name, f.dataType) for f in dschema]
+    assert lschema == dschema
+    assert not lschema["pagerank"].nullable
     assert lconv == dconv
     assert lr.keys() == dr.keys()
     for v in lr:
@@ -249,7 +247,7 @@ def _directed(spark, kind):
     return Graph(edges_df(spark, make_edges(kind)), directed=True)
 
 
-def test_pagerank_local_equals_distributed_partial_vectors(spark, monkeypatch):
+def test_pagerank_local_equals_distributed_partial_vectors(spark, tail_plan):
     """personalization / nstart rows for vertices outside the graph
     count in the normalizing sum; graph vertices without a row get 0."""
     G = _directed(spark, "directed_asym")  # vertices 0..33
@@ -257,10 +255,10 @@ def test_pagerank_local_equals_distributed_partial_vectors(spark, monkeypatch):
     nstart = spark.createDataFrame(
         [(v, float(v + 1)) for v in range(21)] + [(500, 7.0)], "vertex long, values double")
     _assert_plans_equal(_pagerank_plans(
-        monkeypatch, G, tol=1e-4, max_iter=500, personalization=pers, nstart=nstart))
+        tail_plan, G, tol=1e-4, max_iter=500, personalization=pers, nstart=nstart))
 
 
-def test_pagerank_local_equals_distributed_precomputed_ows(spark, monkeypatch):
+def test_pagerank_local_equals_distributed_precomputed_ows(spark, tail_plan):
     """precomputed out-weights are left-joined: a vertex without a row
     has out-weight 0, rows for vertices outside the graph are ignored.
     (The rows left out are the dangling vertices', so the rank mass
@@ -269,46 +267,53 @@ def test_pagerank_local_equals_distributed_precomputed_ows(spark, monkeypatch):
     partial = G.out_weight_sums().filter(F.col("ows") > 0).unionByName(
         spark.createDataFrame([(777, 3.0)], "vertex long, ows double"))
     _assert_plans_equal(_pagerank_plans(
-        monkeypatch, G, tol=1e-4, max_iter=500, precomputed_vertex_out_weight=partial))
+        tail_plan, G, tol=1e-4, max_iter=500, precomputed_vertex_out_weight=partial))
 
 
-def test_pagerank_local_equals_distributed_fixed_and_nonconvergent(spark, monkeypatch):
+def test_pagerank_local_equals_distributed_fixed_and_nonconvergent(spark, tail_plan):
+    """``tol=0`` runs the distributed plan's chained loop and ``tol>0``
+    its scalar loop; the output schema (``pagerank`` a non-nullable
+    double) is the same on both, on the local plan and on the csr
+    plan's two loops."""
     G = _directed(spark, "tiny_social")
-    fixed = _pagerank_plans(monkeypatch, G, tol=0.0, max_iter=7, fail_on_nonconvergence=False)
+    fixed = _pagerank_plans(tail_plan, G, tol=0.0, max_iter=7, fail_on_nonconvergence=False)
     _assert_plans_equal(fixed)
     assert fixed["local"][1] == 7 and fixed["local"][3] is False
-    stuck = _pagerank_plans(monkeypatch, G, tol=1e-12, max_iter=3, fail_on_nonconvergence=False)
+    stuck = _pagerank_plans(tail_plan, G, tol=1e-12, max_iter=3, fail_on_nonconvergence=False)
     _assert_plans_equal(stuck)
     assert stuck["local"][1] == 3 and stuck["local"][3] is False
-    for cutover in (local_tail.LOCAL_TAIL_EDGES, 0):
+    for tol, iters in ((0.0, 7), (1e-12, 3)):
         ss: list = []
-        with monkeypatch.context() as m:
-            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
+        df, conv = pagerank(G, tol=tol, max_iter=iters, mode="csr", superstep_seconds=ss,
+                            fail_on_nonconvergence=False)
+        assert df.schema == fixed["local"][2] and len(ss) == iters and conv is False
+    for plan in ("local", "distributed"):
+        ss: list = []
+        with tail_plan(plan):
             with pytest.raises(FailedToConvergeError):
                 pagerank(G, tol=1e-12, max_iter=3, superstep_seconds=ss)
         assert len(ss) == 3
 
 
 @pytest.mark.parametrize("id_type,spark_type", [("int", "int"), ("long", "bigint")])
-def test_pagerank_local_equals_distributed_id_types(spark, monkeypatch, id_type, spark_type):
+def test_pagerank_local_equals_distributed_id_types(spark, tail_plan, id_type, spark_type):
     e = spark.createDataFrame(
         [(int(a), int(b), float(w)) for a, b, w in make_edges("directed_asym")],
         f"src {id_type}, dst {id_type}, weight double")
     # a pre-partitioned multigraph keeps int32 ids uncast
     G = Graph(e, directed=True, multi_edge=True, pre_partitioned=True)
-    out = _pagerank_plans(monkeypatch, G, tol=1e-4, max_iter=500)
+    out = _pagerank_plans(tail_plan, G, tol=1e-4, max_iter=500)
     _assert_plans_equal(out)
     assert out["local"][2]["vertex"].dataType.simpleString() == spark_type
 
 
-def test_pagerank_local_errors_match_distributed(spark, monkeypatch):
+def test_pagerank_local_errors_match_distributed(spark, tail_plan):
     empty = Graph(spark.createDataFrame([], "src long, dst long, weight double"), directed=True)
     G = _directed(spark, "directed_asym")
     zero = spark.createDataFrame([(1, 0.0)], "vertex long, values double")
     twice = spark.createDataFrame([(1, 1.0), (2, 1.0), (1, 2.0)], "vertex long, values double")
-    for cutover in (local_tail.LOCAL_TAIL_EDGES, 0):
-        with monkeypatch.context() as m:
-            m.setattr(local_tail, "LOCAL_TAIL_EDGES", cutover)
+    for plan in ("local", "distributed"):
+        with tail_plan(plan):
             with pytest.raises(ValueError, match="empty graph"):
                 pagerank(empty)
             with pytest.raises(ValueError, match="personalization"):

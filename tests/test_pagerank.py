@@ -27,7 +27,7 @@ PLANS = ["dataframe", "distributed"]
 
 def _mode(request, plan):
     if plan == "distributed":
-        request.getfixturevalue("distributed_pagerank")
+        request.getfixturevalue("distributed_tail")
     return "csr" if plan == "csr" else "dataframe"
 
 
@@ -149,7 +149,7 @@ def test_pagerank_fixed_iterations_matches_oracle(spark):
     _check(got, expect, atol=1e-12)
 
 
-def test_pagerank_chained_bit_identical(spark, distributed_pagerank):
+def test_pagerank_chained_bit_identical(spark, distributed_tail):
     """The zero-action chained loop (auto at tol=0) must equal the
     one-action-per-superstep scalar loop BIT-exactly: both compute the
     dangling mass with the same partial-aggregation tree, chained just
@@ -184,7 +184,7 @@ def test_pagerank_chained_bit_identical(spark, distributed_pagerank):
     assert got == ref
 
 
-def test_pagerank_chained_rejects_convergence_mode(spark, distributed_pagerank):
+def test_pagerank_chained_rejects_convergence_mode(spark, distributed_tail):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
     with pytest.raises(ValueError, match="chained"):
@@ -197,7 +197,7 @@ def test_pagerank_sums_to_one(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_pagerank):
+def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_tail):
     """mode='csr' now composes with the zero-action chained loop
     (tol=0.0 auto-chains): one pack job, every superstep lazy inside
     the terminal action; ranks must equal the unchained csr loop and

@@ -58,7 +58,7 @@ def test_salted_common_neighbor_join_equals_plain(spark):
 
 
 @pytest.mark.parametrize("salt", [4])
-def test_pagerank_salted_equals_plain(spark, salt, distributed_pagerank):
+def test_pagerank_salted_equals_plain(spark, salt, distributed_tail):
     edges = make_edges("hub")
     G = Graph(edges_df(spark, edges), directed=True)
     base = {r["vertex"]: r["pagerank"]
