@@ -60,11 +60,8 @@ from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
 from ..plans.checkpoint import CheckpointManager
-from ..plans.strategy import (
-    DST_PARTITION_MIN_V,
-    NARROW_STATE_BROADCAST_LIMIT,
-    vertex_join_side,
-)
+from ..plans import strategy
+from ..plans.strategy import vertex_join_side
 
 # Frontier-superstep safety guard (measured in one action before the
 # plan is committed — module docstring): |affected| must stay
@@ -119,7 +116,8 @@ def label_propagation(
 
     The plan is chosen from V and the measured changed-count, with no
     tuning parameter: broadcast-state mode while V ≤
-    ``NARROW_STATE_BROADCAST_LIMIT`` (shuffle-hash above), and
+    ``strategy.NARROW_STATE_BROADCAST_LIMIT``, read at call time
+    (shuffle-hash above), and
     affected-set recomputation (module docstring) once the
     changed-count drops to or below ``_frontier_threshold(V)`` (V/64)
     — identical labels per iteration; join output, aggregations, and
@@ -176,7 +174,7 @@ def label_propagation(
     # exchanges, so it shares the measured narrow-state cutover (RMAT-23
     # A/B on the strategy constant: 91.1s shuffle-hash vs 62.4s here).
     V = G.number_of_vertices()
-    blimit = NARROW_STATE_BROADCAST_LIMIT
+    blimit = strategy.NARROW_STATE_BROADCAST_LIMIT
     bcast = V <= blimit
 
     # Edge layout per join mode — same analysis as WCC's (operators/
@@ -190,7 +188,7 @@ def label_propagation(
     if not bcast:
         if not G.partitioned_on(SRC):  # select preserves a bucketed layout
             e = e.repartition(P, SRC)
-    elif V >= DST_PARTITION_MIN_V and not G.partitioned_on(DST):
+    elif V >= strategy.DST_PARTITION_MIN_V and not G.partitioned_on(DST):
         e = e.repartition(P, DST)
     edges = e.persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -90,17 +90,8 @@ from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
 from ..plans.checkpoint import CheckpointManager
+from ..plans import strategy
 from ..plans.strategy import vertex_join_side
-
-# WCC's broadcast-state cutover: its state is one narrow label column,
-# so it shares the measured NARROW_STATE_BROADCAST_LIMIT (rationale and
-# RMAT-23 A/B on the strategy constant). Read at call time, like
-# _DST_PARTITION_MIN_V below: setting it to 0 forces the shuffle-hash
-# plan.
-from ..plans.strategy import NARROW_STATE_BROADCAST_LIMIT as WCC_BROADCAST_VERTEX_LIMIT
-
-# re-exported for the tests; rationale lives on the strategy constant
-from ..plans.strategy import DST_PARTITION_MIN_V as _DST_PARTITION_MIN_V  # noqa: E402
 
 
 def _frontier_threshold(V: int, csr: bool) -> int:
@@ -212,7 +203,8 @@ def weakly_connected_components(
     The plan is chosen from V and the measured changed-count, with no
     tuning parameter (the reference's WCC has none either):
 
-    - broadcast-state mode while V ≤ ``WCC_BROADCAST_VERTEX_LIMIT``.
+    - broadcast-state mode while V ≤
+      ``strategy.NARROW_STATE_BROADCAST_LIMIT`` (read at call time).
       WCC's label state is 8 bytes/vertex compacted — half of
       PageRank's (long, double) rank state — so its broadcast stays
       cheap to twice the generic cutover; and broadcast mode unlocks
@@ -293,7 +285,9 @@ def weakly_connected_components(
             F.col(SRC).cast("int").alias(SRC),
             F.col(DST).cast("int").alias(DST),
         )
-    blimit = WCC_BROADCAST_VERTEX_LIMIT
+    # state is one narrow label column: the narrow-state cutover
+    # (rationale and RMAT-23 A/B on the strategy constant)
+    blimit = strategy.NARROW_STATE_BROADCAST_LIMIT
     bcast = V <= blimit
 
     # Edge-side layout per join mode (the repartition, when any, and the
@@ -343,7 +337,7 @@ def weakly_connected_components(
     else:
         if not bcast and (not G.partitioned_on(SRC) or recast):
             e = e.repartition(P, SRC)
-        elif bcast and V >= _DST_PARTITION_MIN_V and (
+        elif bcast and V >= strategy.DST_PARTITION_MIN_V and (
             not G.partitioned_on(DST) or recast
         ):
             e = e.repartition(P, DST)

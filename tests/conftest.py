@@ -32,8 +32,8 @@ def spark():
 @pytest.fixture
 def plan_cutover(monkeypatch):
     """``with plan_cutover(module, name, value):`` runs a block with one
-    plan cutover of an operator module patched: a constant such as
-    ``WCC_BROADCAST_VERTEX_LIMIT`` is set to ``value``; a threshold
+    plan cutover patched: a constant such as
+    ``strategy.NARROW_STATE_BROADCAST_LIMIT`` is set to ``value``; a threshold
     function such as ``_frontier_threshold`` is replaced by one that
     returns ``value``; ``None`` leaves the automatic rule in place.
     Operators read their cutovers at call time and take no parameter

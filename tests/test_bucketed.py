@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from cugraph_spark.graph import Graph
 from cugraph_spark.operators.pagerank import pagerank
 from cugraph_spark.operators.wcc import weakly_connected_components
+from cugraph_spark.plans import strategy
 from cugraph_spark.sources.bucketed import read_bucketed_edges, write_bucketed_edges
 from .conftest import edges_df, make_edges
 
@@ -98,8 +99,6 @@ def test_dst_bucketed_int32_wcc_lpa_match_and_skip_shuffle(spark, tmp_path):
     zero-exchange superstep trusts the stored layout — labels identical
     to the plain path, and the plan-side guarantee is that neither a
     src nor dst repartition is requested (partitioned_on(DST) holds)."""
-    import sys
-
     from cugraph_spark.graph import symmetrize
     from cugraph_spark.operators.label_propagation import label_propagation
 
@@ -128,12 +127,8 @@ def test_dst_bucketed_int32_wcc_lpa_match_and_skip_shuffle(spark, tmp_path):
     Gn = Graph(raw, directed=False)
 
     # force the dst-partition branch even at toy V so the skip matters
-    wcc_mod = sys.modules["cugraph_spark.operators.wcc"]
-    lpa_mod = sys.modules["cugraph_spark.operators.label_propagation"]
-    old_w = wcc_mod._DST_PARTITION_MIN_V
-    old_l = lpa_mod.DST_PARTITION_MIN_V
-    wcc_mod._DST_PARTITION_MIN_V = 1
-    lpa_mod.DST_PARTITION_MIN_V = 1
+    old = strategy.DST_PARTITION_MIN_V
+    strategy.DST_PARTITION_MIN_V = 1
     try:
         a = sorted(map(tuple, weakly_connected_components(Gb).collect()))
         b = sorted(map(tuple, weakly_connected_components(Gn).collect()))
@@ -142,5 +137,4 @@ def test_dst_bucketed_int32_wcc_lpa_match_and_skip_shuffle(spark, tmp_path):
         lb = sorted(map(tuple, label_propagation(Gn, max_iter=5).collect()))
         assert la == lb
     finally:
-        wcc_mod._DST_PARTITION_MIN_V = old_w
-        lpa_mod.DST_PARTITION_MIN_V = old_l
+        strategy.DST_PARTITION_MIN_V = old

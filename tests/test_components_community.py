@@ -15,6 +15,7 @@ from cugraph_spark import (
     edge_triangle_count,
     weakly_connected_components,
 )
+from cugraph_spark.plans import strategy
 from .conftest import edges_df, make_edges, sym_tuples
 from .oracles import lpa_ref, triangle_ref, wcc_ref
 
@@ -196,17 +197,15 @@ def test_tc_packed_closing_leg_identical(spark, monkeypatch):
 
 def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
     """The broadcast-mode dst-partitioned layout (taken when
-    _DST_PARTITION_MIN_V ≤ V ≤ WCC_BROADCAST_VERTEX_LIMIT) must produce labels
-    identical to the default path — exercised here by dropping the
-    threshold so the sf-test-size graphs take the big-V branch, at two
-    partition counts (partitioning invariance)."""
-    from cugraph_spark.operators import wcc as wcc_mod
-
+    DST_PARTITION_MIN_V ≤ V ≤ NARROW_STATE_BROADCAST_LIMIT) must produce
+    labels identical to the default path — exercised here by dropping
+    the threshold so the sf-test-size graphs take the big-V branch, at
+    two partition counts (partitioning invariance)."""
     for kind in ("tiny_social", "disjoint", "hub", "self_loops"):
         edges = make_edges(kind)
         G = Graph(edges_df(spark, edges), directed=False)
         base = _as_map(weakly_connected_components(G).collect())
-        monkeypatch.setattr(wcc_mod, "_DST_PARTITION_MIN_V", 1)
+        monkeypatch.setattr(strategy, "DST_PARTITION_MIN_V", 1)
         got8 = _as_map(
             weakly_connected_components(G, num_partitions=8).collect()
         )
@@ -229,7 +228,7 @@ def test_wcc_shuffle_mode_forced_identical(spark, plan_cutover, monkeypatch):
         base = _as_map(weakly_connected_components(G).collect())
         assert sides and all(sides), kind
         sides.clear()
-        with plan_cutover(wcc_mod, "WCC_BROADCAST_VERTEX_LIMIT", 0):
+        with plan_cutover(strategy, "NARROW_STATE_BROADCAST_LIMIT", 0):
             forced = _as_map(weakly_connected_components(G).collect())
         assert sides and not any(sides), kind
         sides.clear()
@@ -246,7 +245,7 @@ def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch, plan_c
         edges = make_edges(kind)
         G = Graph(edges_df(spark, edges), directed=False)
         base = _as_map(label_propagation(G, max_iter=20).collect())
-        monkeypatch.setattr(lpa_mod, "DST_PARTITION_MIN_V", 1)
+        monkeypatch.setattr(strategy, "DST_PARTITION_MIN_V", 1)
         got8 = _as_map(
             label_propagation(G, max_iter=20, num_partitions=8).collect()
         )
@@ -255,13 +254,33 @@ def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch, plan_c
         )
         monkeypatch.undo()
         sides = _spy_join_sides(monkeypatch, lpa_mod)
-        with plan_cutover(lpa_mod, "NARROW_STATE_BROADCAST_LIMIT", 0):
+        with plan_cutover(strategy, "NARROW_STATE_BROADCAST_LIMIT", 0):
             forced = _as_map(label_propagation(G, max_iter=20).collect())
         monkeypatch.undo()
         assert sides and not any(sides), kind
         assert got8 == base, kind
         assert got3 == base, kind
         assert forced == base, kind
+
+
+def test_narrow_state_cutover_is_read_at_call_time(spark, monkeypatch, plan_cutover):
+    """WCC and LPA read their broadcast cutover from
+    ``strategy.NARROW_STATE_BROADCAST_LIMIT`` on every call, so
+    lowering that one constant at run time moves both onto the
+    shuffle-hash plan (the join spies show the plan each run took)."""
+    G = Graph(edges_df(spark, make_edges("tiny_social")), directed=False)
+    wcc_sides = _spy_join_sides(monkeypatch, wcc_mod)
+    lpa_sides = _spy_join_sides(monkeypatch, lpa_mod)
+    weakly_connected_components(G).collect()
+    label_propagation(G, max_iter=3).collect()
+    assert wcc_sides and all(wcc_sides) and lpa_sides and all(lpa_sides)
+    wcc_sides.clear()
+    lpa_sides.clear()
+    with plan_cutover(strategy, "NARROW_STATE_BROADCAST_LIMIT", 0):
+        weakly_connected_components(G).collect()
+        label_propagation(G, max_iter=3).collect()
+    assert wcc_sides and not any(wcc_sides)
+    assert lpa_sides and not any(lpa_sides)
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "weighted", "disjoint"])

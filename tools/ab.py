@@ -17,8 +17,8 @@ the plan cutovers the tests patch, set for the arm's runs only:
 
   frontier=N   the operator's ``_frontier_threshold`` returns N
                (wcc, lpa; 0 = every superstep dense)
-  broadcast=N  the broadcast-state cutover (wcc, lpa; 0 = shuffle-hash)
-  tail=N       ``local_tail.LOCAL_TAIL_EDGES`` (0 = never driver-local)
+  broadcast=N  ``strategy.NARROW_STATE_BROADCAST_LIMIT``, the
+               broadcast-state cutover (wcc, lpa; 0 = shuffle-hash)
 
 ``N`` may be ``always`` (10**18). ``block_dir=fresh`` packs into a new
 directory per run (pack in the wall); ``block_dir=shared`` reuses one
@@ -29,9 +29,6 @@ directory packed before the first timed run (stored blocks). Presets:
   stored     mode=csr,block_dir=shared
   dense      frontier=0
   frontier   frontier=always            frontier from superstep 1
-  shuffle_hash  broadcast=0
-  broadcast  broadcast=always
-  no_cycle   detect_cycle=False
 
 Each run is timed in wall and process-tree CPU seconds
 (``perfbench/probe.py``); its result is reduced to an order-insensitive
@@ -88,25 +85,23 @@ PRESETS = {
     "stored": {"mode": "csr", "block_dir": "shared"},
     "dense": {"frontier": 0},
     "frontier": {"frontier": ALWAYS},
-    "shuffle_hash": {"broadcast": 0},
-    "broadcast": {"broadcast": ALWAYS},
-    "no_cycle": {"detect_cycle": False},
 }
 
-# operator -> (module, function, default kwargs, broadcast cutover name,
-#              per-superstep out-list kwarg)
+# operator -> (module, function, default kwargs, per-superstep out-list kwarg)
 OPERATORS = {
     "wcc": ("wcc", "weakly_connected_components", {"max_iter": 2000},
-            "WCC_BROADCAST_VERTEX_LIMIT", "superstep_metrics"),
+            "superstep_metrics"),
     "lpa": ("label_propagation", "label_propagation", {"max_iter": 12},
-            "NARROW_STATE_BROADCAST_LIMIT", "superstep_metrics"),
-    "bfs": ("traversal", "bfs", {"source": 0}, None, None),
+            "superstep_metrics"),
+    "bfs": ("traversal", "bfs", {"source": 0}, None),
     "pagerank": ("pagerank", "pagerank",
                  {"tol": 0.0, "max_iter": 10, "chained": False,
-                  "fail_on_nonconvergence": False}, None, "superstep_seconds"),
+                  "fail_on_nonconvergence": False}, "superstep_seconds"),
 }
 TRACE_KEY = {"superstep_metrics": "metrics", "superstep_seconds": "steps"}
-PATCH_KEYS = ("frontier", "broadcast", "tail")
+PATCH_KEYS = ("frontier", "broadcast")
+# the operators that read each patch key
+PATCHABLE = {"frontier": ("wcc", "lpa"), "broadcast": ("wcc", "lpa")}
 
 
 def _value(text: str):
@@ -120,25 +115,29 @@ def _value(text: str):
     return {"True": True, "False": False, "true": True, "false": False}.get(text, text)
 
 
-def parse_arm(token: str) -> tuple[str, dict]:
+def parse_arm(token: str, operator: str) -> tuple[str, dict]:
     """``name`` (a preset) or ``name:key=value,...``."""
     name, _, spec = token.partition(":")
     if not spec:
         if name not in PRESETS:
             raise SystemExit(f"unknown arm {name!r}; presets: {', '.join(PRESETS)}")
-        return name, dict(PRESETS[name])
-    return name, {k: _value(v) for k, v in (kv.split("=", 1) for kv in spec.split(","))}
+        settings = dict(PRESETS[name])
+    else:
+        settings = {k: _value(v) for k, v in (kv.split("=", 1) for kv in spec.split(","))}
+    for key in PATCH_KEYS:
+        if key in settings and operator not in PATCHABLE[key]:
+            raise SystemExit(f"{key}= does not apply to {operator}")
+    return name, settings
 
 
 @contextlib.contextmanager
-def patched(module, broadcast_name: str | None, settings: dict):
+def patched(module, settings: dict):
     """Set the arm's plan cutovers for the block; restore them after."""
-    from cugraph_spark.plans import local_tail
+    from cugraph_spark.plans import strategy
 
     targets = {
         "frontier": (module, "_frontier_threshold"),
-        "broadcast": (module, broadcast_name),
-        "tail": (local_tail, "LOCAL_TAIL_EDGES"),
+        "broadcast": (strategy, "NARROW_STATE_BROADCAST_LIMIT"),
     }
     saved = []
     try:
@@ -146,8 +145,6 @@ def patched(module, broadcast_name: str | None, settings: dict):
             if key not in settings:
                 continue
             mod, name = targets[key]
-            if name is None or not hasattr(mod, name):
-                raise SystemExit(f"{key}= does not apply to {module.__name__}")
             old = getattr(mod, name)
             saved.append((mod, name, old))
             value = settings[key]
@@ -206,7 +203,7 @@ def _same(a: tuple, b: tuple) -> bool:
 def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
         source: str = "rmat", block_root: str | None = None) -> dict:
     """Run every arm ``reps`` times; return the ABJSON record."""
-    modname, fn, defaults, broadcast_name, trace_kw = OPERATORS[operator]
+    modname, fn, defaults, trace_kw = OPERATORS[operator]
     module = importlib.import_module(f"cugraph_spark.operators.{modname}")
     op = getattr(module, fn)
     G, V, n = load_graph(spark, operator, str(scale), source)
@@ -219,7 +216,7 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
     try:
         shared = os.path.join(root, "shared")
         for token in arms:
-            name, settings = parse_arm(token)
+            name, settings = parse_arm(token, operator)
             kw = {**defaults, **{k: v for k, v in settings.items() if k not in PATCH_KEYS}}
             if kw.get("block_dir") == "shared" and not os.path.exists(shared):
                 _pack(G, shared, weighted=operator == "pagerank")
@@ -238,7 +235,7 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
                     args[trace_kw] = trace
                 source_v = args.pop("source", None)
                 c0, t0 = cpu_seconds(), time.perf_counter()
-                with patched(module, broadcast_name, settings):
+                with patched(module, settings):
                     res = op(G, source_v, **args) if operator == "bfs" else op(G, **args)
                 if isinstance(res, tuple):
                     res = res[0]
@@ -298,7 +295,7 @@ def main(argv=None) -> None:
     p.add_argument("--input", choices=("rmat", "caterpillar"), default="rmat")
     a = p.parse_args(argv)
     for token in a.arms:
-        parse_arm(token)  # fail before the session starts
+        parse_arm(token, a.operator)  # fail before the session starts
     os.environ["SPARK_GRAFT_CPUS"] = str(a.cpus)
     from cugraph_spark.session import get_spark
 

@@ -7,14 +7,21 @@ discarded, median vs host noise), applied to the WCC superstep plan
 low-diameter — WCC converges in 2-3 supersteps, far too few samples
 for a median and short enough that fixed per-job costs dominate any
 end-to-end wall comparison (see BENCH/e2e_scaling.jsonl). So this
-harness runs WCC to convergence once with a checkpoint per superstep,
-then resumes from the converged checkpoint ``iters`` times: a resumed
-run has no previous delta, so it runs exactly one dense superstep —
-the full O(E) plan, with ``changed == 0`` — and stops. Each resume is
-one sample. Besides the superstep, a sample pays reading the saved
-labels and filling the operator's edge cache (dataframe mode; csr
-reuses its blocks): at RMAT-13 on 2 cpus the samples' median (0.44 s)
-matched that of in-loop steady supersteps (0.47 s).
+harness runs superstep 0 once with a checkpoint, then resumes from
+that checkpoint ``iters`` times with frontier supersteps switched off
+(``_frontier_threshold`` patched to 0, as the tests and tools/ab.py
+do), so every resumed call runs the dense O(E) plan until the labels
+are stable. The first superstep of each call carries the call's
+one-time work — reading the saved labels, the edge layout (int32
+recast, dst repartition once V ≥ DST_PARTITION_MIN_V) and filling the
+edge cache — and is dropped; every later superstep of the call is one
+in-loop steady sample, the same kind of sample the loop past the
+fixpoint gave before. At RMAT-16 on 2 cpus with the dst layout forced
+(DST_PARTITION_MIN_V = 1): 20 samples from 10 calls, median 0.37 s,
+against 0.37 s for 18 in-loop supersteps past the fixpoint; resuming
+from the converged checkpoint instead (one superstep per call, nothing
+dropped) read 0.97 s against 0.50 s (6 samples each), because every
+sample then paid the dst repartition and the cache fill.
 
 Input prep (symmetrize, hash-partition, vertex count) happens before
 the timed region, matching the e2e harness: on a real deployment these
@@ -23,7 +30,9 @@ tmpfs so the sandbox's single shared virtual disk doesn't skew the
 8-vs-32-core comparison (a real 4N cluster has 4N shuffle disks).
 
 Usage: python tools/bench_scaling_wcc.py [N] [rmat_scale] [edgefactor] [iters] [mode]
-       (defaults: N=8, scale=22, edgefactor=16, mode=dataframe →
+       (iters = resumed calls; the report's supersteps_A/B list the
+       kept samples. Defaults: N=8, scale=22, edgefactor=16, iters=10,
+       mode=dataframe →
        ~128M symmetrized edges; mode=csr runs the packed-block
        supersteps — the pack job is setup/layout prep, same role as
        the pre-stored partitioning, and superstep_seconds excludes it)
@@ -46,6 +55,7 @@ from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.session import get_spark
 from cugraph_spark.sources.rmat import rmat_edges
 from cugraph_spark.graph import Graph, symmetrize
+from cugraph_spark.operators import wcc as wcc_mod
 from cugraph_spark.operators.wcc import weakly_connected_components
 
 spark = get_spark(app_name="bench_scaling_wcc")
@@ -62,15 +72,20 @@ G.number_of_vertices()  # warm the memoized V (metadata on a real table)
 work = tempfile.mkdtemp(prefix="bench_wcc_")
 cp = CheckpointManager(work, "wcc")
 kw = dict(check_every=1, mode={mode!r}, block_dir=work + "/blocks")
-weakly_connected_components(G, checkpoint=cp, checkpoint_every=1, **kw).count()
+weakly_connected_components(G, max_iter=1, checkpoint=cp, checkpoint_every=1, **kw).count()
+wcc_mod._frontier_threshold = lambda V, csr: 0  # every superstep dense
 ts = []
 for _ in range({iters}):
+    t = []
     weakly_connected_components(
         G, checkpoint=cp, checkpoint_every=0, resume=True,
-        superstep_seconds=ts, **kw,
+        superstep_seconds=t, **kw,
     ).count()
+    if len(t) < 2:
+        raise SystemExit("labels stable one superstep after the checkpoint: no steady sample")
+    ts += t[1:]  # the first superstep carries the call's one-time work
 shutil.rmtree(work, ignore_errors=True)
-steady = sorted(ts[2:])
+steady = sorted(ts)
 median = steady[len(steady) // 2]
 print("BENCHJSON " + json.dumps({{
     "n_edges": n, "supersteps": ts,
