@@ -4,7 +4,10 @@ All three iterative centralities ride the same SpMV superstep skeleton
 as PageRank (SURVEY.md §2.4 ``per_v_transform_reduce_incoming_e``):
 ``edges ⋈ vector on src → groupBy(dst).sum`` with map-side partial
 aggregation; the O(E) edge side is partitioned once and persisted, the
-O(V) vector re-shuffles per superstep; one scalar action per superstep.
+O(V) vector re-shuffles per superstep. Each operator writes its
+superstep once: a convergence-checked run ends it in one scalar action,
+and a fixed-iteration run (``tol=0.0``) keeps its global scalar in the
+plan and runs no action until the output.
 
 Reference semantics:
 - HITS (``link_analysis/hits_impl.cuh``, 223 LoC): hubs/authorities
@@ -57,7 +60,9 @@ def hits(
     per-superstep agg returns (Σ new_hub_unnorm, delayed diff).
     Stopping state matches the reference exactly: we return the first
     state whose diff < tol (carried in the plan), not the extra
-    superstep computed while detecting it."""
+    superstep computed while detecting it. With ``tol=0.0`` the same
+    superstep carries the scale as a broadcast 1-row aggregate instead,
+    so the loop runs no action; the outputs are bit-identical."""
     P = resolve_partitions(num_partitions, G.edges)
     edges = _prep_edges(G, P)
     verts = G.vertices().repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
@@ -78,83 +83,51 @@ def hits(
             (F.coalesce("a", F.lit(0.0)) / F.lit(asum)).alias("authorities"),
         )
 
-    if tol == 0.0:
-        # fixed-iteration mode: ZERO actions in the loop. The L1 scale
-        # becomes a broadcast 1-row aggregate divided in lazily (same
-        # `sum → divide` tree as the scalar path → bit-identical), and
-        # the delayed-diff machinery disappears (tol=0 never stops
-        # early). The scalar path's `S or 1.0` guard maps to a CASE on
-        # the aggregate (NULL/0.0 → 1.0).
-        state = verts.withColumn("h_un", F.lit(1.0)).transform(truncate_plan)
-        for _ in range(max_iter):
-            s_agg = state.agg(F.sum("h_un").alias("s_raw")).select(
-                F.when(
-                    F.col("s_raw").isNull() | (F.col("s_raw") == 0.0), F.lit(1.0)
-                ).otherwise(F.col("s_raw")).alias("S")
-            )
-            sside = vertex_join_side(state, V)
-            a_un = (
-                edges.join(sside, edges[SRC] == sside["vertex"])
-                .groupBy(DST)
-                .agg(F.sum("h_un").alias("a_raw"))
-                .crossJoin(F.broadcast(s_agg))
-                .select(F.col(DST), (F.col("a_raw") / F.col("S")).alias("a_un"))
-            )
-            h_un_new = (
-                edges.join(a_un, edges[DST] == a_un[DST])
-                .groupBy(SRC)
-                .agg(F.sum("a_un").alias("h_new"))
-            )
-            state = state.join(
-                h_un_new, state["vertex"] == h_un_new[SRC], "left"
-            ).select(
-                state["vertex"], F.coalesce("h_new", F.lit(0.0)).alias("h_un")
-            ).transform(truncate_plan)
-
-        S_final = state.agg(F.sum("h_un")).first()[0]
-        S_final = float(S_final) if S_final else 1.0
-        auth = _authorities(state, S_final)
-        out = state.join(auth, "vertex").select(
-            "vertex", (F.col("h_un") / F.lit(S_final)).alias("hubs"), "authorities"
-        )
-        # materialize before unpersist: auth's plan re-derives a_raw
-        # from `edges`, so a lazy return would rescan the edge list
-        # uncached at the caller's first action
-        out = truncate_plan(out, eager=True)
-        edges.unpersist()
-        verts.unpersist()
-        return out
-
-    # state: (vertex, h_un, p_un) — current and previous UNNORMALIZED hub
-    # vectors; S/S_prev are their L1 sums (so hubs = h_un/S exactly).
-    state = (
-        verts.withColumn("h_un", F.lit(1.0))
-        .withColumn("p_un", F.lit(1.0))
-        .transform(truncate_plan)
-    )
+    # state: (vertex, h_un[, p_un]) — the current UNNORMALIZED hub
+    # vector and, when checked, the previous one; S/S_prev are their L1
+    # sums (so hubs = h_un/S exactly)
+    checked = tol != 0.0
+    state = verts.withColumn("h_un", F.lit(1.0))
+    if checked:
+        state = state.withColumn("p_un", F.lit(1.0))
+    state = state.transform(truncate_plan)
     S, S_prev = float(V), float(V)
 
     final_h, final_scale = state, S
     for it in range(max_iter):
         sside = vertex_join_side(state, V)
-        a_un = (
+        a_sum = (
             edges.join(sside, edges[SRC] == sside["vertex"])
             .groupBy(DST)
-            .agg((F.sum("h_un") / F.lit(S)).alias("a_un"))
+            .agg(F.sum("h_un").alias("a_raw"))
         )
+        if checked:
+            scale = F.lit(S)
+        else:
+            # tol=0 never stops early, so the scale stays in the plan as
+            # a broadcast 1-row aggregate (the same sum → divide tree)
+            # and the loop runs no action; the driver's `S or 1.0` guard
+            # is a CASE on the aggregate (NULL/0.0 → 1.0)
+            a_sum = a_sum.crossJoin(F.broadcast(
+                state.agg(F.sum("h_un").alias("s_raw")).select(
+                    F.when(F.col("s_raw").isNull() | (F.col("s_raw") == 0.0), F.lit(1.0))
+                    .otherwise(F.col("s_raw")).alias("S"))))
+            scale = F.col("S")
+        a_un = a_sum.select(F.col(DST), (F.col("a_raw") / scale).alias("a_un"))
         h_un_new = (
             edges.join(a_un, edges[DST] == a_un[DST])
             .groupBy(SRC)
             .agg(F.sum("a_un").alias("h_new"))
         )
+        cols = [state["vertex"], F.coalesce("h_new", F.lit(0.0)).alias("h_un")]
+        if checked:
+            cols += [state["h_un"].alias("p_un"), state["p_un"].alias("pp_un")]
         new_full = state.join(
             h_un_new, state["vertex"] == h_un_new[SRC], "left"
-        ).select(
-            state["vertex"],
-            F.coalesce("h_new", F.lit(0.0)).alias("h_un"),
-            state["h_un"].alias("p_un"),
-            state["p_un"].alias("pp_un"),
-        ).transform(truncate_plan)
+        ).select(*cols).transform(truncate_plan)
+        if not checked:
+            state = final_h = new_full
+            continue
 
         # single action: next scale + L1 diff of the two PREVIOUS states
         row = new_full.agg(
@@ -176,6 +149,9 @@ def hits(
         final_h = state
         final_scale = S
 
+    if not checked:
+        s_final = final_h.agg(F.sum("h_un")).first()[0]
+        final_scale = float(s_final) if s_final else 1.0
     auth = _authorities(final_h, final_scale)
     out = (
         final_h.join(auth, "vertex")
@@ -184,7 +160,9 @@ def hits(
             "authorities",
         )
     )
-    # same as the fixed-iteration path: auth re-derives from `edges`
+    # materialize before unpersist: auth's plan re-derives a_raw
+    # from `edges`, so a lazy return would rescan the edge list
+    # uncached at the caller's first action
     out = truncate_plan(out, eager=True)
     edges.unpersist()
     verts.unpersist()
@@ -250,75 +228,54 @@ def eigenvector_centrality(
     num_partitions: int | str | None = None,
 ) -> DataFrame:
     """Returns [vertex, eigenvector_centrality]: power iteration on Aᵀ
-    with per-step L2 normalization (eigenvector_centrality_impl.cuh)."""
+    with per-step L2 normalization (eigenvector_centrality_impl.cuh).
+    Loops like hits(): one action per superstep, none with
+    ``tol=0.0``."""
     P = resolve_partitions(num_partitions, G.edges)
     edges = _prep_edges(G, P)
     verts = G.vertices().repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
     V = verts.count()
-    if tol == 0.0:
-        # fixed-iteration mode: zero actions in the loop (see hits()).
-        # The scalar path's N==0 early-return (vanished vector → zeros)
-        # maps to NULLIF-division: once the vector is all zero every
-        # later superstep stays zero, same output. x / NULLIF(N, 0) is
-        # bit-identical to x / N whenever N > 0.
-        state = verts.withColumn(
-            "c_un", F.lit(1.0 / math.sqrt(V))
-        ).transform(truncate_plan)
-        for _ in range(max_iter):
-            n_agg = F.broadcast(
-                state.agg(
-                    F.nullif(
-                        F.sqrt(F.sum(F.col("c_un") * F.col("c_un"))), F.lit(0.0)
-                    ).alias("N")
-                )
-            )
-            sside = vertex_join_side(state, V)
-            agg = (
-                edges.join(sside, edges[SRC] == sside["vertex"])
-                .groupBy(DST)
-                .agg(F.sum(F.col("c_un") * F.col(WGT)).alias("s_raw"))
-                .crossJoin(n_agg)
-                .select(F.col(DST), (F.col("s_raw") / F.col("N")).alias("s"))
-            )
-            state = state.join(agg, state["vertex"] == agg[DST], "left").select(
-                state["vertex"], F.coalesce("s", F.lit(0.0)).alias("c_un")
-            ).transform(truncate_plan)
-
-        N_final = state.agg(
-            F.sqrt(F.sum(F.col("c_un") * F.col("c_un")))
-        ).first()[0]
-        N_final = float(N_final) if N_final else 1.0
-        out = state.select(
-            "vertex", (F.col("c_un") / F.lit(N_final)).alias("eigenvector_centrality")
-        )
-        edges.unpersist()
-        verts.unpersist()
-        return out
-
-    # same one-action-per-superstep shape as hits(): state carries the
-    # UNNORMALIZED vector (+ previous); the L2 scale is a driver float
-    # divided in lazily, and the diff is checked one superstep delayed.
-    state = (
-        verts.withColumn("c_un", F.lit(1.0 / math.sqrt(V)))
-        .withColumn("p_un", F.lit(1.0 / math.sqrt(V)))
-        .transform(truncate_plan)
-    )
+    # same loop shape as hits(): state carries the UNNORMALIZED vector
+    # (+ the previous one when checked), and the diff is checked one
+    # superstep delayed
+    checked = tol != 0.0
+    c0 = F.lit(1.0 / math.sqrt(V))
+    state = verts.withColumn("c_un", c0)
+    if checked:
+        state = state.withColumn("p_un", c0)
+    state = state.transform(truncate_plan)
     N, N_prev = 1.0, 1.0
 
     out_state, out_scale = state, N
     for it in range(max_iter):
         sside = vertex_join_side(state, V)
-        agg = (
+        s_sum = (
             edges.join(sside, edges[SRC] == sside["vertex"])
             .groupBy(DST)
-            .agg((F.sum(F.col("c_un") * F.col(WGT)) / F.lit(N)).alias("s"))
+            .agg(F.sum(F.col("c_un") * F.col(WGT)).alias("s_raw"))
         )
-        new_full = state.join(agg, state["vertex"] == agg[DST], "left").select(
-            state["vertex"],
-            F.coalesce("s", F.lit(0.0)).alias("c_un"),
-            state["c_un"].alias("p_un"),
-            state["p_un"].alias("pp_un"),
-        ).transform(truncate_plan)
+        if checked:
+            norm = F.lit(N)
+        else:
+            # the L2 norm as a broadcast 1-row aggregate (see hits()).
+            # The checked loop's early return on a vanished vector maps
+            # to NULLIF-division: x / NULLIF(N, 0) is x / N whenever
+            # N > 0, and an all-zero vector stays zero
+            s_sum = s_sum.crossJoin(F.broadcast(state.agg(
+                F.nullif(F.sqrt(F.sum(F.col("c_un") * F.col("c_un"))), F.lit(0.0))
+                .alias("N"))))
+            norm = F.col("N")
+        agg = s_sum.select(F.col(DST), (F.col("s_raw") / norm).alias("s"))
+        cols = [state["vertex"], F.coalesce("s", F.lit(0.0)).alias("c_un")]
+        if checked:
+            cols += [state["c_un"].alias("p_un"), state["p_un"].alias("pp_un")]
+        new_full = state.join(
+            agg, state["vertex"] == agg[DST], "left"
+        ).select(*cols).transform(truncate_plan)
+        if not checked:
+            state = out_state = new_full
+            continue
+
         row = new_full.agg(
             F.sqrt(F.sum(F.col("c_un") * F.col("c_un"))).alias("n"),
             F.sum(
@@ -340,6 +297,9 @@ def eigenvector_centrality(
         N_prev, N = N, N_new
         out_state, out_scale = state, N
 
+    if not checked:
+        n_final = out_state.agg(F.sqrt(F.sum(F.col("c_un") * F.col("c_un")))).first()[0]
+        out_scale = float(n_final) if n_final else 1.0
     out = out_state.select(
         "vertex", (F.col("c_un") / F.lit(out_scale)).alias("eigenvector_centrality")
     )

@@ -97,7 +97,6 @@ def label_propagation(
     resume: bool = False,
     check_every: int = 1,
     superstep_metrics: list | None = None,
-    detect_cycle: bool = True,
     tie_break: str = "min",
 ) -> DataFrame:
     """Returns DataFrame ``[vertex, labels]``. Requires an undirected
@@ -133,15 +132,15 @@ def label_propagation(
     rule flips labels forever), so runs can plateau at a nonzero
     changed-count and burn every remaining superstep re-deciding the
     same vertices (measured: 2,887 vertices from iteration ~5 onward at
-    RMAT-23, round-4 A/B). With ``detect_cycle=True`` (default) each
-    checking action ALSO compares the labels to those of two supersteps
-    ago — fused into the same aggregate, zero extra actions — and on a
-    detected period-2 cycle stops early, returning the labels the full
-    ``max_iter`` run would have produced: the state sequence is
-    periodic from the detection point, so the terminal labels are the
-    current frame when the remaining superstep count is even, the
-    previous frame when odd. Results are therefore BIT-IDENTICAL to
-    ``detect_cycle=False`` for every ``max_iter`` (property-tested);
+    RMAT-23, round-4 A/B). So each checking action ALSO compares the
+    labels to those of two supersteps ago — fused into the same
+    aggregate, zero extra actions — and on a detected period-2 cycle
+    stops early, returning the labels the full ``max_iter`` run would
+    have produced: the state sequence is periodic from the detection
+    point, so the terminal labels are the current frame when the
+    remaining superstep count is even, the previous frame when odd.
+    Results are therefore BIT-IDENTICAL to running all ``max_iter``
+    supersteps (tested against the synchronous oracle for six budgets);
     only the wall changes. Note the semantics wart this preserves
     honestly: an oscillating vertex's terminal label depends on
     ``max_iter`` PARITY — deterministic but arbitrary. Every
@@ -387,7 +386,7 @@ def label_propagation(
             prev_full = new_full
             continue
 
-        have_old2 = detect_cycle and "old2" in new_full.columns
+        have_old2 = "old2" in new_full.columns
         aggs = [
             F.sum(
                 F.when(F.col("labels") != F.col("old"), 1).otherwise(0)

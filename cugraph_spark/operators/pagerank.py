@@ -25,9 +25,8 @@ one job fills the cache, so the O(E) upstream (e.g. the constructor's
 dedup shuffle) runs once whichever plan follows — the local plan
 collects from the cache, the distributed plan's supersteps read it.
 No parameter selects the local plan; tests force the distributed one by
-setting the cutover to 0. ``salt``,
-``num_partitions``, ``chained`` and ``block_dir`` shape only the Spark
-plans, so the local plan ignores them.
+setting the cutover to 0. ``salt``, ``num_partitions`` and ``block_dir``
+shape only the Spark plans, so the local plan ignores them.
 
 - driver-local (``mode="dataframe"``, small graphs): one collect of
   ``(src, dst, weight)``, then the whole power iteration in numpy
@@ -66,13 +65,15 @@ plans, so the local plan ignores them.
   readers, and a manifest-listed block missing at read time (torn
   deployment, non-shared dir) or a rank slice not covering a block's
   srcs (stale blocks) RAISES — never a silent zero contribution.
-  Composes with ``chained`` (tol=0.0): after the one pack job the
-  whole superstep chain executes inside the terminal action.
+  A fixed-iteration run (tol=0.0) takes the zero-action loop here too:
+  after the one pack job the whole superstep chain executes inside the
+  terminal action.
 
-Scale notes: one Spark action per superstep (the combined
-L1-diff + next-dangling agg is the ``host_scalar_allreduce`` analog,
-pagerank_impl.cuh:321-330); state checkpoints to parquet/Iceberg every
-``checkpoint_every`` supersteps for exact resume + lineage truncation.
+Scale notes: one Spark action per convergence-checked superstep (the
+combined L1-diff + next-dangling agg is the ``host_scalar_allreduce``
+analog, pagerank_impl.cuh:321-330), none on a fixed-iteration run;
+state checkpoints to parquet/Iceberg every ``checkpoint_every``
+supersteps for exact resume + lineage truncation.
 Hub skew on ``dst`` is handled by map-side partial aggregation plus AQE
 skew handling by default; passing ``salt=k`` switches the SpMV reduce to
 the explicit two-phase salted aggregation in ``plans/skew.py``
@@ -266,7 +267,6 @@ def pagerank(
     checkpoint_every: int = 10,
     resume: bool = False,
     superstep_seconds: list | None = None,
-    chained: bool | None = None,
     block_dir: str | None = None,
 ):
     """Returns DataFrame [vertex, pagerank]; with
@@ -284,31 +284,22 @@ def pagerank(
     reused; one packed from another graph or P raises
     (``plans/csr_blocks.py:CsrBlocks``).
 
-    ``chained`` (default auto): fixed-iteration runs (tol == 0.0,
-    dataframe mode, no checkpointing) carry the dangling mass as a
-    broadcast 1-row aggregate crossJoined into the next superstep
-    instead of a driver-collected scalar, so the whole loop is ZERO
-    Spark actions — all supersteps execute inside the single terminal
-    job (bit-identical results: same partial-aggregation tree computes
-    the same double either way; validated in test_pagerank.py). This
-    removes the per-superstep driver round trip — the L1 convergence
-    check is what forces an action, and tol=0.0 has none. Measured
-    1.9-2.4x on the sf0.1 bench graphs; on a real cluster it removes
-    max_iter global barriers. Convergence-checked runs (tol > 0) keep
-    the one-action-per-superstep loop (the host_scalar_allreduce
-    analog). With ``superstep_seconds`` in chained mode each entry is
-    the superstep's driver plan-build time; execution lands in the
-    terminal action.
+    The distributed plans run one superstep body in either of two
+    loops, picked from the arguments. A fixed-iteration run (``tol=0.0``)
+    without ``checkpoint`` needs no value on the driver between
+    supersteps, so it carries the dangling mass as a broadcast 1-row
+    aggregate crossJoined into the next superstep: the loop runs ZERO
+    Spark actions and every superstep executes inside one terminal job
+    (measured 1.9-2.4x on the sf0.1 bench graphs; on a cluster it
+    removes ``max_iter`` global barriers). Every other run ends each
+    superstep in one action that returns the L1 diff and the next
+    dangling mass together (the ``host_scalar_allreduce`` analog). Both
+    loops compute the same doubles, so the results are bit-identical
+    (test_pagerank.py). ``superstep_seconds`` gets one entry per
+    superstep: its wall time, or on the zero-action loop its driver
+    plan-build time, since execution lands in the terminal action.
     """
-    if chained is None:
-        chained = tol == 0.0 and checkpoint is None
-    elif chained:
-        if tol != 0.0 or checkpoint is not None:
-            raise ValueError(
-                "chained=True requires tol=0.0 and no checkpoint (the L1 "
-                "convergence check and resume metadata need one action "
-                "per superstep)"
-            )
+    chained = tol == 0.0 and checkpoint is None
 
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions
@@ -376,6 +367,7 @@ def pagerank(
 
         # --- init ranks (pagerank_impl.cuh:363-386) ---
         start_iter = 0
+        dangling = None
         if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
             it0 = checkpoint.latest_iteration()
             saved, meta = checkpoint.load(spark, it0)
@@ -394,12 +386,10 @@ def pagerank(
                         (F.coalesce("nsval", F.lit(0.0)) / F.lit(nsum)).alias("rank"))
                 .transform(truncate_plan)
             )
-            dangling = None if chained else (
-                state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
         else:
             state = vstate.withColumn("rank", F.lit(1.0 / V)).transform(truncate_plan)
-            dangling = None if chained else (
-                state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0)
+        if dangling is None and not chained:
+            dangling = state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0
 
         converged = False
         final_iter = start_iter
@@ -439,92 +429,61 @@ def pagerank(
                         F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib")
                     )
 
-            if chained:
-                # zero actions: the dangling mass stays a broadcast 1-row
-                # aggregate, so this superstep is just more lazy plan —
-                # everything executes inside the terminal action. Same
-                # partial-aggregation tree → bit-identical to the scalar path.
-                dang_df = F.broadcast(
-                    state.agg(
-                        F.coalesce(
-                            F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
-                            F.lit(0.0),
-                        ).alias("dang")
-                    )
-                )
-                base = state.join(
-                    contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
-                ).crossJoin(dang_df)
-                dang_mass = F.col("dang") * F.lit(alpha) + F.lit(1.0 - alpha)
-                if pers is None:
-                    # a Divide is nullable (x/0 is NULL); V > 0, so the
-                    # coalesce only keeps `pagerank` non-nullable, as on
-                    # every other plan
-                    new_rank = (
-                        F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                        + F.coalesce(dang_mass / F.lit(float(V)), F.lit(0.0))
-                    )
-                else:
-                    base = base.join(pers, state["vertex"] == pers["vertex"], "left")
-                    new_rank = (
-                        F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                        + dang_mass * F.coalesce("pnorm", F.lit(0.0))
-                    )
-                # truncate_plan per superstep keeps Catalyst work linear in
-                # max_iter (state is referenced 3x per superstep — without
-                # the LogicalRDD leaf the plan tree grows 3^k) while staying
-                # lazy: the checkpoint RDDs materialize inside the terminal job.
-                state = base.select(
-                    state["vertex"].alias("vertex"),
-                    state["ows"].alias("ows"),
-                    new_rank.alias("rank"),
-                ).transform(truncate_plan)
-                if superstep_seconds is not None:
-                    superstep_seconds.append(time.perf_counter() - _t0)
-                continue
-
-            # state update joins contribs against the PREVIOUS state (which
-            # already carries the old rank), so the L1 convergence diff needs
-            # no second join — one plan, one action per superstep.
+            # contribs join the PREVIOUS state, so the old rank rides
+            # along for the L1 diff without a second join
             base = state.join(
                 contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
             )
-            if pers is None:
-                unvarying = (dangling * alpha + (1.0 - alpha)) / V
-                new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + F.lit(unvarying)
+            if chained:
+                # the dangling mass stays a broadcast 1-row aggregate in
+                # the plan, so the superstep runs no action; the same
+                # partial-aggregation tree computes the same double
+                base = base.crossJoin(F.broadcast(state.agg(
+                    F.coalesce(F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
+                               F.lit(0.0)).alias("dang"))))
+                dang = F.col("dang")
             else:
-                pmass = dangling * alpha + (1.0 - alpha)
+                # the previous action's driver float; Catalyst folds the
+                # literal arithmetic below to the double Python computes
+                dang = F.lit(dangling)
+            dang_mass = dang * F.lit(alpha) + F.lit(1.0 - alpha)
+            if pers is None:
+                # a Divide is nullable (x/0 is NULL); V > 0, so the
+                # coalesce only keeps `pagerank` non-nullable
+                teleport = F.coalesce(dang_mass / F.lit(float(V)), F.lit(0.0))
+            else:
                 base = base.join(pers, state["vertex"] == pers["vertex"], "left")
-                new_rank = (
-                    F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                    + F.lit(pmass) * F.coalesce("pnorm", F.lit(0.0))
-                )
-            new_full = base.select(
-                state["vertex"].alias("vertex"),
-                state["ows"].alias("ows"),
-                new_rank.alias("rank"),
-                state["rank"].alias("old_rank"),
-            )
-            # truncate_plan (stats-clean localCheckpoint) truncates lineage so superstep N's plan does not
-            # re-analyze supersteps 0..N-1 (SURVEY.md §7.3.1) — the lazy variant
-            # materializes inside the convergence action below (one job/superstep).
-            new_full = new_full.transform(truncate_plan)
-
-            # one action per superstep: L1 diff + next dangling sum together
-            # (the host_scalar_allreduce analog, pagerank_impl.cuh:239-248,321-330)
-            row = new_full.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
-                F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
-                      ).alias("dang"),
-            ).first()
-            l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
+                teleport = dang_mass * F.coalesce("pnorm", F.lit(0.0))
+            new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + teleport
+            cols = [state["vertex"].alias("vertex"), state["ows"].alias("ows"),
+                    new_rank.alias("rank")]
+            if not chained:
+                cols.append(state["rank"].alias("old_rank"))
+            # truncate_plan (stats-clean localCheckpoint) cuts lineage so
+            # superstep N's plan does not re-analyze supersteps 0..N-1
+            # (SURVEY.md §7.3.1) and Catalyst work stays linear in
+            # max_iter; it is lazy, so it materializes inside the next
+            # action — the convergence check or the terminal job
+            new_full = base.select(*cols).transform(truncate_plan)
+            if not chained:
+                # one action per superstep: L1 diff + next dangling sum
+                # (the host_scalar_allreduce analog,
+                # pagerank_impl.cuh:239-248,321-330)
+                row = new_full.agg(
+                    F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
+                    F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
+                          ).alias("dang"),
+                ).first()
+                l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
             state = new_full.select("vertex", "ows", "rank")
             if superstep_seconds is not None:
                 superstep_seconds.append(time.perf_counter() - _t0)
+            if chained:
+                continue
 
             if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
                 state = checkpoint.save(
-                    state.select("vertex", "ows", "rank"), it,
+                    state, it,
                     {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
 
             if l1 < tol:
@@ -537,7 +496,7 @@ def pagerank(
                              "tol": tol, "final": True})
 
         if chained:
-            # the chained loop ran ZERO actions, so nothing has executed
+            # the zero-action loop ran no job, so nothing has executed
             # yet — materialize the whole superstep chain NOW (one terminal
             # job, the same single job the design promises) while the
             # persisted edges/vstate caches are still registered; the

@@ -569,8 +569,9 @@ def weakly_connected_components(
             _t0 = _time.perf_counter()
             if superstep_seconds is not None:
                 # wall of the checking action (covers the k batched lazy
-                # supersteps since the previous check) — same contract as
-                # pagerank's chained-mode superstep_seconds
+                # supersteps since the previous check); PageRank's
+                # zero-action loop has no action and records plan-build
+                # time instead
                 superstep_seconds.append(_step_wall)
             if probe is not None:
                 mtag = "frontier" if use_frontier else "dense"

@@ -230,8 +230,9 @@ def q_pagerank_pers(spark, sf_dir):
     semantics: teleport AND dangling mass redistribute to the
     normalized personalization vector, zero for unlisted vertices) —
     personalization = every 10th vertex id, so both the customer and
-    offset-supplier id ranges are hit. tol=0.0 takes the zero-action
-    chained loop, so this also gates chained+personalization."""
+    offset-supplier id ranges are hit. Above the local-tail cutover
+    tol=0.0 takes the zero-action loop, so there this also gates that
+    loop with personalization."""
     e = edges_cs(spark, sf_dir)
     G = Graph(e, directed=True, weighted=True)
     pers = (

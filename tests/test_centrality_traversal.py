@@ -63,6 +63,38 @@ def test_eigenvector_matches_oracle(spark):
         assert abs(c - ref[v]) < 1e-4
 
 
+@pytest.mark.parametrize("kind,directed", [("directed_asym", True), ("tiny_social", False)])
+def test_fixed_iteration_centralities(spark, kind, directed):
+    """``tol=0`` runs exactly ``max_iter`` supersteps of HITS, Katz and
+    eigenvector centrality: it matches the oracles at the same budget,
+    and it equals bit for bit the convergence-checked loop at a tol no
+    run reaches. Authorities are the normalized Aᵀ of the returned
+    hubs, which the HITS oracle computes one superstep later."""
+    k = 7
+    edges = make_edges(kind)
+    G = Graph(edges_df(spark, edges), directed=directed)
+    ref_edges = edges if directed else sym_tuples(edges)
+    cases = [
+        (hits, ("hubs", "authorities"),
+         (hits_ref(ref_edges, max_iter=k, tol=0.0)[0],
+          hits_ref(ref_edges, max_iter=k + 1, tol=0.0)[1])),
+        (katz_centrality, ("katz_centrality",), (katz_ref(ref_edges, max_iter=k, tol=0.0),)),
+        (eigenvector_centrality, ("eigenvector_centrality",),
+         (eigenvector_ref(ref_edges, max_iter=k, tol=0.0),)),
+    ]
+    for op, cols, refs in cases:
+        def run(tol):
+            rows = op(G, max_iter=k, tol=tol).collect()
+            return {r["vertex"]: tuple(r[c] for c in cols) for r in rows}
+
+        fixed = run(0.0)
+        assert fixed == run(1e-300), op.__name__  # exact float equality
+        assert len(fixed) == len(refs[0])
+        for v, vals in fixed.items():
+            for val, ref in zip(vals, refs):
+                assert val == pytest.approx(ref[v], rel=1e-9, abs=1e-12), (op.__name__, v)
+
+
 def test_degree_centrality(spark):
     edges = [(0, 1, 1.0), (0, 2, 1.0), (1, 2, 1.0)]
     G = Graph(edges_df(spark, edges), directed=False)

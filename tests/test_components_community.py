@@ -488,21 +488,23 @@ def test_csr_block_manifest_and_missing_block_raises(spark, tmp_path):
         load_block(bd2, pid2, meta2)
 
 
+def _lpa_full_run(edges, max_iter):
+    """Labels of all ``max_iter`` synchronous supersteps (the oracle
+    never stops on a cycle)."""
+    labels, _ = lpa_ref(edges, max_iter=max_iter)
+    return {v: int(lab) for v, lab in enumerate(labels)}
+
+
 def test_lpa_cycle_stop_parity_exact(spark):
     """A 4-cycle oscillates forever under the synchronous min-tie rule;
-    detect_cycle must stop early AND return bit-identical labels to the
-    full fixed-iteration run for every max_iter parity."""
+    cycle detection must stop early AND return the labels of the full
+    fixed-iteration run for every max_iter parity."""
     sq = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 0, 1.0)]
     edges = sq + [(b, a, w) for a, b, w in sq]
     G = Graph(edges_df(spark, edges), directed=False)
     for mi in (3, 4, 5, 6, 7, 8):
-        full = _as_map(
-            label_propagation(G, max_iter=mi, detect_cycle=False).collect()
-        )
-        fast = _as_map(
-            label_propagation(G, max_iter=mi, detect_cycle=True).collect()
-        )
-        assert fast == full, mi
+        fast = _as_map(label_propagation(G, max_iter=mi).collect())
+        assert fast == _lpa_full_run(edges, mi), mi
     m: list = []
     label_propagation(G, max_iter=12, superstep_metrics=m).count()
     assert any(e.get("cycle_detected") for e in m)
@@ -513,17 +515,15 @@ def test_lpa_cycle_stop_batched_and_across_save(spark, tmp_path):
     """Cycle detection keeps the labels of two supersteps ago through
     lazy supersteps (check_every=2) and across a checkpoint save in the
     detection window (checkpoint_every=1): on the 4-cycle both runs
-    stop early with labels bit-identical to the detect_cycle=False run,
-    for either max_iter parity."""
+    stop early with the labels of the full max_iter run, for either
+    max_iter parity."""
     from cugraph_spark.plans.checkpoint import CheckpointManager
 
     sq = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 0, 1.0)]
     edges = sq + [(b, a, w) for a, b, w in sq]
     G = Graph(edges_df(spark, edges), directed=False)
     for mi in (7, 8):
-        full = _as_map(
-            label_propagation(G, max_iter=mi, detect_cycle=False).collect()
-        )
+        full = _lpa_full_run(edges, mi)
         cases = {
             "check_every=2": {"check_every": 2},
             "save in window": {

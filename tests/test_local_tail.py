@@ -271,8 +271,8 @@ def test_pagerank_local_equals_distributed_precomputed_ows(spark, tail_plan):
 
 
 def test_pagerank_local_equals_distributed_fixed_and_nonconvergent(spark, tail_plan):
-    """``tol=0`` runs the distributed plan's chained loop and ``tol>0``
-    its scalar loop; the output schema (``pagerank`` a non-nullable
+    """``tol=0`` runs the distributed plan's zero-action loop and
+    ``tol>0`` its one-action loop; the output schema (``pagerank`` a non-nullable
     double) is the same on both, on the local plan and on the csr
     plan's two loops."""
     G = _directed(spark, "tiny_social")

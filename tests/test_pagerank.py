@@ -149,46 +149,44 @@ def test_pagerank_fixed_iterations_matches_oracle(spark):
     _check(got, expect, atol=1e-12)
 
 
-def test_pagerank_chained_bit_identical(spark, distributed_tail):
-    """The zero-action chained loop (auto at tol=0) must equal the
-    one-action-per-superstep scalar loop BIT-exactly: both compute the
-    dangling mass with the same partial-aggregation tree, chained just
-    carries it as a broadcast column instead of a driver literal."""
-    for fixture in ("directed_asym", "weighted", "tiny_social"):
-        edges = make_edges(fixture)
-        G = Graph(edges_df(spark, edges), directed=True)
-        chained, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
-                              fail_on_nonconvergence=False, chained=True)
-        scalar, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
-                             fail_on_nonconvergence=False, chained=False)
-        got = {r.vertex: r.pagerank for r in chained.collect()}
-        ref = {r.vertex: r.pagerank for r in scalar.collect()}
-        assert got == ref, fixture  # exact float equality, not approx
+# a tol no run reaches: the convergence-checked loop then runs all
+# max_iter supersteps, like tol=0 (an L1 of exactly 0.0 would stop it
+# at a fixpoint, where the ranks cannot change any more)
+UNREACHED_TOL = 1e-300
 
-    # personalization branch: dang_mass multiplies pnorm instead of 1/V
-    edges = make_edges("directed_asym")
-    G = Graph(edges_df(spark, edges), directed=True)
+
+def _fixed_and_checked(G, max_iter=6, **kw):
+    """Ranks of the zero-action loop (``tol=0``) and of the
+    one-action-per-superstep loop at ``UNREACHED_TOL``."""
+    out = []
+    for tol in (0.0, UNREACHED_TOL):
+        steps: list = []
+        df, _ = pagerank(G, alpha=ALPHA, tol=tol, max_iter=max_iter,
+                         superstep_seconds=steps, fail_on_nonconvergence=False, **kw)
+        assert len(steps) == max_iter, tol
+        out.append({r.vertex: r.pagerank for r in df.collect()})
+    return out
+
+
+def test_pagerank_chained_bit_identical(spark, distributed_tail):
+    """The zero-action loop (tol=0) must equal the one-action-per-
+    superstep loop BIT-exactly: both compute the dangling mass with the
+    same partial-aggregation tree; the first carries it as a broadcast
+    column, the second as a driver literal."""
     import pandas as pd
 
+    for fixture in ("directed_asym", "weighted", "tiny_social"):
+        G = Graph(edges_df(spark, make_edges(fixture)), directed=True)
+        fixed, checked = _fixed_and_checked(G)
+        assert fixed == checked, fixture  # exact float equality, not approx
+
+    # personalization branch: dang_mass multiplies pnorm instead of 1/V
+    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
     pers = spark.createDataFrame(
         pd.DataFrame({"vertex": [0, 2], "values": [3.0, 1.0]})
     )
-    chained, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
-                          personalization=pers,
-                          fail_on_nonconvergence=False, chained=True)
-    scalar, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
-                         personalization=pers,
-                         fail_on_nonconvergence=False, chained=False)
-    got = {r.vertex: r.pagerank for r in chained.collect()}
-    ref = {r.vertex: r.pagerank for r in scalar.collect()}
-    assert got == ref
-
-
-def test_pagerank_chained_rejects_convergence_mode(spark, distributed_tail):
-    edges = make_edges("directed_asym")
-    G = Graph(edges_df(spark, edges), directed=True)
-    with pytest.raises(ValueError, match="chained"):
-        pagerank(G, alpha=ALPHA, tol=1e-6, max_iter=5, chained=True)
+    fixed, checked = _fixed_and_checked(G, personalization=pers)
+    assert fixed == checked
 
 
 def test_pagerank_sums_to_one(spark):
@@ -198,32 +196,30 @@ def test_pagerank_sums_to_one(spark):
 
 
 def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_tail):
-    """mode='csr' now composes with the zero-action chained loop
-    (tol=0.0 auto-chains): one pack job, every superstep lazy inside
-    the terminal action; ranks must equal the unchained csr loop and
-    the dataframe plan to float tolerance — on the dense-id blocks the
-    operator packs itself AND on dictionary blocks (packed externally
-    without id_bounds, reused through block_dir)."""
+    """mode='csr' runs the zero-action loop at tol=0 (one pack job,
+    every superstep lazy inside the terminal action); ranks must equal
+    the one-action csr loop bit for bit and the dataframe plan to
+    float tolerance — on the dense-id blocks the operator packs itself
+    AND on dictionary blocks (packed externally without id_bounds,
+    reused through block_dir), with and without personalization."""
+    import pandas as pd
+
     from cugraph_spark.plans.csr_blocks import pack_edges
 
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
-    c, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6,
-                    mode="dataframe", chained=False,
-                    fail_on_nonconvergence=False)
-    gc = {r.vertex: r.pagerank for r in c.collect()}
+    pers = spark.createDataFrame(
+        pd.DataFrame({"vertex": [0, 2], "values": [3.0, 1.0]})
+    )
     dict_dir = str(tmp_path / "dict_blocks")
     pack_edges(G.edges, dict_dir, 8, weight="weight")
-    for kw in ({}, {"block_dir": dict_dir, "num_partitions": 8}):
-        a, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
-                        fail_on_nonconvergence=False, **kw)  # auto-chained
-        b, _ = pagerank(G, alpha=ALPHA, tol=0.0, max_iter=6, mode="csr",
-                        chained=False, fail_on_nonconvergence=False, **kw)
-        ga = {r.vertex: r.pagerank for r in a.collect()}
-        gb = {r.vertex: r.pagerank for r in b.collect()}
-        assert ga == gb, kw  # same kernel, same order → bit-identical
-        for v in gc:
-            assert ga[v] == pytest.approx(gc[v], abs=1e-12), kw
+    for pkw in ({}, {"personalization": pers}):
+        _, want = _fixed_and_checked(G, mode="dataframe", **pkw)
+        for kw in ({}, {"block_dir": dict_dir, "num_partitions": 8}):
+            fixed, checked = _fixed_and_checked(G, mode="csr", **kw, **pkw)
+            assert fixed == checked, kw  # same kernel, same order → bit-identical
+            for v in want:
+                assert fixed[v] == pytest.approx(want[v], abs=1e-12), kw
 
 
 def test_pagerank_csr_missing_block_raises(spark, tmp_path):

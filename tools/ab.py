@@ -12,7 +12,7 @@ declared pre-partitioned; bfs and pagerank on the directed RMAT graph.
 
 An arm is a preset name, or ``name:key=value,...``. Keys are the
 operator's public keyword arguments (``mode``, ``block_dir``,
-``detect_cycle``, ``chained``, ``check_every``, ``max_iter``, …) plus
+``check_every``, ``max_iter``, ``tol``, …) plus
 the plan cutovers the tests patch, set for the arm's runs only:
 
   frontier=N   the operator's ``_frontier_threshold`` returns N
@@ -47,15 +47,18 @@ The one-off scripts this replaces, as invocations (their defaults):
                                     broadcast_dst_8M:broadcast=8000000,check_every=2 --reps 3;
                              lpa 23 shuffle_hash_4M:broadcast=4000000,max_iter=4,check_every=4
                                     broadcast_dst_8M:broadcast=8000000,max_iter=4,check_every=4 --reps 3
-  ab_lpa_r5.py 32 2 23       lpa 23 r4:detect_cycle=False cycle:detect_cycle=True
+  ab_lpa_r5.py 32 2 23       lpa 23 dataframe  (its no-cycle-stop arm is gone
+                             with the option; the record is
+                             BENCH/ab_lpa_r5_rmat23.json)
   ab_pagerank_csr.py 32 2 21 pagerank 21 dataframe csr
   ab_wcc_csr.py 32 2 23      wcc 23 dataframe csr
   ab_wcc_mode.py 32 2 24     wcc 24 shuffle_hash:broadcast=0,check_every=2
                                     broadcast:broadcast=always,check_every=2
 
 (all with ``--cpus 32``). lpa runs 12 supersteps unless an arm sets
-``max_iter``; pagerank runs 10 fixed supersteps (``tol=0``) on the
-one-action-per-superstep loop (``chained=False``).
+``max_iter``; pagerank runs 10 supersteps of the convergence-checked
+loop at a tol no run reaches (``tol=1e-300``), so every superstep
+ends in its action and ``steps`` holds real superstep walls.
 """
 
 from __future__ import annotations
@@ -95,7 +98,7 @@ OPERATORS = {
             "superstep_metrics"),
     "bfs": ("traversal", "bfs", {"source": 0}, None),
     "pagerank": ("pagerank", "pagerank",
-                 {"tol": 0.0, "max_iter": 10, "chained": False,
+                 {"tol": 1e-300, "max_iter": 10,
                   "fail_on_nonconvergence": False}, "superstep_seconds"),
 }
 TRACE_KEY = {"superstep_metrics": "metrics", "superstep_seconds": "steps"}

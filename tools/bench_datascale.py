@@ -19,7 +19,7 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
-from bench_scaling import ROOT, run_worker  # noqa: E402
+from bench_scaling import ROOT, pagerank_worker  # noqa: E402
 
 
 def main() -> None:
@@ -40,7 +40,7 @@ def main() -> None:
 
     rows = []
     for scale in scales:
-        r = run_worker(cores, scale, 16, iters)
+        r = pagerank_worker(cores, scale, 16, iters)
         rows.append(
             {
                 "scale": scale,

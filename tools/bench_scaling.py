@@ -23,8 +23,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 WORKER = r"""
-import sys, json
-sys.path.insert(0, {root!r})
+import json
 from cugraph_spark.session import get_spark
 from cugraph_spark.sources.rmat import rmat_edges
 from cugraph_spark.graph import Graph
@@ -35,12 +34,14 @@ e = rmat_edges(spark, scale={scale}, edgefactor={ef}, seed=42).persist()
 n = e.count()
 G = Graph(e, directed=True, weighted=True)
 ts = []
-# chained=False pins the one-action-per-superstep loop: this harness's
-# methodology (per-superstep wall lists, warm-up discard, noise
-# analysis on the raw lists in BENCH/BASELINE.md) needs real
-# per-superstep execution times, which the zero-action chained mode
-# does not observe.
-pagerank(G, tol=0.0, max_iter={iters}, superstep_seconds=ts, chained=False).count()
+# a tol no run reaches keeps the one-action-per-superstep loop for all
+# {iters} supersteps: this harness's methodology (per-superstep wall
+# lists, warm-up discard, noise analysis on the raw lists in
+# BENCH/BASELINE.md) needs real per-superstep execution times, which
+# the zero-action loop of a tol=0 run does not observe.
+pagerank(G, tol=1e-300, max_iter={iters}, superstep_seconds=ts,
+         fail_on_nonconvergence=False)[0].count()
+assert len(ts) == {iters}, len(ts)
 steady = sorted(ts[2:])
 median = steady[len(steady) // 2]
 print("BENCHJSON " + json.dumps({{
@@ -86,27 +87,37 @@ def _sweep_orphan_scratch() -> None:
                 shutil.rmtree(d, ignore_errors=True)
 
 
-def run_worker(cpus: int, scale: int, ef: int, iters: int) -> dict:
+def run_worker(code: str, cpus: int, timeout: int) -> dict:
+    """Run one harness worker script in a new interpreter on
+    local[``cpus``] and return the record it prints after
+    ``BENCHJSON``. The checkout goes on ``PYTHONPATH``, because Spark's
+    Python workers (``rmat_edges``' mapInPandas, the csr kernels) import
+    the package too and do not see the script's ``sys.path``."""
     _sweep_orphan_scratch()
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), env.get("PYTHONPATH")]))
     env.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    # tmpfs shuffle, same as the e2e/wcc harnesses: both parallelism
-    # levels share ONE virtual disk here, which a real N-vs-4N cluster
-    # would not — routing shuffle to RAM removes that artifact (and is
-    # the dir _sweep_orphan_scratch cleans)
+    # tmpfs shuffle: both parallelism levels share ONE virtual disk
+    # here, which a real N-vs-4N cluster would not — routing shuffle to
+    # RAM removes that artifact (and is the dir _sweep_orphan_scratch
+    # cleans)
     shm = "/dev/shm/spark-graft-local"
     os.makedirs(shm, exist_ok=True)
     env.setdefault("SPARK_LOCAL_DIRS", shm)
-    code = WORKER.format(root=str(ROOT), scale=scale, ef=ef, iters=iters)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
-        env=env, timeout=3000,
+        env=env, timeout=timeout,
     )
     for line in out.stdout.splitlines():
         if "BENCHJSON" in line:
             return json.loads(line.split("BENCHJSON ", 1)[1])
     raise RuntimeError(f"no result; stderr tail: {out.stderr[-2000:]}")
+
+
+def pagerank_worker(cpus: int, scale: int, ef: int, iters: int) -> dict:
+    """Per-superstep PageRank walls on RMAT-``scale`` at local[``cpus``]."""
+    return run_worker(WORKER.format(scale=scale, ef=ef, iters=iters), cpus, 3000)
 
 
 def main():
@@ -115,8 +126,8 @@ def main():
     ef = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     iters = 12
 
-    a = run_worker(n, scale, ef, iters)
-    b = run_worker(4 * n, scale, ef, iters)
+    a = pagerank_worker(n, scale, ef, iters)
+    b = pagerank_worker(4 * n, scale, ef, iters)
 
     thr_a = a["edges_per_sec_per_superstep"]
     thr_b = b["edges_per_sec_per_superstep"]

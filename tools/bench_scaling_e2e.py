@@ -26,16 +26,14 @@ Usage: python tools/bench_scaling_e2e.py [N] [wcc_scale] [tc_scale] [reps]
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+from bench_scaling import ROOT, run_worker  # noqa: E402
 
 WORKER = r"""
-import sys, time, json
-sys.path.insert(0, {root!r})
+import time, json
 from cugraph_spark.session import get_spark
 from cugraph_spark.sources.rmat import rmat_edges
 from cugraph_spark.graph import Graph, symmetrize
@@ -199,38 +197,6 @@ print("BENCHJSON " + json.dumps(out))
 """
 
 
-def run_worker(cpus: int, wcc_scale: int, tc_scale: int, reps: int,
-               lpa_scale: int = 0, wcc_csr: bool = False) -> dict:
-    # a killed prior run strands GiBs of blockmgr dirs in the tmpfs
-    # scratch below — sweep them like bench_scaling.py does
-    sys.path.insert(0, str(Path(__file__).resolve().parent))
-    from bench_scaling import _sweep_orphan_scratch
-
-    _sweep_orphan_scratch()
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    env.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    # Shuffle/spill to tmpfs: each node of a real 4N-executor cluster has
-    # its own shuffle SSDs (4x aggregate IO), but this sandbox has ONE
-    # virtual disk shared by both parallelism levels — routing shuffle
-    # files to RAM removes that single-disk artifact from the comparison
-    # (documented in BENCH/BASELINE.md).
-    shm = "/dev/shm/spark-graft-local"
-    os.makedirs(shm, exist_ok=True)
-    env.setdefault("SPARK_LOCAL_DIRS", shm)
-    code = WORKER.format(root=str(ROOT), wcc_scale=wcc_scale,
-                         tc_scale=tc_scale, reps=reps, lpa_scale=lpa_scale,
-                         wcc_csr=wcc_csr)
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        env=env, timeout=5400,
-    )
-    for line in out.stdout.splitlines():
-        if "BENCHJSON" in line:
-            return json.loads(line.split("BENCHJSON ", 1)[1])
-    raise RuntimeError(f"no result; stderr tail: {out.stderr[-2000:]}")
-
-
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     wcc_scale = int(sys.argv[2]) if len(sys.argv) > 2 else 20
@@ -239,8 +205,10 @@ def main():
     lpa_scale = int(sys.argv[5]) if len(sys.argv) > 5 else 0
     wcc_csr = bool(int(sys.argv[6])) if len(sys.argv) > 6 else False
 
-    a = run_worker(n, wcc_scale, tc_scale, reps, lpa_scale, wcc_csr)
-    b = run_worker(4 * n, wcc_scale, tc_scale, reps, lpa_scale, wcc_csr)
+    code = WORKER.format(wcc_scale=wcc_scale, tc_scale=tc_scale, reps=reps,
+                         lpa_scale=lpa_scale, wcc_csr=wcc_csr)
+    a = run_worker(code, n, 5400)
+    b = run_worker(code, 4 * n, 5400)
 
     report = {"cores_A": n, "cores_B": 4 * n}
     legs = [("wcc", wcc_scale), ("tc", tc_scale), ("lpa", lpa_scale)]

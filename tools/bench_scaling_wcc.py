@@ -41,16 +41,14 @@ Usage: python tools/bench_scaling_wcc.py [N] [rmat_scale] [edgefactor] [iters] [
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+from bench_scaling import ROOT, run_worker  # noqa: E402
 
 WORKER = r"""
-import sys, json, shutil, tempfile
-sys.path.insert(0, {root!r})
+import json, shutil, tempfile
 from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.session import get_spark
 from cugraph_spark.sources.rmat import rmat_edges
@@ -95,33 +93,6 @@ print("BENCHJSON " + json.dumps({{
 """
 
 
-def run_worker(cpus: int, scale: int, ef: int, iters: int,
-               mode: str = "dataframe") -> dict:
-    # sweep orphaned tmpfs shuffle scratch like bench_scaling.py does
-    sys.path.insert(0, str(Path(__file__).resolve().parent))
-    from bench_scaling import _sweep_orphan_scratch
-
-    _sweep_orphan_scratch()
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    # csr mode's Python UDF workers import the package too
-    env["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), env.get("PYTHONPATH")]))
-    env.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    shm = "/dev/shm/spark-graft-local"
-    os.makedirs(shm, exist_ok=True)
-    env.setdefault("SPARK_LOCAL_DIRS", shm)
-    code = WORKER.format(root=str(ROOT), scale=scale, ef=ef, iters=iters,
-                         mode=mode)
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        env=env, timeout=3600,
-    )
-    for line in out.stdout.splitlines():
-        if "BENCHJSON" in line:
-            return json.loads(line.split("BENCHJSON ", 1)[1])
-    raise RuntimeError(f"no result; stderr tail: {out.stderr[-2000:]}")
-
-
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     scale = int(sys.argv[2]) if len(sys.argv) > 2 else 22
@@ -129,8 +100,9 @@ def main():
     iters = int(sys.argv[4]) if len(sys.argv) > 4 else 10
     mode = sys.argv[5] if len(sys.argv) > 5 else "dataframe"
 
-    a = run_worker(n, scale, ef, iters, mode)
-    b = run_worker(4 * n, scale, ef, iters, mode)
+    code = WORKER.format(scale=scale, ef=ef, iters=iters, mode=mode)
+    a = run_worker(code, n, 3600)
+    b = run_worker(code, 4 * n, 3600)
 
     thr_a = a["edges_per_sec_per_superstep"]
     thr_b = b["edges_per_sec_per_superstep"]
