@@ -176,20 +176,14 @@ def label_propagation(
     blimit = strategy.NARROW_STATE_BROADCAST_LIMIT
     bcast = V <= blimit
 
-    # Edge layout per join mode — same analysis as WCC's (operators/
-    # wcc.py): shuffle-hash mode co-locates the per-superstep join on
-    # SRC; broadcast mode with large V partitions by DST instead so
-    # BOTH superstep aggregations (groupBy(dst,cand) and the argmax
-    # groupBy(dst) — hashpartitioning(dst) satisfies either's clustered
-    # distribution) and the state⋈best join run exchange-free; small V
-    # scans the cache in place.
-    e = G.edges.select(SRC, DST, WGT)
-    if not bcast:
-        if not G.partitioned_on(SRC):  # select preserves a bucketed layout
-            e = e.repartition(P, SRC)
-    elif V >= strategy.DST_PARTITION_MIN_V and not G.partitioned_on(DST):
-        e = e.repartition(P, DST)
-    edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+    # Edge layout per join mode: strategy.narrow_state_edges. In the
+    # dst layout BOTH superstep aggregations (groupBy(dst,cand) and the
+    # argmax groupBy(dst) — hashpartitioning(dst) satisfies either's
+    # clustered distribution) and the state⋈best join run exchange-free;
+    # select preserves a bucketed layout.
+    edges = strategy.narrow_state_edges(G, G.edges.select(SRC, DST, WGT), V, P).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     start_iter = 0
     state = None

@@ -20,24 +20,29 @@ picks between them: ``mode="csr"`` always runs the block plan;
 ``mode="dataframe"`` (the default) runs the driver-local plan when the
 edge frame has at most ``local_tail.LOCAL_TAIL_EDGES`` rows (150k) and
 the distributed dataframe plan otherwise. The size gate is a
-``count()`` of the edge frame the distributed plan persists anyway: that
-one job fills the cache, so the O(E) upstream (e.g. the constructor's
-dedup shuffle) runs once whichever plan follows — the local plan
-collects from the cache, the distributed plan's supersteps read it.
-No parameter selects the local plan; tests force the distributed one by
-setting the cutover to 0. ``salt``, ``num_partitions`` and ``block_dir``
-shape only the Spark plans, so the local plan ignores them.
+``count()`` of the edge frame as it comes, persisted (a frame the caller
+already cached is counted from that cache and left cached): the local
+plan collects from it with no repartition shuffle, and the distributed
+plan builds its src-partitioned copy from it and drops it once that
+copy is filled, so the O(E) upstream (e.g. the constructor's dedup
+shuffle) runs once whichever plan follows. No parameter selects the
+local plan; tests force the distributed one by setting the cutover
+to 0. ``num_partitions`` and ``block_dir`` shape only the Spark plans,
+so the local plan ignores them.
 
 - driver-local (``mode="dataframe"``, small graphs): one collect of
-  ``(src, dst, weight)``, then the whole power iteration in numpy
-  (``plans/local_tail.py:pagerank_superstep``) — the single-GPU-handoff
-  analog of the reference running a graph that fits one device on its
-  single-GPU kernel. Every distributed superstep costs ~6 Spark jobs
-  and 0.5-1.2 s of driver time whatever E is; on a 6.7k-edge code
-  graph that was 82 jobs for 14 supersteps. The local plan mirrors the
-  dataframe expressions and keeps every contract: the same superstep
-  count (one ``superstep_seconds`` entry each), ranks equal to
-  tolerance (sums run in another order, so not bit-identical), the
+  ``(src, dst, weight)`` into ONE in-memory dense block (P=1, edges
+  mapped to state indices, built by the pack's
+  ``csr_blocks.csr_arrays``), then the whole power iteration in numpy,
+  each superstep's SpMV the csr plan's own ``csr_blocks.sum_kernel`` —
+  the reference building one ``*_impl.cuh`` for one GPU or many.
+  Every distributed superstep costs ~6 Spark jobs and 0.5-1.2 s of
+  driver time whatever E is; on a 6.7k-edge code graph that was 82
+  jobs for 14 supersteps. The local plan keeps the dataframe
+  expressions around the kernel and every contract: the same
+  superstep count (one ``superstep_seconds`` entry each), ranks equal
+  to tolerance (1e-12 in the tests; sums run in ``bincount`` order,
+  not Spark's partial-aggregation order, so not bit-identical), the
   same output schema, and checkpoints with the same columns,
   iterations and meta keys, so a run checkpointed by one plan resumes
   on the other.
@@ -53,8 +58,9 @@ shape only the Spark plans, so the local plan ignores them.
   src-sorted indptr layout, dense-id or dictionary dst format,
   weights), then each superstep ships ONLY the O(V) rank vector
   through the Python boundary: the store's per-pid task maps ranks
-  onto the block's srcs and runs the SpMV as a single
-  ``np.bincount`` — in-UDF partial combine — followed by the
+  onto the block's srcs and runs the sum kernel
+  (``csr_blocks.sum_kernel``: one ``np.bincount``, the in-UDF
+  partial combine), followed by the
   shuffle-based ``(dst, partial)`` message exchange. The O(E) side
   never crosses the Arrow boundary again after setup
   (``np.load(mmap_mode='r')`` reads the page-cache-resident block),
@@ -75,12 +81,7 @@ analog, pagerank_impl.cuh:321-330), none on a fixed-iteration run;
 state checkpoints to parquet/Iceberg every ``checkpoint_every``
 supersteps for exact resume + lineage truncation.
 Hub skew on ``dst`` is handled by map-side partial aggregation plus AQE
-skew handling by default; passing ``salt=k`` switches the SpMV reduce to
-the explicit two-phase salted aggregation in ``plans/skew.py``
-(``groupBy(dst, hash(src)%k)`` → ``groupBy(dst)``), the Spark analog of
-the reference's high-degree segment kernels
-(``cpp/src/structure/renumber_edgelist_impl.cuh:538-565``,
-thresholds ``cpp/include/cugraph/graph_view.hpp:250-253``).
+skew handling.
 """
 
 from __future__ import annotations
@@ -100,28 +101,13 @@ from pyspark import StorageLevel
 from ..graph import DST, SRC, WGT, Graph
 from ..plans import local_tail
 from ..plans.checkpoint import CheckpointManager
+from ..plans.csr_blocks import Block, CsrBlocks, csr_arrays, sum_kernel
 from ..plans.strategy import vertex_join_side
 
 
 class FailedToConvergeError(RuntimeError):
     """Raised when max_iter supersteps pass without L1 < tol
     (mirrors cugraph's error at pagerank.py:290-293)."""
-
-
-def _csr_spmv(blk, rank_src):
-    """Per-block pull SpMV for mode='csr' (``CsrBlocks.map_blocks``
-    supplies the rank slice aligned with the block's srcs): the whole
-    SpMV + in-UDF partial combine is a single ``np.bincount`` into the
-    block's dst slots. Only slots with a nonzero contribution are
-    emitted — an absent dst reads as 0.0 in the state join's coalesce,
-    and dropping exact zeros leaves every partial sum bit-identical."""
-    contrib = np.bincount(
-        blk.dst_index,
-        weights=np.repeat(rank_src, blk.deg) * blk.w,
-        minlength=blk.n_dst,
-    )
-    touched = np.flatnonzero(contrib)
-    return {"dst": blk.dst_ids(touched), "contrib": contrib[touched]}
 
 
 def _duplicate_vertices_error(name: str) -> ValueError:
@@ -154,7 +140,7 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
                 resume, superstep_seconds):
     """The driver-local plan: the dataframe loop below, state for state
     and superstep for superstep, on the collected ``(src, dst, weight)``
-    arrays (``local_tail.pagerank_superstep``). Checkpoints are written
+    arrays, its SpMV the block sum kernel. Checkpoints are written
     with the same columns, iterations and meta keys, so either plan
     resumes the other's. Returns ``(result, converged)``."""
     spark = G.edges.sparkSession
@@ -208,6 +194,9 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
             rank = np.full(V, 1.0 / V)
         dangling = float(rank[ows == 0.0].sum())
 
+    # one in-memory dense block over the state indices (P=1), run by
+    # the csr plan's sum kernel every superstep
+    blk = Block(csr_arrays(si, di, w), {"ids": "dense", "hi1": V})
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
 
@@ -220,8 +209,17 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
     for it in range(start_iter, max_iter):
         final_iter = it
         t0 = time.perf_counter()
-        rank, l1, dangling = local_tail.pagerank_superstep(
-            si, di, w, ows, rank, V, alpha, dangling, pnorm)
+        # the dataframe superstep's expressions: rank / ows with a
+        # dangling divisor of 1.0, α·Σ contrib + (dangling·α + 1−α)/V
+        # (·pnorm with personalization), L1 against the previous rank,
+        # the next dangling mass
+        msgs = sum_kernel(blk, (rank / np.where(ows == 0.0, 1.0, ows))[blk.su])
+        contrib = np.zeros(V)
+        contrib[msgs["dst"]] = msgs["contrib"]
+        mass = dangling * alpha + (1.0 - alpha)
+        new = alpha * contrib + (mass / V if pnorm is None else mass * pnorm)
+        l1 = float(np.abs(new - rank).sum())
+        rank, dangling = new, float(new[ows == 0.0].sum())
         if superstep_seconds is not None:
             superstep_seconds.append(time.perf_counter() - t0)
         if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
@@ -261,7 +259,6 @@ def pagerank(
     precomputed_vertex_out_weight: DataFrame | None = None,
     fail_on_nonconvergence: bool = True,
     mode: str = "dataframe",
-    salt: int | None = None,
     num_partitions: int | str | None = None,
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 10,
@@ -312,27 +309,37 @@ def pagerank(
     # is not persisted — the single ows aggregate below is its only
     # other scan. The blocks live until the with-block below exits,
     # after the last action that reads them.
+    drop_gate = own_edges = False
     if mode == "csr":
-        from ..plans.csr_blocks import CsrBlocks
-
         store = CsrBlocks(G, P, block_dir, weighted=True)
         edges = G.edges
     else:
         store = contextlib.nullcontext()
-        e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
-        edges = e.persist(StorageLevel.MEMORY_AND_DISK)
-        # plan choice: counting the persisted frame fills the cache the
-        # distributed loop reads, so the gate adds no O(E) pass above
-        # the cutover; below it the local plan collects from the cache
+        # plan choice: the size gate counts the edge frame as it comes,
+        # persisted (a frame the caller cached is counted from that cache
+        # and stays cached). Below the cutover the local plan collects
+        # from it, with no repartition shuffle; above it the distributed
+        # plan's src-partitioned copy is built from it, so the O(E)
+        # upstream runs once whichever plan follows
         thr = local_tail.LOCAL_TAIL_EDGES
-        if thr > 0 and edges.count() <= thr:
-            collected = local_tail.collect_edges(edges)
-            edges.unpersist()
+        own_gate = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
+        if own_gate:
+            G.edges.persist(StorageLevel.MEMORY_AND_DISK)
+        if thr > 0 and G.edges.count() <= thr:
+            collected = local_tail.collect_edges(G.edges)
+            if own_gate:
+                G.edges.unpersist()
             result, converged = _local_plan(
                 G, collected, alpha, max_iter, tol, personalization, nstart,
                 precomputed_vertex_out_weight, checkpoint, checkpoint_every,
                 resume, superstep_seconds)
             return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
+        e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
+        # a src-partitioned graph's gate cache IS the loop's edge cache;
+        # a caller's cache of it stays cached
+        own_edges = own_gate or e.storageLevel == StorageLevel.NONE
+        edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+        drop_gate = own_gate and edges is not G.edges
     with store as blocks:
         if precomputed_vertex_out_weight is not None:
             _reject_duplicate_vertices(precomputed_vertex_out_weight, "precomputed_vertex_out_weight")
@@ -349,6 +356,13 @@ def pagerank(
             )
         vstate = vstate.repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
         V = vstate.count()
+        if drop_gate:
+            # vstate's count read the vertices from the gate's cache and
+            # filled the partitioned copy from it — unless the out-weights
+            # were given, so it never read the edges
+            if precomputed_vertex_out_weight is not None:
+                edges.count()
+            G.edges.unpersist()
         if V == 0:
             raise ValueError("empty graph")
 
@@ -406,28 +420,18 @@ def pagerank(
             if blocks is not None:
                 # only the O(V) rank vector crosses the Python boundary
                 partials = blocks.map_blocks(
-                    _csr_spmv, "dst long, contrib double", rank_div, value="rank_div"
+                    sum_kernel, "dst long, contrib double", rank_div, value="rank_div"
                 )
                 contribs = partials.groupBy(DST).agg(F.sum("contrib").alias("contrib"))
             else:
                 # broadcast (small V) / shuffle-hash (large V) keeps the
                 # persisted O(E) side unmoved and unsorted every superstep
                 rank_side = vertex_join_side(rank_div, V)
-                joined = edges.join(rank_side, edges[SRC] == rank_side["vertex"])
-                if salt:
-                    from ..plans.skew import salted_sum
-
-                    msgs = joined.select(
-                        F.col(DST), F.col(SRC),
-                        (rank_side["rank_div"] * edges[WGT]).alias("msg"),
-                    )
-                    contribs = salted_sum(
-                        msgs, DST, "msg", out_col="contrib", salt=salt, salt_on=SRC
-                    )
-                else:
-                    contribs = joined.groupBy(DST).agg(
-                        F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib")
-                    )
+                contribs = (
+                    edges.join(rank_side, edges[SRC] == rank_side["vertex"])
+                    .groupBy(DST)
+                    .agg(F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib"))
+                )
 
             # contribs join the PREVIOUS state, so the old rank rides
             # along for the L1 diff without a second join
@@ -505,7 +509,7 @@ def pagerank(
             # (and, in csr mode, before the blocks it reads are removed)
             state = truncate_plan(state.select("vertex", "ows", "rank"), eager=True)
     result = state.select("vertex", F.col("rank").alias("pagerank"))
-    if mode != "csr":
+    if own_edges:
         edges.unpersist()
     vstate.unpersist()
     return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)

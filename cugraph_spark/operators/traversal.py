@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
+from ..plans.csr_blocks import CsrBlocks, min_kernel
 from ..plans.strategy import resolve_partitions
-from .wcc import _csr_min_frontier
 
 
 def bfs_edges(
@@ -76,9 +76,10 @@ def bfs(
     in-neighbor at the level of first reach, exactly as before.
 
     ``mode="csr"`` (round 5): each level's candidate generation runs as
-    the packed-block frontier gather (``plans/csr_blocks.py`` — route
-    the frontier to its block, searchsorted + indptr slices, per-block
-    ``np.minimum.at`` for the min-id predecessor), so a level costs
+    the packed-block frontier gather (``plans/csr_blocks.py:min_kernel``,
+    the kernel WCC's csr supersteps run — route the frontier to its
+    block, searchsorted + indptr slices, one ``np.minimum.at`` for the
+    min-id predecessor), so a level costs
     O(|frontier| + Σ deg(frontier)) with NO O(E) edge-cache probe.
     This is the Spark answer to the reference's direction-optimizing
     switch (``bfs_impl.cuh:202``): bottom-up's purpose there is to
@@ -100,8 +101,6 @@ def bfs(
 
     edges = None
     if mode == "csr":
-        from ..plans.csr_blocks import CsrBlocks
-
         store = CsrBlocks(G, P, block_dir)
         src_frame = G.edges.select(SRC, DST)
     else:
@@ -139,9 +138,12 @@ def bfs(
             depth += 1
             if blocks is not None:
                 # frontier routed to its own blocks; min-id pred gathered
-                # from frontier-adjacent edges only (indptr slices)
+                # from frontier-adjacent edges only (the min kernel's
+                # indptr slices), each vertex sending itself
                 cand = blocks.map_blocks(
-                    _csr_min_frontier("vertex", bound=False),
+                    lambda blk, pdf: min_kernel(
+                        blk, pdf["vertex"].to_numpy(), pdf["vertex"].to_numpy()
+                    ),
                     f"dst {blocks.id_t}, nbr_min {blocks.id_t}",
                     frontier,
                 ).select(DST, F.col("nbr_min").alias(SRC))

@@ -51,15 +51,16 @@ broadcast.
 ``mode="csr"`` (round 5 — the reference's resident-CSR architecture,
 ``graphs.pyx:52-224``, extended from round 4's csr PageRank): edges
 pack ONCE into per-pid mmap CSR blocks (``plans/csr_blocks.py``), and
-every superstep runs the hash-min as a per-block ``np.minimum.at``
-(measured 200M edges/s/core) with only the O(V) label vector crossing
-the Arrow boundary. Frontier supersteps route the delta to its own
-block and gather only frontier-adjacent edges through the indptr — no
-O(E) probe scan, so the frontier threshold is V/2 instead of the
-dataframe mode's V/8. (A per-block announce cache suppressing
-re-emitted minima was built and A/B-rejected in round 5: the hi-sized
-per-superstep array writes cost more than the suppressed partials
-saved — BENCH/BASELINE.md round-5 notes.)
+every superstep runs the hash-min as the block min kernel
+(``csr_blocks.min_kernel``: one ``np.minimum.at``, measured 200M
+edges/s/core; csr BFS runs the same kernel) with only the O(V) label
+vector crossing the Arrow boundary. Frontier supersteps route the
+delta to its own block and gather only frontier-adjacent edges
+through the indptr — no O(E) probe scan, so the frontier threshold is
+V/2 instead of the dataframe mode's V/8. (A per-block announce cache
+suppressing re-emitted minima was built and A/B-rejected in round 5:
+the hi-sized per-superstep array writes cost more than the suppressed
+partials saved — BENCH/BASELINE.md round-5 notes.)
 
 Scale notes: the O(E) edge side is persisted once — hash-partitioned on
 ``src`` only when V exceeds the broadcast cutover (below it the state is
@@ -83,13 +84,13 @@ from ..plans.lineage import truncate_plan
 
 import contextlib
 
-import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
 from ..plans.checkpoint import CheckpointManager
+from ..plans.csr_blocks import CsrBlocks, min_kernel
 from ..plans import strategy
 from ..plans.strategy import vertex_join_side
 
@@ -108,71 +109,6 @@ def _frontier_threshold(V: int, csr: bool) -> int:
     if csr:
         return max(1, min(V // 2, 32_000_000))
     return max(1, min(V // 8, 4_000_000))
-
-
-def _min_by_dst(blk, dst_index, vals, bound: bool):
-    """Reduce per-edge ``vals`` into the block's ``n_dst`` slots with ONE
-    ``np.minimum.at`` (measured 200M edges/s/core on numpy 1.26 — ~10×
-    the JVM join+agg stream it replaces) and emit only TOUCHED slots, so
-    the ``iinfo.max`` init value never leaves the block. ``bound=True``
-    also drops minima that cannot lower a label: ``label(v) ≤ v`` always
-    (init v, min-monotone), so a partial with ``nbr_min ≥ dst`` is
-    provably useless."""
-    none = np.iinfo(blk.id_dtype).max
-    out = np.full(blk.n_dst, none, blk.id_dtype)
-    np.minimum.at(out, dst_index, vals.astype(blk.id_dtype, copy=False))
-    touched = np.flatnonzero(out != none)
-    dsts, mins = blk.dst_ids(touched), out[touched]
-    if bound:
-        keep = mins < dsts
-        dsts, mins = dsts[keep], mins[keep]
-    return {"dst": dsts, "nbr_min": mins}
-
-
-def _csr_min(identity: bool):
-    """Per-block dense hash-min superstep: expand the label slice to
-    per-edge with ``np.repeat`` over the indptr, then one min reduce.
-    ``identity=True`` is superstep 0 (labels(v) = v ⇒ the slice never
-    ships) and emits UNFILTERED so the first state frame covers every
-    vertex."""
-
-    def kernel(blk, labels):
-        lab_src = blk.su if identity else labels
-        return _min_by_dst(
-            blk, blk.dst_index, np.repeat(lab_src, blk.deg), bound=not identity
-        )
-
-    return kernel
-
-
-def _csr_min_frontier(value: str, bound: bool):
-    """Per-block FRONTIER min superstep over a pid's ``[vertex, value]``
-    slice (pid = hash(v) is both the state and the edge key):
-    ``searchsorted`` finds each frontier vertex's src slot and the
-    indptr slices gather ONLY frontier-adjacent edges — the reference's
-    frontier-prims contract (``transform_reduce_v_frontier_outgoing_e_
-    by_dst.cuh`` touches only frontier edges). Cost per superstep:
-    O(|Δ| log |su| + Σ deg(Δ)) — no O(E) probe scan (the dataframe
-    frontier mode's floor, VERDICT r4 'What's missing' #3). WCC sends
-    labels with ``bound=True``; csr BFS sends the vertex itself as a
-    min-id PREDECESSOR, which may exceed dst, so ``bound=False``."""
-
-    def kernel(blk, pdf):
-        dv = pdf["vertex"].to_numpy()
-        dl = pdf[value].to_numpy()
-        pos = np.searchsorted(blk.su, dv)
-        ok = pos < len(blk.su)
-        ok[ok] = blk.su[pos[ok]] == dv[ok]  # frontier vertex may have no edges here
-        pos, dl = pos[ok], dl[ok]
-        starts = blk.indptr[pos]
-        lens = blk.indptr[pos + 1] - starts
-        # multi-range gather of the frontier-adjacent edge offsets; the
-        # mmap'd dst_index is fancy-indexed directly, so only the touched
-        # pages are read
-        offs = np.arange(lens.sum()) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
-        return _min_by_dst(blk, blk.dst_index[offs], np.repeat(dl, lens), bound)
-
-    return kernel
 
 
 def weakly_connected_components(
@@ -290,31 +226,7 @@ def weakly_connected_components(
     blimit = strategy.NARROW_STATE_BROADCAST_LIMIT
     bcast = V <= blimit
 
-    # Edge-side layout per join mode (the repartition, when any, and the
-    # persist both materialize lazily inside the first superstep's
-    # action — zero standalone jobs):
-    #
-    # - shuffle-hash mode (V above the broadcast cutover): hash-partition
-    #   by SRC so the per-superstep edges⋈state join never re-exchanges
-    #   the O(E) side; only the O(V) state moves. The groupBy(dst)
-    #   message aggregation still exchanges up to min(E, P·V) partially-
-    #   combined rows per superstep — at mid-size V that term is ≈E and
-    #   GROWS with P, which is exactly what capped the measured N→4N
-    #   e2e efficiency at 0.39-0.48 in round 2.
-    # - broadcast mode with large V: hash-partition by DST instead. The
-    #   state side broadcasts (src co-location buys nothing), and a
-    #   dst-partitioned edge cache makes BOTH per-superstep exchanges
-    #   vanish: groupBy(dst) runs partition-local (the cache's
-    #   hashpartitioning(dst) satisfies the agg's distribution), and the
-    #   state⋈mins join is co-partitioned (vertex and dst share the hash
-    #   lineage). Per superstep the only data movement is the O(V) state
-    #   broadcast. Costs one up-front O(E) shuffle — the same bytes ONE
-    #   superstep's aggregation exchange would have moved, so it pays
-    #   for itself by superstep 2.
-    # - broadcast mode with small V (< ~1M): scan the cache in place;
-    #   map-side combine already collapses the aggregation exchange to
-    #   ~P·V rows, which is tiny, and the up-front shuffle would cost
-    #   more than it saves.
+    # the edge cache layout per join mode is strategy.narrow_state_edges
     id_t = "int" if compact else "long"
     edges = None
     if mode == "csr":
@@ -331,17 +243,11 @@ def weakly_connected_components(
         # edges A/B'd 2× SLOWER at RMAT-23 (50s vs 24s — the per-batch
         # pandas concat of a streamed partition costs more than the
         # shuffle's one fused Arrow stream) and was deleted.
-        from ..plans.csr_blocks import CsrBlocks
-
         store = CsrBlocks(G, P, block_dir)
     else:
-        if not bcast and (not G.partitioned_on(SRC) or recast):
-            e = e.repartition(P, SRC)
-        elif bcast and V >= strategy.DST_PARTITION_MIN_V and (
-            not G.partitioned_on(DST) or recast
-        ):
-            e = e.repartition(P, DST)
-        edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+        edges = strategy.narrow_state_edges(G, e, V, P, recast).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         store = contextlib.nullcontext()
 
     # every loop path ends in a checking action, so the terminal state
@@ -404,7 +310,9 @@ def weakly_connected_components(
                     # only frontier-adjacent edges via indptr slices — no
                     # O(E) probe scan, no broadcast of the delta
                     msgs = blocks.map_blocks(
-                        _csr_min_frontier("labels", bound=True),
+                        lambda blk, pdf: min_kernel(
+                            blk, pdf["labels"].to_numpy(), pdf["vertex"].to_numpy(), bound=True
+                        ),
                         f"dst {id_t}, nbr_min {id_t}",
                         delta,
                     )
@@ -478,7 +386,8 @@ def weakly_connected_components(
                 if blocks is not None:
                     msgs0 = (
                         blocks.map_blocks(
-                            _csr_min(identity=True), f"dst {id_t}, nbr_min {id_t}"
+                            lambda blk, _: min_kernel(blk, blk.su),
+                            f"dst {id_t}, nbr_min {id_t}",
                         )
                         .groupBy(DST)
                         .agg(F.min("nbr_min").alias("nbr_min"))
@@ -499,7 +408,7 @@ def weakly_connected_components(
                 if blocks is not None:
                     mins = (
                         blocks.map_blocks(
-                            _csr_min(identity=False),
+                            lambda blk, labels: min_kernel(blk, labels, bound=True),
                             f"dst {id_t}, nbr_min {id_t}",
                             state,
                             value="labels",

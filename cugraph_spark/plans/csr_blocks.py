@@ -68,6 +68,14 @@ lifecycle; operators never touch the files. Its contract:
 - leave the ``with`` block only after the operator's last action that
   reads the blocks (lazy plans over them are dead once they are gone).
 
+Two block kernels, one per accumulator, serve every operator (the
+reference's one reduce primitive, ``per_v_transform_reduce_incoming_e``,
+written once for one GPU or many): :func:`sum_kernel` is PageRank's
+SpMV, per pid in the executors and, on one in-memory block built by
+:func:`csr_arrays`, every superstep of the driver-local plan;
+:func:`min_kernel` is WCC's identity, dense and frontier superstep and
+csr BFS's level. Both emit only the dst slots they touched.
+
 Per-task scratch budget: dense-format kernels allocate O(hi) scratch
 per concurrent task. The pack picks dense only below
 ``DENSE_IDS_LIMIT`` = 2^26 ids, where an int32 id array is 256 MB; the
@@ -116,28 +124,40 @@ def _write_atomic(path: str, write) -> None:
     os.replace(tmp, path)
 
 
+def csr_arrays(src, dst, w=None, dense: bool = True) -> dict:
+    """The block arrays of one edge set (module docstring layout):
+    edges sorted by src (stable), ``su`` + ``indptr``, the dst side as
+    ``dr`` (dense) or ``du`` + ``dc`` (dict), and ``w`` when given. The
+    pack writes them per pid; the driver-local PageRank wraps them in
+    an in-memory :class:`Block`."""
+    order = np.argsort(src, kind="stable")  # radix on int32/64
+    src, dst = src[order], dst[order]
+    su, counts = np.unique(src, return_counts=True)
+    arrays = {
+        "su": su,
+        "indptr": np.concatenate(([0], np.cumsum(counts))).astype(np.int64),
+    }
+    if dense:
+        arrays["dr"] = dst
+    else:
+        du, dc = np.unique(dst, return_inverse=True)
+        arrays["du"], arrays["dc"] = du, dc.astype(np.int32)
+    if w is not None:
+        arrays["w"] = np.asarray(w, np.float64)[order]
+    return arrays
+
+
 def _pack_fn(block_dir: str, weighted: bool, dense: bool):
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["pid"].iloc[0])
         src = pdf["src"].to_numpy()
         dst = pdf["dst"].to_numpy()
-        order = np.argsort(src, kind="stable")  # radix on int32/64
-        src, dst = src[order], dst[order]
-        su, counts = np.unique(src, return_counts=True)
-        arrays = {
-            "su": su,
-            "indptr": np.concatenate(([0], np.cumsum(counts))).astype(np.int64),
-        }
-        if dense:
-            arrays["dr"] = dst
-        else:
-            du, dc = np.unique(dst, return_inverse=True)
-            arrays["du"], arrays["dc"] = du, dc.astype(np.int32)
-        if weighted:
-            arrays["w"] = pdf["weight"].to_numpy(np.float64)[order]
+        w = pdf["weight"].to_numpy(np.float64) if weighted else None
+        arrays = csr_arrays(src, dst, w, dense)
         base = os.path.join(block_dir, str(pid))
         for name, arr in arrays.items():
             _write_atomic(f"{base}.{name}.npy", lambda f, a=arr: np.save(f, a))
+        su = arrays["su"]
         return pd.DataFrame(
             {
                 "pid": [pid],
@@ -338,6 +358,64 @@ class Block:
         if self._du is None:
             return touched.astype(self.id_dtype, copy=False)
         return self._du[touched]
+
+
+def sum_kernel(blk: Block, x) -> dict:
+    """The sum kernel: ``x`` (one value per ``blk.su`` entry) expands to
+    per-edge with ``np.repeat`` over the degrees, times ``w``, and ONE
+    ``np.bincount`` sums it into the dst slots — the SpMV and its
+    in-block partial combine. Emits only slots with a nonzero sum: an
+    absent dst reads as 0.0 downstream, and dropping exact zeros leaves
+    every sum bit-identical."""
+    contrib = np.bincount(
+        blk.dst_index, weights=np.repeat(x, blk.deg) * blk.w, minlength=blk.n_dst
+    )
+    touched = np.flatnonzero(contrib)
+    return {"dst": blk.dst_ids(touched), "contrib": contrib[touched]}
+
+
+def min_kernel(blk: Block, x, srcs=None, bound: bool = False) -> dict:
+    """The min kernel: each src's value goes to the dsts of its edges and
+    ONE ``np.minimum.at`` reduces them into the dst slots (measured 200M
+    edges/s/core on numpy 1.26, ~10× the JVM join+agg stream it
+    replaces).
+
+    - ``srcs=None``: ``x`` is aligned with ``blk.su`` and every edge
+      sends (a dense superstep; WCC's identity superstep 0 passes
+      ``blk.su`` itself);
+    - ``srcs`` given: a frontier, ``x[i]`` the value of ``srcs[i]``.
+      ``searchsorted`` finds their src slots (a frontier vertex may have
+      no edges in this block) and indptr slices gather ONLY the
+      frontier's edges: O(|Δ| log |su| + Σ deg(Δ)), no O(E) scan — the
+      reference's ``transform_reduce_v_frontier_outgoing_e_by_dst``.
+
+    Emits only TOUCHED slots, so the ``iinfo.max`` init never leaves the
+    block. ``bound=True`` also drops minima ``>= dst``: a WCC label
+    never exceeds its vertex, so those cannot lower one. BFS sends each
+    frontier vertex as a min-id predecessor, which may exceed dst, so
+    it keeps them."""
+    if srcs is None:
+        dst_index, vals = blk.dst_index, np.repeat(x, blk.deg)
+    else:
+        pos = np.searchsorted(blk.su, srcs)
+        ok = pos < len(blk.su)
+        ok[ok] = blk.su[pos[ok]] == srcs[ok]
+        pos, x = pos[ok], x[ok]
+        starts = blk.indptr[pos]
+        lens = blk.indptr[pos + 1] - starts
+        # multi-range gather of the frontier's edge offsets; the mmap'd
+        # dst_index is fancy-indexed, so only touched pages are read
+        offs = np.arange(lens.sum()) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
+        dst_index, vals = blk.dst_index[offs], np.repeat(x, lens)
+    none = np.iinfo(blk.id_dtype).max
+    out = np.full(blk.n_dst, none, blk.id_dtype)
+    np.minimum.at(out, dst_index, vals.astype(blk.id_dtype, copy=False))
+    touched = np.flatnonzero(out != none)
+    dsts, mins = blk.dst_ids(touched), out[touched]
+    if bound:
+        keep = mins < dsts
+        dsts, mins = dsts[keep], mins[keep]
+    return {"dst": dsts, "nbr_min": mins}
 
 
 def _block_task(block_dir: str, meta: dict, manifest: dict, kernel, schema: str, value):

@@ -23,12 +23,11 @@ comparisons, and the update expressions mirror the distributed column
 expressions operation-for-operation. ``tests/test_local_tail.py`` pins
 local == distributed on several graphs per operator.
 
-PageRank is the one exception. Its ranks are fractional sums whose last
-bits depend on summation order (``bincount`` here, Spark's
-partial-aggregation tree there), so its contract is **tolerance-equal
-(1e-12 in the tests) with the same superstep count**, the same output
-schema and interchangeable checkpoints — not bit-identical. Every other
-tail stays bit-identical.
+PageRank's driver-local plan has no twin here: it runs the csr plan's
+sum kernel on one in-memory block (``plans/csr_blocks.py``), and its
+tolerance-equal contract is stated with the plan in
+``operators/pagerank.py``. It shares only the cutover and
+:func:`collect_edges`.
 
 Threshold: ``LOCAL_TAIL_EDGES`` (default 150k edge rows ≈ a few MB on
 the driver — far below the footprint of collecting a query result).
@@ -382,38 +381,3 @@ def core_number_local(
                 cur_deg[j] -= 1
                 heapq.heappush(heap, (int(cur_deg[j]), int(j)))
     return pd.DataFrame({"vertex": vsort, "core_number": core})
-
-
-# ---------------------------------------------------------------------------
-# PageRank power iteration
-# ---------------------------------------------------------------------------
-
-def pagerank_superstep(
-    si: np.ndarray,
-    di: np.ndarray,
-    w: np.ndarray,
-    ows: np.ndarray,
-    rank: np.ndarray,
-    n_vertices: int,
-    alpha: float,
-    dangling: float,
-    pnorm: np.ndarray | None = None,
-):
-    """Local twin of one dataframe-plan PageRank superstep
-    (``operators/pagerank.py``) over state arrays indexed by ``si`` /
-    ``di``. Same expressions: ``rank / ows`` with a dangling divisor of
-    1.0; ``alpha·Σ contrib + (dangling·α + 1−α)/V``, or
-    ``·pnorm`` with personalization; L1 against the previous rank; the
-    next dangling mass over ``ows == 0``. Returns
-    ``(rank, l1, dangling)``. Tolerance-equal, not bit-identical: the
-    per-dst sums run in ``bincount`` order, not Spark's
-    partial-aggregation order."""
-    rank_div = rank / np.where(ows == 0.0, 1.0, ows)
-    contrib = np.bincount(di, weights=rank_div[si] * w, minlength=len(rank))
-    mass = dangling * alpha + (1.0 - alpha)
-    if pnorm is None:
-        new = alpha * contrib + mass / n_vertices
-    else:
-        new = alpha * contrib + mass * pnorm
-    l1 = float(np.abs(new - rank).sum())
-    return new, l1, float(new[ows == 0.0].sum())

@@ -11,10 +11,6 @@ AQE skew-join splitting already give — are:
 
 - **hub detection** (:func:`hub_vertices`): the degree-threshold split,
   the direct analog of the reference's segment thresholds;
-- **two-phase salted aggregation** (:func:`salted_sum`): the SpMV's
-  ``groupBy(dst).sum`` becomes ``groupBy(dst, salt).sum`` →
-  ``groupBy(dst).sum`` so a hub's messages land on ``salt`` reduce
-  tasks instead of one. Used by PageRank when ``salt`` is set;
 - **salted common-neighbor self-join** (:func:`salted_common_neighbor_join`):
   pair-generation joins (similarity, hypergraph-direct) fan out
   Σ d(w)² on a hot shared neighbor w; the hub-w rows are split into
@@ -50,42 +46,6 @@ def hub_vertices(
         .filter(F.col("_d") > threshold)
         .select(key)
     )
-
-
-def salted_sum(
-    df: DataFrame,
-    key: str,
-    value_col: str,
-    out_col: str | None = None,
-    salt: int = 16,
-    salt_on: str | None = None,
-) -> DataFrame:
-    """Two-phase ``groupBy(key).sum(value)`` with an intermediate salted
-    reduce: phase 1 groups on (key, hash(salt_on) % salt) so a hub key's
-    rows spread over ``salt`` tasks; phase 2 combines the ≤salt partials
-    per key. Bit-wise nondeterminism of float addition order is the same
-    class Spark's own partial aggregation already has.
-
-    ``salt_on``: column whose hash picks the salt bucket (e.g. the
-    message's *source* vertex — deterministic, so the split is stable
-    across partitionings). Default: hash of all non-key columns PLUS
-    the map-partition id — the value columns alone can be constant
-    (e.g. lit(1.0) count messages), which would collapse every row of
-    a hub into ONE salt bucket and defeat the salting. Folding in the
-    partition id keeps the spread (phase 1's map-side combine already
-    reduces each map partition to ≤1 partial per (key, salt), so the
-    final SUM is unchanged — bucket placement never affects it)."""
-    out_col = out_col or value_col
-    if salt_on is not None:
-        sexpr = F.pmod(F.xxhash64(F.col(salt_on)), F.lit(salt))
-    else:
-        other = [F.col(c) for c in df.columns if c != key]
-        sexpr = F.pmod(F.xxhash64(*other, F.spark_partition_id()), F.lit(salt))
-    phase1 = (
-        df.groupBy(F.col(key), sexpr.alias("_salt"))
-        .agg(F.sum(value_col).alias("_partial"))
-    )
-    return phase1.groupBy(key).agg(F.sum("_partial").alias(out_col))
 
 
 def salted_common_neighbor_join(

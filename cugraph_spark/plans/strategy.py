@@ -68,6 +68,39 @@ NARROW_STATE_BROADCAST_LIMIT = 24_000_000
 DST_PARTITION_MIN_V = 1_000_000
 
 
+def narrow_state_edges(G, e: DataFrame, V: int, P: int, recast: bool = False) -> DataFrame:
+    """The edge cache layout of a narrow-state operator (WCC, LPA), read
+    from the two cutovers above at call time:
+
+    - V above ``NARROW_STATE_BROADCAST_LIMIT`` (shuffle-hash state):
+      partition by ``src``, so the per-superstep edges⋈state join never
+      re-exchanges the O(E) side; only the O(V) state moves. The
+      groupBy(dst) aggregation still exchanges up to min(E, P·V)
+      partially-combined rows per superstep;
+    - broadcast state and V >= ``DST_PARTITION_MIN_V``: partition by
+      ``dst``. The state broadcasts, so src co-location buys nothing,
+      and both per-superstep exchanges vanish: the dst-keyed
+      aggregations run partition-local and the state⋈messages join is
+      co-partitioned. The one up-front O(E) shuffle moves the bytes of
+      one superstep's aggregation exchange, so it pays for itself by
+      superstep 2;
+    - otherwise (broadcast state, small V) scan ``e`` in place:
+      map-side combine already shrinks the aggregation exchange to
+      ~P·V rows, less than the up-front shuffle would cost.
+
+    A graph already partitioned on the key keeps its layout unless
+    ``recast`` says the id columns were rewritten (a long→int cast voids
+    a declared bucket layout). The repartition, like the caller's
+    persist, runs lazily inside the first superstep's action."""
+    if V > NARROW_STATE_BROADCAST_LIMIT:
+        key = "src"
+    elif V >= DST_PARTITION_MIN_V:
+        key = "dst"
+    else:
+        return e
+    return e.repartition(P, key) if recast or not G.partitioned_on(key) else e
+
+
 def vertex_join_side(state: DataFrame, n_vertices: int | None,
                      limit: int = BROADCAST_VERTEX_LIMIT) -> DataFrame:
     """Wrap the O(V) side of an edges⋈state join with the right

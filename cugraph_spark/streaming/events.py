@@ -26,7 +26,8 @@ Scale notes (100 TB target):
   O(V) not O(E), the same budget as a PageRank rank vector. Hub
   detection is the streaming feed for the skew plans
   (``plans/skew.py``): hubs crossing the degree threshold are exactly
-  the vertices the salted SpMV wants enumerated ahead of time.
+  the keys the salted common-neighbor join wants enumerated ahead of
+  time.
 """
 
 from __future__ import annotations

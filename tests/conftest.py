@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import importlib
 import sys
 from pathlib import Path
 
@@ -61,20 +62,23 @@ def tail_plan(monkeypatch):
     driver-local tail cutover (``local_tail.LOCAL_TAIL_EDGES``) so high
     that every test graph takes the local plan; ``"distributed"`` sets
     it to 0, so none does. ``calls`` records the name of every
-    driver-local kernel (``*_local``, ``pagerank_superstep``) the block
-    ran, which proves the plan."""
+    driver-local kernel (``local_tail.*_local``) and driver-local
+    PageRank run (``pagerank._local_plan``) the block ran, which proves
+    the plan."""
     from cugraph_spark.plans import local_tail
 
-    kernels = [n for n in vars(local_tail) if n.endswith("_local")]
-    kernels.append("pagerank_superstep")
+    # the package re-exports the pagerank function under the module's name
+    pagerank = importlib.import_module("cugraph_spark.operators.pagerank")
+    spied = [(local_tail, n) for n in vars(local_tail) if n.endswith("_local")]
+    spied.append((pagerank, "_local_plan"))
 
     @contextlib.contextmanager
     def plan(name):
         calls: list = []
         with monkeypatch.context() as m:
             m.setattr(local_tail, "LOCAL_TAIL_EDGES", {"local": 10**9, "distributed": 0}[name])
-            for k in kernels:
-                m.setattr(local_tail, k, functools.partial(_spy, calls, k, getattr(local_tail, k)))
+            for mod, k in spied:
+                m.setattr(mod, k, functools.partial(_spy, calls, k, getattr(mod, k)))
             yield calls
 
     return plan
@@ -84,7 +88,7 @@ def tail_plan(monkeypatch):
 def distributed_tail(tail_plan):
     """Force every operator's distributed plan for the whole test (no
     graph takes a driver-local tail). For tests of distributed-only
-    machinery (chaining, salting, partitioning, the csr-vs-dataframe
+    machinery (chaining, partitioning, the csr-vs-dataframe
     comparisons)."""
     with tail_plan("distributed"):
         yield

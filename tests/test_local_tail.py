@@ -17,7 +17,9 @@ superstep count and output schema.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from cugraph_spark.graph import Graph
@@ -25,6 +27,7 @@ from cugraph_spark.operators.community import ecg, leiden, louvain
 from cugraph_spark.operators.cores import core_number
 from cugraph_spark.operators.mis import maximal_independent_set, vertex_coloring
 from cugraph_spark.operators.pagerank import FailedToConvergeError, pagerank
+from cugraph_spark.plans import local_tail
 from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.plans.xxh64 import pmod2, xxhash64
 
@@ -227,7 +230,7 @@ def _pagerank_plans(tail_plan, G, **kw):
             res = pagerank(G, superstep_seconds=ss, **kw)
         df, conv = res if isinstance(res, tuple) else (res, None)
         # the plan that was asked for is the plan that ran
-        assert len(calls) == (len(ss) if plan == "local" else 0), plan
+        assert len(calls) == (1 if plan == "local" else 0), plan
         out[plan] = ({r.vertex: r.pagerank for r in df.collect()}, len(ss), df.schema, conv)
     return out
 
@@ -329,8 +332,9 @@ def test_pagerank_local_errors_match_distributed(spark, tail_plan):
 def test_pagerank_local_plan_runs_one_collect(spark):
     """The point of the local plan: a converged run costs a fixed
     handful of Spark jobs — the size gate's count of the persisted edge
-    frame (with its shuffle stages) and one collect from that cache —
-    not ~6 jobs per superstep."""
+    frame (four jobs: the constructor's dedup and the count's stages,
+    no repartition shuffle) and one collect from that cache — not ~6
+    jobs per superstep."""
     G = _directed(spark, "directed_asym")
     sc = spark.sparkContext
     sc.setJobGroup("pagerank_local_jobs", "job count")
@@ -341,4 +345,52 @@ def test_pagerank_local_plan_runs_one_collect(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(ss) > 10
-    assert len(jobs) <= 6, jobs
+    assert len(jobs) <= 5, jobs
+
+
+@pytest.mark.parametrize("given_ows", [False, True])
+def test_pagerank_gate_scans_source_once(spark, tail_plan, plan_cutover, given_ows):
+    """Just above the cutover the size gate's count, the src-partitioned
+    copy the distributed plan builds from the gate's cache and the
+    vertex state all read ONE scan of the source: a row counter in the
+    source shows each source row read once in the whole call — also
+    when precomputed out-weights mean the vertex state never reads the
+    edges."""
+    n = 600
+    scanned = spark.sparkContext.accumulator(0)
+
+    def source(batches):
+        for pdf in batches:
+            scanned.add(len(pdf))
+            ids = pdf["id"].to_numpy()
+            yield pd.DataFrame({"src": ids % 97, "dst": (ids * 7 + 1) % 97, "weight": 1.0})
+
+    e = spark.range(n, numPartitions=4).mapInPandas(source, "src long, dst long, weight double")
+    G = Graph(e, directed=True)  # the multi-edge dedup shuffles the source
+    ids = np.arange(n)
+    n_edges = len(set(zip(ids % 97, (ids * 7 + 1) % 97)))
+    kw = {}
+    if given_ows:
+        kw["precomputed_vertex_out_weight"] = spark.createDataFrame(
+            [(v, 1.0) for v in range(97)], "vertex long, ows double")
+    with tail_plan("distributed") as calls:
+        with plan_cutover(local_tail, "LOCAL_TAIL_EDGES", n_edges - 1):
+            ranks = pagerank(G, tol=1e-6, max_iter=100, **kw).collect()
+    assert not calls and len(ranks) == 97
+    assert scanned.value == n
+
+
+@pytest.mark.parametrize("plan", ["local", "distributed"])
+def test_pagerank_keeps_callers_edge_cache(spark, tail_plan, plan):
+    """A caller's cache of the edge frame outlives the call on both
+    plans, also for a src-partitioned graph, whose edge frame the
+    distributed plan reads in place."""
+    e = spark.createDataFrame(make_edges("directed_asym"), "src long, dst long, weight double")
+    G = Graph(e, directed=True, multi_edge=True, pre_partitioned=True)
+    G.edges.persist()
+    try:
+        with tail_plan(plan):
+            pagerank(G, tol=1e-6).count()
+        assert G.edges.storageLevel != StorageLevel.NONE
+    finally:
+        G.edges.unpersist()

@@ -231,13 +231,12 @@ def test_pagerank_csr_missing_block_raises(spark, tmp_path):
 
     import pandas as pd
 
-    from cugraph_spark.operators.pagerank import _csr_spmv
-    from cugraph_spark.plans.csr_blocks import CsrBlocks
+    from cugraph_spark.plans.csr_blocks import CsrBlocks, sum_kernel
 
     G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
     P = 64  # more pids than vertices: some pids hold no edges
     with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=True) as blocks:
-        fn = blocks.task(_csr_spmv, "dst long, contrib double", value="rank_div")
+        fn = blocks.task(sum_kernel, "dst long, contrib double", value="rank_div")
         listed = next(iter(blocks.manifest))
         os.remove(os.path.join(blocks.block_dir, f"{listed}.su.npy"))
         pdf = pd.DataFrame({"pid": [listed], "vertex": [1], "rank_div": [1.0]})

@@ -1,21 +1,15 @@
-"""Explicit hub salting (plans/skew.py): result-equivalence with the
-unsalted plans on a hub-heavy graph, hub detection, and the salted plan
-actually taking the salted path (reference analog: degree segments at
+"""Explicit hub salting (plans/skew.py): hub detection and
+result-equivalence of the salted common-neighbor join with the unsalted
+plans on a hub-heavy graph (reference analog: degree segments at
 renumber_edgelist_impl.cuh:538-565)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cugraph_spark.graph import Graph
-from cugraph_spark.operators.pagerank import pagerank
 from cugraph_spark.operators.similarity import jaccard
-from cugraph_spark.plans.skew import (
-    hub_vertices,
-    salted_common_neighbor_join,
-    salted_sum,
-)
+from cugraph_spark.plans.skew import hub_vertices, salted_common_neighbor_join
 
 from .conftest import edges_df, make_edges
 
@@ -26,17 +20,6 @@ def test_hub_vertices_threshold(spark):
     hubs = {r["dst"] for r in hub_vertices(e, "dst", threshold=5).collect()}
     assert hubs == {v for v, c in degs.items() if c > 5}
     assert hubs  # the fixture actually has a hub
-
-
-def test_salted_sum_equals_plain(spark):
-    e = edges_df(spark, make_edges("hub"))
-    msgs = e.select("dst", "src", F.col("weight").alias("msg"))
-    plain = {r["dst"]: r["m"] for r in msgs.groupBy("dst").agg(F.sum("msg").alias("m")).collect()}
-    salted = {r["dst"]: r["msg"]
-              for r in salted_sum(msgs, "dst", "msg", salt=4, salt_on="src").collect()}
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert abs(plain[k] - salted[k]) < 1e-9
 
 
 def test_salted_common_neighbor_join_equals_plain(spark):
@@ -57,19 +40,6 @@ def test_salted_common_neighbor_join_equals_plain(spark):
     assert plain == salted
 
 
-@pytest.mark.parametrize("salt", [4])
-def test_pagerank_salted_equals_plain(spark, salt, distributed_tail):
-    edges = make_edges("hub")
-    G = Graph(edges_df(spark, edges), directed=True)
-    base = {r["vertex"]: r["pagerank"]
-            for r in pagerank(G, tol=1e-8, max_iter=100).collect()}
-    got = {r["vertex"]: r["pagerank"]
-           for r in pagerank(G, tol=1e-8, max_iter=100, salt=salt).collect()}
-    assert set(base) == set(got)
-    for v in base:
-        assert abs(base[v] - got[v]) < 1e-9
-
-
 def test_jaccard_salted_equals_plain(spark):
     edges = make_edges("hub")
     G = Graph(edges_df(spark, edges), directed=False)
@@ -79,28 +49,3 @@ def test_jaccard_salted_equals_plain(spark):
     assert set(base) == set(got)
     for k in base:
         assert abs(base[k] - got[k]) < 1e-12
-
-
-def test_salted_plan_shape(spark):
-    """The salted SpMV plan contains the two-phase aggregate: a first
-    HashAggregate keyed on (dst, _salt) then a final one on dst."""
-    e = edges_df(spark, make_edges("hub"))
-    msgs = e.select("dst", "src", F.col("weight").alias("msg"))
-    plan = salted_sum(msgs, "dst", "msg", salt=4, salt_on="src")._jdf.queryExecution().simpleString()
-    # phase-1 grouping key carries the salt expression; Catalyst renames
-    # the _salt alias to _groupingexpression in the physical plan
-    assert "pmod(xxhash64" in plan
-    assert plan.count("HashAggregate") >= 2
-
-
-def test_salted_sum_constant_messages(spark):
-    # constant value columns (e.g. lit(1.0) count messages) used to
-    # hash every hub row into ONE salt bucket; the default salt now
-    # folds in the map-partition id, and the sum is unchanged
-    e = edges_df(spark, make_edges("hub"))
-    msgs = e.select("dst", F.lit(1.0).alias("msg")).repartition(4)
-    plain = {r["dst"]: r["m"]
-             for r in msgs.groupBy("dst").agg(F.sum("msg").alias("m")).collect()}
-    salted = {r["dst"]: r["msg"]
-              for r in salted_sum(msgs, "dst", "msg", salt=4).collect()}
-    assert plain == salted

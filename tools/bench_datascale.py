@@ -44,6 +44,7 @@ def main() -> None:
         rows.append(
             {
                 "scale": scale,
+                "plan": r["plan"],
                 "n_edges": r["n_edges"],
                 "steady_median_sec": round(r["steady_median_sec"], 2),
                 "edges_per_sec_per_superstep": round(

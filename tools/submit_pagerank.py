@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--max-iter", type=int, default=100)
     ap.add_argument("--checkpoint", default=None, help="superstep checkpoint dir (exact resume mid-run)")
     ap.add_argument("--resume", action="store_true", help="resume from the latest committed superstep under --checkpoint")
-    ap.add_argument("--salt", type=int, default=None, help="explicit hub-salt fanout (default: planner decides)")
     args = ap.parse_args()
     if args.resume and args.checkpoint is None:
         # silently restarting a multi-hour job from iteration 0 is the
@@ -79,7 +78,6 @@ def main() -> None:
         max_iter=args.max_iter,
         checkpoint=ckpt,
         resume=args.resume,
-        salt=args.salt,
     )
     ranks.write.mode("overwrite").parquet(args.out)
     print(f"wrote {args.out}")
