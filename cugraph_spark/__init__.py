@@ -8,6 +8,10 @@ work runs in Arrow-vectorized pandas UDFs; skew/partitioning/shuffle
 are handled explicitly for 100 TB-scale inputs.
 """
 
+from . import zipcache
+
+zipcache.install()
+
 from .graph import (  # noqa: F401
     Graph,
     relabel,

@@ -32,54 +32,57 @@ so the local plan ignores them.
 
 - driver-local (``mode="dataframe"``, small graphs): one collect of
   ``(src, dst, weight)`` into ONE in-memory dense block (P=1, edges
-  mapped to state indices, built by the pack's
-  ``csr_blocks.csr_arrays``), then the whole power iteration in numpy,
-  each superstep's SpMV the csr plan's own ``csr_blocks.sum_kernel`` —
-  the reference building one ``*_impl.cuh`` for one GPU or many.
-  Every distributed superstep costs ~6 Spark jobs and 0.5-1.2 s of
-  driver time whatever E is; on a 6.7k-edge code graph that was 82
-  jobs for 14 supersteps. The local plan keeps the dataframe
-  expressions around the kernel and every contract: the same
-  superstep count (one ``superstep_seconds`` entry each), ranks equal
-  to tolerance (1e-12 in the tests; sums run in ``bincount`` order,
-  not Spark's partial-aggregation order, so not bit-identical), the
-  same output schema, and checkpoints with the same columns,
-  iterations and meta keys, so a run checkpointed by one plan resumes
-  on the other.
+  mapped to state indices, built transposed — keyed by dst — by the
+  pack's ``csr_blocks.csr_arrays``), then the whole power iteration in
+  numpy, each superstep's SpMV the csr plan's own pull
+  ``csr_blocks.sum_kernel`` — the reference building one
+  ``*_impl.cuh`` for one GPU or many. Every distributed dataframe
+  superstep costs ~6 Spark jobs and 0.5-1.2 s of driver time whatever
+  E is; on a 6.7k-edge code graph that was 82 jobs for 14 supersteps.
+  The local plan keeps the dataframe expressions around the kernel and
+  every contract: the same superstep count (one ``superstep_seconds``
+  entry each), ranks equal to tolerance (1e-12 in the tests; sums run
+  in segment order, not Spark's partial-aggregation order, so not
+  bit-identical), the same output schema, and checkpoints with the
+  same columns, iterations and meta keys, so a run checkpointed by one
+  plan resumes on another.
 - ``mode="dataframe"`` above the cutover: pure Catalyst plan. Edges
   are hash-partitioned on ``src`` ONCE and persisted; each superstep
   joins the O(V) rank vector against them (only the small side
   re-shuffles — exchange reuse keeps the O(E) side in place), then
   ``groupBy(dst).sum`` with map-side partial aggregation (Spark's
   analog of the reference's ``reduce_op::plus`` shuffle combine).
-- ``mode="csr"``: the north-star architecture — edges hash-partitioned
-  by ``pid = hash(src) % P`` into per-partition CSR blocks built ONCE
-  by the shared block store (``plans/csr_blocks.py:CsrBlocks`` —
-  src-sorted indptr layout, dense-id or dictionary dst format,
-  weights), then each superstep ships ONLY the O(V) rank vector
-  through the Python boundary: the store's per-pid task maps ranks
-  onto the block's srcs and runs the sum kernel
-  (``csr_blocks.sum_kernel``: one ``np.bincount``, the in-UDF
-  partial combine), followed by the
-  shuffle-based ``(dst, partial)`` message exchange. The O(E) side
-  never crosses the Arrow boundary again after setup
-  (``np.load(mmap_mode='r')`` reads the page-cache-resident block),
-  the Spark analog of cuGraph keeping the CSR on-GPU across
-  iterations with ``per_v_transform_reduce_incoming_e`` + NCCL
-  combine. On a multi-node cluster ``block_dir`` must be a shared
-  filesystem (HDFS-fuse/NFS/EFS); the pack manifest travels with the
-  readers, and a manifest-listed block missing at read time (torn
-  deployment, non-shared dir) or a rank slice not covering a block's
-  srcs (stale blocks) RAISES — never a silent zero contribution.
-  A fixed-iteration run (tol=0.0) takes the zero-action loop here too:
-  after the one pack job the whole superstep chain executes inside the
-  terminal action.
+- ``mode="csr"``: the reference's loop shape — the superstep loop over
+  a transposed (CSC, ``store_transposed``) graph with only a scalar
+  all-reduce between supersteps. The block store
+  (``plans/csr_blocks.py:CsrBlocks``) packs or reuses per-pid CSR
+  blocks, and its dst-keyed view (``CsrBlocks.transposed``: an
+  undirected graph's own blocks, a directed graph's ``T/`` sub-store,
+  packed once) holds each pid's in-edges. The rank vector never enters
+  a Catalyst plan: ONE setup job routes the side inputs by pid and
+  writes per-pid ``(vertex, ows, rank, x = rank/ows[, pnorm])`` slices
+  beside the blocks (``csr_blocks.VertexSlices``, out-weights summed
+  from the src-keyed blocks), then each superstep is ONE map job over
+  the P pids with no exchange: each task reads every pid's ``x`` slice
+  into one O(V) vector, sums its own vertices' in-edges with the pull
+  kernel, writes its new slices and returns one ``(l1, dangling)`` row
+  that the driver adds up. Costs: each task reads O(V) state per
+  superstep (page cache on one box, P·V bytes over shared storage on a
+  cluster), and a directed graph stores its blocks twice. On a
+  multi-node cluster ``block_dir`` must be a shared filesystem
+  (HDFS-fuse/NFS/EFS); a manifest-listed block missing at read time
+  (torn deployment, non-shared dir), a missing state slice, or a slice
+  not covering a block's keys (stale blocks) RAISES — never a silent
+  zero contribution. Checkpoints are written from the slices; the
+  result is materialized before the slices are removed.
 
-Scale notes: one Spark action per convergence-checked superstep (the
-combined L1-diff + next-dangling agg is the ``host_scalar_allreduce``
-analog, pagerank_impl.cuh:321-330), none on a fixed-iteration run;
-state checkpoints to parquet/Iceberg every ``checkpoint_every``
-supersteps for exact resume + lineage truncation.
+Scale notes: one Spark action per convergence-checked superstep on
+every distributed plan (the L1-diff + next-dangling reduce is the
+``host_scalar_allreduce`` analog, pagerank_impl.cuh:321-330); a
+fixed-iteration dataframe run (tol=0, no checkpoint) runs none, and
+the csr plan's one job per superstep is that action. State checkpoints
+to parquet/Iceberg every ``checkpoint_every`` supersteps for exact
+resume + lineage truncation.
 Hub skew on ``dst`` is handled by map-side partial aggregation plus AQE
 skew handling.
 """
@@ -88,7 +91,6 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
-import contextlib
 import time
 
 import numpy as np
@@ -101,7 +103,20 @@ from pyspark import StorageLevel
 from ..graph import DST, SRC, WGT, Graph
 from ..plans import local_tail
 from ..plans.checkpoint import CheckpointManager
-from ..plans.csr_blocks import Block, CsrBlocks, csr_arrays, sum_kernel
+from ..plans.csr_blocks import (
+    Block,
+    BlockFiles,
+    CsrBlocks,
+    VertexSlices,
+    csr_arrays,
+    drop_slices,
+    load_slice,
+    positions_of,
+    save_slice,
+    segment_sum,
+    state_values_for_srcs,
+    sum_kernel,
+)
 from ..plans.strategy import vertex_join_side
 
 
@@ -131,8 +146,7 @@ def _per_vertex(df: DataFrame, col: str, vertices: np.ndarray, name: str):
     pdf = df.select(F.col("vertex").cast("long"), F.col(col).cast("double")).toPandas()
     if pdf["vertex"].duplicated().any():
         raise _duplicate_vertices_error(name)
-    vals = pd.Series(pdf[col].to_numpy(), index=pdf["vertex"].to_numpy())
-    return vals.reindex(vertices).fillna(0.0).to_numpy(), vals.sum()
+    return _column(pdf, col, vertices), pdf[col].sum()
 
 
 def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
@@ -194,9 +208,10 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
             rank = np.full(V, 1.0 / V)
         dangling = float(rank[ows == 0.0].sum())
 
-    # one in-memory dense block over the state indices (P=1), run by
-    # the csr plan's sum kernel every superstep
-    blk = Block(csr_arrays(si, di, w), {"ids": "dense", "hi1": V})
+    # one in-memory dense block over the state indices (P=1), built
+    # transposed (keyed by dst), run by the csr plan's pull sum kernel
+    # every superstep
+    blk = Block(csr_arrays(di, si, w), {"ids": "dense", "hi1": V})
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
 
@@ -213,9 +228,8 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
         # dangling divisor of 1.0, α·Σ contrib + (dangling·α + 1−α)/V
         # (·pnorm with personalization), L1 against the previous rank,
         # the next dangling mass
-        msgs = sum_kernel(blk, (rank / np.where(ows == 0.0, 1.0, ows))[blk.su])
         contrib = np.zeros(V)
-        contrib[msgs["dst"]] = msgs["contrib"]
+        contrib[blk.su] = sum_kernel(blk, _divided(rank, ows))
         mass = dangling * alpha + (1.0 - alpha)
         new = alpha * contrib + (mass / V if pnorm is None else mass * pnorm)
         l1 = float(np.abs(new - rank).sum())
@@ -234,6 +248,182 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
     result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
     result = spark.createDataFrame(
         pd.DataFrame({"vertex": verts, "pagerank": rank}), result_schema)
+    return result, converged
+
+
+def _normalized(df: DataFrame, name: str, col: str) -> DataFrame:
+    """``(vertex, col)`` of a per-vertex input: its ``values`` over their
+    sum, the sum taken over the WHOLE frame (rows for vertices outside
+    the graph included). Refuses duplicate rows and a sum ``<= 0``."""
+    _reject_duplicate_vertices(df, name)
+    vals = df.select("vertex", F.col("values").cast("double").alias(col))
+    total = vals.agg(F.sum(col)).first()[0]
+    if not total or total <= 0:
+        raise ValueError(f"{name} values must sum to > 0")
+    return vals.select("vertex", (F.col(col) / F.lit(total)).alias(col))
+
+
+def _column(rows: pd.DataFrame, col: str, verts: np.ndarray) -> np.ndarray:
+    """``rows[col]`` on ``verts``, 0.0 where a vertex has no value."""
+    r = rows[rows[col].notna()]
+    vals = pd.Series(r[col].to_numpy(np.float64), index=r["vertex"].to_numpy())
+    return vals.reindex(verts).fillna(0.0).to_numpy()
+
+
+def _divided(rank, ows):
+    """rank / ows with a dangling divisor of 1.0 (impl.cuh:250-262)."""
+    return rank / np.where(ows == 0.0, 1.0, ows)
+
+
+def _setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, V: int,
+                gen: int, given: tuple, resumed: bool):
+    """The pull plan's setup, per pid: its vertices (its blocks' keys,
+    or a resumed checkpoint's rows), their out-weights (segment sums of
+    the src-keyed block unless given), first ranks and personalization,
+    written as slices (rank and x of generation ``gen``, the first
+    superstep's); returns the pid's dangling mass. ``given`` names the
+    routed columns (ows, rank, pnorm)."""
+
+    def task(pid: int, rows: pd.DataFrame) -> pd.DataFrame:
+        out_blk = out_files.block(pid)
+        in_blk = out_blk if in_files.block_dir == out_files.block_dir else in_files.block(pid)
+        keys = [b.su for b in (out_blk, in_blk) if b is not None]
+        keys = np.unique(np.concatenate(keys)).astype(np.int64) if keys else np.zeros(0, np.int64)
+        if resumed:
+            verts = np.sort(rows.loc[rows["rank"].notna(), "vertex"].to_numpy(np.int64))
+            positions_of(verts, keys)  # the checkpoint must hold every block key
+        else:
+            verts = keys
+        if "ows" in given:
+            ows = _column(rows, "ows", verts)
+        else:
+            ows = np.zeros(len(verts))
+            if out_blk is not None:
+                ows[np.searchsorted(verts, out_blk.su)] = segment_sum(out_blk, out_blk.w)
+        rank = _column(rows, "rank", verts) if "rank" in given else np.full(len(verts), 1.0 / V)
+        for name, arr in (("vertex", verts), ("ows", ows), (f"rank{gen}", rank),
+                          (f"x{gen}", _divided(rank, ows))):
+            save_slice(state_dir, pid, name, arr)
+        if "pnorm" in given:
+            save_slice(state_dir, pid, "pnorm", _column(rows, "pnorm", verts))
+        return pd.DataFrame({"dang": [float(rank[ows == 0.0].sum())]})
+
+    return task
+
+
+def _step_task(in_files: BlockFiles, state_dir: str, P: int, V: int, alpha: float,
+               dangling: float, it: int, personalized: bool):
+    """Pull superstep ``it`` of one pid: read every pid's generation-
+    ``it`` ``x = rank/ows`` slice into one O(V) vector, sum the in-edges
+    of the pid's own vertices (the pull sum kernel over its dst-keyed
+    block), write its generation-``it+1`` rank and x slices (empty ones
+    for a pid without vertices, so every pid has every slice), drop its
+    generation ``it-1``, which no task reads any more, and return its
+    ``(l1, dang)`` partials — none for a pid without vertices. Slices
+    are never rewritten in place: on ext4, replacing an existing file
+    flushes its data first (``auto_da_alloc``), ~60 ms a file."""
+
+    def task(pid: int) -> pd.DataFrame:
+        verts = load_slice(state_dir, pid, "vertex")
+        ows, old = load_slice(state_dir, pid, "ows"), load_slice(state_dir, pid, f"rank{it}")
+        contrib = np.zeros(len(verts))
+        blk = in_files.block(pid)
+        if blk is not None:
+            allv = np.concatenate([load_slice(state_dir, q, "vertex") for q in range(P)])
+            allx = np.concatenate([load_slice(state_dir, q, f"x{it}") for q in range(P)])
+            if blk.du is None:
+                x = np.zeros(in_files.meta["hi1"])
+                x[allv] = allx
+            else:
+                x = state_values_for_srcs(allv, allx, blk.du)
+            contrib[positions_of(verts, blk.su)] = sum_kernel(blk, x)
+        # the dataframe superstep's expressions: α·Σ contrib +
+        # (dangling·α + 1−α)/V (·pnorm with personalization)
+        mass = dangling * alpha + (1.0 - alpha)
+        teleport = mass * load_slice(state_dir, pid, "pnorm") if personalized else mass / V
+        new = alpha * contrib + teleport
+        save_slice(state_dir, pid, f"rank{it + 1}", new)
+        save_slice(state_dir, pid, f"x{it + 1}", _divided(new, ows))
+        drop_slices(state_dir, pid, [f"rank{it - 1}", f"x{it - 1}"])
+        if not len(verts):
+            return pd.DataFrame({"l1": np.zeros(0), "dang": np.zeros(0)})
+        return pd.DataFrame({"l1": [float(np.abs(new - old).sum())],
+                             "dang": [float(new[ows == 0.0].sum())]})
+
+    return task
+
+
+def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
+               precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
+               superstep_seconds):
+    """The csr plan: the rank vector stays in per-pid slices beside the
+    blocks (``csr_blocks.VertexSlices``), one setup job writes them, and
+    each superstep is ONE map job whose tasks pull their own vertices'
+    in-edges from the dst-keyed blocks. Checkpoints are written from the
+    slices with the other plans' columns, iterations and meta keys.
+    Returns ``(result, converged)``."""
+    spark = G.edges.sparkSession
+    vfield = G.vertices().schema["vertex"]
+    state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
+                               StructField("rank", DoubleType(), False)])
+    result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
+    with CsrBlocks(G, P, block_dir, weighted=True) as blocks, VertexSlices(blocks) as state:
+        V = G.vertex_stats()[0]
+        if V == 0:
+            raise ValueError("empty graph")
+        frames = []
+        start_iter, dangling = 0, None
+        resumed = resume and checkpoint is not None and checkpoint.latest_iteration() is not None
+        if resumed:
+            saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
+            frames.append(saved.select("vertex", "ows", "rank"))
+            start_iter = meta["iteration"] + 1
+            dangling = float(meta["metrics"]["dangling_sum"])
+        else:
+            if precomputed_vertex_out_weight is not None:
+                _reject_duplicate_vertices(precomputed_vertex_out_weight,
+                                           "precomputed_vertex_out_weight")
+                frames.append(precomputed_vertex_out_weight.select(
+                    "vertex", F.col("ows").cast("double")))
+            if nstart is not None:
+                frames.append(_normalized(nstart, "nstart", "rank"))
+        if personalization is not None:
+            frames.append(_normalized(personalization, "personalization", "pnorm"))
+        given = tuple(c for f in frames for c in f.columns if c != "vertex")
+        inb = blocks.transposed()
+        gen = start_iter  # the slice generation the next superstep reads
+        rows = state.route(frames, _setup_task(blocks.files, inb.files, state.dir, V, gen,
+                                               given, resumed), "dang double")
+        if dangling is None:
+            dangling = float(sum(r["dang"] for r in rows))
+
+        def save(it, metrics):
+            checkpoint.save(state.frame(state_schema, ["vertex", "ows", f"rank{gen}"]),
+                            it, metrics)
+
+        converged = False
+        final_iter = start_iter
+        for it in range(start_iter, max_iter):
+            final_iter = it
+            t0 = time.perf_counter()
+            step = _step_task(inb.files, state.dir, P, V, alpha, dangling, it,
+                              personalization is not None)
+            rows = state.map(step, "l1 double, dang double").collect()
+            gen = it + 1
+            l1 = float(sum(r["l1"] for r in rows))
+            dangling = float(sum(r["dang"] for r in rows))
+            if superstep_seconds is not None:
+                superstep_seconds.append(time.perf_counter() - t0)
+            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+                save(it, {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
+            if l1 < tol:
+                converged = True
+                break
+        if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
+            save(final_iter, {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
+                              "tol": tol, "final": True})
+        # materialized while the slices still exist
+        result = truncate_plan(state.frame(result_schema, ["vertex", f"rank{gen}"]), eager=True)
     return result, converged
 
 
@@ -278,236 +468,212 @@ def pagerank(
     blocks — MUST be shared storage on a multi-node cluster; default a
     fresh local temp dir (correct for local mode), cleaned up on
     return. A dir that already holds a weighted pack of THIS graph is
-    reused; one packed from another graph or P raises
-    (``plans/csr_blocks.py:CsrBlocks``).
+    reused, and a directed graph's transposed set is packed into its
+    ``T/`` once and reused likewise; one packed from another graph or P
+    raises (``plans/csr_blocks.py:CsrBlocks``). The call's rank slices
+    live in a ``state-<uuid>/`` directory inside it, removed on return.
 
-    The distributed plans run one superstep body in either of two
-    loops, picked from the arguments. A fixed-iteration run (``tol=0.0``)
-    without ``checkpoint`` needs no value on the driver between
-    supersteps, so it carries the dangling mass as a broadcast 1-row
-    aggregate crossJoined into the next superstep: the loop runs ZERO
-    Spark actions and every superstep executes inside one terminal job
-    (measured 1.9-2.4x on the sf0.1 bench graphs; on a cluster it
+    The distributed dataframe plan runs one superstep body in either of
+    two loops, picked from the arguments. A fixed-iteration run
+    (``tol=0.0``) without ``checkpoint`` needs no value on the driver
+    between supersteps, so it carries the dangling mass as a broadcast
+    1-row aggregate crossJoined into the next superstep: the loop runs
+    ZERO Spark actions and every superstep executes inside one terminal
+    job (measured 1.9-2.4x on the sf0.1 bench graphs; on a cluster it
     removes ``max_iter`` global barriers). Every other run ends each
     superstep in one action that returns the L1 diff and the next
     dangling mass together (the ``host_scalar_allreduce`` analog). Both
     loops compute the same doubles, so the results are bit-identical
-    (test_pagerank.py). ``superstep_seconds`` gets one entry per
-    superstep: its wall time, or on the zero-action loop its driver
-    plan-build time, since execution lands in the terminal action.
+    (test_pagerank.py). The csr plan has one loop: each superstep is
+    one job returning those two partials per pid. ``superstep_seconds``
+    gets one entry per superstep: its wall time (the csr plan: that
+    job's), or on the zero-action loop its driver plan-build time,
+    since execution lands in the terminal action.
     """
-    chained = tol == 0.0 and checkpoint is None
-
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions
 
     P = resolve_partitions(num_partitions, G.edges)
+    if mode == "csr":
+        result, converged = _pull_plan(
+            G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
+            precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
+            superstep_seconds)
+        return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
+
+    # plan choice: the size gate counts the edge frame as it comes,
+    # persisted (a frame the caller cached is counted from that cache
+    # and stays cached). Below the cutover the local plan collects from
+    # it, with no repartition shuffle; above it the distributed plan's
+    # src-partitioned copy is built from it, so the O(E) upstream runs
+    # once whichever plan follows
+    thr = local_tail.LOCAL_TAIL_EDGES
+    own_gate = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
+    if own_gate:
+        G.edges.persist(StorageLevel.MEMORY_AND_DISK)
+    if thr > 0 and G.edges.count() <= thr:
+        collected = local_tail.collect_edges(G.edges)
+        if own_gate:
+            G.edges.unpersist()
+        result, converged = _local_plan(
+            G, collected, alpha, max_iter, tol, personalization, nstart,
+            precomputed_vertex_out_weight, checkpoint, checkpoint_every,
+            resume, superstep_seconds)
+        return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
 
     # --- invariant side: edges + out-weight sums, partitioned once ---
-    # csr: the block store packs (or validates and reuses) per-pid CSR
-    # blocks ONCE; supersteps never touch the edge frame again, so it
-    # is not persisted — the single ows aggregate below is its only
-    # other scan. The blocks live until the with-block below exits,
-    # after the last action that reads them.
-    drop_gate = own_edges = False
-    if mode == "csr":
-        store = CsrBlocks(G, P, block_dir, weighted=True)
-        edges = G.edges
+    e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
+    # a src-partitioned graph's gate cache IS the loop's edge cache; a
+    # caller's cache of it stays cached
+    own_edges = own_gate or e.storageLevel == StorageLevel.NONE
+    edges = e.persist(StorageLevel.MEMORY_AND_DISK)
+    drop_gate = own_gate and edges is not G.edges
+    chained = tol == 0.0 and checkpoint is None
+    if precomputed_vertex_out_weight is not None:
+        _reject_duplicate_vertices(precomputed_vertex_out_weight, "precomputed_vertex_out_weight")
+        ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
+        vstate = G.vertices().join(ows, "vertex", "left").select(
+            "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
     else:
-        store = contextlib.nullcontext()
-        # plan choice: the size gate counts the edge frame as it comes,
-        # persisted (a frame the caller cached is counted from that cache
-        # and stays cached). Below the cutover the local plan collects
-        # from it, with no repartition shuffle; above it the distributed
-        # plan's src-partitioned copy is built from it, so the O(E)
-        # upstream runs once whichever plan follows
-        thr = local_tail.LOCAL_TAIL_EDGES
-        own_gate = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
-        if own_gate:
-            G.edges.persist(StorageLevel.MEMORY_AND_DISK)
-        if thr > 0 and G.edges.count() <= thr:
-            collected = local_tail.collect_edges(G.edges)
-            if own_gate:
-                G.edges.unpersist()
-            result, converged = _local_plan(
-                G, collected, alpha, max_iter, tol, personalization, nstart,
-                precomputed_vertex_out_weight, checkpoint, checkpoint_every,
-                resume, superstep_seconds)
-            return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
-        e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
-        # a src-partitioned graph's gate cache IS the loop's edge cache;
-        # a caller's cache of it stays cached
-        own_edges = own_gate or e.storageLevel == StorageLevel.NONE
-        edges = e.persist(StorageLevel.MEMORY_AND_DISK)
-        drop_gate = own_gate and edges is not G.edges
-    with store as blocks:
+        vstate = (
+            G.vertices()
+            .join(
+                edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("ows")),
+                "vertex", "left")
+            .select("vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
+        )
+    vstate = vstate.repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
+    V = vstate.count()
+    if drop_gate:
+        # vstate's count read the vertices from the gate's cache and
+        # filled the partitioned copy from it — unless the out-weights
+        # were given, so it never read the edges
         if precomputed_vertex_out_weight is not None:
-            _reject_duplicate_vertices(precomputed_vertex_out_weight, "precomputed_vertex_out_weight")
-            ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
-            vstate = G.vertices().join(ows, "vertex", "left").select(
-                "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
-        else:
-            vstate = (
-                G.vertices()
-                .join(
-                    edges.groupBy(F.col(SRC).alias("vertex")).agg(F.sum(WGT).alias("ows")),
-                    "vertex", "left")
-                .select("vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
-            )
-        vstate = vstate.repartition(P, "vertex").persist(StorageLevel.MEMORY_AND_DISK)
-        V = vstate.count()
-        if drop_gate:
-            # vstate's count read the vertices from the gate's cache and
-            # filled the partitioned copy from it — unless the out-weights
-            # were given, so it never read the edges
-            if precomputed_vertex_out_weight is not None:
-                edges.count()
-            G.edges.unpersist()
-        if V == 0:
-            raise ValueError("empty graph")
+            edges.count()
+        G.edges.unpersist()
+    if V == 0:
+        raise ValueError("empty graph")
 
-        # --- personalization normalization (pagerank_impl.cuh:299-319) ---
-        psum = None
-        pers = None
-        if personalization is not None:
-            _reject_duplicate_vertices(personalization, "personalization")
-            pers = personalization.select(
-                "vertex", F.col("values").cast("double").alias("pval"))
-            psum = pers.agg(F.sum("pval")).first()[0]
-            if not psum or psum <= 0:
-                raise ValueError("personalization values must sum to > 0")
-            pers = F.broadcast(pers.withColumn("pnorm", F.col("pval") / F.lit(psum))
-                               .select("vertex", "pnorm"))
+    # --- personalization normalization (pagerank_impl.cuh:299-319) ---
+    pers = None
+    if personalization is not None:
+        pers = F.broadcast(_normalized(personalization, "personalization", "pnorm"))
 
-        # --- init ranks (pagerank_impl.cuh:363-386) ---
-        start_iter = 0
-        dangling = None
-        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-            it0 = checkpoint.latest_iteration()
-            saved, meta = checkpoint.load(spark, it0)
-            state = saved.repartition(P, "vertex").transform(truncate_plan)
-            start_iter = meta["iteration"] + 1
-            dangling = float(meta["metrics"]["dangling_sum"])
-        elif nstart is not None:
-            _reject_duplicate_vertices(nstart, "nstart")
-            ns = nstart.select("vertex", F.col("values").cast("double").alias("nsval"))
-            nsum = ns.agg(F.sum("nsval")).first()[0]
-            if not nsum or nsum <= 0:
-                raise ValueError("nstart values must sum to > 0")
-            state = (
-                vstate.join(ns, "vertex", "left")
-                .select("vertex", "ows",
-                        (F.coalesce("nsval", F.lit(0.0)) / F.lit(nsum)).alias("rank"))
-                .transform(truncate_plan)
-            )
-        else:
-            state = vstate.withColumn("rank", F.lit(1.0 / V)).transform(truncate_plan)
-        if dangling is None and not chained:
-            dangling = state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0
+    # --- init ranks (pagerank_impl.cuh:363-386) ---
+    start_iter = 0
+    dangling = None
+    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
+        it0 = checkpoint.latest_iteration()
+        saved, meta = checkpoint.load(spark, it0)
+        state = saved.repartition(P, "vertex").transform(truncate_plan)
+        start_iter = meta["iteration"] + 1
+        dangling = float(meta["metrics"]["dangling_sum"])
+    elif nstart is not None:
+        ns = _normalized(nstart, "nstart", "nsrank")
+        state = (
+            vstate.join(ns, "vertex", "left")
+            .select("vertex", "ows", F.coalesce("nsrank", F.lit(0.0)).alias("rank"))
+            .transform(truncate_plan)
+        )
+    else:
+        state = vstate.withColumn("rank", F.lit(1.0 / V)).transform(truncate_plan)
+    if dangling is None and not chained:
+        dangling = state.filter(F.col("ows") == 0.0).agg(F.sum("rank")).first()[0] or 0.0
 
-        converged = False
-        final_iter = start_iter
-        for it in range(start_iter, max_iter):
-            final_iter = it
-            _t0 = time.perf_counter()
-            # rank' = rank / ows (dangling divisor 1.0) — impl.cuh:250-262
-            rank_div = state.select(
-                "vertex",
-                (F.col("rank") / F.when(F.col("ows") == 0.0, F.lit(1.0)).otherwise(F.col("ows"))
-                 ).alias("rank_div"),
-            )
+    converged = False
+    final_iter = start_iter
+    for it in range(start_iter, max_iter):
+        final_iter = it
+        _t0 = time.perf_counter()
+        # rank' = rank / ows (dangling divisor 1.0) — impl.cuh:250-262
+        rank_div = state.select(
+            "vertex",
+            (F.col("rank") / F.when(F.col("ows") == 0.0, F.lit(1.0)).otherwise(F.col("ows"))
+             ).alias("rank_div"),
+        )
+        # broadcast (small V) / shuffle-hash (large V) keeps the
+        # persisted O(E) side unmoved and unsorted every superstep
+        rank_side = vertex_join_side(rank_div, V)
+        contribs = (
+            edges.join(rank_side, edges[SRC] == rank_side["vertex"])
+            .groupBy(DST)
+            .agg(F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib"))
+        )
 
-            if blocks is not None:
-                # only the O(V) rank vector crosses the Python boundary
-                partials = blocks.map_blocks(
-                    sum_kernel, "dst long, contrib double", rank_div, value="rank_div"
-                )
-                contribs = partials.groupBy(DST).agg(F.sum("contrib").alias("contrib"))
-            else:
-                # broadcast (small V) / shuffle-hash (large V) keeps the
-                # persisted O(E) side unmoved and unsorted every superstep
-                rank_side = vertex_join_side(rank_div, V)
-                contribs = (
-                    edges.join(rank_side, edges[SRC] == rank_side["vertex"])
-                    .groupBy(DST)
-                    .agg(F.sum(rank_side["rank_div"] * edges[WGT]).alias("contrib"))
-                )
-
-            # contribs join the PREVIOUS state, so the old rank rides
-            # along for the L1 diff without a second join
-            base = state.join(
-                contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
-            )
-            if chained:
-                # the dangling mass stays a broadcast 1-row aggregate in
-                # the plan, so the superstep runs no action; the same
-                # partial-aggregation tree computes the same double
-                base = base.crossJoin(F.broadcast(state.agg(
-                    F.coalesce(F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
-                               F.lit(0.0)).alias("dang"))))
-                dang = F.col("dang")
-            else:
-                # the previous action's driver float; Catalyst folds the
-                # literal arithmetic below to the double Python computes
-                dang = F.lit(dangling)
-            dang_mass = dang * F.lit(alpha) + F.lit(1.0 - alpha)
-            if pers is None:
-                # a Divide is nullable (x/0 is NULL); V > 0, so the
-                # coalesce only keeps `pagerank` non-nullable
-                teleport = F.coalesce(dang_mass / F.lit(float(V)), F.lit(0.0))
-            else:
-                base = base.join(pers, state["vertex"] == pers["vertex"], "left")
-                teleport = dang_mass * F.coalesce("pnorm", F.lit(0.0))
-            new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + teleport
-            cols = [state["vertex"].alias("vertex"), state["ows"].alias("ows"),
-                    new_rank.alias("rank")]
-            if not chained:
-                cols.append(state["rank"].alias("old_rank"))
-            # truncate_plan (stats-clean localCheckpoint) cuts lineage so
-            # superstep N's plan does not re-analyze supersteps 0..N-1
-            # (SURVEY.md §7.3.1) and Catalyst work stays linear in
-            # max_iter; it is lazy, so it materializes inside the next
-            # action — the convergence check or the terminal job
-            new_full = base.select(*cols).transform(truncate_plan)
-            if not chained:
-                # one action per superstep: L1 diff + next dangling sum
-                # (the host_scalar_allreduce analog,
-                # pagerank_impl.cuh:239-248,321-330)
-                row = new_full.agg(
-                    F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
-                    F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
-                          ).alias("dang"),
-                ).first()
-                l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
-            state = new_full.select("vertex", "ows", "rank")
-            if superstep_seconds is not None:
-                superstep_seconds.append(time.perf_counter() - _t0)
-            if chained:
-                continue
-
-            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-                state = checkpoint.save(
-                    state, it,
-                    {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
-
-            if l1 < tol:
-                converged = True
-                break
-
-        if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
-            checkpoint.save(state.select("vertex", "ows", "rank"), final_iter,
-                            {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
-                             "tol": tol, "final": True})
-
+        # contribs join the PREVIOUS state, so the old rank rides
+        # along for the L1 diff without a second join
+        base = state.join(
+            contribs.hint("shuffle_hash"), state["vertex"] == contribs[DST], "left"
+        )
         if chained:
-            # the zero-action loop ran no job, so nothing has executed
-            # yet — materialize the whole superstep chain NOW (one terminal
-            # job, the same single job the design promises) while the
-            # persisted edges/vstate caches are still registered; the
-            # unpersist below would otherwise drop them BEFORE the caller's
-            # first action, recomputing the O(E) edge shuffle every superstep
-            # (and, in csr mode, before the blocks it reads are removed)
-            state = truncate_plan(state.select("vertex", "ows", "rank"), eager=True)
+            # the dangling mass stays a broadcast 1-row aggregate in
+            # the plan, so the superstep runs no action; the same
+            # partial-aggregation tree computes the same double
+            base = base.crossJoin(F.broadcast(state.agg(
+                F.coalesce(F.sum(F.when(F.col("ows") == 0.0, F.col("rank"))),
+                           F.lit(0.0)).alias("dang"))))
+            dang = F.col("dang")
+        else:
+            # the previous action's driver float; Catalyst folds the
+            # literal arithmetic below to the double Python computes
+            dang = F.lit(dangling)
+        dang_mass = dang * F.lit(alpha) + F.lit(1.0 - alpha)
+        if pers is None:
+            # a Divide is nullable (x/0 is NULL); V > 0, so the
+            # coalesce only keeps `pagerank` non-nullable
+            teleport = F.coalesce(dang_mass / F.lit(float(V)), F.lit(0.0))
+        else:
+            base = base.join(pers, state["vertex"] == pers["vertex"], "left")
+            teleport = dang_mass * F.coalesce("pnorm", F.lit(0.0))
+        new_rank = F.lit(alpha) * F.coalesce("contrib", F.lit(0.0)) + teleport
+        cols = [state["vertex"].alias("vertex"), state["ows"].alias("ows"),
+                new_rank.alias("rank")]
+        if not chained:
+            cols.append(state["rank"].alias("old_rank"))
+        # truncate_plan (stats-clean localCheckpoint) cuts lineage so
+        # superstep N's plan does not re-analyze supersteps 0..N-1
+        # (SURVEY.md §7.3.1) and Catalyst work stays linear in
+        # max_iter; it is lazy, so it materializes inside the next
+        # action — the convergence check or the terminal job
+        new_full = base.select(*cols).transform(truncate_plan)
+        if not chained:
+            # one action per superstep: L1 diff + next dangling sum
+            # (the host_scalar_allreduce analog,
+            # pagerank_impl.cuh:239-248,321-330)
+            row = new_full.agg(
+                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
+                F.sum(F.when(F.col("ows") == 0.0, F.col("rank")).otherwise(F.lit(0.0))
+                      ).alias("dang"),
+            ).first()
+            l1, dangling = float(row["l1"]), float(row["dang"] or 0.0)
+        state = new_full.select("vertex", "ows", "rank")
+        if superstep_seconds is not None:
+            superstep_seconds.append(time.perf_counter() - _t0)
+        if chained:
+            continue
+
+        if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+            state = checkpoint.save(
+                state, it,
+                {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
+
+        if l1 < tol:
+            converged = True
+            break
+
+    if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
+        checkpoint.save(state.select("vertex", "ows", "rank"), final_iter,
+                        {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
+                         "tol": tol, "final": True})
+
+    if chained:
+        # the zero-action loop ran no job, so nothing has executed yet —
+        # materialize the whole superstep chain NOW (one terminal job,
+        # the same single job the design promises) while the persisted
+        # edges/vstate caches are still registered; the unpersist below
+        # would otherwise drop them BEFORE the caller's first action,
+        # recomputing the O(E) edge shuffle every superstep
+        state = truncate_plan(state.select("vertex", "ows", "rank"), eager=True)
     result = state.select("vertex", F.col("rank").alias("pagerank"))
     if own_edges:
         edges.unpersist()

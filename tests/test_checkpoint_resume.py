@@ -18,11 +18,11 @@ def _ranks(df):
     return {r["vertex"]: r["pagerank"] for r in df.collect()}
 
 
-def _check_pagerank_checkpoint_meta(spark, tmp_path):
+def _check_pagerank_checkpoint_meta(spark, tmp_path, **kw):
     edges = make_edges("directed_asym")
     G = Graph(edges_df(spark, edges), directed=True)
     cp = CheckpointManager(str(tmp_path), "pr")
-    pagerank(G, tol=0.0, max_iter=6, checkpoint=cp, checkpoint_every=3)
+    pagerank(G, tol=0.0, max_iter=6, checkpoint=cp, checkpoint_every=3, **kw)
     # checkpoints at iterations 2 and 5 (after supersteps 3 and 6)
     assert cp.latest_iteration() == 5
     for it in (2, 5):
@@ -45,6 +45,11 @@ def test_pagerank_checkpoint_meta_local(spark, tmp_path):
     """The driver-local plan (the default at this size) writes the same
     checkpoints: same iterations, columns, meta keys and row counts."""
     _check_pagerank_checkpoint_meta(spark, tmp_path)
+
+
+def test_pagerank_checkpoint_meta_csr(spark, tmp_path):
+    """The csr plan writes the same checkpoints from its state slices."""
+    _check_pagerank_checkpoint_meta(spark, tmp_path, mode="csr")
 
 
 def test_pagerank_resume_exact(spark, tmp_path, distributed_tail):
@@ -96,6 +101,36 @@ def test_pagerank_resume_across_plans(spark, tmp_path, monkeypatch, first):
         assert set(resumed) == set(full[plan])
         for v in resumed:
             assert abs(full[plan][v] - resumed[v]) < 1e-12, (plan, v)
+
+
+# plan -> (LOCAL_TAIL_EDGES, mode)
+_PLANS = {"local": (10**9, "dataframe"), "distributed": (0, "dataframe"), "csr": (0, "csr")}
+
+
+@pytest.mark.parametrize("first,second", [("csr", "distributed"), ("distributed", "csr"),
+                                          ("csr", "local"), ("local", "csr")])
+def test_pagerank_resume_across_csr(spark, tmp_path, monkeypatch, first, second):
+    """A run checkpointed on the csr plan (written from its state
+    slices) resumes on a dataframe plan, and a dataframe plan's
+    checkpoint resumes on the csr plan, matching an uninterrupted run."""
+    from cugraph_spark.plans import local_tail
+
+    def run(plan, **kw):
+        monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", _PLANS[plan][0])
+        return pagerank(G, tol=0.0, mode=_PLANS[plan][1], **kw)
+
+    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
+    full = _ranks(run(second, max_iter=8))
+    cp = CheckpointManager(str(tmp_path), "pr_csr")
+    run(first, max_iter=4, checkpoint=cp, checkpoint_every=2)
+    assert cp.latest_iteration() == 3
+    ss: list = []
+    resumed = _ranks(run(second, max_iter=8, checkpoint=cp, checkpoint_every=2,
+                         resume=True, superstep_seconds=ss))
+    assert len(ss) == 4 and cp.latest_iteration() == 7
+    assert set(resumed) == set(full)
+    for v in full:
+        assert abs(full[v] - resumed[v]) < 1e-12, v
 
 
 def test_wcc_resume(spark, tmp_path):

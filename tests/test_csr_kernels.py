@@ -1,8 +1,8 @@
-"""The two block kernels (``plans/csr_blocks.py``: ``sum_kernel`` and
-``min_kernel``) against numpy's unbuffered ``np.add.at`` /
-``np.minimum.at`` over the raw edges, on the three block forms: packed
-dense, packed dict, and built in memory (the driver-local PageRank's
-form)."""
+"""The two block kernels (``plans/csr_blocks.py``: the pull
+``sum_kernel`` over transposed blocks and the push ``min_kernel``)
+against numpy's unbuffered ``np.add.at`` / ``np.minimum.at`` over the
+raw edges, on the three block forms: packed dense, packed dict, and
+built in memory (the driver-local PageRank's form)."""
 
 from __future__ import annotations
 
@@ -32,11 +32,13 @@ LABELS = _rng.permutation(V)
 FRONTIER = np.array([0, 3, 7, 12, V - 1])
 
 
-def _blocks(spark, tmp_path, form):
+def _blocks(spark, tmp_path, form, transposed=False):
+    """The edges as blocks keyed by src, or by dst when ``transposed``."""
+    key, nbr = (DST, SRC) if transposed else (SRC, DST)
     if form == "memory":
-        return [Block(csr_arrays(SRC, DST, W), {"ids": "dense", "hi1": V})]
-    df = spark.createDataFrame(pd.DataFrame({"src": SRC, "dst": DST, "weight": W}))
-    bdir = str(tmp_path / form)
+        return [Block(csr_arrays(key, nbr, W), {"ids": "dense", "hi1": V})]
+    df = spark.createDataFrame(pd.DataFrame({"src": key, "dst": nbr, "weight": W}))
+    bdir = str(tmp_path / f"{form}_{transposed}")
     manifest = pack_edges(df, bdir, 3, weight="weight",
                           id_bounds=(0, V - 1) if form == "dense" else None)
     meta = read_meta(bdir)
@@ -64,12 +66,18 @@ def _min_at(mask, bound):
 @pytest.mark.parametrize("form", ["dense", "dict", "memory"])
 def test_block_kernels_match_ufunc_at(spark, tmp_path, form, bound):
     blocks = _blocks(spark, tmp_path, form)
-    assert sum(len(b.dst_index) for b in blocks) == len(SRC)
+    assert sum(len(b.nbr) for b in blocks) == len(SRC)
 
+    # pull: each transposed block sums the in-edges of its dsts, x on
+    # the neighbour slots (vertex ids when dense, ``du`` when dict)
     sums = np.zeros(V)
     np.add.at(sums, DST, X[SRC] * W)
-    want = {d: s for d, s in enumerate(sums) if s != 0.0}
-    assert _combined([sum_kernel(b, X[b.su]) for b in blocks], "contrib", np.add) == want
+    want = {d: sums[d] for d in np.unique(DST).tolist()}
+    got: dict = {}
+    for b in _blocks(spark, tmp_path, form, transposed=True):
+        x = X if b.du is None else X[b.du]
+        got.update(zip(b.su.tolist(), sum_kernel(b, x).tolist()))
+    assert got == want
 
     dense = [min_kernel(b, LABELS[b.su], bound=bound) for b in blocks]
     assert _combined(dense, "nbr_min", min) == _min_at(np.ones(len(SRC), bool), bound)

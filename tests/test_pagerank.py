@@ -2,6 +2,8 @@
 cpp/tests/link_analysis/pagerank_test.cpp:44-132). Baseline params per
 BASELINE.json: alpha=0.85, tol=1e-6, max_iter=500."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -64,7 +66,7 @@ def test_pagerank_undirected_weighted(spark, request, plan):
     _check_plan(got, ss, expect, n_iter)
 
 
-@pytest.mark.parametrize("plan", PLANS)
+@pytest.mark.parametrize("plan", PLANS + ["csr"])
 def test_pagerank_hub_skew(spark, request, plan):
     edges = make_edges("hub")
     ss: list = []
@@ -76,9 +78,9 @@ def test_pagerank_hub_skew(spark, request, plan):
     assert got[0] == max(got.values())
 
 
-@pytest.mark.parametrize("plan", PLANS)
+@pytest.mark.parametrize("plan", PLANS + ["csr"])
 def test_pagerank_personalization(spark, request, plan):
-    _mode(request, plan)
+    mode = _mode(request, plan)
     edges = make_edges("directed_asym")
     n = max(max(a for a, _, _ in edges), max(b for _, b, _ in edges)) + 1
     pvec = np.zeros(n)
@@ -89,7 +91,7 @@ def test_pagerank_personalization(spark, request, plan):
     pers = spark.createDataFrame(pers_rows, "vertex long, values double")
     ss: list = []
     df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, personalization=pers,
-                  superstep_seconds=ss)
+                  superstep_seconds=ss, mode=mode)
     got = {r.vertex: r.pagerank for r in df.collect()}
     expect, conv, n_iter = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
                                         max_iter=MAX_ITER, personalization=pvec)
@@ -97,9 +99,9 @@ def test_pagerank_personalization(spark, request, plan):
     _check_plan(got, ss, expect, n_iter)
 
 
-@pytest.mark.parametrize("plan", PLANS)
+@pytest.mark.parametrize("plan", PLANS + ["csr"])
 def test_pagerank_nstart(spark, request, plan):
-    _mode(request, plan)
+    mode = _mode(request, plan)
     edges = make_edges("tiny_social")
     n = 34
     ns = np.arange(1, n + 1, dtype=float)
@@ -108,7 +110,7 @@ def test_pagerank_nstart(spark, request, plan):
         [(int(v), float(ns[v])) for v in range(n)], "vertex long, values double")
     ss: list = []
     df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, nstart=nstart,
-                  superstep_seconds=ss)
+                  superstep_seconds=ss, mode=mode)
     got = {r.vertex: r.pagerank for r in df.collect()}
     expect, conv, n_iter = pagerank_ref(edges, n=n, alpha=ALPHA, tol=TOL,
                                         max_iter=MAX_ITER, nstart=ns)
@@ -196,12 +198,13 @@ def test_pagerank_sums_to_one(spark):
 
 
 def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_tail):
-    """mode='csr' runs the zero-action loop at tol=0 (one pack job,
-    every superstep lazy inside the terminal action); ranks must equal
-    the one-action csr loop bit for bit and the dataframe plan to
-    float tolerance — on the dense-id blocks the operator packs itself
-    AND on dictionary blocks (packed externally without id_bounds,
-    reused through block_dir), with and without personalization."""
+    """mode='csr' runs one loop whatever the tol: every superstep is one
+    job that returns its L1 and dangling partials, so a fixed-iteration
+    run (tol=0) must equal the convergence-checked loop at a tol no run
+    reaches bit for bit, and the dataframe plan to float tolerance — on
+    the dense-id blocks the operator packs itself AND on dictionary
+    blocks (packed externally without id_bounds, reused through
+    block_dir), with and without personalization."""
     import pandas as pd
 
     from cugraph_spark.plans.csr_blocks import pack_edges
@@ -222,27 +225,140 @@ def test_pagerank_csr_chained_bit_identical(spark, tmp_path, distributed_tail):
                 assert fixed[v] == pytest.approx(want[v], abs=1e-12), kw
 
 
+def _pack(G, block_dir, P, dense):
+    from cugraph_spark.plans.csr_blocks import pack_edges
+
+    _, lo, hi = G.vertex_stats()
+    pack_edges(G.edges, block_dir, P, weight="weight",
+               id_bounds=(lo, hi) if dense else None)
+
+
+def _plan_ranks(G, **kw):
+    ss: list = []
+    df = pagerank(G, alpha=ALPHA, tol=TOL, max_iter=MAX_ITER, superstep_seconds=ss, **kw)
+    return {r.vertex: r.pagerank for r in df.collect()}, len(ss)
+
+
+def _side(spark, G, name):
+    vals = spark.createDataFrame([(v, float(1 + v % 3)) for v in range(0, 30, 2)],
+                                 "vertex long, values double")
+    return {"plain": {}, "personalization": {"personalization": vals},
+            "nstart": {"nstart": vals},
+            "ows": {"precomputed_vertex_out_weight": G.out_weight_sums()}}[name]
+
+
+@pytest.mark.parametrize("fixture,directed,P,ids,side", [
+    ("directed_asym", True, 8, "dense", "plain"),
+    ("directed_asym", True, 8, "dict", "plain"),
+    ("weighted", False, 8, "dense", "plain"),
+    ("weighted", False, 8, "dict", "plain"),
+    ("directed_asym", True, 64, "dense", "plain"),
+    ("directed_asym", True, 8, "dict", "personalization"),
+    ("directed_asym", True, 8, "dense", "nstart"),
+    ("weighted", False, 8, "dense", "ows"),
+])
+def test_pagerank_csr_equals_dataframe(spark, tmp_path, distributed_tail, fixture,
+                                       directed, P, ids, side):
+    """The pull plan equals the distributed dataframe plan within 1e-12
+    with the same superstep count: on dense and dict blocks, on a
+    directed graph (in-edges from the T/ sub-store) and an undirected
+    one (its blocks read as their own transpose), with P above V (pids
+    without vertices), and with personalization, nstart and
+    precomputed out-weights."""
+    G = Graph(edges_df(spark, make_edges(fixture)), directed=directed)
+    bdir = str(tmp_path / "blocks")
+    _pack(G, bdir, P, ids == "dense")
+    kw = _side(spark, G, side)
+    want, n_want = _plan_ranks(G, num_partitions=P, **kw)
+    got, n_got = _plan_ranks(G, mode="csr", block_dir=bdir, num_partitions=P, **kw)
+    assert n_got == n_want
+    assert set(got) == set(want)
+    for v in want:
+        assert got[v] == pytest.approx(want[v], abs=1e-12), v
+    assert not [d for d in os.listdir(bdir) if d.startswith("state-")]  # removed on exit
+    assert os.path.isdir(os.path.join(bdir, "T")) == directed
+
+
+def test_pagerank_csr_packs_transpose_once(spark, tmp_path, monkeypatch):
+    """An undirected graph's stored blocks serve the pull plan as they
+    are; a directed graph packs its transposed set once, into the
+    caller's block_dir, and reuses it on the next call."""
+    from cugraph_spark.plans import csr_blocks
+
+    graphs = {}
+    for directed in (False, True):
+        G = Graph(edges_df(spark, make_edges("weighted")), directed=directed)
+        graphs[directed] = (G, str(tmp_path / f"blocks_{directed}"))
+        _pack(G, graphs[directed][1], 4, dense=True)
+    packs: list = []
+    real = csr_blocks.pack_edges
+    monkeypatch.setattr(csr_blocks, "pack_edges",
+                        lambda *a, **k: packs.append(a[1]) or real(*a, **k))
+    for directed, want in ((False, [0, 0]), (True, [1, 0])):
+        G, bdir = graphs[directed]
+        counts = []
+        for _ in range(2):
+            before = len(packs)
+            pagerank(G, mode="csr", block_dir=bdir, num_partitions=4).collect()
+            counts.append(len(packs) - before)
+        assert counts == want, directed
+    assert packs == [os.path.join(graphs[True][1], "T")]
+
+
+def test_pagerank_csr_one_job_per_superstep(spark, tmp_path):
+    """Each pull superstep is ONE Spark job: the call's jobs are the
+    supersteps' plus a fixed setup and finalize count, whatever the
+    superstep count."""
+    G = Graph(edges_df(spark, make_edges("weighted")), directed=False)
+    bdir = str(tmp_path / "blocks")
+    _pack(G, bdir, 4, dense=True)
+    G.edges.persist()
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        G.edges.count()
+        for n in (3, 9):
+            sc.setJobGroup(f"pull_jobs_{n}", "job count")
+            ss: list = []
+            pagerank(G, tol=0.0, max_iter=n, mode="csr", block_dir=bdir,
+                     num_partitions=4, superstep_seconds=ss)
+            jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"pull_jobs_{n}"))
+            assert len(ss) == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        G.edges.unpersist()
+    assert jobs[9] - jobs[3] == 6, jobs
+    assert jobs[3] <= 3 + 8, jobs
+
+
 def test_pagerank_csr_missing_block_raises(spark, tmp_path):
-    """The block store's per-pid spmv task must RAISE when the manifest
+    """The pull superstep's per-pid task must RAISE when the manifest
     lists a pid whose block files are absent (torn deployment /
-    non-shared block_dir) — never return an empty (silent-zero)
-    partial (ADVICE r4)."""
-    import os
+    non-shared block_dir) or when a state slice is gone — never return
+    a silent-zero contribution (ADVICE r4) — while a pid with no
+    vertices (a hash gap) returns nothing."""
+    import importlib
 
-    import pandas as pd
+    from cugraph_spark.plans.csr_blocks import CsrBlocks, VertexSlices
 
-    from cugraph_spark.plans.csr_blocks import CsrBlocks, sum_kernel
+    pr = importlib.import_module("cugraph_spark.operators.pagerank")
 
     G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
     P = 64  # more pids than vertices: some pids hold no edges
-    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=True) as blocks:
-        fn = blocks.task(sum_kernel, "dst long, contrib double", value="rank_div")
-        listed = next(iter(blocks.manifest))
-        os.remove(os.path.join(blocks.block_dir, f"{listed}.su.npy"))
-        pdf = pd.DataFrame({"pid": [listed], "vertex": [1], "rank_div": [1.0]})
+    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=True) as blocks, \
+            VertexSlices(blocks) as state:
+        inb = blocks.transposed()
+        V = G.number_of_vertices()
+        state.route([], pr._setup_task(blocks.files, inb.files, state.dir, V, 0, (), False),
+                    "dang double")
+        step = pr._step_task(inb.files, state.dir, P, V, ALPHA, 0.0, 0, False)
+        listed = sorted(inb.manifest)
+        assert len(step(listed[0])) == 1
+        os.remove(os.path.join(inb.block_dir, f"{listed[0]}.su.npy"))
         with pytest.raises(RuntimeError, match="missing"):
-            fn(pdf)
-        # a pid ABSENT from the manifest is a legitimate hash gap
-        gap = next(p for p in range(P) if p not in blocks.manifest)
-        pdf2 = pd.DataFrame({"pid": [gap], "vertex": [1], "rank_div": [1.0]})
-        assert len(fn(pdf2)) == 0
+            step(listed[0])
+        gap = next(p for p in range(P) if p not in blocks.manifest and p not in inb.manifest)
+        assert len(step(gap)) == 0
+        os.remove(os.path.join(state.dir, f"{listed[1]}.x0.npy"))
+        with pytest.raises(RuntimeError, match="state slice missing"):
+            step(listed[2])

@@ -34,8 +34,12 @@ Each run is timed in wall and process-tree CPU seconds
 (``perfbench/probe.py``); its result is reduced to an order-insensitive
 signature, and all arms must give the same one. The last line is
 ``ABJSON {cpus, operator, input, scale, V, edges, host, <arm>: {walls,
-min, cpu_s, signature, metrics (wcc, lpa) | steps (pagerank)}}`` — the shape of the
+min, cpu_s, jobs, signature, metrics (wcc, lpa) | steps (pagerank)}}`` — the shape of the
 ``BENCH/ab_*.json`` records. ``host`` holds ``perfbench`` host markers from before and after.
+``jobs`` counts the Spark jobs each run's call started before it
+returned (a job group around the call; a lazy result's terminal job
+runs in the signature, outside the count), so a plan's jobs per
+superstep can be read off two runs with different ``max_iter``.
 
 The one-off scripts this replaces, as invocations (their defaults):
 
@@ -216,6 +220,7 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
            "input": source, "scale": scale, "V": V, "edges": n,
            "host": {"before": host_marker()}}
     sigs = {}
+    sc = spark.sparkContext
     try:
         shared = os.path.join(root, "shared")
         for token in arms:
@@ -223,7 +228,7 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
             kw = {**defaults, **{k: v for k, v in settings.items() if k not in PATCH_KEYS}}
             if kw.get("block_dir") == "shared" and not os.path.exists(shared):
                 _pack(G, shared, weighted=operator == "pagerank")
-            rec = {"walls": [], "cpu_s": []}
+            rec = {"walls": [], "cpu_s": [], "jobs": []}
             if trace_kw:
                 rec[TRACE_KEY[trace_kw]] = []
             for rep in range(reps):
@@ -237,9 +242,15 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
                 if trace_kw:
                     args[trace_kw] = trace
                 source_v = args.pop("source", None)
+                group = f"ab_{name}_{rep}"
+                sc.setJobGroup(group, f"{operator} {name}")
                 c0, t0 = cpu_seconds(), time.perf_counter()
-                with patched(module, settings):
-                    res = op(G, source_v, **args) if operator == "bfs" else op(G, **args)
+                try:
+                    with patched(module, settings):
+                        res = op(G, source_v, **args) if operator == "bfs" else op(G, **args)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                rec["jobs"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
                 if isinstance(res, tuple):
                     res = res[0]
                 sig = signature(operator, res)
@@ -260,7 +271,8 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
             rec["signature"] = list(sigs[name])
             out[name] = rec
             print("AB " + json.dumps({name: {"walls": rec["walls"], "min": rec["min"],
-                                             "cpu_s": rec["cpu_s"]}}), flush=True)
+                                             "cpu_s": rec["cpu_s"], "jobs": rec["jobs"]}}),
+                  flush=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
         G.edges.unpersist()

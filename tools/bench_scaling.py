@@ -10,6 +10,10 @@ local[N] and local[4N]; efficiency = (thr_4N / thr_N) / 4.
 
 Usage: python tools/bench_scaling.py [N] [rmat_scale] [edgefactor]
        (defaults: N=8, scale=23, edgefactor=16 → 134M edges)
+
+Prints one JSON report, with the plan it timed and ``perfbench`` host
+markers from before and after the two runs, and writes no file: a run
+worth keeping is added to ``BENCH/BASELINE.md`` by hand.
 """
 
 from __future__ import annotations
@@ -21,6 +25,9 @@ import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+
+from perfbench.probe import host_marker  # noqa: E402
 
 WORKER = r"""
 import json
@@ -131,6 +138,7 @@ def main():
     ef = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     iters = 12
 
+    host = {"before": host_marker()}
     a = pagerank_worker(n, scale, ef, iters)
     b = pagerank_worker(4 * n, scale, ef, iters)
 
@@ -148,31 +156,9 @@ def main():
         "scaling_efficiency": round(eff, 3),
         "supersteps_A": [round(t, 2) for t in a["supersteps"]],
         "supersteps_B": [round(t, 2) for t in b["supersteps"]],
+        "host": {**host, "after": host_marker()},
     }
     print(json.dumps(report, indent=2))
-
-    bench_dir = ROOT / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    md = bench_dir / "BASELINE.md"
-    header = (
-        "# BENCH/BASELINE.md — two-parallelism scaling evidence\n\n"
-        "Same job, same input, two local parallelism levels (the sandbox\n"
-        "instantiation of the N vs 4N executor criterion — no real cluster\n"
-        "exists here). Metric: steady-state PageRank superstep throughput\n"
-        "(per-superstep wall from inside the loop, 2 warm-up supersteps\n"
-        "discarded). efficiency = (thr_B / thr_A) / (cores_B / cores_A).\n\n"
-        "| input | cores A | cores B | sec/superstep A | B | edges/s/superstep A | B | efficiency |\n"
-        "| --- | --- | --- | --- | --- | --- | --- | --- |\n"
-    )
-    if not md.exists():
-        md.write_text(header)
-    with open(md, "a") as f:
-        f.write(
-            f"| {report['input']} | {n} | {4*n} "
-            f"| {report['steady_sec_per_superstep_A']} | {report['steady_sec_per_superstep_B']} "
-            f"| {report['edges_per_sec_per_superstep_A']:.0f} | {report['edges_per_sec_per_superstep_B']:.0f} "
-            f"| {report['scaling_efficiency']} |\n"
-        )
 
 
 if __name__ == "__main__":
