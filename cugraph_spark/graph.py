@@ -225,6 +225,7 @@ class Graph:
     # reverse, community._as_graph) are safe without re-running __init__
     pre_partitioned = False
     _nv_cache = None
+    _ne_cache = None
     # default directedness when the class is used as a create_using
     # factory (compat.from_edgelist etc.) — matches each class's
     # __init__ default
@@ -466,6 +467,17 @@ class Graph:
         if cache is None or cache[0] is not self.edges:
             return None
         return cache[1], cache[2], cache[3]
+
+    def edge_rows(self) -> int:
+        """Memoized row count of ``edges`` (an undirected edge's two
+        directions are two rows): what the block store checks a reused
+        pack against, so a session's csr calls on one graph count it
+        once. Keyed on the edges object, like :meth:`vertex_stats`."""
+        cache = self._ne_cache
+        if cache is None or cache[0] is not self.edges:
+            cache = (self.edges, self.edges.count())
+            self._ne_cache = cache
+        return cache[1]
 
     def number_of_edges(self) -> int:
         if self.directed:

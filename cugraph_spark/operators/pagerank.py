@@ -108,13 +108,14 @@ from ..plans.csr_blocks import (
     BlockFiles,
     CsrBlocks,
     VertexSlices,
+    block_keys,
     csr_arrays,
     drop_slices,
+    gather,
     load_slice,
     positions_of,
     save_slice,
-    segment_sum,
-    state_values_for_srcs,
+    segment_reduce,
     sum_kernel,
 )
 from ..plans.strategy import vertex_join_side
@@ -287,8 +288,7 @@ def _setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, V: 
     def task(pid: int, rows: pd.DataFrame) -> pd.DataFrame:
         out_blk = out_files.block(pid)
         in_blk = out_blk if in_files.block_dir == out_files.block_dir else in_files.block(pid)
-        keys = [b.su for b in (out_blk, in_blk) if b is not None]
-        keys = np.unique(np.concatenate(keys)).astype(np.int64) if keys else np.zeros(0, np.int64)
+        keys = block_keys(out_blk, in_blk)
         if resumed:
             verts = np.sort(rows.loc[rows["rank"].notna(), "vertex"].to_numpy(np.int64))
             positions_of(verts, keys)  # the checkpoint must hold every block key
@@ -299,7 +299,7 @@ def _setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, V: 
         else:
             ows = np.zeros(len(verts))
             if out_blk is not None:
-                ows[np.searchsorted(verts, out_blk.su)] = segment_sum(out_blk, out_blk.w)
+                ows[np.searchsorted(verts, out_blk.su)] = segment_reduce(out_blk, out_blk.w)
         rank = _column(rows, "rank", verts) if "rank" in given else np.full(len(verts), 1.0 / V)
         for name, arr in (("vertex", verts), ("ows", ows), (f"rank{gen}", rank),
                           (f"x{gen}", _divided(rank, ows))):
@@ -329,13 +329,7 @@ def _step_task(in_files: BlockFiles, state_dir: str, P: int, V: int, alpha: floa
         contrib = np.zeros(len(verts))
         blk = in_files.block(pid)
         if blk is not None:
-            allv = np.concatenate([load_slice(state_dir, q, "vertex") for q in range(P)])
-            allx = np.concatenate([load_slice(state_dir, q, f"x{it}") for q in range(P)])
-            if blk.du is None:
-                x = np.zeros(in_files.meta["hi1"])
-                x[allv] = allx
-            else:
-                x = state_values_for_srcs(allv, allx, blk.du)
+            x, _ = gather(blk, state_dir, P, f"x{it}")
             contrib[positions_of(verts, blk.su)] = sum_kernel(blk, x)
         # the dataframe superstep's expressions: α·Σ contrib +
         # (dangling·α + 1−α)/V (·pnorm with personalization)

@@ -25,15 +25,29 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
-import contextlib
-
+import numpy as np
+import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import DST, SRC, WGT, Graph
-from ..plans.csr_blocks import CsrBlocks, min_kernel
+from ..plans.csr_blocks import (
+    BlockFiles,
+    CsrBlocks,
+    VertexSlices,
+    block_keys,
+    drop_slices,
+    gather,
+    load_slice,
+    min_kernel,
+    positions_of,
+    save_slice,
+)
 from ..plans.strategy import resolve_partitions
+
+_NONE = np.iinfo(np.int64).max  # no frontier in-neighbour
 
 
 def bfs_edges(
@@ -51,6 +65,76 @@ def bfs_edges(
     if sort_neighbors is not None:
         raise NotImplementedError("sort_neighbors is not supported")
     return bfs(G, source, max_depth=depth_limit)
+
+
+def _bfs_setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, source):
+    """The csr BFS setup, per pid: its vertices (the keys of its
+    src-keyed and dst-keyed blocks) with generation-0 ``dist`` (0 at the
+    source, -1 elsewhere) and ``pred`` (-1)."""
+
+    def task(pid: int) -> pd.DataFrame:
+        out_blk = out_files.block(pid)
+        in_blk = out_blk if in_files.block_dir == out_files.block_dir else in_files.block(pid)
+        verts = block_keys(out_blk, in_blk)
+        save_slice(state_dir, pid, "vertex", verts)
+        save_slice(state_dir, pid, "dist0", np.where(verts == source, 0, -1))
+        save_slice(state_dir, pid, "pred0", np.full(len(verts), -1))
+        return pd.DataFrame({"n": [len(verts)]})
+
+    return task
+
+
+def _bfs_level_task(in_files: BlockFiles, state_dir: str, P: int, depth: int):
+    """csr BFS level ``depth`` of one pid, bottom-up: read every pid's
+    generation-``depth-1`` ``dist`` into one O(V) lookup, and give each
+    own unvisited vertex with a frontier in-neighbour (one at distance
+    ``depth-1``) that distance and its minimum-id frontier in-neighbour
+    as predecessor (the pull min kernel over the pid's dst-keyed block).
+    Writes generation ``depth``, drops ``depth-2`` and returns the
+    count of newly reached vertices."""
+    g = depth - 1
+
+    def task(pid: int) -> pd.DataFrame:
+        dist = load_slice(state_dir, pid, f"dist{g}")
+        pred = load_slice(state_dir, pid, f"pred{g}")
+        reached = 0
+        blk = in_files.block(pid)
+        if blk is not None:
+            d, _ = gather(blk, state_dir, P, f"dist{g}")
+            ids = np.arange(blk.n_nbr) if blk.du is None else blk.du
+            cand = min_kernel(blk, np.where(d == g, ids, _NONE))
+            pos = positions_of(load_slice(state_dir, pid, "vertex"), blk.su)
+            hit = (cand != _NONE) & (dist[pos] < 0)
+            pos = pos[hit]
+            dist, pred = dist.copy(), pred.copy()
+            dist[pos], pred[pos] = depth, cand[hit]
+            reached = len(pos)
+        save_slice(state_dir, pid, f"dist{depth}", dist)
+        save_slice(state_dir, pid, f"pred{depth}", pred)
+        drop_slices(state_dir, pid, [f"dist{depth - 2}", f"pred{depth - 2}"])
+        return pd.DataFrame({"reached": [reached]})
+
+    return task
+
+
+def _bfs_csr(G: Graph, source, limit: int, P: int, block_dir: str | None) -> DataFrame:
+    """The csr BFS plan (``bfs`` docstring): one setup job, then ONE
+    map job per level until a level reaches nothing or ``limit``."""
+    schema = StructType([G.vertices().schema["vertex"], StructField("distance", LongType()),
+                         StructField("predecessor", LongType())])
+    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks) as state:
+        inb = blocks.transposed()
+        state.map(_bfs_setup_task(blocks.files, inb.files, state.dir, source), "n long").collect()
+        depth = 0
+        while depth < limit:
+            rows = state.map(_bfs_level_task(inb.files, state.dir, P, depth + 1),
+                             "reached long").collect()
+            depth += 1
+            if not sum(r["reached"] for r in rows):
+                break
+        # materialized while the slices still exist
+        return truncate_plan(
+            state.frame(schema, ["vertex", f"dist{depth}", f"pred{depth}"]), eager=True)
 
 
 def bfs(
@@ -75,22 +159,20 @@ def bfs(
     KB, not the whole vertex set. Predecessor is the min frontier
     in-neighbor at the level of first reach, exactly as before.
 
-    ``mode="csr"`` (round 5): each level's candidate generation runs as
-    the packed-block frontier gather (``plans/csr_blocks.py:min_kernel``,
-    the kernel WCC's csr supersteps run — route the frontier to its
-    block, searchsorted + indptr slices, one ``np.minimum.at`` for the
-    min-id predecessor), so a level costs
-    O(|frontier| + Σ deg(frontier)) with NO O(E) edge-cache probe.
-    This is the Spark answer to the reference's direction-optimizing
-    switch (``bfs_impl.cuh:202``): bottom-up's purpose there is to
-    stop the large-frontier levels from touching every edge, and the
-    csr gather already touches only frontier-adjacent edges at ANY
-    frontier size — the worst case (frontier ≈ V) degenerates to one
-    ordered pass over the blocks, the same bound bottom-up achieves
-    (minus its per-vertex early-exit, which no join/aggregation model
-    can express). ``block_dir``: shared storage on a cluster; a dir
-    holding a pack of THIS graph is validated and reused (pack once per
-    stored graph; ``plans/csr_blocks.py:CsrBlocks``).
+    ``mode="csr"``: every level bottom-up (the pull direction of the
+    reference's direction-optimizing BFS, ``bfs_impl.cuh:202``) over
+    packed blocks (``plans/csr_blocks.py``). ``dist``/``pred`` live in
+    per-pid slices beside them; one setup job writes them, and each
+    level is ONE map job with no exchange, whose task reads every pid's
+    ``dist`` into one O(V) vector and gives each own unvisited vertex
+    with a frontier in-neighbour the level's distance and its min-id
+    frontier in-neighbour — the dataframe plan's rule exactly. In-edges
+    come from the dst-keyed view: an undirected graph's own blocks, a
+    directed graph's ``T/`` sub-store, packed once into ``block_dir``.
+    A level costs O(V) reads plus O(E/P) edge work per task whatever
+    the frontier size; on the inputs measured, a level costs its Spark
+    job, not its edges. ``block_dir``: shared storage on a cluster; a
+    pack of THIS graph is reused; a missing block or slice raises.
 
     ``num_partitions``: an int, ``"auto"`` (sized from plan
     statistics) or None (``spark.sql.shuffle.partitions``) — the
@@ -98,27 +180,23 @@ def bfs(
     if mode not in ("dataframe", "csr"):
         raise ValueError(f"unknown mode: {mode!r}")
     P = resolve_partitions(num_partitions, G.edges)
-
-    edges = None
+    limit = max_depth if max_depth is not None else 2**31
     if mode == "csr":
-        store = CsrBlocks(G, P, block_dir)
-        src_frame = G.edges.select(SRC, DST)
-    else:
-        store = contextlib.nullcontext()
-        edges = (
-            G.edges.select(SRC, DST)
-            .repartition(P, SRC)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        src_frame = edges
+        return _bfs_csr(G, source, limit, P, block_dir)
+
+    edges = (
+        G.edges.select(SRC, DST)
+        .repartition(P, SRC)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # the source frontier comes off the (filter-pushed) edge scan, not
     # an O(E) vertices() distinct; a source absent from the graph yields
     # an empty frontier → all-unreachable output, as before
     f0 = (
-        src_frame.select(F.col(SRC).alias("vertex"))
+        edges.select(F.col(SRC).alias("vertex"))
         .filter(F.col("vertex") == source)
         .unionByName(
-            src_frame.select(F.col(DST).alias("vertex")).filter(
+            edges.select(F.col(DST).alias("vertex")).filter(
                 F.col("vertex") == source
             )
         )
@@ -130,43 +208,27 @@ def bfs(
     visited = f0.select("vertex")
     levels: list[DataFrame] = []  # (vertex, pred) per depth, disjoint by construction
     depth = 0
-    limit = max_depth if max_depth is not None else 2**31
-    # every level ends in a count action, so the per-level frames are
-    # materialized before the store removes its blocks on exit
-    with store as blocks:
-        while depth < limit:
-            depth += 1
-            if blocks is not None:
-                # frontier routed to its own blocks; min-id pred gathered
-                # from frontier-adjacent edges only (the min kernel's
-                # indptr slices), each vertex sending itself
-                cand = blocks.map_blocks(
-                    lambda blk, pdf: min_kernel(
-                        blk, pdf["vertex"].to_numpy(), pdf["vertex"].to_numpy()
-                    ),
-                    f"dst {blocks.id_t}, nbr_min {blocks.id_t}",
-                    frontier,
-                ).select(DST, F.col("nbr_min").alias(SRC))
-            else:
-                cand = frontier.join(edges, frontier["vertex"] == edges[SRC])
-            cand = cand.groupBy(DST).agg(F.min(SRC).alias("pred"))
-            nxt = (
-                cand.join(visited, cand[DST] == visited["vertex"], "left_anti")
-                .select(
-                    F.col(DST).cast("long").alias("vertex"),
-                    F.col("pred").cast("long"),
-                )
-                .transform(truncate_plan)
+    while depth < limit:
+        depth += 1
+        cand = frontier.join(edges, frontier["vertex"] == edges[SRC])
+        cand = cand.groupBy(DST).agg(F.min(SRC).alias("pred"))
+        nxt = (
+            cand.join(visited, cand[DST] == visited["vertex"], "left_anti")
+            .select(
+                F.col(DST).cast("long").alias("vertex"),
+                F.col("pred").cast("long"),
             )
-            n_new = nxt.count()
-            if n_new == 0:
-                break
-            levels.append(nxt.withColumn("distance", F.lit(depth).cast("long")))
-            visited = visited.unionByName(nxt.select("vertex"))
-            if depth % 8 == 0:
-                # bound the visited union's plan depth on high-diameter graphs
-                visited = visited.transform(truncate_plan)
-            frontier = nxt.select("vertex")
+            .transform(truncate_plan)
+        )
+        n_new = nxt.count()
+        if n_new == 0:
+            break
+        levels.append(nxt.withColumn("distance", F.lit(depth).cast("long")))
+        visited = visited.unionByName(nxt.select("vertex"))
+        if depth % 8 == 0:
+            # bound the visited union's plan depth on high-diameter graphs
+            visited = visited.transform(truncate_plan)
+        frontier = nxt.select("vertex")
     reached = f0.select(
         "vertex", F.lit(0).cast("long").alias("distance"),
         F.lit(-1).cast("long").alias("predecessor"),
@@ -185,8 +247,7 @@ def bfs(
             F.coalesce("predecessor", F.lit(-1)).cast("long").alias("predecessor"),
         )
     )
-    if edges is not None:
-        edges.unpersist()
+    edges.unpersist()
     return out
 
 

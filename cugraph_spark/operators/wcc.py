@@ -48,19 +48,24 @@ path's shuffle-hash hints (the mins/jump sides are frontier-sized and
 co-partitioned with the state), so no unbounded frame is ever
 broadcast.
 
-``mode="csr"`` (round 5 — the reference's resident-CSR architecture,
-``graphs.pyx:52-224``, extended from round 4's csr PageRank): edges
-pack ONCE into per-pid mmap CSR blocks (``plans/csr_blocks.py``), and
-every superstep runs the hash-min as the block min kernel
-(``csr_blocks.min_kernel``: one ``np.minimum.at``, measured 200M
-edges/s/core; csr BFS runs the same kernel) with only the O(V) label
-vector crossing the Arrow boundary. Frontier supersteps route the
-delta to its own block and gather only frontier-adjacent edges
-through the indptr — no O(E) probe scan, so the frontier threshold is
-V/2 instead of the dataframe mode's V/8. (A per-block announce cache
-suppressing re-emitted minima was built and A/B-rejected in round 5:
-the hi-sized per-superstep array writes cost more than the suppressed
-partials saved — BENCH/BASELINE.md round-5 notes.)
+``mode="csr"`` (the reference's resident-CSR architecture,
+``graphs.pyx:52-224``): edges pack ONCE into per-pid mmap CSR blocks
+(``plans/csr_blocks.py``), and the label vector never enters a Catalyst
+plan. It lives in per-pid slices beside the blocks
+(``csr_blocks.VertexSlices``, the state layer csr PageRank uses): one
+setup job writes each pid's vertices (its block's keys) with their
+identity or checkpointed labels, and each superstep is ONE map job
+with no exchange. Its task reads every pid's previous labels into one
+O(V) vector (``csr_blocks.gather``), pulls the min over its own
+vertices' neighbours (``csr_blocks.min_kernel`` — a symmetrized graph's
+blocks are their own transpose) and pointer-jumps in the same pass:
+``label(v) ← L[min(L[v], min_{u~v} L[u])]``. Every label is a vertex of
+its own component and is ≤ that vertex, so the jump target is too, and
+the fixpoint is the dataframe plan's min-id labeling; the superstep
+count may differ from the dataframe plan's by a few on high-diameter
+graphs, because the jump reads the previous labels, not this
+superstep's lowered ones. There is no frontier mode: a superstep costs
+its Spark job, not its edge work, on every input this was measured on.
 
 Scale notes: the O(E) edge side is persisted once — hash-partitioned on
 ``src`` only when V exceeds the broadcast cutover (below it the state is
@@ -82,33 +87,120 @@ from __future__ import annotations
 
 from ..plans.lineage import truncate_plan
 
-import contextlib
+import time
 
+import numpy as np
+import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import DST, SRC, Graph
 from ..plans.checkpoint import CheckpointManager
-from ..plans.csr_blocks import CsrBlocks, min_kernel
+from ..plans.csr_blocks import (
+    BlockFiles,
+    CsrBlocks,
+    VertexSlices,
+    block_keys,
+    drop_slices,
+    gather,
+    load_slice,
+    min_kernel,
+    positions_of,
+    save_slice,
+)
+from ..plans.metrics import ShuffleProbe
 from ..plans import strategy
 from ..plans.strategy import vertex_join_side
 
 
-def _frontier_threshold(V: int, csr: bool) -> int:
-    """Changed-count at or below which a superstep goes frontier
-    (module docstring); 0 keeps every superstep dense.
-
-    Dataframe plan: ``V/8``, capped at 4M because the delta is
-    broadcast — below ~V/8 changed vertices the probe-only scan beats
-    the dense join+aggregation (A/B on RMAT in BENCH/BASELINE.md round
-    4). csr plan: ``V/2``, capped at 32M — a csr frontier superstep
-    costs O(|Δ| + Σ deg(Δ)) with no O(E) probe floor and no broadcast
-    (the delta routes to its block through the pid shuffle), so the
-    switch pays off much earlier; worst case ≈ one dense block pass."""
-    if csr:
-        return max(1, min(V // 2, 32_000_000))
+def _frontier_threshold(V: int) -> int:
+    """Changed-count at or below which a dataframe superstep goes
+    frontier (module docstring); 0 keeps every superstep dense.
+    ``V/8``, capped at 4M because the delta is broadcast — below ~V/8
+    changed vertices the probe-only scan beats the dense join+aggregation
+    (A/B on RMAT in BENCH/BASELINE.md round 4)."""
     return max(1, min(V // 8, 4_000_000))
+
+
+def _setup_task(files: BlockFiles, state_dir: str, gen: int, resumed: bool):
+    """The csr plan's setup, per pid: its vertices (its block's keys —
+    every vertex of a symmetrized graph is some edge's src) and their
+    generation-``gen`` labels, the identity or the routed checkpoint's
+    (which must hold every one of them)."""
+
+    def task(pid: int, rows: pd.DataFrame) -> pd.DataFrame:
+        verts = block_keys(files.block(pid))
+        labels = verts
+        if resumed:
+            rows = rows.sort_values("vertex")
+            saved = rows["labels"].to_numpy(np.int64)
+            labels = saved[positions_of(rows["vertex"].to_numpy(np.int64), verts)]
+        save_slice(state_dir, pid, "vertex", verts)
+        save_slice(state_dir, pid, f"labels{gen}", labels)
+        return pd.DataFrame({"n": [len(verts)]})
+
+    return task
+
+
+def _step_task(files: BlockFiles, state_dir: str, P: int, it: int):
+    """csr superstep ``it`` of one pid: read every pid's generation-``it``
+    labels into one O(V) lookup, pull the min over each own vertex's
+    neighbours (its block is its own transpose), pointer-jump through
+    the same lookup, write generation ``it+1``, drop ``it-1`` (no task
+    reads it any more) and return the pid's changed count."""
+
+    def task(pid: int) -> pd.DataFrame:
+        old = load_slice(state_dir, pid, f"labels{it}")
+        new = old
+        blk = files.block(pid)
+        if blk is not None:  # its vertices are exactly blk.su
+            L, at = gather(blk, state_dir, P, f"labels{it}")
+            new = at(np.minimum(old, min_kernel(blk, L)))
+        save_slice(state_dir, pid, f"labels{it + 1}", new)
+        drop_slices(state_dir, pid, [f"labels{it - 1}"])
+        return pd.DataFrame({"changed": [int((new != old).sum())]})
+
+    return task
+
+
+def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
+              superstep_seconds, superstep_metrics) -> DataFrame:
+    """The csr plan (module docstring): one setup job writes the label
+    slices, then ONE map job per superstep until no label changes."""
+    spark = G.edges.sparkSession
+    schema = StructType([StructField("vertex", LongType()), StructField("labels", LongType())])
+    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks) as state:
+        frames, start_iter = [], 0
+        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
+            saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
+            frames.append(saved.select("vertex", F.col("labels").cast("long")))
+            start_iter = meta["iteration"] + 1
+        gen = start_iter  # the slice generation the next superstep reads
+        state.route(frames, _setup_task(blocks.files, state.dir, gen, bool(frames)), "n long")
+
+        def labels():
+            return state.frame(schema, ["vertex", f"labels{gen}"])
+
+        for it in range(start_iter, max_iter):
+            probe = ShuffleProbe(spark) if superstep_metrics is not None else None
+            t0 = time.perf_counter()
+            rows = state.map(_step_task(blocks.files, state.dir, P, it), "changed long").collect()
+            gen = it + 1
+            changed = sum(r["changed"] for r in rows)
+            wall = time.perf_counter() - t0
+            if superstep_seconds is not None:
+                superstep_seconds.append(wall)
+            if probe is not None:
+                superstep_metrics.append({"iteration": it, "mode": "csr", "changed": changed,
+                                          "seconds": round(wall, 3), **probe.delta()})
+            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+                checkpoint.save(labels(), it, {"changed": changed})
+            if changed == 0:
+                break
+        # materialized while the slices still exist
+        return truncate_plan(labels(), eager=True)
 
 
 def weakly_connected_components(
@@ -136,8 +228,8 @@ def weakly_connected_components(
     convergence by up to k−1 supersteps returns identical labels
     (same batching contract as label_propagation's ``check_every``).
 
-    The plan is chosen from V and the measured changed-count, with no
-    tuning parameter (the reference's WCC has none either):
+    The dataframe plan is chosen from V and the measured changed-count,
+    with no tuning parameter (the reference's WCC has none either):
 
     - broadcast-state mode while V ≤
       ``strategy.NARROW_STATE_BROADCAST_LIMIT`` (read at call time).
@@ -150,28 +242,24 @@ def weakly_connected_components(
       state joins are shuffle-hash.
     - frontier/delta supersteps (module docstring), whose cost tracks
       the frontier size instead of O(E), once the measured
-      changed-count drops to or below ``_frontier_threshold(V, csr)``
-      (V/8 dataframe, V/2 csr).
+      changed-count drops to or below ``_frontier_threshold(V)`` (V/8).
 
     ``superstep_metrics``: pass a list to receive one dict per checking
     action with the MEASURED shuffle read/write byte deltas
     (``plans/metrics.py`` — the instrumented form of the zero-exchange
     claim) plus the superstep's changed-count and mode.
 
-    ``mode="csr"``: the block store (``plans/csr_blocks.py:CsrBlocks``
-    — the reference's resident-CSR architecture, ``graphs.pyx:52-224``)
-    packs the edges ONCE into per-pid mmap CSR blocks, and every
-    hash-min superstep runs as a per-block ``np.minimum.at`` with only
-    the O(V) label vector crossing the Arrow boundary; frontier
-    supersteps become true frontier-sized indptr lookups instead of the
-    dataframe mode's O(E) probe scan. Same labels, iteration-for-
-    iteration (all arithmetic is exact integer min), on dense-id and
-    dictionary blocks alike. ``block_dir`` must be shared storage on a
-    multi-node cluster; default a fresh local temp dir (correct for
-    local mode), cleaned up on return. A dir holding a pack of THIS
-    graph is reused; one packed from another graph or P, or a
-    manifest-listed block missing or torn at read time, RAISES — never
-    a silent zero contribution."""
+    ``mode="csr"`` (module docstring): same labels as the dataframe
+    plan, on dense-id and dictionary blocks alike; the superstep count
+    may differ. Each superstep is one Spark job that returns its
+    changed count, so ``check_every`` has no effect, and each
+    ``superstep_metrics`` entry has mode ``"csr"``. Checkpoints are
+    written from the slices in the dataframe plan's ``(vertex,
+    labels)`` format; either plan resumes the other's. ``block_dir``
+    must be shared storage on a multi-node cluster (default: a local
+    temp dir, removed on return). A dir holding a pack of THIS graph is
+    reused; one packed from another graph or P, a manifest-listed block
+    missing or torn at read time, or a missing label slice RAISES."""
     if mode not in ("dataframe", "csr"):
         raise ValueError(f"unknown mode: {mode!r}")
     if G.directed:
@@ -183,6 +271,9 @@ def weakly_connected_components(
     from ..plans.strategy import resolve_partitions
 
     P = resolve_partitions(num_partitions, G.edges)
+    if mode == "csr":
+        return _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
+                         superstep_seconds, superstep_metrics)
 
     # V + id bounds come from ONE memoized job (Graph.vertex_stats —
     # renumber/table metadata on a real deployment); no standalone
@@ -228,287 +319,213 @@ def weakly_connected_components(
 
     # the edge cache layout per join mode is strategy.narrow_state_edges
     id_t = "int" if compact else "long"
-    edges = None
-    if mode == "csr":
-        # The block store packs (or validates and reuses) per-pid CSR
-        # blocks ONCE (one Spark job); no edge-frame persist —
-        # supersteps never touch the edge frame again. The layout
-        # analysis above is moot: the only per-superstep data movement
-        # is the O(V) state routed by the same hash(·)%P the packer
-        # used, plus the frontier-or-partial-sized messages. The pack
-        # hashes the graph's ORIGINAL id dtype (Murmur3 of int vs long
-        # differ for equal values), so routing stays aligned with any
-        # upstream long-typed layout. It always shuffles into its
-        # groups: a no-shuffle mapInPandas pack of pre-partitioned
-        # edges A/B'd 2× SLOWER at RMAT-23 (50s vs 24s — the per-batch
-        # pandas concat of a streamed partition costs more than the
-        # shuffle's one fused Arrow stream) and was deleted.
-        store = CsrBlocks(G, P, block_dir)
-    else:
-        edges = strategy.narrow_state_edges(G, e, V, P, recast).persist(
-            StorageLevel.MEMORY_AND_DISK
+    edges = strategy.narrow_state_edges(G, e, V, P, recast).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    start_iter = 0
+    state = None
+    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
+        it0 = checkpoint.latest_iteration()
+        saved, meta = checkpoint.load(spark, it0)
+        state = (
+            saved.select(
+                F.col("vertex").cast(id_t).alias("vertex"),
+                F.col("labels").cast(id_t).alias("labels"),
+            )
+            .repartition(P, "vertex")
+            .transform(truncate_plan)
         )
-        store = contextlib.nullcontext()
+        start_iter = meta["iteration"] + 1
 
-    # every loop path ends in a checking action, so the terminal state
-    # RDD is materialized before the store removes its blocks on exit
-    with store as blocks:
-        start_iter = 0
-        state = None
-        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-            it0 = checkpoint.latest_iteration()
-            saved, meta = checkpoint.load(spark, it0)
-            state = (
-                saved.select(
-                    F.col("vertex").cast(id_t).alias("vertex"),
-                    F.col("labels").cast(id_t).alias("labels"),
+    # --- frontier/delta machinery (module docstring) ---------------
+    fthr = _frontier_threshold(V)
+    last_changed: int | None = None  # measured delta size (checking steps)
+    prev_full = None  # (vertex, labels, old) of the last checked superstep
+
+    probe = ShuffleProbe(spark) if superstep_metrics is not None else None
+
+    _t0 = time.perf_counter()
+    for it in range(start_iter, max_iter):
+        use_frontier = (
+            fthr > 0
+            and state is not None
+            and prev_full is not None
+            and last_changed is not None
+            and 0 < last_changed <= fthr
+        )
+        checking = (
+            use_frontier or (it + 1) % check_every == 0 or it == max_iter - 1
+        )
+        if use_frontier:
+            # Frontier superstep: only last round's changed vertices
+            # announce. Broadcast-probe the persisted edge cache with
+            # the delta (|delta| ≤ fthr ≤ 4M rows) — no exchange in any
+            # layout; join output, aggregation, and every state-side
+            # exchange are frontier-sized (the dense path's
+            # co-partitioned shuffle-hash shape is kept, so only the
+            # frontier-sized side ever moves).
+            delta = prev_full.filter(F.col("labels") != F.col("old")).select(
+                "vertex", "labels"
+            )
+            msgs = edges.join(
+                F.broadcast(delta), F.col(SRC) == F.col("vertex")
+            ).select(DST, F.col("labels").alias("nbr_min"))
+            msgs = msgs.groupBy(DST).agg(F.min("nbr_min").alias("nbr_min"))
+            # In broadcast-state mode every frontier-side frame (msgs,
+            # ch, jmap — each ≤ V rows, the same budget class as the
+            # state broadcast the dense path pays every superstep)
+            # broadcasts, so the O(V) state never moves and the whole
+            # frontier superstep is exchange-free (measured in
+            # superstep_metrics). Above the cutover keep the
+            # co-partitioned shuffle-hash shape.
+            def _fside(small):
+                return F.broadcast(small) if bcast else small.hint("shuffle_hash")
+
+            lowered_f = state.join(
+                _fside(msgs), state["vertex"] == msgs[DST], "left"
+            ).select(
+                state["vertex"],
+                F.least(
+                    state["labels"], F.coalesce("nbr_min", state["labels"])
+                ).alias("labels"),
+                state["labels"].alias("old"),
+            )
+            # Eager checkpoint: the partial jump below reads this frame
+            # three times — materialize once instead of re-running the
+            # probe plan per read.
+            low_cp = truncate_plan(lowered_f, eager=True)
+            # Partial pointer jump: only rows changed THIS superstep
+            # look up label(label). Skipping unchanged rows loses
+            # acceleration, never correctness (hash-min alone
+            # converges; jump changes re-enter the delta via old).
+            ch = low_cp.filter(F.col("labels") != F.col("old")).select(
+                F.col("vertex").alias("cv"), F.col("labels").alias("cl")
+            )
+            lk = low_cp.select(
+                F.col("vertex").alias("lv"), F.col("labels").alias("ll")
+            )
+            jmap = lk.join(
+                _fside(ch), F.col("lv") == F.col("cl")
+            ).select(F.col("cv"), F.col("ll").alias("jl"))
+            jumped = (
+                low_cp.join(
+                    _fside(jmap),
+                    low_cp["vertex"] == F.col("cv"),
+                    "left",
                 )
-                .repartition(P, "vertex")
+                .select(
+                    low_cp["vertex"],
+                    F.least(
+                        low_cp["labels"], F.coalesce("jl", low_cp["labels"])
+                    ).alias("labels"),
+                    low_cp["old"],
+                )
                 .transform(truncate_plan)
             )
-            start_iter = meta["iteration"] + 1
-
-        import time as _time
-
-        # --- frontier/delta machinery (module docstring) ---------------
-        fthr = _frontier_threshold(V, mode == "csr")
-        last_changed: int | None = None  # measured delta size (checking steps)
-        prev_full = None  # (vertex, labels, old) of the last checked superstep
-
-        probe = None
-        if superstep_metrics is not None:
-            from ..plans.metrics import ShuffleProbe
-
-            probe = ShuffleProbe(spark)
-
-        _t0 = _time.perf_counter()
-        for it in range(start_iter, max_iter):
-            use_frontier = (
-                fthr > 0
-                and state is not None
-                and prev_full is not None
-                and last_changed is not None
-                and 0 < last_changed <= fthr
+        elif state is None:
+            # Superstep 0 on the identity labeling collapses to ONE
+            # map-side-combinable aggregation: min over {v} ∪ N(v) is
+            # least(dst, min(src)) grouped by dst — no initial
+            # vertices() distinct, no edges⋈state join. Every vertex
+            # appears as DST because the graph is symmetrized and
+            # self-loops were kept above. This same action also fills
+            # the `edges` persist for the remaining supersteps.
+            msgs0 = edges.groupBy(DST).agg(F.min(SRC).alias("nbr_min"))
+            lowered = msgs0.select(
+                F.col(DST).alias("vertex"),
+                F.least(F.col(DST), F.col("nbr_min")).alias("labels"),
+                F.col(DST).alias("old"),
+            ).transform(truncate_plan)
+        else:
+            # hash-min over neighbors
+            sside = vertex_join_side(state, V, limit=blimit)
+            mins = (
+                edges.join(sside, edges[SRC] == sside["vertex"])
+                .groupBy(DST)
+                .agg(F.min("labels").alias("nbr_min"))
             )
-            checking = (
-                use_frontier or (it + 1) % check_every == 0 or it == max_iter - 1
-            )
-            if use_frontier:
-                # Frontier superstep: only last round's changed vertices
-                # announce. Broadcast-probe the persisted edge cache with
-                # the delta (|delta| ≤ fthr ≤ 4M rows) — no exchange in any
-                # layout; join output, aggregation, and every state-side
-                # exchange are frontier-sized (the dense path's
-                # co-partitioned shuffle-hash shape is kept, so only the
-                # frontier-sized side ever moves).
-                delta = prev_full.filter(F.col("labels") != F.col("old")).select(
-                    "vertex", "labels"
+            # carry the old label through so the changed-count needs no
+            # extra join; checkpoint `lowered` so the pointer-jump
+            # self-join reads one materialized RDD instead of
+            # recomputing the mins join twice
+            lowered = (
+                state.join(
+                    mins.hint("shuffle_hash"), state["vertex"] == mins[DST], "left"
                 )
-                if blocks is not None:
-                    # route each frontier vertex to ITS OWN block (pid =
-                    # hash(v) keys both the state and the edges), gather
-                    # only frontier-adjacent edges via indptr slices — no
-                    # O(E) probe scan, no broadcast of the delta
-                    msgs = blocks.map_blocks(
-                        lambda blk, pdf: min_kernel(
-                            blk, pdf["labels"].to_numpy(), pdf["vertex"].to_numpy(), bound=True
-                        ),
-                        f"dst {id_t}, nbr_min {id_t}",
-                        delta,
-                    )
-                else:
-                    msgs = edges.join(
-                        F.broadcast(delta), F.col(SRC) == F.col("vertex")
-                    ).select(DST, F.col("labels").alias("nbr_min"))
-                msgs = msgs.groupBy(DST).agg(F.min("nbr_min").alias("nbr_min"))
-                # In broadcast-state mode every frontier-side frame (msgs,
-                # ch, jmap — each ≤ V rows, the same budget class as the
-                # state broadcast the dense path pays every superstep)
-                # broadcasts, so the O(V) state never moves and the whole
-                # frontier superstep is exchange-free (measured in
-                # superstep_metrics). Above the cutover keep the
-                # co-partitioned shuffle-hash shape.
-                def _fside(small):
-                    return F.broadcast(small) if bcast else small.hint("shuffle_hash")
-
-                lowered_f = state.join(
-                    _fside(msgs), state["vertex"] == msgs[DST], "left"
-                ).select(
+                .select(
                     state["vertex"],
                     F.least(
                         state["labels"], F.coalesce("nbr_min", state["labels"])
                     ).alias("labels"),
                     state["labels"].alias("old"),
                 )
-                # Eager checkpoint: the partial jump below reads this frame
-                # three times — materialize once instead of re-running the
-                # probe plan per read.
-                low_cp = truncate_plan(lowered_f, eager=True)
-                # Partial pointer jump: only rows changed THIS superstep
-                # look up label(label). Skipping unchanged rows loses
-                # acceleration, never correctness (hash-min alone
-                # converges; jump changes re-enter the delta via old).
-                ch = low_cp.filter(F.col("labels") != F.col("old")).select(
-                    F.col("vertex").alias("cv"), F.col("labels").alias("cl")
-                )
-                lk = low_cp.select(
-                    F.col("vertex").alias("lv"), F.col("labels").alias("ll")
-                )
-                jmap = lk.join(
-                    _fside(ch), F.col("lv") == F.col("cl")
-                ).select(F.col("cv"), F.col("ll").alias("jl"))
-                jumped = (
-                    low_cp.join(
-                        _fside(jmap),
-                        low_cp["vertex"] == F.col("cv"),
-                        "left",
-                    )
-                    .select(
-                        low_cp["vertex"],
-                        F.least(
-                            low_cp["labels"], F.coalesce("jl", low_cp["labels"])
-                        ).alias("labels"),
-                        low_cp["old"],
-                    )
-                    .transform(truncate_plan)
-                )
-            elif state is None:
-                # Superstep 0 on the identity labeling collapses to ONE
-                # map-side-combinable aggregation: min over {v} ∪ N(v) is
-                # least(dst, min(src)) grouped by dst — no initial
-                # vertices() distinct, no edges⋈state join. Every vertex
-                # appears as DST because the graph is symmetrized and
-                # self-loops were kept above. This same action also fills
-                # the `edges` persist for the remaining supersteps.
-                # csr: the identity labels never ship (labels(su) IS su) —
-                # one task per manifest pid emits the unfiltered per-block
-                # partials so the first state frame covers every vertex.
-                if blocks is not None:
-                    msgs0 = (
-                        blocks.map_blocks(
-                            lambda blk, _: min_kernel(blk, blk.su),
-                            f"dst {id_t}, nbr_min {id_t}",
-                        )
-                        .groupBy(DST)
-                        .agg(F.min("nbr_min").alias("nbr_min"))
-                    )
-                else:
-                    msgs0 = edges.groupBy(DST).agg(F.min(SRC).alias("nbr_min"))
-                lowered = msgs0.select(
-                    F.col(DST).alias("vertex"),
-                    F.least(F.col(DST), F.col("nbr_min")).alias("labels"),
-                    F.col(DST).alias("old"),
-                ).transform(truncate_plan)
-            else:
-                # hash-min over neighbors — csr: only the O(V) label vector
-                # crosses Arrow (routed by the packer's hash(·)%P); the
-                # per-block np.minimum.at replaces the edges⋈state join +
-                # JVM aggregation stream (measured A/B in BENCH/BASELINE.md
-                # round 5)
-                if blocks is not None:
-                    mins = (
-                        blocks.map_blocks(
-                            lambda blk, labels: min_kernel(blk, labels, bound=True),
-                            f"dst {id_t}, nbr_min {id_t}",
-                            state,
-                            value="labels",
-                        )
-                        .groupBy(DST)
-                        .agg(F.min("nbr_min").alias("nbr_min"))
-                    )
-                else:
-                    sside = vertex_join_side(state, V, limit=blimit)
-                    mins = (
-                        edges.join(sside, edges[SRC] == sside["vertex"])
-                        .groupBy(DST)
-                        .agg(F.min("labels").alias("nbr_min"))
-                    )
-                # carry the old label through so the changed-count needs no
-                # extra join; checkpoint `lowered` so the pointer-jump
-                # self-join reads one materialized RDD instead of
-                # recomputing the mins join twice
-                lowered = (
-                    state.join(
-                        mins.hint("shuffle_hash"), state["vertex"] == mins[DST], "left"
-                    )
-                    .select(
-                        state["vertex"],
-                        F.least(
-                            state["labels"], F.coalesce("nbr_min", state["labels"])
-                        ).alias("labels"),
-                        state["labels"].alias("old"),
-                    )
-                    .transform(truncate_plan)
-                )
-            if not use_frontier:
-                # pointer jump: labels ← labels(labels) — contraction-level
-                # analog (the frontier branch did its partial jump above)
-                lab = lowered.select(
-                    F.col("vertex").alias("lv"), F.col("labels").alias("ll")
-                )
-                labside = vertex_join_side(lab, V, limit=blimit)
-                jumped = (
-                    lowered.join(labside, lowered["labels"] == labside["lv"], "left")
-                    .select(
-                        lowered["vertex"],
-                        F.coalesce(labside["ll"], lowered["labels"]).alias("labels"),
-                        lowered["old"],
-                    )
-                    .transform(truncate_plan)
-                )
-
-            if not checking:
-                # stay lazy: this superstep executes inside the next
-                # checking superstep's action (no measured delta → the next
-                # superstep cannot go frontier)
-                state = jumped.select("vertex", "labels")
-                last_changed = None
-                prev_full = None
-                continue
-
-            changed = (
-                jumped.agg(
-                    F.sum(
-                        F.when(F.col("labels") != F.col("old"), 1).otherwise(0)
-                    ).alias("c")
-                )
-                .first()["c"]
+                .transform(truncate_plan)
             )
-            _step_wall = _time.perf_counter() - _t0
-            _t0 = _time.perf_counter()
-            if superstep_seconds is not None:
-                # wall of the checking action (covers the k batched lazy
-                # supersteps since the previous check); PageRank's
-                # zero-action loop has no action and records plan-build
-                # time instead
-                superstep_seconds.append(_step_wall)
-            if probe is not None:
-                mtag = "frontier" if use_frontier else "dense"
-                if mode == "csr":
-                    mtag = "csr-" + mtag
-                superstep_metrics.append(
-                    {
-                        "iteration": it,
-                        "mode": mtag,
-                        "changed": int(changed),
-                        "seconds": round(_step_wall, 3),
-                        **probe.delta(),
-                    }
+        if not use_frontier:
+            # pointer jump: labels ← labels(labels) — contraction-level
+            # analog (the frontier branch did its partial jump above)
+            lab = lowered.select(
+                F.col("vertex").alias("lv"), F.col("labels").alias("ll")
+            )
+            labside = vertex_join_side(lab, V, limit=blimit)
+            jumped = (
+                lowered.join(labside, lowered["labels"] == labside["lv"], "left")
+                .select(
+                    lowered["vertex"],
+                    F.coalesce(labside["ll"], lowered["labels"]).alias("labels"),
+                    lowered["old"],
                 )
+                .transform(truncate_plan)
+            )
+
+        if not checking:
+            # stay lazy: this superstep executes inside the next
+            # checking superstep's action (no measured delta → the next
+            # superstep cannot go frontier)
             state = jumped.select("vertex", "labels")
-            prev_full = jumped
-            last_changed = int(changed)
+            last_changed = None
+            prev_full = None
+            continue
 
-            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-                state = checkpoint.save(
-                    state.select("vertex", "labels"), it, {"changed": int(changed)}
-                )
+        changed = (
+            jumped.agg(
+                F.sum(
+                    F.when(F.col("labels") != F.col("old"), 1).otherwise(0)
+                ).alias("c")
+            )
+            .first()["c"]
+        )
+        _step_wall = time.perf_counter() - _t0
+        _t0 = time.perf_counter()
+        if superstep_seconds is not None:
+            # wall of the checking action (covers the k batched lazy
+            # supersteps since the previous check); PageRank's
+            # zero-action loop has no action and records plan-build
+            # time instead
+            superstep_seconds.append(_step_wall)
+        if probe is not None:
+            superstep_metrics.append(
+                {
+                    "iteration": it,
+                    "mode": "frontier" if use_frontier else "dense",
+                    "changed": int(changed),
+                    "seconds": round(_step_wall, 3),
+                    **probe.delta(),
+                }
+            )
+        state = jumped.select("vertex", "labels")
+        prev_full = jumped
+        last_changed = int(changed)
 
-            if changed == 0:
-                break
+        if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
+            state = checkpoint.save(
+                state.select("vertex", "labels"), it, {"changed": int(changed)}
+            )
 
-    if edges is not None:
-        edges.unpersist()
+        if changed == 0:
+            break
+
+    edges.unpersist()
     if state is None:  # max_iter == 0: the identity labeling
         state = G.vertices().select(
             F.col("vertex").cast(id_t).alias("vertex"),

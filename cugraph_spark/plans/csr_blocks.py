@@ -6,10 +6,10 @@ CSR partitions once; all of ``per_v_transform_reduce_incoming_e`` reuses
 them). The Spark analog, proven out by round 4's csr PageRank (1.36-1.9×
 the dataframe plan per superstep): hash-partition the edges by
 ``pid = pmod(hash(src), P)`` ONCE, pack each partition into mmap-able
-``.npy`` arrays on shared storage, and let every superstep ship ONLY the
-O(V) vertex-state vector through the Arrow boundary — the O(E) side
-never crosses again (``np.load(mmap_mode='r')`` reads the page-cache-
-resident block, shared between the worker processes of one box).
+``.npy`` arrays on shared storage, and let every superstep move ONLY the
+O(V) vertex state — the O(E) side never crosses a boundary again
+(``np.load(mmap_mode='r')`` reads the page-cache-resident block, shared
+between the worker processes of one box).
 
 Block layout (src-sorted CSR; the transposed view below swaps the
 roles of src and dst):
@@ -20,22 +20,18 @@ roles of src and dst):
 - dst side, TWO formats chosen at pack time (``meta.json: ids``):
   - ``ids="dense"`` (compact id spaces, e.g. renumbered graphs or RMAT
     — the reference's case: renumbering to a dense id range is
-    mandatory in cugraph): ``dr`` = raw dst per edge. Per-dst reduce
-    kernels index a ``hi+1``-sized scratch array directly — NO per-
-    block dst dictionary, which removes the pack-time ``np.unique``
-    sort over E (measured ~half the pack wall at RMAT-23);
+    mandatory in cugraph): ``dr`` = raw dst per edge. Kernels read the
+    state from a ``hi+1``-sized vector indexed by id — NO per-block dst
+    dictionary, which removes the pack-time ``np.unique`` sort over E
+    (measured ~half the pack wall at RMAT-23);
   - ``ids="dict"`` (sparse/arbitrary id spaces): ``du`` = unique dsts +
-    ``dc`` = int32 code per edge; kernels reduce into ``len(du)`` and
-    emit through the dictionary.
+    ``dc`` = int32 code per edge; kernels read the state aligned with
+    ``du``.
 - ``w``      float64 edge weights, same order (weighted blocks only).
 
-The src sort buys two things: a per-vertex value expands to per-edge
-with ``np.repeat(vals, np.diff(indptr))`` (no E-sized gather), and a
-FRONTIER superstep becomes a true frontier-sized lookup —
-``searchsorted(su, frontier)`` + indptr slices touch only
-frontier-adjacent edges (the analog of the reference's
-``transform_reduce_v_frontier_outgoing_e_by_dst.cuh`` prims),
-eliminating the O(E) probe scan the dataframe frontier mode pays.
+The key sort makes every per-key reduce a segment reduce over
+``indptr`` (``np.add.reduceat`` / ``np.minimum.reduceat``): no scatter,
+no per-key dictionary.
 
 ``meta.json`` records {P, ids, narrow, hi1, weighted, hash_t, n_edges,
 lo, hi, manifest}. The MANIFEST ``{pid: n_edges}`` lists every pid that
@@ -56,16 +52,13 @@ lifecycle; operators never touch the files. Its contract:
 - a ``block_dir`` that already holds ``meta.json`` is REUSED (pack once
   per stored graph) only after validation: P, weights when the caller
   needs them, and the graph itself — ``lo``/``hi`` against
-  ``Graph.vertex_stats`` and ``n_edges`` against the edge count (one
-  count job per reuse, none on a fresh pack). A mismatch, or a
+  ``Graph.vertex_stats`` and ``n_edges`` against ``Graph.edge_rows``
+  (one count job per graph, memoized; none on a fresh pack). A
+  mismatch, or a
   ``meta.json`` without those fields, raises;
-- :meth:`CsrBlocks.map_blocks` routes vertex-keyed frames by the one
-  ``pmod(hash(v CAST meta.hash_t), P)`` expression the packer used
-  (:func:`pid_of`), so a block's srcs are exactly the state rows its
-  pid receives, and runs a kernel per pid in one
-  ``groupBy(pid).applyInPandas``. State slices are mapped onto the
-  block's srcs with a torn check; kernels see a :class:`Block` view and
-  are written once for both formats;
+- :func:`pid_of` is the one ``pmod(hash(v CAST meta.hash_t), P)``
+  expression the packer used, so the vertices a pid's state rows hold
+  are exactly its block's keys;
 - leave the ``with`` block only after the operator's last action that
   reads the blocks (lazy plans over them are dead once they are gone).
 
@@ -77,33 +70,36 @@ ways), so they are read as CSC with no second pack; any other source
 packs the transposed set once, with src and dst swapped, into a ``T/``
 sub-store that is validated and reused like the primary one.
 
-Two block kernels, one per accumulator, serve every operator (the
+Two pull kernels, one per accumulator, serve every operator (the
 reference's one reduce primitive, ``per_v_transform_reduce_incoming_e``,
-written once for one GPU or many): :func:`sum_kernel` is PageRank's
-pull SpMV over a transposed block — per pid in the executors and, on
-one in-memory block built transposed by :func:`csr_arrays`, every
-superstep of the driver-local plan; :func:`min_kernel` pushes over a
-src-keyed block for WCC's identity, dense and frontier superstep and
-csr BFS's level, emitting only the dst slots it touched.
+written once for one GPU or many). Each reduces a transposed block's
+in-edges per dst from one value per neighbour slot: :func:`sum_kernel`
+is PageRank's SpMV — per pid in the executors and, on one in-memory
+block built transposed by :func:`csr_arrays`, every superstep of the
+driver-local plan; :func:`min_kernel` is WCC's hash-min over neighbour
+labels and csr BFS's min-id frontier predecessor.
 
-Vertex state can stay beside the blocks (:class:`VertexSlices`): per-pid
+Vertex state stays beside the blocks (:class:`VertexSlices`): per-pid
 ``.npy`` slices in a per-call ``state-<uuid>/`` directory inside
-``block_dir``, written by one setup job that routes vertex-keyed rows
-with :func:`pid_of`, then read and rewritten by one map job per
-superstep with no exchange; a missing slice raises like a missing block.
+``block_dir``, written by one setup job, then read and rewritten by one
+map job per superstep with no exchange; a missing slice raises like a
+missing block. A superstep task reads every pid's previous slice into
+one O(V) vector with :func:`gather` (indexed by vertex id on dense
+blocks, by searchsorted on dict ones) and runs a kernel over its own
+dst-keyed block. PageRank, WCC and BFS all run on this one state
+layer.
 
-Per-task scratch budget: dense-format kernels allocate O(hi) scratch
-per concurrent task. The pack picks dense only below
-``DENSE_IDS_LIMIT`` = 2^26 ids, where an int32 id array is 256 MB; the
-weighted dense kernels (the pull kernel's float64 state vector) need
-2× that, 512 MB. Larger id spaces pack as dict, whose scratch is
-O(distinct neighbours in the block) plus the O(V) state a pull task
-reads.
+Per-task scratch budget: on dense blocks :func:`gather` allocates one
+``hi1``-sized vector of the state's 8-byte type (float64 ranks, int64
+labels and distances) per concurrent task. The pack picks dense only
+below ``DENSE_IDS_LIMIT`` = 2^26 ids, where that vector is 512 MB.
+Larger id spaces pack as dict, whose scratch is the O(V) state a task
+reads, sorted once.
 
 Scale notes: blocks are written once per stored graph (one Spark job),
 read mmap'd P times per superstep; at 100 TB the block set is
 O(E/P · 4-12 bytes) per executor on shared storage (HDFS-fuse/NFS/EFS)
-and the per-superstep network traffic is the O(V) state exchange only.
+and the per-superstep traffic is the O(V) state each task reads.
 """
 
 from __future__ import annotations
@@ -113,7 +109,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from functools import cached_property
 from typing import NamedTuple
 
 import numpy as np
@@ -325,32 +320,6 @@ def positions_of(vs, keys):
     return pos
 
 
-def state_values_for_srcs(pdf_vertex, pdf_value, su):
-    """Map a pid's incoming state slice onto the block's src dictionary
-    (one searchsorted). Every block src hashes to this pid, so it MUST
-    be present in the slice (:func:`positions_of` raises otherwise)."""
-    order = np.argsort(pdf_vertex, kind="stable")
-    return pdf_value[order][positions_of(pdf_vertex[order], su)]
-
-
-def scatter_state_for_srcs(pdf_vertex, pdf_value, su, hi1: int):
-    """Dense-id variant of :func:`state_values_for_srcs`: scatter the
-    slice into an O(hi) scratch array and gather at ``su`` — no sort,
-    no searchsorted. Presence is verified with a boolean scatter (the
-    same torn-block contract)."""
-    arr = np.empty(hi1, dtype=pdf_value.dtype)
-    arr[pdf_vertex] = pdf_value
-    mark = np.zeros(hi1, dtype=np.bool_)
-    mark[pdf_vertex] = True
-    if not mark[su].all():
-        raise RuntimeError(
-            "CSR block src dictionary does not match the incoming "
-            "vertex-state slice — stale/corrupt blocks (block_dir "
-            "reused from a different graph or partition count?)"
-        )
-    return arr[su]
-
-
 class Block:
     """One pid's packed block as kernels see it; the dense/dict
     neighbour format is resolved here, so a kernel is written once for
@@ -358,13 +327,12 @@ class Block:
     block, the dsts of a transposed one (:meth:`CsrBlocks.transposed`);
     ``nbr`` is each edge's other endpoint.
 
-    - ``su``, ``indptr``: the key-sorted CSR (``deg`` = edge count of
-      each ``su`` entry);
+    - ``su``, ``indptr``: the key-sorted CSR;
     - ``nbr``: per-edge neighbour slot in ``[0, n_nbr)`` — ``dr`` or
-      ``dc``, left mmap'd so a frontier gather reads only touched pages;
+      ``dc``, left mmap'd;
     - ``n_nbr``: slot count (``hi1`` or ``len(du)``);
-    - ``nbr_ids(slots)``: vertex ids of slots (``du`` itself for the
-      dict format);
+    - ``du``: the vertex id of each slot on dict blocks (None on dense
+      ones, whose slot IS the vertex id);
     - ``w``: edge weights (weighted packs only)."""
 
     def __init__(self, arrays: dict, meta: dict):
@@ -372,29 +340,19 @@ class Block:
         self.indptr = np.asarray(arrays["indptr"])
         self.w = arrays.get("w")
         if meta["ids"] == "dense":
-            self.nbr, self.du = arrays["dr"], None
-            self.n_nbr, self.id_dtype = meta["hi1"], self.nbr.dtype
+            self.nbr, self.du, self.n_nbr = arrays["dr"], None, meta["hi1"]
         else:
             self.nbr, self.du = arrays["dc"], np.asarray(arrays["du"])
-            self.n_nbr, self.id_dtype = len(self.du), self.du.dtype
-
-    @cached_property
-    def deg(self):
-        return np.diff(self.indptr)
-
-    def nbr_ids(self, slots):
-        if self.du is None:
-            return slots.astype(self.id_dtype, copy=False)
-        return self.du[slots]
+            self.n_nbr = len(self.du)
 
 
-def segment_sum(blk: Block, vals) -> np.ndarray:
-    """One sum of the per-edge ``vals`` per ``blk.su`` entry, over its
-    ``indptr`` segment (every key has at least one edge, so no segment
-    is empty)."""
+def segment_reduce(blk: Block, vals, ufunc=np.add) -> np.ndarray:
+    """One ``ufunc`` reduction of the per-edge ``vals`` per ``blk.su``
+    entry, over its ``indptr`` segment (every key has at least one
+    edge, so no segment is empty)."""
     if not len(blk.su):
-        return np.zeros(0)
-    return np.add.reduceat(vals, blk.indptr[:-1])
+        return np.zeros(0, np.asarray(vals).dtype)
+    return ufunc.reduceat(vals, blk.indptr[:-1])
 
 
 def sum_kernel(blk: Block, x) -> np.ndarray:
@@ -403,51 +361,22 @@ def sum_kernel(blk: Block, x) -> np.ndarray:
     blocks, aligned with ``du`` on dict ones), and each ``blk.su`` dst
     gets ``Σ x[src]·w`` over its in-edges — PageRank's SpMV, one
     gather and one segment sum, no scatter and no per-dst exchange."""
-    return segment_sum(blk, np.asarray(x)[blk.nbr] * blk.w)
+    return segment_reduce(blk, np.asarray(x)[blk.nbr] * blk.w)
 
 
-def min_kernel(blk: Block, x, srcs=None, bound: bool = False) -> dict:
-    """The min kernel (push, over a src-keyed block): each src's value
-    goes to the dsts of its edges and ONE ``np.minimum.at`` reduces them
-    into the dst slots (measured 200M edges/s/core on numpy 1.26, ~10×
-    the JVM join+agg stream it replaces).
+def min_kernel(blk: Block, x) -> np.ndarray:
+    """The pull min kernel, :func:`sum_kernel`'s twin: each ``blk.su``
+    dst gets ``min x[src]`` over its in-edges (``x`` per neighbour slot)
+    — WCC's hash-min over neighbour labels and BFS's min-id frontier
+    predecessor."""
+    return segment_reduce(blk, np.asarray(x)[blk.nbr], np.minimum)
 
-    - ``srcs=None``: ``x`` is aligned with ``blk.su`` and every edge
-      sends (a dense superstep; WCC's identity superstep 0 passes
-      ``blk.su`` itself);
-    - ``srcs`` given: a frontier, ``x[i]`` the value of ``srcs[i]``.
-      ``searchsorted`` finds their src slots (a frontier vertex may have
-      no edges in this block) and indptr slices gather ONLY the
-      frontier's edges: O(|Δ| log |su| + Σ deg(Δ)), no O(E) scan — the
-      reference's ``transform_reduce_v_frontier_outgoing_e_by_dst``.
 
-    Emits only TOUCHED slots, so the ``iinfo.max`` init never leaves the
-    block. ``bound=True`` also drops minima ``>= dst``: a WCC label
-    never exceeds its vertex, so those cannot lower one. BFS sends each
-    frontier vertex as a min-id predecessor, which may exceed dst, so
-    it keeps them."""
-    if srcs is None:
-        nbr, vals = blk.nbr, np.repeat(x, blk.deg)
-    else:
-        pos = np.searchsorted(blk.su, srcs)
-        ok = pos < len(blk.su)
-        ok[ok] = blk.su[pos[ok]] == srcs[ok]
-        pos, x = pos[ok], x[ok]
-        starts = blk.indptr[pos]
-        lens = blk.indptr[pos + 1] - starts
-        # multi-range gather of the frontier's edge offsets; the mmap'd
-        # nbr array is fancy-indexed, so only touched pages are read
-        offs = np.arange(lens.sum()) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
-        nbr, vals = blk.nbr[offs], np.repeat(x, lens)
-    none = np.iinfo(blk.id_dtype).max
-    out = np.full(blk.n_nbr, none, blk.id_dtype)
-    np.minimum.at(out, nbr, vals.astype(blk.id_dtype, copy=False))
-    touched = np.flatnonzero(out != none)
-    dsts, mins = blk.nbr_ids(touched), out[touched]
-    if bound:
-        keep = mins < dsts
-        dsts, mins = dsts[keep], mins[keep]
-    return {"dst": dsts, "nbr_min": mins}
+def block_keys(*blocks: Block | None) -> np.ndarray:
+    """A pid's vertices: the sorted keys of its blocks (src-keyed and
+    dst-keyed; a pid without edges passes None and owns none)."""
+    keys = [b.su for b in blocks if b is not None]
+    return np.unique(np.concatenate(keys)).astype(np.int64) if keys else np.zeros(0, np.int64)
 
 
 class BlockFiles(NamedTuple):
@@ -465,32 +394,11 @@ class BlockFiles(NamedTuple):
         return Block(load_block(self.block_dir, pid, self.meta), self.meta)
 
 
-def _block_task(files: BlockFiles, kernel, schema: str, value):
-    """The per-pid pandas function behind :meth:`CsrBlocks.map_blocks`.
-    Captures plain values only — it is pickled to the executors."""
-    names = [f.split()[0] for f in schema.split(",")]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blk = files.block(int(pdf["pid"].iloc[0]))
-        if blk is None:  # rows for a pid with no edges (hash gap)
-            return pd.DataFrame({n: np.empty(0, np.int64) for n in names})
-        if value is None:
-            return pd.DataFrame(kernel(blk, pdf))
-        v, x = pdf["vertex"].to_numpy(), pdf[value].to_numpy()
-        if files.meta["ids"] == "dense":
-            x = scatter_state_for_srcs(v, x, blk.su, files.meta["hi1"])
-        else:
-            x = state_values_for_srcs(v, x, blk.su)
-        return pd.DataFrame(kernel(blk, x))
-
-    return fn
-
-
 class CsrBlocks:
-    """The block store: pack-or-reuse, validation, routing, per-pid
-    kernel runs and cleanup for one operator call (module docstring has
-    the full contract). ``source`` is a ``Graph`` or an edge frame with
-    ``src``/``dst`` (and ``weight`` when ``weighted``) columns."""
+    """The block store: pack-or-reuse, validation and cleanup for one
+    operator call (module docstring has the full contract). ``source``
+    is a ``Graph`` or an edge frame with ``src``/``dst`` (and ``weight``
+    when ``weighted``) columns."""
 
     def __init__(
         self,
@@ -533,8 +441,6 @@ class CsrBlocks:
             raise
         self.manifest = {int(k): v for k, v in self.meta["manifest"].items()}
         self.files = BlockFiles(self.block_dir, self.meta, self.manifest)
-        # Spark type of the id arrays kernels emit (int32 when narrowed)
-        self.id_t = "int" if self.meta["narrow"] else "long"
         return self
 
     def __exit__(self, *exc) -> None:
@@ -557,10 +463,10 @@ class CsrBlocks:
         return t.__enter__()
 
     def _stats(self, count: bool) -> tuple:
-        """``(n_edges, lo, hi)`` of the source. A Graph answers the id
-        bounds from its memoized ``vertex_stats`` and counts edges only
-        when asked (``n_edges`` is None otherwise); a bare edge frame
-        costs one aggregate."""
+        """``(n_edges, lo, hi)`` of the source. A Graph answers from its
+        memoized ``vertex_stats`` and, only when asked (``n_edges`` is
+        None otherwise), ``edge_rows``; a bare edge frame costs one
+        aggregate."""
         if isinstance(self.source, DataFrame):
             r = self.edges.agg(
                 F.count("*"),
@@ -569,7 +475,7 @@ class CsrBlocks:
             ).first()
             return r[0], r[1], r[2]
         _, lo, hi = self.source.vertex_stats()
-        return (self.edges.count() if count else None), lo, hi
+        return (self.source.edge_rows() if count else None), lo, hi
 
     def _validated_meta(self) -> dict:
         meta = read_meta(self.block_dir, expect_P=self.P)
@@ -599,39 +505,6 @@ class CsrBlocks:
                 "block directory"
             )
         return meta
-
-    def task(self, kernel, schema: str, value: str | None = None):
-        """The per-pid pandas function :meth:`map_blocks` runs."""
-        return _block_task(self.files, kernel, schema, value)
-
-    def map_blocks(
-        self,
-        kernel,
-        schema: str,
-        frame: DataFrame | None = None,
-        value: str | None = None,
-    ) -> DataFrame:
-        """Run ``kernel(block, x)`` once per pid; it returns a dict of
-        output columns matching ``schema``.
-
-        - ``frame=None``: the identity superstep — one task per manifest
-          pid, no state ships (``x`` is the pid-only slice);
-        - ``frame`` keyed by ``vertex`` and ``value`` given: ``x`` is the
-          ``value`` column aligned with ``block.su`` (raises when the
-          slice does not cover the block's srcs — stale blocks);
-        - ``frame`` keyed by ``vertex``, ``value=None``: ``x`` is the
-          pid's raw pandas slice (frontier kernels)."""
-        if frame is None:
-            frame = self.edges.sparkSession.createDataFrame(
-                [(p,) for p in sorted(self.manifest)], "pid long"
-            ).repartition(self.P, "pid")
-        else:
-            frame = frame.withColumn(
-                "pid", pid_of("vertex", self.meta["hash_t"], self.P)
-            )
-        return frame.groupBy("pid").applyInPandas(
-            self.task(kernel, schema, value), schema=schema
-        )
 
 
 def _slice_path(state_dir: str, pid: int, name: str) -> str:
@@ -663,6 +536,29 @@ def load_slice(state_dir: str, pid: int, name: str) -> np.ndarray:
             f"({type(exc).__name__}) — the state directory is not shared "
             "storage visible to this executor, or it was removed"
         ) from None
+
+
+def gather(blk: Block, state_dir: str, P: int, name: str):
+    """Every pid's slice ``name`` (one generation of a vertex state)
+    read into one O(V) lookup in ``blk``'s id space: a dense block's
+    ``hi1``-sized vector indexed by vertex id, or the ids sorted for a
+    dict block. Returns ``(x, at)``: ``x`` the values on ``blk``'s
+    neighbour slots, the kernels' input, and ``at(ids)`` the values at
+    any vertex ids. On a dict block an id without a slice entry raises
+    (:func:`positions_of` — stale blocks)."""
+    ids = np.concatenate([load_slice(state_dir, q, "vertex") for q in range(P)])
+    vals = np.concatenate([load_slice(state_dir, q, name) for q in range(P)])
+    if blk.du is None:
+        x = np.zeros(blk.n_nbr, vals.dtype)
+        x[ids] = vals
+        return x, x.__getitem__
+    order = np.argsort(ids, kind="stable")
+    ids, vals = ids[order], vals[order]
+
+    def at(keys):
+        return vals[positions_of(ids, keys)]
+
+    return at(blk.du), at
 
 
 def _per_pid(task):
@@ -727,9 +623,13 @@ class VertexSlices:
         runs ``task(pid, rows)`` once (``vertex`` as long, the frames'
         other columns with nulls where a frame lacks them). Returns the
         collected rows."""
+        # the pid-only marker rows carry typed zeros, not nulls: pandas
+        # turns an integer column holding a null into float64, which
+        # rounds ids above 2^53
+        cols = {c: t for f in frames for c, t in f.dtypes if c != "vertex"}
         frame = self.spark.range(self.P).select(
             F.col("id").alias("pid"), F.lit(0).cast("long").alias("vertex"),
-            F.lit(True).alias("marker"))
+            F.lit(True).alias("marker"), *[F.lit(0).cast(t).alias(c) for c, t in cols.items()])
         for f in frames:
             frame = frame.unionByName(
                 f.select(pid_of("vertex", self.hash_t, self.P).alias("pid"),

@@ -5,19 +5,22 @@ exchange" from plan shape (.explain showing no Exchange inside the
 loop). This module turns that into a *measured* number: Spark's
 AppStatusStore (the store behind the UI/REST API, populated by
 AppStatusListener whether or not the UI is enabled) exposes per-stage
-``shuffleReadBytes`` / ``shuffleWriteBytes``; snapshotting the running
-totals around each superstep's action gives the actual bytes the
+``shuffleReadBytes`` / ``shuffleWriteBytes``; summing them over the
+stages submitted since the previous snapshot gives the actual bytes the
 superstep exchanged. Iterative operators accept
 ``superstep_metrics=[]`` and append one
 ``{"shuffle_read", "shuffle_write"}`` delta dict per checking action.
 
 Caveats (documented, acceptable for the bench harnesses this feeds):
-- totals are cumulative across the SparkContext, so deltas attribute
+- a delta counts every stage submitted in its window, so it attributes
   concurrent foreign jobs to the superstep — benches run one job at a
   time;
-- the store retains ``spark.ui.retainedStages`` (default 1000) stages;
-  eviction under-counts very long runs. Superstep loops run a handful
-  of stages per round, far under the limit.
+- only stages newer than the previous snapshot count, so the store's
+  eviction of old stages past ``spark.ui.retainedStages`` (default
+  1000) cannot move a delta (summing running totals did: a cleanup
+  inside the window read as negative or foreign bytes in long
+  sessions); the listener bus is drained before each read, so the
+  stages of a job that has returned are in the store;
 - a broken probe must NOT masquerade as a measured zero: the zero-
   exchange claim is exactly what these numbers exist to prove, so JVM
   API drift returns ``None`` (→ ``shuffle_unmeasured: true`` in the
@@ -27,13 +30,19 @@ Caveats (documented, acceptable for the bench harnesses this feeds):
 from __future__ import annotations
 
 
-def shuffle_totals(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all
-    stages the status store currently retains, or ``None`` when the
-    probe itself fails (JVM API drift) — never a fabricated zero.
-    Pure driver-side JVM call — no Spark job."""
+def stage_shuffle_bytes(spark) -> list[tuple[int, int, int]] | None:
+    """``(stage_id, shuffle_read_bytes, shuffle_write_bytes)`` of every
+    stage attempt the status store retains, read once the listener bus
+    has delivered its queued events, or ``None`` when the probe itself
+    fails (JVM API drift) — never a fabricated zero. Pure driver-side
+    JVM calls — no Spark job."""
     try:
-        store = spark._jsparkSession.sparkContext().statusStore()
+        sc = spark._jsparkSession.sparkContext()
+        try:
+            sc.listenerBus().waitUntilEmpty()
+        except Exception:  # pragma: no cover - a queue past its timeout
+            pass  # read what the store holds
+        store = sc.statusStore()
         empty = spark._jvm.java.util.ArrayList()  # empty filter = all
         # Scala default args surface as stageList$default$N accessors
         # (signature: statuses, details, withSummaries, quantiles,
@@ -43,40 +52,42 @@ def shuffle_totals(spark) -> tuple[int, int] | None:
             *[getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)],
         )
         it = seq.iterator()
-        r = w = 0
+        out = []
         while it.hasNext():
             s = it.next()
-            r += int(s.shuffleReadBytes())
-            w += int(s.shuffleWriteBytes())
-        return r, w
+            out.append((int(s.stageId()), int(s.shuffleReadBytes()), int(s.shuffleWriteBytes())))
+        return out
     except Exception:  # pragma: no cover - JVM API drift safety net
         return None
 
 
+def _newest(stages) -> int | None:
+    return None if stages is None else max((s[0] for s in stages), default=-1)
+
+
 class ShuffleProbe:
     """Delta-snapshot helper: ``probe.delta()`` returns the bytes
-    shuffled since the previous call (or construction). When either
-    snapshot failed, the delta carries ``shuffle_read/write = None``
-    plus ``shuffle_unmeasured: True`` so downstream benches cannot
-    mistake broken instrumentation for a measured zero-shuffle
-    superstep."""
+    shuffled by the stages submitted since the previous call (or
+    construction). When either snapshot failed, the delta carries
+    ``shuffle_read/write = None`` plus ``shuffle_unmeasured: True`` so
+    downstream benches cannot mistake broken instrumentation for a
+    measured zero-shuffle superstep."""
 
     def __init__(self, spark):
         self._spark = spark
-        self._last = shuffle_totals(spark)
+        self._last = _newest(stage_shuffle_bytes(spark))
 
     def delta(self) -> dict:
-        cur = shuffle_totals(self._spark)
-        if cur is None or self._last is None:
-            self._last = cur
+        stages = stage_shuffle_bytes(self._spark)
+        last, self._last = self._last, _newest(stages)
+        if stages is None or last is None:
             return {
                 "shuffle_read": None,
                 "shuffle_write": None,
                 "shuffle_unmeasured": True,
             }
-        out = {
-            "shuffle_read": cur[0] - self._last[0],
-            "shuffle_write": cur[1] - self._last[1],
+        new = [s for s in stages if s[0] > last]
+        return {
+            "shuffle_read": sum(s[1] for s in new),
+            "shuffle_write": sum(s[2] for s in new),
         }
-        self._last = cur
-        return out

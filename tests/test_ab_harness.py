@@ -30,8 +30,8 @@ def test_ab_harness_wcc_arms(spark, tmp_path):
         assert a["signature"] == b["signature"] and a["signature"][0] == out["V"]
         for rec in (a, b):
             assert len(rec["walls"]) == len(rec["cpu_s"]) == 1
-    assert all(m.startswith("csr-") for m in _modes(by_layout["csr"]))
-    assert not any(m.startswith("csr-") for m in _modes(by_layout["dataframe"]))
+    assert set(_modes(by_layout["csr"])) == {"csr"}
+    assert "csr" not in _modes(by_layout["dataframe"])
     assert set(_modes(by_frontier["dense"])) == {"dense"}
     fr = _modes(by_frontier["frontier"])
     assert fr[0] == "dense" and set(fr[1:]) == {"frontier"}

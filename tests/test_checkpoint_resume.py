@@ -150,6 +150,27 @@ def test_wcc_resume(spark, tmp_path):
     assert resumed == full
 
 
+@pytest.mark.parametrize("first,second", [("csr", "dataframe"), ("dataframe", "csr")])
+def test_wcc_resume_across_csr(spark, tmp_path, first, second):
+    """A WCC run checkpointed on the csr plan (written from its label
+    slices) resumes on the dataframe plan, and the reverse, matching an
+    uninterrupted run — on ids above 2^53, which no double holds
+    exactly (2^60 + 1 rounds to 2^60, not a vertex here)."""
+    big = 2**60 + 1
+    p = [(big + i, big + i + 1, 1.0) for i in range(80)]
+    G = Graph(edges_df(spark, p + [(b, a, w) for a, b, w in p]), directed=False)
+    full = {r["vertex"]: r["labels"] for r in weakly_connected_components(G).collect()}
+    cp = CheckpointManager(str(tmp_path), "wcc_csr")
+    weakly_connected_components(G, mode=first, max_iter=2, checkpoint=cp, checkpoint_every=1)
+    assert cp.latest_iteration() == 1
+    assert [f.name for f in cp.load(spark, 1)[0].schema] == ["vertex", "labels"]
+    ss: list = []
+    resumed = weakly_connected_components(G, mode=second, checkpoint=cp, checkpoint_every=1,
+                                          resume=True, superstep_seconds=ss)
+    assert {r["vertex"]: r["labels"] for r in resumed.collect()} == full
+    assert ss and cp.latest_iteration() == 1 + len(ss)
+
+
 def test_lpa_resume(spark, tmp_path):
     edges = make_edges("tiny_social")
     G = Graph(edges_df(spark, edges), directed=False)

@@ -154,6 +154,23 @@ def test_wcc_superstep_metrics_contract(spark, plan_cutover):
     assert m[-1]["changed"] == 0
 
 
+def test_shuffle_probe_counts_only_new_stages(monkeypatch):
+    """A ShuffleProbe delta sums the stages submitted since the last
+    snapshot: the status store evicting an old stage inside the window
+    (past ``spark.ui.retainedStages``) must not read as negative bytes."""
+    from cugraph_spark.plans import metrics
+
+    reads = iter([
+        [(1, 100, 90), (2, 50, 40)],
+        [(2, 50, 40), (3, 7, 9)],  # stage 1 evicted, stage 3 new
+        [(3, 7, 9)],
+    ])
+    monkeypatch.setattr(metrics, "stage_shuffle_bytes", lambda spark: next(reads))
+    probe = metrics.ShuffleProbe(None)
+    assert probe.delta() == {"shuffle_read": 7, "shuffle_write": 9}
+    assert probe.delta() == {"shuffle_read": 0, "shuffle_write": 0}
+
+
 def test_tc_packed_closing_leg_identical(spark, monkeypatch):
     """Force the mid-size closing-leg paths (packed-long broadcast and
     packed-long shuffle join) on small graphs; counts must match the
@@ -370,12 +387,12 @@ def test_wcc_large_ids_use_long_path(spark):
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
 def test_wcc_csr_mode_identical(spark, kind, tmp_path, plan_cutover):
-    """mode='csr' (packed mmap blocks, np.minimum.at supersteps) must
-    produce the exact dataframe-mode labels — at the auto frontier
-    threshold, forced-frontier from superstep 1, and forced-dense; on
-    the dense-id blocks the operator packs itself AND on dictionary
-    blocks (packed externally without id_bounds, reused via
-    block_dir). The mode tags show each forced plan ran."""
+    """mode='csr' (label slices beside packed mmap blocks, one pull-min
+    and pointer-jump job per superstep) must produce the exact
+    dataframe-mode labels — on the dense-id blocks the operator packs
+    itself AND on dictionary blocks (packed externally without
+    id_bounds, reused via block_dir). Every superstep is tagged
+    ``csr``."""
     from cugraph_spark.plans.csr_blocks import pack_edges
 
     edges = make_edges(kind)
@@ -383,61 +400,85 @@ def test_wcc_csr_mode_identical(spark, kind, tmp_path, plan_cutover):
     base = _as_map(weakly_connected_components(G).collect())
     dict_dir = str(tmp_path / "dict_blocks")
     pack_edges(G.edges, dict_dir, 8)
-    dict_kw = {"block_dir": dict_dir, "num_partitions": 8}
-    for fthr, kw in (
-        (None, {}),
-        (ALWAYS_FRONTIER, {}),
-        (0, {}),
-        (None, dict_kw),
-        (ALWAYS_FRONTIER, dict_kw),
-    ):
-        got, modes = _run(
-            weakly_connected_components, G, plan_cutover, fthr, mode="csr", **kw
-        )
-        assert got == base, (kind, fthr, kw)
-        if fthr == 0:
-            assert set(modes) == {"csr-dense"}, (kind, kw)
-        elif fthr == ALWAYS_FRONTIER:
-            assert modes[0] == "csr-dense", (kind, kw)
-            assert set(modes[1:]) == {"csr-frontier"}, (kind, kw)
+    for kw in ({}, {"block_dir": dict_dir, "num_partitions": 8}):
+        got, modes = _run(weakly_connected_components, G, plan_cutover, mode="csr", **kw)
+        assert got == base, (kind, kw)
+        assert modes and set(modes) == {"csr"}, (kind, kw)
     ref = wcc_ref(edges)
     assert base == {v: int(ref[v]) for v in sorted(base)}
 
 
-def test_wcc_csr_frontier_engages_and_long_path(spark, plan_cutover):
-    """csr frontier supersteps (indptr-sliced, frontier-sized lookups)
-    must engage when forced and still reach the exact fixpoint on a
-    diameter-heavy path — the case the O(E) probe floor used to pay
-    per superstep."""
+def test_wcc_csr_frontier_engages_and_long_path(spark):
+    """csr WCC reaches the exact fixpoint on a diameter-heavy path (the
+    case the dataframe plan's O(E) probe floor pays per superstep)."""
     p = [(i, i + 1, 1.0) for i in range(300)]
     edges = p + [(b, a, w) for a, b, w in p]
     G = Graph(edges_df(spark, edges), directed=False)
-    m: list = []
-    with plan_cutover(wcc_mod, "_frontier_threshold", ALWAYS_FRONTIER):
-        got = _as_map(
-            weakly_connected_components(G, mode="csr", superstep_metrics=m).collect()
-        )
+    got = _as_map(weakly_connected_components(G, mode="csr").collect())
     assert got == {v: 0 for v in range(301)}
-    assert m[0]["mode"] == "csr-dense"
-    assert any(
-        e["mode"] == "csr-frontier" and e["changed"] > 0 for e in m[1:]
-    )
+
+
+def _group_jobs(spark, name, run):
+    """The Spark jobs ``run()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "job count")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_wcc_bfs_csr_one_job_per_superstep(spark, tmp_path):
+    """Each csr WCC superstep and each csr BFS level is ONE Spark job
+    with no shuffle: two runs with different ``max_iter`` /
+    ``max_depth`` differ by exactly their superstep or level difference
+    in jobs, and every WCC superstep's measured shuffle is 0 bytes."""
+    from cugraph_spark.operators.traversal import bfs
+
+    p = [(i, i + 1, 1.0) for i in range(200)]
+    G = Graph(edges_df(spark, p + [(b, a, w) for a, b, w in p]), directed=False)
+    bdir = str(tmp_path / "blocks")
+    G.edges.persist()
+    try:
+        G.edge_rows()
+        G.vertex_stats()
+        weakly_connected_components(G, mode="csr", block_dir=bdir, max_iter=1)  # packs
+        wcc_jobs, bfs_jobs, steps = {}, {}, {}
+        for n in (2, 5):
+            ss: list = []
+            m: list = []
+            wcc_jobs[n] = _group_jobs(spark, f"wcc_jobs_{n}", lambda: weakly_connected_components(
+                G, mode="csr", block_dir=bdir, max_iter=n, superstep_seconds=ss,
+                superstep_metrics=m))
+            steps[n] = len(ss)
+            assert len(m) == len(ss) and all(e["mode"] == "csr" for e in m)
+            assert all(e["shuffle_read"] == 0 and e["shuffle_write"] == 0 for e in m), m
+            bfs_jobs[n] = _group_jobs(spark, f"bfs_jobs_{n}", lambda: bfs(
+                G, 0, max_depth=n, mode="csr", block_dir=bdir))
+    finally:
+        G.edges.unpersist()
+    assert steps == {2: 2, 5: 5}
+    assert wcc_jobs[5] - wcc_jobs[2] == 3, wcc_jobs
+    assert bfs_jobs[5] - bfs_jobs[2] == 3, bfs_jobs
+    assert wcc_jobs[2] <= 2 + 6 and bfs_jobs[2] <= 2 + 6, (wcc_jobs, bfs_jobs)
 
 
 def test_csr_block_manifest_and_missing_block_raises(spark, tmp_path):
     """pack_edges returns a manifest of packed pids and validated
     metadata; a manifest-listed block whose file is missing RAISES at
     read time instead of silently contributing zeros (torn-deployment
-    guard); a stale state slice that does not cover the block's srcs
-    raises; and a block_dir packed with a different P is rejected."""
+    guard); state slices that do not cover a block's neighbours raise;
+    and a block_dir packed with a different P is rejected."""
     import numpy as np
 
     from cugraph_spark.plans.csr_blocks import (
+        Block,
+        gather,
         load_block,
         pack_edges,
         read_meta,
-        scatter_state_for_srcs,
-        state_values_for_srcs,
+        save_slice,
     )
 
     df = spark.createDataFrame(
@@ -464,19 +505,16 @@ def test_csr_block_manifest_and_missing_block_raises(spark, tmp_path):
     blk2 = load_block(bd2, pid2, meta2)
     assert len(blk2["dr"]) == int(blk2["indptr"][-1])
     assert (meta2["n_edges"], meta2["lo"], meta2["hi"]) == (3, 1, 3)
-    # torn state: slice missing one of the block's srcs (both mappers)
-    su = np.asarray(blk["su"])
-    with pytest.raises(RuntimeError, match="does not match"):
-        state_values_for_srcs(su[:0], np.zeros(0), su)
-    with pytest.raises(RuntimeError, match="does not match"):
-        scatter_state_for_srcs(
-            np.asarray([], dtype=np.int64),
-            np.asarray([], dtype=np.int64),
-            np.asarray(blk2["su"]),
-            meta2["hi1"],
-        )
-    # torn deployment: manifest-listed file gone
+    # torn state: slices that miss one of a dict block's neighbours
     import os
+
+    sd = str(tmp_path / "state")
+    os.makedirs(sd)
+    save_slice(sd, 0, "vertex", np.zeros(0, np.int64))
+    save_slice(sd, 0, "x", np.zeros(0))
+    with pytest.raises(RuntimeError, match="does not match"):
+        gather(Block(blk, meta), sd, 1, "x")
+    # torn deployment: manifest-listed file gone
 
     os.remove(os.path.join(bdir, f"{pid}.su.npy"))
     with pytest.raises(RuntimeError, match="missing"):
@@ -773,3 +811,51 @@ def test_bfs_csr_mode_identical(spark, tmp_path):
         assert a == b == c  # second csr call reuses the blocks
     with pytest.raises(ValueError):
         bfs(G2, 1, mode="nope")
+
+
+def test_bfs_csr_pull_edge_cases(spark, tmp_path, monkeypatch):
+    """The bottom-up csr BFS: a directed graph packs its ``T/`` set once
+    across two calls; a source absent from the graph, or above the
+    dense blocks' id range, leaves every vertex at -1/-1; a source with
+    no in-edges is reached at depth 0 and expands; and a deleted
+    ``dist`` slice raises."""
+    import os
+
+    from cugraph_spark.operators.traversal import bfs
+    from cugraph_spark.plans import csr_blocks
+    from cugraph_spark.plans.csr_blocks import CsrBlocks, VertexSlices
+
+    def _m(rows):
+        return {r["vertex"]: (r["distance"], r["predecessor"]) for r in rows}
+
+    # 0 has no in-edges; 5 -> 6 is out of its reach
+    ed = [(0, 1), (0, 2), (2, 1), (1, 3), (3, 4), (5, 6)]
+    G = Graph(edges_df(spark, [(a, b, 1.0) for a, b in ed]), directed=True)
+    bdir = str(tmp_path / "blocks")
+    packs: list = []
+    real = csr_blocks.pack_edges
+    monkeypatch.setattr(csr_blocks, "pack_edges",
+                        lambda *a, **k: packs.append(a[1]) or real(*a, **k))
+    want = {0: (0, -1), 1: (1, 0), 2: (1, 0), 3: (2, 1), 4: (3, 3), 5: (-1, -1), 6: (-1, -1)}
+    for _ in range(2):
+        assert _m(bfs(G, 0, mode="csr", block_dir=bdir, num_partitions=4).collect()) == want
+    assert packs == [bdir, os.path.join(bdir, "T")]
+    assert _m(bfs(G, 0).collect()) == want
+    for source in (7, 10**6):  # absent; above the dense hi
+        got = _m(bfs(G, source, mode="csr", block_dir=bdir, num_partitions=4).collect())
+        assert got == {v: (-1, -1) for v in range(7)}, source
+
+    traversal = importlib.import_module("cugraph_spark.operators.traversal")
+    P = 4
+    with CsrBlocks(G, P, bdir) as blocks, VertexSlices(blocks) as state:
+        inb = blocks.transposed()
+        state.map(traversal._bfs_setup_task(blocks.files, inb.files, state.dir, 0),
+                  "n long").collect()
+        level = traversal._bfs_level_task(inb.files, state.dir, P, 1)
+        pid = sorted(inb.manifest)[0]
+        assert len(level(pid)) == 1
+        other = next(q for q in range(P) if q != pid)
+        os.remove(os.path.join(state.dir, f"{other}.dist0.npy"))
+        with pytest.raises(RuntimeError, match="state slice missing"):
+            level(pid)
+

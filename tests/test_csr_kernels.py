@@ -1,10 +1,13 @@
-"""The two block kernels (``plans/csr_blocks.py``: the pull
-``sum_kernel`` over transposed blocks and the push ``min_kernel``)
-against numpy's unbuffered ``np.add.at`` / ``np.minimum.at`` over the
-raw edges, on the three block forms: packed dense, packed dict, and
-built in memory (the driver-local PageRank's form)."""
+"""The two pull block kernels (``plans/csr_blocks.py``: ``sum_kernel``
+and ``min_kernel`` over transposed blocks) against numpy's unbuffered
+``np.add.at`` / ``np.minimum.at`` over the raw edges, on the three block
+forms: packed dense, packed dict, and built in memory (the driver-local
+PageRank's form), with the state either indexed directly or read from
+per-pid slices through ``gather``, as the csr plans read it."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
@@ -13,10 +16,12 @@ import pytest
 from cugraph_spark.plans.csr_blocks import (
     Block,
     csr_arrays,
+    gather,
     load_block,
     min_kernel,
     pack_edges,
     read_meta,
+    save_slice,
     sum_kernel,
 )
 
@@ -28,17 +33,14 @@ W = _rng.integers(1, 5, 300).astype(np.float64)
 # integer-valued doubles: every sum is exact in any order
 X = _rng.integers(0, 4, V).astype(np.float64)
 LABELS = _rng.permutation(V)
-# some frontier vertices own no edges (V-1) or no edges in most blocks
-FRONTIER = np.array([0, 3, 7, 12, V - 1])
 
 
-def _blocks(spark, tmp_path, form, transposed=False):
-    """The edges as blocks keyed by src, or by dst when ``transposed``."""
-    key, nbr = (DST, SRC) if transposed else (SRC, DST)
+def _blocks(spark, tmp_path, form):
+    """The edges as transposed blocks, keyed by dst."""
     if form == "memory":
-        return [Block(csr_arrays(key, nbr, W), {"ids": "dense", "hi1": V})]
-    df = spark.createDataFrame(pd.DataFrame({"src": key, "dst": nbr, "weight": W}))
-    bdir = str(tmp_path / f"{form}_{transposed}")
+        return [Block(csr_arrays(DST, SRC, W), {"ids": "dense", "hi1": V})]
+    df = spark.createDataFrame(pd.DataFrame({"src": DST, "dst": SRC, "weight": W}))
+    bdir = str(tmp_path / form)
     manifest = pack_edges(df, bdir, 3, weight="weight",
                           id_bounds=(0, V - 1) if form == "dense" else None)
     meta = read_meta(bdir)
@@ -46,47 +48,41 @@ def _blocks(spark, tmp_path, form, transposed=False):
     return [Block(load_block(bdir, pid, meta), meta) for pid in manifest]
 
 
-def _combined(outs, col, op):
-    """Per-dst reduce of the blocks' partials, as the Spark groupBy does."""
-    got: dict = {}
-    for out in outs:
-        for d, v in zip(out["dst"].tolist(), out[col].tolist()):
-            got[d] = op(got[d], v) if d in got else v
-    return got
+def _slots(b, vals, state_dir):
+    """``vals`` (one per vertex id) on block ``b``'s neighbour slots:
+    indexed directly, or, with ``state_dir``, written as per-pid slices
+    of two pids and read back through ``gather``."""
+    if state_dir is None:
+        return vals if b.du is None else vals[b.du]
+    ids = np.arange(V)
+    for pid in (0, 1):
+        save_slice(state_dir, pid, "vertex", ids[ids % 2 == pid])
+        save_slice(state_dir, pid, "vals", vals[ids % 2 == pid])
+    x, at = gather(b, state_dir, 2, "vals")
+    assert np.array_equal(at(ids), vals)
+    return x
 
 
-def _min_at(mask, bound):
-    none = np.iinfo(np.int64).max
-    out = np.full(V, none)
-    np.minimum.at(out, DST[mask], LABELS[SRC[mask]])
-    return {d: int(m) for d, m in enumerate(out) if m != none and (not bound or m < d)}
-
-
-@pytest.mark.parametrize("bound", [True, False])
+@pytest.mark.parametrize("gathered", [True, False])
 @pytest.mark.parametrize("form", ["dense", "dict", "memory"])
-def test_block_kernels_match_ufunc_at(spark, tmp_path, form, bound):
+def test_block_kernels_match_ufunc_at(spark, tmp_path, form, gathered):
+    state_dir = None
+    if gathered:
+        state_dir = str(tmp_path / "state")
+        os.makedirs(state_dir)
     blocks = _blocks(spark, tmp_path, form)
     assert sum(len(b.nbr) for b in blocks) == len(SRC)
 
-    # pull: each transposed block sums the in-edges of its dsts, x on
-    # the neighbour slots (vertex ids when dense, ``du`` when dict)
+    # each transposed block reduces the in-edges of its dsts, x on the
+    # neighbour slots (vertex ids when dense, ``du`` when dict)
     sums = np.zeros(V)
     np.add.at(sums, DST, X[SRC] * W)
-    want = {d: sums[d] for d in np.unique(DST).tolist()}
-    got: dict = {}
-    for b in _blocks(spark, tmp_path, form, transposed=True):
-        x = X if b.du is None else X[b.du]
-        got.update(zip(b.su.tolist(), sum_kernel(b, x).tolist()))
-    assert got == want
-
-    dense = [min_kernel(b, LABELS[b.su], bound=bound) for b in blocks]
-    assert _combined(dense, "nbr_min", min) == _min_at(np.ones(len(SRC), bool), bound)
-
-    # every block sees the whole frontier, so a frontier vertex without
-    # edges in a block must add nothing there; and the case that once
-    # leaked the sentinel: dsts with in-edges, none of them from the
-    # frontier, must not be emitted
-    reached = np.isin(SRC, FRONTIER)
-    assert set(DST.tolist()) - set(DST[reached].tolist())
-    front = [min_kernel(b, LABELS[FRONTIER], FRONTIER, bound=bound) for b in blocks]
-    assert _combined(front, "nbr_min", min) == _min_at(reached, bound)
+    mins = np.full(V, np.iinfo(np.int64).max)
+    np.minimum.at(mins, DST, LABELS[SRC])
+    got_sum, got_min = {}, {}
+    for b in blocks:
+        got_sum.update(zip(b.su.tolist(), sum_kernel(b, _slots(b, X, state_dir)).tolist()))
+        got_min.update(zip(b.su.tolist(), min_kernel(b, _slots(b, LABELS, state_dir)).tolist()))
+    has_in = np.unique(DST).tolist()
+    assert got_sum == {d: sums[d] for d in has_in}
+    assert got_min == {d: int(mins[d]) for d in has_in}

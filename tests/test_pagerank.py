@@ -316,7 +316,7 @@ def test_pagerank_csr_one_job_per_superstep(spark, tmp_path):
     sc = spark.sparkContext
     jobs = {}
     try:
-        G.edges.count()
+        G.edge_rows()  # warm, like the edges: the reuse check counts them once per graph
         for n in (3, 9):
             sc.setJobGroup(f"pull_jobs_{n}", "job count")
             ss: list = []

@@ -20,9 +20,13 @@ the plan cutovers the tests patch, set for the arm's runs only:
   broadcast=N  ``strategy.NARROW_STATE_BROADCAST_LIMIT``, the
                broadcast-state cutover (wcc, lpa; 0 = shuffle-hash)
 
+Both shape only dataframe plans: a wcc arm with ``mode=csr`` rejects
+them.
+
 ``N`` may be ``always`` (10**18). ``block_dir=fresh`` packs into a new
 directory per run (pack in the wall); ``block_dir=shared`` reuses one
-directory packed before the first timed run (stored blocks). Presets:
+directory packed before the first timed run, its transposed ``T/`` set
+included (stored blocks). Presets:
 
   dataframe  {}                         the automatic dataframe plan
   csr        mode=csr,block_dir=fresh
@@ -134,6 +138,8 @@ def parse_arm(token: str, operator: str) -> tuple[str, dict]:
     for key in PATCH_KEYS:
         if key in settings and operator not in PATCHABLE[key]:
             raise SystemExit(f"{key}= does not apply to {operator}")
+        if key in settings and operator == "wcc" and settings.get("mode") == "csr":
+            raise SystemExit(f"{key}= does not apply to wcc mode=csr")
     return name, settings
 
 
@@ -285,12 +291,14 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
 
 def _pack(G, block_dir: str, weighted: bool) -> None:
     """Pack the stored-blocks arm's directory once, outside the clock,
-    with the partition count the operators resolve by default."""
+    with the partition count the operators resolve by default: the
+    primary set and the transposed one the pull plans read (free on an
+    undirected graph)."""
     from cugraph_spark.plans.csr_blocks import CsrBlocks
     from cugraph_spark.plans.strategy import resolve_partitions
 
-    with CsrBlocks(G, resolve_partitions(None, G.edges), block_dir, weighted=weighted):
-        pass
+    with CsrBlocks(G, resolve_partitions(None, G.edges), block_dir, weighted=weighted) as blocks:
+        blocks.transposed()
 
 
 def _block_root() -> str:

@@ -11,7 +11,8 @@ harness runs superstep 0 once with a checkpoint, then resumes from
 that checkpoint ``iters`` times with frontier supersteps switched off
 (``_frontier_threshold`` patched to 0, as the tests and tools/ab.py
 do), so every resumed call runs the dense O(E) plan until the labels
-are stable. The first superstep of each call carries the call's
+are stable (the csr plan has no frontier mode: every superstep pulls
+over all of its blocks). The first superstep of each call carries the call's
 one-time work — reading the saved labels, the edge layout (int32
 recast, dst repartition once V ≥ DST_PARTITION_MIN_V) and filling the
 edge cache — and is dropped; every later superstep of the call is one
@@ -33,9 +34,10 @@ Usage: python tools/bench_scaling_wcc.py [N] [rmat_scale] [edgefactor] [iters] [
        (iters = resumed calls; the report's supersteps_A/B list the
        kept samples. Defaults: N=8, scale=22, edgefactor=16, iters=10,
        mode=dataframe →
-       ~128M symmetrized edges; mode=csr runs the packed-block
-       supersteps — the pack job is setup/layout prep, same role as
-       the pre-stored partitioning, and superstep_seconds excludes it)
+       ~128M symmetrized edges; mode=csr runs the label-slice
+       supersteps over packed blocks — the pack and slice setup jobs
+       are setup/layout prep, same role as the pre-stored partitioning,
+       and superstep_seconds excludes them)
 """
 
 from __future__ import annotations
@@ -71,7 +73,7 @@ work = tempfile.mkdtemp(prefix="bench_wcc_")
 cp = CheckpointManager(work, "wcc")
 kw = dict(check_every=1, mode={mode!r}, block_dir=work + "/blocks")
 weakly_connected_components(G, max_iter=1, checkpoint=cp, checkpoint_every=1, **kw).count()
-wcc_mod._frontier_threshold = lambda V, csr: 0  # every superstep dense
+wcc_mod._frontier_threshold = lambda V: 0  # every dataframe superstep dense
 ts = []
 for _ in range({iters}):
     t = []
