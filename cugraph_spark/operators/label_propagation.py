@@ -97,7 +97,6 @@ def label_propagation(
     resume: bool = False,
     check_every: int = 1,
     superstep_metrics: list | None = None,
-    tie_break: str = "min",
 ) -> DataFrame:
     """Returns DataFrame ``[vertex, labels]``. Requires an undirected
     (symmetrized) graph — incident weight means both directions.
@@ -148,17 +147,7 @@ def label_propagation(
     has the labels of two supersteps ago: under ``check_every>1`` (the
     lazy supersteps pass them on) and right after a checkpoint save.
     With batched checks the stop lands on the first checking superstep
-    inside the cycle.
-
-    ``tie_break="hold"`` (opt-in; default ``"min"`` is the gated
-    reference semantics): a vertex whose current label is among the
-    max-weight candidates KEEPS it; otherwise the smallest max-weight
-    label wins. The literature's standard oscillation damper — a
-    2-cycle requires a strictly-better foreign label, so bipartite
-    flip-flop dies out. Changes which labeling converges, hence
-    opt-in."""
-    if tie_break not in ("min", "hold"):
-        raise ValueError(f"unknown tie_break: {tie_break!r}")
+    inside the cycle."""
     if G.directed:
         raise ValueError(
             "label_propagation requires an undirected (symmetrized) graph"
@@ -296,41 +285,9 @@ def label_propagation(
                 .groupBy(F.col(DST), F.col("labels").alias("cand"))
                 .agg(F.sum(WGT).alias("w"))
             )
-        if tie_break == "hold":
-            # damped variant: prefer the vertex's CURRENT label among
-            # max-weight candidates (pref=1 sorts above pref=0 in the
-            # struct max), else smallest max-weight label
-            if state is None:
-                scored = scores.withColumn(
-                    "pref",
-                    F.when(F.col("cand") == F.col(DST), 1).otherwise(0),
-                )
-            else:
-                curside = vertex_join_side(
-                    state.select(
-                        F.col("vertex").alias("cv"),
-                        F.col("labels").alias("cur"),
-                    ),
-                    V,
-                    limit=blimit,
-                )
-                scored = scores.join(
-                    curside, scores[DST] == F.col("cv"), "left"
-                ).withColumn(
-                    "pref",
-                    F.when(F.col("cand") == F.col("cur"), 1).otherwise(0),
-                )
-            best = scored.groupBy(DST).agg(
-                F.max(
-                    F.struct(
-                        F.col("w"), F.col("pref"), (-F.col("cand")).alias("neg")
-                    )
-                ).alias("m")
-            ).select(F.col(DST), (-F.col("m.neg")).alias("new_label"))
-        else:
-            best = scores.groupBy(DST).agg(
-                F.max(F.struct(F.col("w"), (-F.col("cand")).alias("neg"))).alias("m")
-            ).select(F.col(DST), (-F.col("m.neg")).alias("new_label"))
+        best = scores.groupBy(DST).agg(
+            F.max(F.struct(F.col("w"), (-F.col("cand")).alias("neg"))).alias("m")
+        ).select(F.col(DST), (-F.col("m.neg")).alias("new_label"))
 
         # old label carried through → changed-count without a second
         # join; when the previous superstep was checked, the label of

@@ -34,9 +34,10 @@ so the local plan ignores them.
   ``(src, dst, weight)`` into ONE in-memory dense block (P=1, edges
   mapped to state indices, built transposed — keyed by dst — by the
   pack's ``csr_blocks.csr_arrays``), then the whole power iteration in
-  numpy, each superstep's SpMV the csr plan's own pull
-  ``csr_blocks.sum_kernel`` — the reference building one
-  ``*_impl.cuh`` for one GPU or many. Every distributed dataframe
+  numpy, each superstep the csr plan's own superstep function
+  (``_update``: the pull ``csr_blocks.sum_kernel`` and the dataframe
+  expressions around it) over that one block — the reference building
+  one ``*_impl.cuh`` for one GPU or many. Every distributed dataframe
   superstep costs ~6 Spark jobs and 0.5-1.2 s of driver time whatever
   E is; on a 6.7k-edge code graph that was 82 jobs for 14 supersteps.
   The local plan keeps the dataframe expressions around the kernel and
@@ -59,14 +60,17 @@ so the local plan ignores them.
   blocks, and its dst-keyed view (``CsrBlocks.transposed``: an
   undirected graph's own blocks, a directed graph's ``T/`` sub-store,
   packed once) holds each pid's in-edges. The rank vector never enters
-  a Catalyst plan: ONE setup job routes the side inputs by pid and
-  writes per-pid ``(vertex, ows, rank, x = rank/ows[, pnorm])`` slices
-  beside the blocks (``csr_blocks.VertexSlices``, out-weights summed
-  from the src-keyed blocks), then each superstep is ONE map job over
-  the P pids with no exchange: each task reads every pid's ``x`` slice
+  a Catalyst plan. It lives in per-pid slices beside the blocks, in
+  the superstep skeleton every csr plan shares
+  (``csr_blocks.VertexSlices``); this module supplies only the numbers.
+  ``_init``: ONE setup job (routing the side inputs by pid when there
+  are any) writes each pid's out-weights (summed from its src-keyed
+  block unless given), first ranks, ``x = rank/ows`` and
+  personalization. ``_update``: each superstep is ONE map job over the
+  P pids with no exchange; each task reads every pid's ``x`` slice
   into one O(V) vector, sums its own vertices' in-edges with the pull
-  kernel, writes its new slices and returns one ``(l1, dangling)`` row
-  that the driver adds up. Costs: each task reads O(V) state per
+  kernel, and returns its next rank and x and one ``(l1, dangling)``
+  row that the driver adds up. Costs: each task reads O(V) state per
   superstep (page cache on one box, P·V bytes over shared storage on a
   cluster), and a directed graph stores its blocks twice. On a
   multi-node cluster ``block_dir`` must be a shared filesystem
@@ -105,16 +109,10 @@ from ..plans import local_tail
 from ..plans.checkpoint import CheckpointManager
 from ..plans.csr_blocks import (
     Block,
-    BlockFiles,
     CsrBlocks,
     VertexSlices,
-    block_keys,
     csr_arrays,
-    drop_slices,
-    gather,
-    load_slice,
     positions_of,
-    save_slice,
     segment_reduce,
     sum_kernel,
 )
@@ -210,14 +208,19 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
         dangling = float(rank[ows == 0.0].sum())
 
     # one in-memory dense block over the state indices (P=1), built
-    # transposed (keyed by dst), run by the csr plan's pull sum kernel
-    # every superstep
+    # transposed (keyed by dst), run by the csr plan's own superstep
+    # function every superstep
     blk = Block(csr_arrays(di, si, w), {"ids": "dense", "hi1": V})
+    idx = np.arange(V)
+    own = {"ows": ows, "rank": rank}
+    if pnorm is not None:
+        own["pnorm"] = pnorm
+    x = _divided(rank, ows)
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
 
     def save(it, metrics):
-        pdf = pd.DataFrame({"vertex": verts, "ows": ows, "rank": rank})
+        pdf = pd.DataFrame({"vertex": verts, "ows": ows, "rank": own["rank"]})
         checkpoint.save(spark.createDataFrame(pdf, state_schema), it, metrics)
 
     converged = False
@@ -225,16 +228,9 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
     for it in range(start_iter, max_iter):
         final_iter = it
         t0 = time.perf_counter()
-        # the dataframe superstep's expressions: rank / ows with a
-        # dangling divisor of 1.0, α·Σ contrib + (dangling·α + 1−α)/V
-        # (·pnorm with personalization), L1 against the previous rank,
-        # the next dangling mass
-        contrib = np.zeros(V)
-        contrib[blk.su] = sum_kernel(blk, _divided(rank, ows))
-        mass = dangling * alpha + (1.0 - alpha)
-        new = alpha * contrib + (mass / V if pnorm is None else mass * pnorm)
-        l1 = float(np.abs(new - rank).sum())
-        rank, dangling = new, float(new[ows == 0.0].sum())
+        new, row = _update(alpha, V, dangling)(idx, own, blk, x, None)
+        own["rank"], x = new["rank"], new["x"]
+        l1, dangling = row["l1"], row["dang"]
         if superstep_seconds is not None:
             superstep_seconds.append(time.perf_counter() - t0)
         if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
@@ -248,7 +244,7 @@ def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
 
     result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
     result = spark.createDataFrame(
-        pd.DataFrame({"vertex": verts, "pagerank": rank}), result_schema)
+        pd.DataFrame({"vertex": verts, "pagerank": own["rank"]}), result_schema)
     return result, converged
 
 
@@ -276,75 +272,55 @@ def _divided(rank, ows):
     return rank / np.where(ows == 0.0, 1.0, ows)
 
 
-def _setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, V: int,
-                gen: int, given: tuple, resumed: bool):
-    """The pull plan's setup, per pid: its vertices (its blocks' keys,
-    or a resumed checkpoint's rows), their out-weights (segment sums of
-    the src-keyed block unless given), first ranks and personalization,
-    written as slices (rank and x of generation ``gen``, the first
-    superstep's); returns the pid's dangling mass. ``given`` names the
-    routed columns (ows, rank, pnorm)."""
+def _init(V: int, given: tuple, resumed: bool):
+    """The csr plan's setup of one pid (``VertexSlices.setup``): out-
+    weights (segment sums of the src-keyed block unless given), first
+    ranks, ``x = rank/ows`` and personalization; on a resume, the
+    checkpoint's rows are the vertex set and must hold every block key.
+    ``given`` names the routed columns (ows, rank, pnorm). Its row is
+    the pid's dangling mass."""
 
-    def task(pid: int, rows: pd.DataFrame) -> pd.DataFrame:
-        out_blk = out_files.block(pid)
-        in_blk = out_blk if in_files.block_dir == out_files.block_dir else in_files.block(pid)
-        keys = block_keys(out_blk, in_blk)
+    def init(verts, rows, out_blk):
+        arrays = {}
         if resumed:
-            verts = np.sort(rows.loc[rows["rank"].notna(), "vertex"].to_numpy(np.int64))
+            keys = verts
+            verts = arrays["vertex"] = np.sort(
+                rows.loc[rows["rank"].notna(), "vertex"].to_numpy(np.int64))
             positions_of(verts, keys)  # the checkpoint must hold every block key
-        else:
-            verts = keys
         if "ows" in given:
             ows = _column(rows, "ows", verts)
         else:
             ows = np.zeros(len(verts))
-            if out_blk is not None:
-                ows[np.searchsorted(verts, out_blk.su)] = segment_reduce(out_blk, out_blk.w)
+            ows[np.searchsorted(verts, out_blk.su)] = segment_reduce(out_blk, out_blk.w)
         rank = _column(rows, "rank", verts) if "rank" in given else np.full(len(verts), 1.0 / V)
-        for name, arr in (("vertex", verts), ("ows", ows), (f"rank{gen}", rank),
-                          (f"x{gen}", _divided(rank, ows))):
-            save_slice(state_dir, pid, name, arr)
+        arrays.update(ows=ows, rank=rank, x=_divided(rank, ows))
         if "pnorm" in given:
-            save_slice(state_dir, pid, "pnorm", _column(rows, "pnorm", verts))
-        return pd.DataFrame({"dang": [float(rank[ows == 0.0].sum())]})
+            arrays["pnorm"] = _column(rows, "pnorm", verts)
+        return arrays, {"dang": float(rank[ows == 0.0].sum())}
 
-    return task
+    return init
 
 
-def _step_task(in_files: BlockFiles, state_dir: str, P: int, V: int, alpha: float,
-               dangling: float, it: int, personalized: bool):
-    """Pull superstep ``it`` of one pid: read every pid's generation-
-    ``it`` ``x = rank/ows`` slice into one O(V) vector, sum the in-edges
-    of the pid's own vertices (the pull sum kernel over its dst-keyed
-    block), write its generation-``it+1`` rank and x slices (empty ones
-    for a pid without vertices, so every pid has every slice), drop its
-    generation ``it-1``, which no task reads any more, and return its
-    ``(l1, dang)`` partials — none for a pid without vertices. Slices
-    are never rewritten in place: on ext4, replacing an existing file
-    flushes its data first (``auto_da_alloc``), ~60 ms a file."""
+def _update(alpha: float, V: int, dangling: float):
+    """One PageRank superstep over one dst-keyed block — a pid's in the
+    csr plan, the driver-local plan's one in-memory block: the pull sum
+    kernel over ``x = rank/ows`` of the in-neighbours, then the
+    dataframe superstep's expressions, α·Σ contrib + (dangling·α +
+    1−α)/V (·pnorm when ``own`` holds it). Returns the next rank and x
+    and the ``(l1, dang)`` partials: the L1 diff against the previous
+    rank and the next dangling mass."""
+    mass = dangling * alpha + (1.0 - alpha)
 
-    def task(pid: int) -> pd.DataFrame:
-        verts = load_slice(state_dir, pid, "vertex")
-        ows, old = load_slice(state_dir, pid, "ows"), load_slice(state_dir, pid, f"rank{it}")
+    def update(verts, own, blk, x, at):
+        ows = own["ows"]
         contrib = np.zeros(len(verts))
-        blk = in_files.block(pid)
-        if blk is not None:
-            x, _ = gather(blk, state_dir, P, f"x{it}")
-            contrib[positions_of(verts, blk.su)] = sum_kernel(blk, x)
-        # the dataframe superstep's expressions: α·Σ contrib +
-        # (dangling·α + 1−α)/V (·pnorm with personalization)
-        mass = dangling * alpha + (1.0 - alpha)
-        teleport = mass * load_slice(state_dir, pid, "pnorm") if personalized else mass / V
+        contrib[positions_of(verts, blk.su)] = sum_kernel(blk, x)
+        teleport = mass * own["pnorm"] if "pnorm" in own else mass / V
         new = alpha * contrib + teleport
-        save_slice(state_dir, pid, f"rank{it + 1}", new)
-        save_slice(state_dir, pid, f"x{it + 1}", _divided(new, ows))
-        drop_slices(state_dir, pid, [f"rank{it - 1}", f"x{it - 1}"])
-        if not len(verts):
-            return pd.DataFrame({"l1": np.zeros(0), "dang": np.zeros(0)})
-        return pd.DataFrame({"l1": [float(np.abs(new - old).sum())],
-                             "dang": [float(new[ows == 0.0].sum())]})
+        row = {"l1": float(np.abs(new - own["rank"]).sum()), "dang": float(new[ows == 0.0].sum())}
+        return {"rank": new, "x": _divided(new, ows)}, row
 
-    return task
+    return update
 
 
 def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
@@ -357,14 +333,15 @@ def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
     slices with the other plans' columns, iterations and meta keys.
     Returns ``(result, converged)``."""
     spark = G.edges.sparkSession
+    V = G.vertex_stats()[0]
+    if V == 0:
+        raise ValueError("empty graph")
     vfield = G.vertices().schema["vertex"]
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
     result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
-    with CsrBlocks(G, P, block_dir, weighted=True) as blocks, VertexSlices(blocks) as state:
-        V = G.vertex_stats()[0]
-        if V == 0:
-            raise ValueError("empty graph")
+    with CsrBlocks(G, P, block_dir, weighted=True) as blocks, \
+            VertexSlices(blocks, ("rank", "x")) as state:
         frames = []
         start_iter, dangling = 0, None
         resumed = resume and checkpoint is not None and checkpoint.latest_iteration() is not None
@@ -384,26 +361,20 @@ def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
         if personalization is not None:
             frames.append(_normalized(personalization, "personalization", "pnorm"))
         given = tuple(c for f in frames for c in f.columns if c != "vertex")
-        inb = blocks.transposed()
-        gen = start_iter  # the slice generation the next superstep reads
-        rows = state.route(frames, _setup_task(blocks.files, inb.files, state.dir, V, gen,
-                                               given, resumed), "dang double")
+        rows = state.setup(_init(V, given, resumed), "dang double", frames)
         if dangling is None:
             dangling = float(sum(r["dang"] for r in rows))
+        reads = ("ows", "rank", "pnorm") if personalization is not None else ("ows", "rank")
 
         def save(it, metrics):
-            checkpoint.save(state.frame(state_schema, ["vertex", "ows", f"rank{gen}"]),
-                            it, metrics)
+            checkpoint.save(state.frame(state_schema, ["vertex", "ows", "rank"]), it, metrics)
 
         converged = False
         final_iter = start_iter
         for it in range(start_iter, max_iter):
             final_iter = it
             t0 = time.perf_counter()
-            step = _step_task(inb.files, state.dir, P, V, alpha, dangling, it,
-                              personalization is not None)
-            rows = state.map(step, "l1 double, dang double").collect()
-            gen = it + 1
+            rows = state.step(_update(alpha, V, dangling), reads, "x", "l1 double, dang double")
             l1 = float(sum(r["l1"] for r in rows))
             dangling = float(sum(r["dang"] for r in rows))
             if superstep_seconds is not None:
@@ -416,9 +387,7 @@ def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
         if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
             save(final_iter, {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
                               "tol": tol, "final": True})
-        # materialized while the slices still exist
-        result = truncate_plan(state.frame(result_schema, ["vertex", f"rank{gen}"]), eager=True)
-    return result, converged
+        return state.result(result_schema, ["vertex", "rank"]), converged
 
 
 def _finish(result, converged, tol, max_iter, fail_on_nonconvergence):

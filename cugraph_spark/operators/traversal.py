@@ -26,25 +26,13 @@ from __future__ import annotations
 from ..plans.lineage import truncate_plan
 
 import numpy as np
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import DST, SRC, WGT, Graph
-from ..plans.csr_blocks import (
-    BlockFiles,
-    CsrBlocks,
-    VertexSlices,
-    block_keys,
-    drop_slices,
-    gather,
-    load_slice,
-    min_kernel,
-    positions_of,
-    save_slice,
-)
+from ..plans.csr_blocks import CsrBlocks, VertexSlices, min_kernel, positions_of
 from ..plans.strategy import resolve_partitions
 
 _NONE = np.iinfo(np.int64).max  # no frontier in-neighbour
@@ -67,54 +55,35 @@ def bfs_edges(
     return bfs(G, source, max_depth=depth_limit)
 
 
-def _bfs_setup_task(out_files: BlockFiles, in_files: BlockFiles, state_dir: str, source):
-    """The csr BFS setup, per pid: its vertices (the keys of its
-    src-keyed and dst-keyed blocks) with generation-0 ``dist`` (0 at the
-    source, -1 elsewhere) and ``pred`` (-1)."""
+def _bfs_init(source):
+    """The csr BFS setup of one pid (``VertexSlices.setup``): ``dist`` 0
+    at the source and -1 elsewhere, ``pred`` -1."""
 
-    def task(pid: int) -> pd.DataFrame:
-        out_blk = out_files.block(pid)
-        in_blk = out_blk if in_files.block_dir == out_files.block_dir else in_files.block(pid)
-        verts = block_keys(out_blk, in_blk)
-        save_slice(state_dir, pid, "vertex", verts)
-        save_slice(state_dir, pid, "dist0", np.where(verts == source, 0, -1))
-        save_slice(state_dir, pid, "pred0", np.full(len(verts), -1))
-        return pd.DataFrame({"n": [len(verts)]})
+    def init(verts, rows, out_blk):
+        return {"dist": np.where(verts == source, 0, -1), "pred": np.full(len(verts), -1)}, None
 
-    return task
+    return init
 
 
-def _bfs_level_task(in_files: BlockFiles, state_dir: str, P: int, depth: int):
-    """csr BFS level ``depth`` of one pid, bottom-up: read every pid's
-    generation-``depth-1`` ``dist`` into one O(V) lookup, and give each
-    own unvisited vertex with a frontier in-neighbour (one at distance
-    ``depth-1``) that distance and its minimum-id frontier in-neighbour
-    as predecessor (the pull min kernel over the pid's dst-keyed block).
-    Writes generation ``depth``, drops ``depth-2`` and returns the
+def _bfs_update(depth: int):
+    """csr BFS level ``depth`` of one pid, bottom-up: each own unvisited
+    vertex with a frontier in-neighbour (one at distance ``depth-1`` in
+    the gathered ``dist``) gets that distance and its minimum-id
+    frontier in-neighbour as predecessor (the pull min kernel over the
+    pid's dst-keyed block). Returns the new ``dist``/``pred`` and the
     count of newly reached vertices."""
-    g = depth - 1
 
-    def task(pid: int) -> pd.DataFrame:
-        dist = load_slice(state_dir, pid, f"dist{g}")
-        pred = load_slice(state_dir, pid, f"pred{g}")
-        reached = 0
-        blk = in_files.block(pid)
-        if blk is not None:
-            d, _ = gather(blk, state_dir, P, f"dist{g}")
-            ids = np.arange(blk.n_nbr) if blk.du is None else blk.du
-            cand = min_kernel(blk, np.where(d == g, ids, _NONE))
-            pos = positions_of(load_slice(state_dir, pid, "vertex"), blk.su)
-            hit = (cand != _NONE) & (dist[pos] < 0)
-            pos = pos[hit]
-            dist, pred = dist.copy(), pred.copy()
-            dist[pos], pred[pos] = depth, cand[hit]
-            reached = len(pos)
-        save_slice(state_dir, pid, f"dist{depth}", dist)
-        save_slice(state_dir, pid, f"pred{depth}", pred)
-        drop_slices(state_dir, pid, [f"dist{depth - 2}", f"pred{depth - 2}"])
-        return pd.DataFrame({"reached": [reached]})
+    def update(verts, own, blk, d, at):
+        dist, pred = own["dist"].copy(), own["pred"].copy()
+        ids = np.arange(blk.n_nbr) if blk.du is None else blk.du
+        cand = min_kernel(blk, np.where(d == depth - 1, ids, _NONE))
+        pos = positions_of(verts, blk.su)
+        hit = (cand != _NONE) & (dist[pos] < 0)
+        pos = pos[hit]
+        dist[pos], pred[pos] = depth, cand[hit]
+        return {"dist": dist, "pred": pred}, {"reached": len(pos)}
 
-    return task
+    return update
 
 
 def _bfs_csr(G: Graph, source, limit: int, P: int, block_dir: str | None) -> DataFrame:
@@ -122,19 +91,15 @@ def _bfs_csr(G: Graph, source, limit: int, P: int, block_dir: str | None) -> Dat
     map job per level until a level reaches nothing or ``limit``."""
     schema = StructType([G.vertices().schema["vertex"], StructField("distance", LongType()),
                          StructField("predecessor", LongType())])
-    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks) as state:
-        inb = blocks.transposed()
-        state.map(_bfs_setup_task(blocks.files, inb.files, state.dir, source), "n long").collect()
+    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks, ("dist", "pred")) as state:
+        state.setup(_bfs_init(source))
         depth = 0
         while depth < limit:
-            rows = state.map(_bfs_level_task(inb.files, state.dir, P, depth + 1),
-                             "reached long").collect()
             depth += 1
+            rows = state.step(_bfs_update(depth), ("dist", "pred"), "dist", "reached long")
             if not sum(r["reached"] for r in rows):
                 break
-        # materialized while the slices still exist
-        return truncate_plan(
-            state.frame(schema, ["vertex", f"dist{depth}", f"pred{depth}"]), eager=True)
+        return state.result(schema, ["vertex", "dist", "pred"])
 
 
 def bfs(
@@ -162,13 +127,16 @@ def bfs(
     ``mode="csr"``: every level bottom-up (the pull direction of the
     reference's direction-optimizing BFS, ``bfs_impl.cuh:202``) over
     packed blocks (``plans/csr_blocks.py``). ``dist``/``pred`` live in
-    per-pid slices beside them; one setup job writes them, and each
-    level is ONE map job with no exchange, whose task reads every pid's
-    ``dist`` into one O(V) vector and gives each own unvisited vertex
-    with a frontier in-neighbour the level's distance and its min-id
-    frontier in-neighbour — the dataframe plan's rule exactly. In-edges
-    come from the dst-keyed view: an undirected graph's own blocks, a
-    directed graph's ``T/`` sub-store, packed once into ``block_dir``.
+    per-pid slices beside them, in the superstep skeleton csr PageRank
+    and WCC share (``csr_blocks.VertexSlices``), and this module
+    supplies only ``_bfs_init`` and ``_bfs_update``: one setup job
+    writes them, and each level is ONE map job with no exchange, whose
+    task reads every pid's ``dist`` into one O(V) vector and gives each
+    own unvisited vertex with a frontier in-neighbour the level's
+    distance and its min-id frontier in-neighbour — the dataframe
+    plan's rule exactly. In-edges come from the dst-keyed view: an
+    undirected graph's own blocks, a directed graph's ``T/`` sub-store,
+    packed once into ``block_dir``.
     A level costs O(V) reads plus O(E/P) edge work per task whatever
     the frontier size; on the inputs measured, a level costs its Spark
     job, not its edges. ``block_dir``: shared storage on a cluster; a

@@ -51,14 +51,15 @@ broadcast.
 ``mode="csr"`` (the reference's resident-CSR architecture,
 ``graphs.pyx:52-224``): edges pack ONCE into per-pid mmap CSR blocks
 (``plans/csr_blocks.py``), and the label vector never enters a Catalyst
-plan. It lives in per-pid slices beside the blocks
-(``csr_blocks.VertexSlices``, the state layer csr PageRank uses): one
-setup job writes each pid's vertices (its block's keys) with their
-identity or checkpointed labels, and each superstep is ONE map job
-with no exchange. Its task reads every pid's previous labels into one
-O(V) vector (``csr_blocks.gather``), pulls the min over its own
-vertices' neighbours (``csr_blocks.min_kernel`` — a symmetrized graph's
-blocks are their own transpose) and pointer-jumps in the same pass:
+plan. It lives in per-pid slices beside the blocks, in the superstep
+skeleton csr PageRank and BFS share (``csr_blocks.VertexSlices``); this
+module supplies only ``_init`` and ``_update``. One setup job writes
+each pid's vertices (its block's keys) with their identity or
+checkpointed labels, and each superstep is ONE map job with no
+exchange. Its task reads every pid's current labels into one O(V)
+vector, and ``_update`` pulls the min over its own vertices'
+neighbours (``csr_blocks.min_kernel`` — a symmetrized graph's blocks
+are their own transpose) and pointer-jumps in the same pass:
 ``label(v) ← L[min(L[v], min_{u~v} L[u])]``. Every label is a vertex of
 its own component and is ≤ that vertex, so the jump target is too, and
 the fixpoint is the dataframe plan's min-id labeling; the superstep
@@ -90,7 +91,6 @@ from ..plans.lineage import truncate_plan
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,18 +98,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import DST, SRC, Graph
 from ..plans.checkpoint import CheckpointManager
-from ..plans.csr_blocks import (
-    BlockFiles,
-    CsrBlocks,
-    VertexSlices,
-    block_keys,
-    drop_slices,
-    gather,
-    load_slice,
-    min_kernel,
-    positions_of,
-    save_slice,
-)
+from ..plans.csr_blocks import CsrBlocks, VertexSlices, min_kernel, positions_of
 from ..plans.metrics import ShuffleProbe
 from ..plans import strategy
 from ..plans.strategy import vertex_join_side
@@ -124,45 +113,26 @@ def _frontier_threshold(V: int) -> int:
     return max(1, min(V // 8, 4_000_000))
 
 
-def _setup_task(files: BlockFiles, state_dir: str, gen: int, resumed: bool):
-    """The csr plan's setup, per pid: its vertices (its block's keys —
-    every vertex of a symmetrized graph is some edge's src) and their
-    generation-``gen`` labels, the identity or the routed checkpoint's
-    (which must hold every one of them)."""
-
-    def task(pid: int, rows: pd.DataFrame) -> pd.DataFrame:
-        verts = block_keys(files.block(pid))
-        labels = verts
-        if resumed:
-            rows = rows.sort_values("vertex")
-            saved = rows["labels"].to_numpy(np.int64)
-            labels = saved[positions_of(rows["vertex"].to_numpy(np.int64), verts)]
-        save_slice(state_dir, pid, "vertex", verts)
-        save_slice(state_dir, pid, f"labels{gen}", labels)
-        return pd.DataFrame({"n": [len(verts)]})
-
-    return task
+def _init(verts, rows, out_blk):
+    """The csr plan's setup of one pid (``VertexSlices.setup``): its
+    vertices are its block's keys (every vertex of a symmetrized graph
+    is some edge's src), labelled by themselves or, on a resume, by the
+    routed checkpoint (which must hold every one of them)."""
+    if rows is None:
+        return {"labels": verts}, None
+    rows = rows.sort_values("vertex")
+    saved = rows["labels"].to_numpy(np.int64)
+    return {"labels": saved[positions_of(rows["vertex"].to_numpy(np.int64), verts)]}, None
 
 
-def _step_task(files: BlockFiles, state_dir: str, P: int, it: int):
-    """csr superstep ``it`` of one pid: read every pid's generation-``it``
-    labels into one O(V) lookup, pull the min over each own vertex's
-    neighbours (its block is its own transpose), pointer-jump through
-    the same lookup, write generation ``it+1``, drop ``it-1`` (no task
-    reads it any more) and return the pid's changed count."""
-
-    def task(pid: int) -> pd.DataFrame:
-        old = load_slice(state_dir, pid, f"labels{it}")
-        new = old
-        blk = files.block(pid)
-        if blk is not None:  # its vertices are exactly blk.su
-            L, at = gather(blk, state_dir, P, f"labels{it}")
-            new = at(np.minimum(old, min_kernel(blk, L)))
-        save_slice(state_dir, pid, f"labels{it + 1}", new)
-        drop_slices(state_dir, pid, [f"labels{it - 1}"])
-        return pd.DataFrame({"changed": [int((new != old).sum())]})
-
-    return task
+def _update(verts, own, blk, L, at):
+    """One csr superstep of one pid: the pull min over each own vertex's
+    neighbours (its block is its own transpose, keyed by exactly its
+    vertices), then a pointer jump through the same lookup of every
+    pid's labels. Returns the new labels and the changed count."""
+    old = own["labels"]
+    new = at(np.minimum(old, min_kernel(blk, L)))
+    return {"labels": new}, {"changed": int((new != old).sum())}
 
 
 def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
@@ -171,23 +141,17 @@ def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
     slices, then ONE map job per superstep until no label changes."""
     spark = G.edges.sparkSession
     schema = StructType([StructField("vertex", LongType()), StructField("labels", LongType())])
-    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks) as state:
+    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks, ("labels",)) as state:
         frames, start_iter = [], 0
         if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
             saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
             frames.append(saved.select("vertex", F.col("labels").cast("long")))
             start_iter = meta["iteration"] + 1
-        gen = start_iter  # the slice generation the next superstep reads
-        state.route(frames, _setup_task(blocks.files, state.dir, gen, bool(frames)), "n long")
-
-        def labels():
-            return state.frame(schema, ["vertex", f"labels{gen}"])
-
+        state.setup(_init, frames=frames)
         for it in range(start_iter, max_iter):
             probe = ShuffleProbe(spark) if superstep_metrics is not None else None
             t0 = time.perf_counter()
-            rows = state.map(_step_task(blocks.files, state.dir, P, it), "changed long").collect()
-            gen = it + 1
+            rows = state.step(_update, ("labels",), "labels", "changed long")
             changed = sum(r["changed"] for r in rows)
             wall = time.perf_counter() - t0
             if superstep_seconds is not None:
@@ -196,11 +160,10 @@ def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
                 superstep_metrics.append({"iteration": it, "mode": "csr", "changed": changed,
                                           "seconds": round(wall, 3), **probe.delta()})
             if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-                checkpoint.save(labels(), it, {"changed": changed})
+                checkpoint.save(state.frame(schema, ["vertex", "labels"]), it, {"changed": changed})
             if changed == 0:
                 break
-        # materialized while the slices still exist
-        return truncate_plan(labels(), eager=True)
+        return state.result(schema, ["vertex", "labels"])
 
 
 def weakly_connected_components(

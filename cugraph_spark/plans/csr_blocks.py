@@ -79,15 +79,19 @@ block built transposed by :func:`csr_arrays`, every superstep of the
 driver-local plan; :func:`min_kernel` is WCC's hash-min over neighbour
 labels and csr BFS's min-id frontier predecessor.
 
-Vertex state stays beside the blocks (:class:`VertexSlices`): per-pid
+Vertex state stays beside the blocks, and the superstep frame is
+written once, for every operator (:class:`VertexSlices`): per-pid
 ``.npy`` slices in a per-call ``state-<uuid>/`` directory inside
 ``block_dir``, written by one setup job, then read and rewritten by one
 map job per superstep with no exchange; a missing slice raises like a
-missing block. A superstep task reads every pid's previous slice into
-one O(V) vector with :func:`gather` (indexed by vertex id on dense
-blocks, by searchsorted on dict ones) and runs a kernel over its own
-dst-keyed block. PageRank, WCC and BFS all run on this one state
-layer.
+missing block. A superstep task reads every pid's current slice of one
+column into one O(V) vector with :func:`gather` (indexed by vertex id
+on dense blocks, by searchsorted on dict ones) and hands it, with its
+own columns and its dst-keyed block, to the operator's ``update``.
+PageRank, WCC and BFS supply only ``init`` (first state of a pid) and
+``update`` (one superstep of a pid); the skeleton owns vertex
+ownership, the slice generations — the rule that a slice is never
+rewritten in place — gap pids and the final read.
 
 Per-task scratch budget: on dense blocks :func:`gather` allocates one
 ``hi1``-sized vector of the state's 8-byte type (float64 ranks, int64
@@ -118,6 +122,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..graph import DST, SRC, WGT, Graph
+from .lineage import truncate_plan
 
 DENSE_IDS_LIMIT = 1 << 26  # max hi+1 for the dense-id block format
 
@@ -372,11 +377,17 @@ def min_kernel(blk: Block, x) -> np.ndarray:
     return segment_reduce(blk, np.asarray(x)[blk.nbr], np.minimum)
 
 
-def block_keys(*blocks: Block | None) -> np.ndarray:
+# the block of a pid without edges (a hash gap): kernels over it return
+# empty arrays
+NO_EDGES = Block({"su": np.zeros(0, np.int64), "indptr": np.zeros(1, np.int64),
+                  "du": np.zeros(0, np.int64), "dc": np.zeros(0, np.int32),
+                  "w": np.zeros(0)}, {"ids": "dict"})
+
+
+def block_keys(*blocks: Block) -> np.ndarray:
     """A pid's vertices: the sorted keys of its blocks (src-keyed and
-    dst-keyed; a pid without edges passes None and owns none)."""
-    keys = [b.su for b in blocks if b is not None]
-    return np.unique(np.concatenate(keys)).astype(np.int64) if keys else np.zeros(0, np.int64)
+    dst-keyed)."""
+    return np.unique(np.concatenate([b.su for b in blocks])).astype(np.int64)
 
 
 class BlockFiles(NamedTuple):
@@ -387,10 +398,11 @@ class BlockFiles(NamedTuple):
     meta: dict
     manifest: dict
 
-    def block(self, pid: int) -> Block | None:
-        """The pid's block, or None for a pid without edges (a hash gap)."""
+    def block(self, pid: int) -> Block:
+        """The pid's block, or :data:`NO_EDGES` for a pid without edges
+        (a hash gap)."""
         if pid not in self.manifest:
-            return None
+            return NO_EDGES
         return Block(load_block(self.block_dir, pid, self.meta), self.meta)
 
 
@@ -562,52 +574,86 @@ def gather(blk: Block, state_dir: str, P: int, name: str):
 
 
 def _per_pid(task):
-    """mapInPandas body: ``task(pid)`` for each pid row of the batch."""
+    """mapInPandas body: ``task(pid)`` for each pid row of the batch; a
+    task's dict is one row, None is none."""
 
     def fn(batches):
         for pdf in batches:
             for pid in pdf["id"].tolist():
-                yield task(int(pid))
+                out = task(int(pid))
+                if out is not None:
+                    yield pd.DataFrame([out]) if isinstance(out, dict) else out
 
     return fn
 
 
 def _per_group(task):
     """applyInPandas body: ``task(pid, rows)`` with the group's routed
-    rows, its pid-only marker row dropped."""
+    rows, its pid-only marker row dropped; a dict is one row, None is
+    none."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return task(int(pdf["pid"].iloc[0]), pdf[~pdf["marker"]])
+        out = task(int(pdf["pid"].iloc[0]), pdf[~pdf["marker"]])
+        return pd.DataFrame() if out is None else pd.DataFrame([out])
 
     return fn
 
 
+def _named(versioned: tuple, gen: int):
+    """A column's slice name in generation ``gen``: a versioned column
+    carries the generation, any other is written once."""
+    return lambda c: f"{c}{gen}" if c in versioned else c
+
+
 class VertexSlices:
-    """Vertex state kept beside a block store as per-pid ``.npy`` slices
-    in a per-call ``state-<uuid>/`` directory inside its ``block_dir``
-    (removed on exit): pid ``p`` owns the vertices :func:`pid_of` routes
-    to ``p``, sorted, and one array per state column, so an iterative
-    operator's superstep is ONE map job over the pids — no exchange —
-    whose tasks read the slices they need and write their own.
+    """The csr superstep skeleton: vertex state kept beside a block
+    store as per-pid ``.npy`` slices in a per-call ``state-<uuid>/``
+    directory inside its ``block_dir`` (removed on exit). Pid ``p`` owns
+    the vertices :func:`pid_of` routes to ``p`` — the keys of its
+    src-keyed and dst-keyed blocks, sorted — and one array per state
+    column, so a superstep is ONE map job over the pids, no exchange,
+    whose tasks read the slices they need and write their own. An
+    operator supplies only its numbers:
 
-    - :meth:`route`: the one setup job that brings vertex-keyed rows
-      (checkpoints, per-vertex inputs) to their pid's task;
-    - :meth:`map`: one task per pid, no shuffle — a superstep;
-    - :meth:`frame`: the slices as a DataFrame (checkpoints, output).
+    - ``init(verts, rows, out_blk) -> (arrays, row)``, called once per
+      pid by :meth:`setup` with the pid's vertices, its routed rows (a
+      pandas frame; None when there are no side inputs) and its
+      src-keyed block. ``arrays`` maps column names to arrays aligned
+      with ``verts``; a ``vertex`` entry replaces the vertex set (a
+      resumed checkpoint's rows).
+    - ``update(verts, own, blk, x, at) -> (arrays, row)``, called once
+      per pid by :meth:`step`: ``own`` maps the columns the operator
+      reads to the pid's current arrays, ``blk`` is its dst-keyed block
+      and ``x, at`` are :func:`gather` of the one column read from every
+      pid. ``arrays`` is the next generation of every versioned column.
 
-    A slice that changes is written under a new name per generation and
-    the old one dropped, never replaced in place: ext4 flushes a file's
-    data when a rename or truncate replaces it (``auto_da_alloc``),
-    ~60 ms a file on a 4-vCPU host's disk, against ~0 for a new name.
+    ``row`` is the pid's partial row (a dict; None for none), which
+    :meth:`setup` and :meth:`step` collect for the driver to reduce. A
+    pid without vertices (a hash gap) carries its empty slices forward
+    and reports no row; a pid with vertices but no in-edges gets the
+    empty block :data:`NO_EDGES`.
+
+    The skeleton keeps the generation rule, so no operator names a
+    slice file: a versioned column (one the supersteps change) is
+    written under a new name per generation, the one before the
+    generation just read is dropped, and no slice is ever replaced in
+    place — ext4 flushes a file's data when a rename or truncate
+    replaces it (``auto_da_alloc``), ~60 ms a file on a 4-vCPU host's
+    disk, against ~0 for a new name. :meth:`frame` and :meth:`result`
+    read the current generation.
 
     Costs: a task that reads every pid's slice reads O(V) state — page
     cache on one box, P·V bytes over shared storage on a cluster — and
     the directory must be shared storage on a multi-node cluster, like
     ``block_dir``."""
 
-    def __init__(self, blocks: CsrBlocks):
+    def __init__(self, blocks: CsrBlocks, versioned: tuple[str, ...]):
         self.spark = blocks.edges.sparkSession
         self.P, self.hash_t = blocks.P, blocks.meta["hash_t"]
+        inb = blocks.transposed()
+        self.out_files, self.in_files = blocks.files, inb.files
+        self.same = inb is blocks  # an undirected graph's blocks are their own transpose
+        self.versioned, self.gen = tuple(versioned), 0
         self.dir = os.path.join(blocks.block_dir, f"state-{uuid.uuid4().hex}")
 
     def __enter__(self) -> VertexSlices:
@@ -616,6 +662,61 @@ class VertexSlices:
 
     def __exit__(self, *exc) -> None:
         shutil.rmtree(self.dir, ignore_errors=True)
+
+    def setup(self, init, schema: str = "n long", frames: list[DataFrame] = ()) -> list:
+        """ONE job writes every pid's ``vertex`` slice and the arrays
+        ``init`` returns (generation 0 of the versioned ones): a
+        :meth:`route` job when there are side-input ``frames``, a
+        :meth:`map` job otherwise. Returns the collected rows."""
+        out_files, in_files, same, state_dir = self.out_files, self.in_files, self.same, self.dir
+        name = _named(self.versioned, self.gen)
+
+        def task(pid: int, rows):
+            out_blk = out_files.block(pid)
+            verts = block_keys(out_blk, out_blk if same else in_files.block(pid))
+            arrays, row = init(verts, rows, out_blk)
+            for c, arr in {"vertex": verts, **arrays}.items():
+                save_slice(state_dir, pid, name(c), arr)
+            return row
+
+        if frames:
+            return self.route(frames, task, schema)
+        return self.map(lambda pid: task(pid, None), schema).collect()
+
+    def step(self, update, reads: tuple[str, ...], col: str, schema: str) -> list:
+        """ONE superstep job (:meth:`step_task` per pid); returns the
+        collected rows and moves to the next generation."""
+        rows = self.map(self.step_task(update, reads, col), schema).collect()
+        self.gen += 1
+        return rows
+
+    def step_task(self, update, reads: tuple[str, ...], col: str):
+        """The superstep of one pid: load its ``reads`` columns, open its
+        dst-keyed block, gather ``col`` from every pid, run ``update``,
+        write the next generation, drop the one before the current, and
+        return the pid's row. A missing block or slice raises."""
+        in_files, state_dir, P, versioned = self.in_files, self.dir, self.P, self.versioned
+        prev, cur, nxt = (_named(versioned, g) for g in (self.gen - 1, self.gen, self.gen + 1))
+
+        def task(pid: int):
+            verts = load_slice(state_dir, pid, "vertex")
+            if len(verts):
+                own = {c: load_slice(state_dir, pid, cur(c)) for c in reads}
+                blk = in_files.block(pid)
+                x, at = gather(blk, state_dir, P, cur(col))
+                new, row = update(verts, own, blk, x, at)
+            else:
+                new, row = {c: load_slice(state_dir, pid, cur(c)) for c in versioned}, None
+            for c, arr in new.items():
+                save_slice(state_dir, pid, nxt(c), arr)
+            drop_slices(state_dir, pid, [prev(c) for c in versioned])
+            return row
+
+        return task
+
+    def path(self, pid: int, name: str) -> str:
+        """The file of ``pid``'s current ``name`` slice."""
+        return _slice_path(self.dir, pid, _named(self.versioned, self.gen)(name))
 
     def route(self, frames: list[DataFrame], task, schema: str) -> list:
         """ONE job: the rows of ``frames`` (each keyed by ``vertex``) go
@@ -641,16 +742,23 @@ class VertexSlices:
 
     def map(self, task, schema) -> DataFrame:
         """``task(pid)`` once per pid, one task each, no shuffle; it
-        returns a pandas frame (empty for a pid with nothing to say)."""
+        returns a pandas frame or a dict (one row), or None (no row)."""
         return self.spark.range(0, self.P, 1, self.P).mapInPandas(_per_pid(task), schema)
 
     def frame(self, schema: StructType, names: list[str]) -> DataFrame:
-        """The slices as a DataFrame, one partition per pid: field ``i``
-        of ``schema`` reads slice ``names[i]``. Lazy — act on it before
-        the directory is removed."""
+        """The current generation as a DataFrame, one partition per pid:
+        field ``i`` of ``schema`` reads column ``names[i]``. Lazy — act
+        on it before the directory is removed."""
         state_dir, cols = self.dir, [f.name for f in schema.fields]
+        name = _named(self.versioned, self.gen)
+        files = [name(n) for n in names]
 
         def read(pid):
-            return pd.DataFrame({c: load_slice(state_dir, pid, n) for c, n in zip(cols, names)})
+            return pd.DataFrame({c: load_slice(state_dir, pid, n) for c, n in zip(cols, files)})
 
         return self.map(read, schema)
+
+    def result(self, schema: StructType, names: list[str]) -> DataFrame:
+        """:meth:`frame`, materialized now: the one eager read of the
+        slices, made while they still exist."""
+        return truncate_plan(self.frame(schema, names), eager=True)

@@ -8,8 +8,10 @@ from __future__ import annotations
 import contextlib
 import functools
 import importlib
+import os
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import numpy as np
 import pytest
@@ -162,3 +164,66 @@ def sym_tuples(edges):
         for k in ((a, b), (b, a)):
             agg[k] = min(agg.get(k, float("inf")), w)
     return [(a, b, w) for (a, b), w in sorted(agg.items())]
+
+
+def csr_superstep(spark, op: str):
+    """One csr operator's parts on a small graph, for running its
+    ``VertexSlices`` steps in-process: ``(G, weighted, versioned, init,
+    step)``, where ``step(gen)`` is the ``(update, reads, col)`` of the
+    superstep that reads generation ``gen``."""
+    from cugraph_spark.graph import Graph
+
+    if op == "wcc":
+        wcc = importlib.import_module("cugraph_spark.operators.wcc")
+        G = Graph(edges_df(spark, sym_tuples(make_edges("tiny_social"))), directed=False)
+        return G, False, ("labels",), wcc._init, lambda gen: (wcc._update, ("labels",), "labels")
+    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
+    if op == "pagerank":
+        pr = importlib.import_module("cugraph_spark.operators.pagerank")
+        V = G.number_of_vertices()
+        return (G, True, ("rank", "x"), pr._init(V, (), False),
+                lambda gen: (pr._update(0.85, V, 0.0), ("ows", "rank"), "x"))
+    traversal = importlib.import_module("cugraph_spark.operators.traversal")
+    return (G, False, ("dist", "pred"), traversal._bfs_init(0),
+            lambda gen: (traversal._bfs_update(gen + 1), ("dist", "pred"), "dist"))
+
+
+def in_process(state):
+    """Run ``state``'s map jobs in this process, pid by pid, so spies see
+    every task's writes; ``collect()`` returns the tasks' rows."""
+
+    def run(task, schema):
+        rows = [task(pid) for pid in range(state.P)]
+        return SimpleNamespace(collect=lambda: [r for r in rows if r is not None])
+
+    state.map = run
+    return state
+
+
+def check_gap_and_missing(spark, tmp_path, op: str) -> None:
+    """A csr superstep task of ``op`` (run in-process after one step)
+    returns a row for a pid with vertices and none for a pid without
+    (a hash gap), and RAISES when the manifest lists a pid whose block
+    files are gone (torn deployment / non-shared block_dir) or when a
+    slice of the generation it reads is gone — never a silent zero."""
+    from cugraph_spark.plans.csr_blocks import CsrBlocks, VertexSlices
+
+    G, weighted, versioned, init, step = csr_superstep(spark, op)
+    P = 64  # more pids than vertices: some pids hold no edges
+    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=weighted) as blocks, \
+            VertexSlices(blocks, versioned) as state:
+        in_process(state).setup(init)
+        state.step(*step(state.gen), schema=None)
+        update, reads, col = step(state.gen)
+        task = state.step_task(update, reads, col)
+        listed = sorted(state.in_files.manifest)
+        assert task(listed[0]) is not None
+        gap = next(p for p in range(P)
+                   if p not in state.out_files.manifest and p not in state.in_files.manifest)
+        assert task(gap) is None
+        os.remove(os.path.join(state.in_files.block_dir, f"{listed[0]}.su.npy"))
+        with pytest.raises(RuntimeError, match="missing"):
+            task(listed[0])
+        os.remove(state.path(listed[1], col))
+        with pytest.raises(RuntimeError, match="state slice missing"):
+            task(listed[2])

@@ -21,7 +21,8 @@ def _modes(rec):
 
 def test_ab_harness_wcc_arms(spark, tmp_path):
     """Each arm reaches the plan it forces (the superstep mode tags)
-    and all arms give the same labels."""
+    and all arms give the same labels; the first arm's untimed warm-up
+    call is recorded."""
     ab = _ab()
     by_layout = ab.run(spark, "wcc", 8, ["dataframe", "csr"], reps=1, block_root=str(tmp_path))
     by_frontier = ab.run(spark, "wcc", 8, ["dense", "frontier"], reps=1, block_root=str(tmp_path))
@@ -30,6 +31,7 @@ def test_ab_harness_wcc_arms(spark, tmp_path):
         assert a["signature"] == b["signature"] and a["signature"][0] == out["V"]
         for rec in (a, b):
             assert len(rec["walls"]) == len(rec["cpu_s"]) == 1
+    assert (by_layout["warmup"], by_frontier["warmup"]) == ("dataframe", "dense")
     assert set(_modes(by_layout["csr"])) == {"csr"}
     assert "csr" not in _modes(by_layout["dataframe"])
     assert set(_modes(by_frontier["dense"])) == {"dense"}

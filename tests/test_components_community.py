@@ -579,28 +579,6 @@ def test_lpa_cycle_stop_batched_and_across_save(spark, tmp_path):
             assert m[-1]["iteration"] < mi - 1, (mi, name)  # stopped early
 
 
-def test_lpa_hold_tie_damps_oscillation(spark):
-    """tie_break='hold' (keep the current label when it ties the max
-    weight) converges on a fixture where the min-tie rule 2-cycles;
-    the default path's labels are unchanged by the flag's existence."""
-    e5 = [(0, 3, 1.0), (1, 2, 1.0), (1, 3, 1.0), (1, 4, 1.0), (2, 3, 1.0)]
-    edges = e5 + [(b, a, w) for a, b, w in e5]
-    G = Graph(edges_df(spark, edges), directed=False)
-    m_min: list = []
-    label_propagation(G, max_iter=12, superstep_metrics=m_min).count()
-    assert any(e.get("cycle_detected") for e in m_min)  # min rule cycles
-    m_hold: list = []
-    hold = _as_map(
-        label_propagation(
-            G, max_iter=12, tie_break="hold", superstep_metrics=m_hold
-        ).collect()
-    )
-    assert m_hold[-1]["changed"] == 0  # genuinely converged
-    assert hold == {v: 1 for v in range(5)}  # brute-force oracle
-    with pytest.raises(ValueError):
-        label_propagation(G, tie_break="nope")
-
-
 def test_lpa_frontier_engages_with_changed_rows(spark, monkeypatch, plan_cutover):
     """The affected-set frontier path must actually ENGAGE (mode ==
     'frontier' with changed > 0) under a forced threshold — not only at
@@ -847,15 +825,13 @@ def test_bfs_csr_pull_edge_cases(spark, tmp_path, monkeypatch):
 
     traversal = importlib.import_module("cugraph_spark.operators.traversal")
     P = 4
-    with CsrBlocks(G, P, bdir) as blocks, VertexSlices(blocks) as state:
-        inb = blocks.transposed()
-        state.map(traversal._bfs_setup_task(blocks.files, inb.files, state.dir, 0),
-                  "n long").collect()
-        level = traversal._bfs_level_task(inb.files, state.dir, P, 1)
-        pid = sorted(inb.manifest)[0]
-        assert len(level(pid)) == 1
+    with CsrBlocks(G, P, bdir) as blocks, VertexSlices(blocks, ("dist", "pred")) as state:
+        state.setup(traversal._bfs_init(0))
+        level = state.step_task(traversal._bfs_update(1), ("dist", "pred"), "dist")
+        pid = sorted(state.in_files.manifest)[0]
+        assert level(pid) is not None
         other = next(q for q in range(P) if q != pid)
-        os.remove(os.path.join(state.dir, f"{other}.dist0.npy"))
+        os.remove(state.path(other, "dist"))
         with pytest.raises(RuntimeError, match="state slice missing"):
             level(pid)
 

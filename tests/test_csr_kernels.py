@@ -3,7 +3,10 @@ and ``min_kernel`` over transposed blocks) against numpy's unbuffered
 ``np.add.at`` / ``np.minimum.at`` over the raw edges, on the three block
 forms: packed dense, packed dict, and built in memory (the driver-local
 PageRank's form), with the state either indexed directly or read from
-per-pid slices through ``gather``, as the csr plans read it."""
+per-pid slices through ``gather``, as the csr plans read it; and the
+superstep skeleton around them (``VertexSlices``), run in-process: its
+slice generations, hash-gap pids and missing blocks or slices, under
+the PageRank, WCC and BFS updates."""
 
 from __future__ import annotations
 
@@ -13,6 +16,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from cugraph_spark.plans import csr_blocks
 from cugraph_spark.plans.csr_blocks import (
     Block,
     csr_arrays,
@@ -24,6 +28,8 @@ from cugraph_spark.plans.csr_blocks import (
     save_slice,
     sum_kernel,
 )
+
+from .conftest import check_gap_and_missing, csr_superstep, in_process
 
 V = 40
 _rng = np.random.default_rng(5)
@@ -86,3 +92,45 @@ def test_block_kernels_match_ufunc_at(spark, tmp_path, form, gathered):
     has_in = np.unique(DST).tolist()
     assert got_sum == {d: sums[d] for d in has_in}
     assert got_min == {d: int(mins[d]) for d in has_in}
+
+
+@pytest.mark.parametrize("op", ["pagerank", "wcc", "bfs"])
+def test_slice_generations(spark, tmp_path, monkeypatch, op):
+    """The skeleton's generation rule under each operator's update, run
+    in-process over four supersteps: after each, every pid holds the
+    slices written once at setup (``vertex`` among them) plus exactly
+    the current and the previous generation of each versioned column,
+    and no slice file is ever written twice (that would replace it in
+    place)."""
+    written: list = []
+    real = csr_blocks._write_atomic
+    monkeypatch.setattr(csr_blocks, "_write_atomic",
+                        lambda path, write: written.append(path) or real(path, write))
+    G, weighted, versioned, init, step = csr_superstep(spark, op)
+    P = 4
+    with csr_blocks.CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=weighted) as blocks, \
+            csr_blocks.VertexSlices(blocks, versioned) as state:
+
+        def held(pid):
+            return {f[len(f"{pid}."):-len(".npy")] for f in os.listdir(state.dir)
+                    if f.startswith(f"{pid}.")}
+
+        in_process(state).setup(init)
+        once = {pid: held(pid) - {f"{c}0" for c in versioned} for pid in range(P)}
+        for gen in range(1, 5):
+            state.step(*step(state.gen), schema=None)
+            assert state.gen == gen
+            for pid in range(P):
+                assert "vertex" in once[pid]
+                assert held(pid) == once[pid] | {f"{c}{g}" for c in versioned
+                                                 for g in (gen - 1, gen)}, (pid, gen)
+    slices = [p for p in written if f"{os.sep}state-" in p]
+    assert slices and len(slices) == len(set(slices))
+
+
+@pytest.mark.parametrize("op", ["wcc", "bfs"])
+def test_csr_update_gap_and_missing_raise(spark, tmp_path, op):
+    """``test_pagerank.py::test_pagerank_csr_missing_block_raises`` for
+    the WCC and BFS updates: a hash-gap pid returns no row, and a
+    deleted block or a deleted slice of the generation read raises."""
+    check_gap_and_missing(spark, tmp_path, op)

@@ -9,7 +9,7 @@ import pytest
 
 from cugraph_spark import FailedToConvergeError, Graph, pagerank
 
-from .conftest import edges_df, make_edges, sym_tuples
+from .conftest import check_gap_and_missing, edges_df, make_edges, sym_tuples
 from .oracles import pagerank_ref
 
 ALPHA, TOL, MAX_ITER = 0.85, 1e-6, 500
@@ -336,29 +336,6 @@ def test_pagerank_csr_missing_block_raises(spark, tmp_path):
     lists a pid whose block files are absent (torn deployment /
     non-shared block_dir) or when a state slice is gone — never return
     a silent-zero contribution (ADVICE r4) — while a pid with no
-    vertices (a hash gap) returns nothing."""
-    import importlib
-
-    from cugraph_spark.plans.csr_blocks import CsrBlocks, VertexSlices
-
-    pr = importlib.import_module("cugraph_spark.operators.pagerank")
-
-    G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
-    P = 64  # more pids than vertices: some pids hold no edges
-    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=True) as blocks, \
-            VertexSlices(blocks) as state:
-        inb = blocks.transposed()
-        V = G.number_of_vertices()
-        state.route([], pr._setup_task(blocks.files, inb.files, state.dir, V, 0, (), False),
-                    "dang double")
-        step = pr._step_task(inb.files, state.dir, P, V, ALPHA, 0.0, 0, False)
-        listed = sorted(inb.manifest)
-        assert len(step(listed[0])) == 1
-        os.remove(os.path.join(inb.block_dir, f"{listed[0]}.su.npy"))
-        with pytest.raises(RuntimeError, match="missing"):
-            step(listed[0])
-        gap = next(p for p in range(P) if p not in blocks.manifest and p not in inb.manifest)
-        assert len(step(gap)) == 0
-        os.remove(os.path.join(state.dir, f"{listed[1]}.x0.npy"))
-        with pytest.raises(RuntimeError, match="state slice missing"):
-            step(listed[2])
+    vertices (a hash gap) returns nothing. WCC and BFS run the same
+    check in ``test_csr_kernels.py::test_csr_update_gap_and_missing_raise``."""
+    check_gap_and_missing(spark, tmp_path, "pagerank")

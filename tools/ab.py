@@ -34,12 +34,18 @@ included (stored blocks). Presets:
   dense      frontier=0
   frontier   frontier=always            frontier from superstep 1
 
-Each run is timed in wall and process-tree CPU seconds
+Before any timed run, the first arm is called once untimed and its
+result discarded (a ``fresh`` warm-up packs into a directory of its
+own, removed after): the session's first call pays its warm-up — JIT,
+the first Python workers — which would otherwise land in the first
+arm's first rep. Each run is timed in wall and process-tree CPU seconds
 (``perfbench/probe.py``); its result is reduced to an order-insensitive
 signature, and all arms must give the same one. The last line is
-``ABJSON {cpus, operator, input, scale, V, edges, host, <arm>: {walls,
-min, cpu_s, jobs, signature, metrics (wcc, lpa) | steps (pagerank)}}`` — the shape of the
-``BENCH/ab_*.json`` records. ``host`` holds ``perfbench`` host markers from before and after.
+``ABJSON {cpus, operator, input, scale, V, edges, host, warmup, <arm>:
+{walls, min, cpu_s, jobs, signature, metrics (wcc, lpa) | steps
+(pagerank)}}`` — the shape of the ``BENCH/ab_*.json`` records;
+``warmup`` names the arm of the untimed call. ``host`` holds
+``perfbench`` host markers from before and after.
 ``jobs`` counts the Spark jobs each run's call started before it
 returned (a job group around the call; a lazy result's terminal job
 runs in the signature, outside the count), so a plan's jobs per
@@ -227,41 +233,59 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
            "host": {"before": host_marker()}}
     sigs = {}
     sc = spark.sparkContext
+    shared = os.path.join(root, "shared")
+
+    def call(name: str, settings: dict, tag: str):
+        """One call of an arm, timed: ``(wall, cpu_s, jobs, trace,
+        signature)``. A ``fresh`` arm packs into a directory of its own,
+        removed after the call."""
+        kw = {**defaults, **{k: v for k, v in settings.items() if k not in PATCH_KEYS}}
+        if kw.get("block_dir") == "shared" and not os.path.exists(shared):
+            _pack(G, shared, weighted=operator == "pagerank")
+        blocks = kw.get("block_dir")
+        if blocks == "fresh":
+            kw["block_dir"] = os.path.join(root, f"{name}_{tag}")
+        elif blocks == "shared":
+            kw["block_dir"] = shared
+        trace: list = []
+        if trace_kw:
+            kw[trace_kw] = trace
+        source_v = kw.pop("source", None)
+        group = f"ab_{name}_{tag}"
+        sc.setJobGroup(group, f"{operator} {name}")
+        c0, t0 = cpu_seconds(), time.perf_counter()
+        try:
+            with patched(module, settings):
+                res = op(G, source_v, **kw) if operator == "bfs" else op(G, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        if isinstance(res, tuple):
+            res = res[0]
+        sig = signature(operator, res)
+        wall, cpu = round(time.perf_counter() - t0, 2), round(cpu_seconds() - c0, 2)
+        if blocks == "fresh":
+            shutil.rmtree(kw["block_dir"], ignore_errors=True)
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(2.0)
+        return wall, cpu, jobs, trace, sig
+
     try:
-        shared = os.path.join(root, "shared")
+        # the session's warm-up (JIT, first Python workers, first
+        # Arrow batches) lands in its first call: one untimed call of
+        # the first arm takes it, so no arm's first rep pays it
+        out["warmup"], settings = parse_arm(arms[0], operator)
+        call(out["warmup"], settings, "warmup")
         for token in arms:
             name, settings = parse_arm(token, operator)
-            kw = {**defaults, **{k: v for k, v in settings.items() if k not in PATCH_KEYS}}
-            if kw.get("block_dir") == "shared" and not os.path.exists(shared):
-                _pack(G, shared, weighted=operator == "pagerank")
             rec = {"walls": [], "cpu_s": [], "jobs": []}
             if trace_kw:
                 rec[TRACE_KEY[trace_kw]] = []
             for rep in range(reps):
-                args = dict(kw)
-                blocks = args.get("block_dir")
-                if blocks == "fresh":
-                    args["block_dir"] = os.path.join(root, f"{name}_{rep}")
-                elif blocks == "shared":
-                    args["block_dir"] = shared
-                trace: list = []
-                if trace_kw:
-                    args[trace_kw] = trace
-                source_v = args.pop("source", None)
-                group = f"ab_{name}_{rep}"
-                sc.setJobGroup(group, f"{operator} {name}")
-                c0, t0 = cpu_seconds(), time.perf_counter()
-                try:
-                    with patched(module, settings):
-                        res = op(G, source_v, **args) if operator == "bfs" else op(G, **args)
-                finally:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                rec["jobs"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
-                if isinstance(res, tuple):
-                    res = res[0]
-                sig = signature(operator, res)
-                rec["walls"].append(round(time.perf_counter() - t0, 2))
-                rec["cpu_s"].append(round(cpu_seconds() - c0, 2))
+                wall, cpu, jobs, trace, sig = call(name, settings, str(rep))
+                rec["walls"].append(wall)
+                rec["cpu_s"].append(cpu)
+                rec["jobs"].append(jobs)
                 if trace_kw == "superstep_metrics":
                     rec["metrics"].append([{k: round(v, 2) if isinstance(v, float) else v
                                             for k, v in m.items()} for m in trace])
@@ -269,10 +293,6 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
                     rec["steps"].append([round(s, 2) for s in trace])
                 if not _same(sigs.setdefault(name, sig), sig):
                     raise RuntimeError(f"{name}: result changed between reps")
-                if blocks == "fresh":
-                    shutil.rmtree(args["block_dir"], ignore_errors=True)
-                spark.sparkContext._jvm.System.gc()
-                time.sleep(2.0)
             rec["min"] = min(rec["walls"])
             rec["signature"] = list(sigs[name])
             out[name] = rec
