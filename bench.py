@@ -20,6 +20,10 @@ Headline set (the north-rule metrics + pipeline representatives):
 - cosine_top1: brute-force nearest neighbor over embeddings;
 - text_scan: language-ID + quality + token counting single-pass scan.
 
+``host`` holds ``perfbench`` host markers (1-minute load average and a
+fixed numpy kernel's time) from before and after the suite, so a
+uniform shift between two runs can be told from a change.
+
 Every query runs SPARK_GRAFT_BENCH_REPEAT times (default 3); the
 headline per-query number is the MEDIAN and the raw runs are published
 in ``query_runs`` — single runs on this host swing ±60% between quiet
@@ -41,6 +45,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from perfbench.probe import host_marker  # noqa: E402
 
 from cugraph_spark.graph import Graph, symmetrize  # noqa: E402
 from cugraph_spark.operators.pagerank import pagerank  # noqa: E402
@@ -67,6 +73,7 @@ def main():
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     only = set(only.split(",")) if only else None
     spark = get_spark(app_name="cugraph_spark_bench")
+    host = {"before": host_marker()}
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -248,6 +255,7 @@ def main():
     run("text_scan", _text)
 
     total = round(sum(timings.values()), 3)
+    host["after"] = host_marker()
     print(json.dumps({
         "metric": "headline_suite_wall_seconds",
         "value": total,
@@ -257,6 +265,7 @@ def main():
         "repeat": repeat,
         "sf": sf,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "host": host,
         **extras,
     }))
 

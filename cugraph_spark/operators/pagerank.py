@@ -15,70 +15,62 @@ host reference ``cpp/tests/link_analysis/pagerank_test.cpp:44-132``):
    - stop when L1 = Σ|new−old| < tol, else until max_iter →
      FailedToConvergeError (pagerank_impl.cuh:321-334,411).
 
-Three plans, same semantics (validated equal in tests). The rule that
-picks between them: ``mode="csr"`` always runs the block plan;
-``mode="dataframe"`` (the default) runs the driver-local plan when the
-edge frame has at most ``local_tail.LOCAL_TAIL_EDGES`` rows (150k) and
-the distributed dataframe plan otherwise. The size gate is a
-``count()`` of the edge frame as it comes, persisted (a frame the caller
-already cached is counted from that cache and left cached): the local
-plan collects from it with no repartition shuffle, and the distributed
-plan builds its src-partitioned copy from it and drops it once that
-copy is filled, so the O(E) upstream (e.g. the constructor's dedup
+Two plan bodies, same semantics (validated equal in tests), picked by
+size alone: ``mode="csr"`` runs the block plan in the executors;
+``mode="dataframe"`` (the default) runs the block plan on the driver
+when the edge frame has at most ``local_tail.LOCAL_TAIL_EDGES`` rows
+(150k), and the Catalyst plan otherwise. The size gate is a ``count()``
+of the edge frame as it comes, persisted (a frame the caller already
+cached is counted from that cache and left cached): the driver
+placement collects from it with no repartition shuffle, and the
+Catalyst plan builds its src-partitioned copy from it and drops it once
+that copy is filled, so the O(E) upstream (e.g. the constructor's dedup
 shuffle) runs once whichever plan follows. No parameter selects the
-local plan; tests force the distributed one by setting the cutover
-to 0. ``num_partitions`` and ``block_dir`` shape only the Spark plans,
-so the local plan ignores them.
+plan; tests force the Catalyst plan by setting the cutover to 0.
+``num_partitions`` and ``block_dir`` shape only the Spark runs.
 
-- driver-local (``mode="dataframe"``, small graphs): one collect of
-  ``(src, dst, weight)`` into ONE in-memory dense block (P=1, edges
-  mapped to state indices, built transposed — keyed by dst — by the
-  pack's ``csr_blocks.csr_arrays``), then the whole power iteration in
-  numpy, each superstep the csr plan's own superstep function
-  (``_update``: the pull ``csr_blocks.sum_kernel`` and the dataframe
-  expressions around it) over that one block — the reference building
-  one ``*_impl.cuh`` for one GPU or many. Every distributed dataframe
-  superstep costs ~6 Spark jobs and 0.5-1.2 s of driver time whatever
-  E is; on a 6.7k-edge code graph that was 82 jobs for 14 supersteps.
-  The local plan keeps the dataframe expressions around the kernel and
-  every contract: the same superstep count (one ``superstep_seconds``
-  entry each), ranks equal to tolerance (1e-12 in the tests; sums run
-  in segment order, not Spark's partial-aggregation order, so not
-  bit-identical), the same output schema, and checkpoints with the
-  same columns, iterations and meta keys, so a run checkpointed by one
-  plan resumes on another.
-- ``mode="dataframe"`` above the cutover: pure Catalyst plan. Edges
+- The block plan (``_pull_plan``): the reference's loop shape — the
+  superstep loop over a transposed (CSC, ``store_transposed``) graph
+  with only a scalar all-reduce between supersteps. The rank vector
+  lives in per-pid slices in the csr superstep skeleton
+  (``csr_blocks.VertexSlices``); this module supplies only the numbers.
+  ``_init``: ONE setup pass (routing the side inputs by pid) writes each
+  pid's out-weights (summed from its src-keyed block unless given),
+  first ranks, ``x = rank/ows`` and personalization. ``_update``: each
+  superstep is ONE pass over the pids with no exchange; each task reads
+  every pid's ``x`` slice into one O(V) vector, sums its own vertices'
+  in-edges with the pull kernel, and returns its next rank and x and
+  one ``(l1, dangling)`` row that the driver adds up. The block store is
+  the placement, the reference compiling one ``*_impl.cuh`` for one GPU
+  or many:
+  - executors (``csr_blocks.CsrBlocks``): P pids, each pass one Spark
+    job, over packed or reused per-pid blocks and their dst-keyed view
+    (a directed graph's ``T/`` sub-store, packed once). Each task reads
+    O(V) state per superstep (P·V bytes over shared storage on a
+    cluster, where ``block_dir`` must be a shared filesystem); a
+    manifest-listed block or a state slice missing at read time RAISES
+    — never a silent zero contribution;
+  - driver (``csr_blocks.DriverBlocks``): the gate's one collect becomes
+    one pid's two in-memory blocks and every pass is a plain call, where
+    a Catalyst superstep costs ~6 Spark jobs and 0.5-1.2 s of driver
+    time whatever E is (82 jobs for 14 supersteps on a 6.7k-edge code
+    graph). V is the collected ids' count: no ``vertex_stats`` job.
+  Ranks match the Catalyst plan's to 1e-12 (the tests' tolerance: the
+  kernel sums in segment order, not Spark's partial-aggregation order),
+  with the same superstep count (one ``superstep_seconds`` entry each),
+  output schema and checkpoints (columns, iterations, meta keys), so a
+  run checkpointed by one plan resumes on another. A resumed checkpoint
+  lacking a vertex of the graph raises an error naming it, on every
+  plan.
+- The Catalyst plan (``mode="dataframe"`` above the cutover): edges
   are hash-partitioned on ``src`` ONCE and persisted; each superstep
   joins the O(V) rank vector against them (only the small side
   re-shuffles — exchange reuse keeps the O(E) side in place), then
   ``groupBy(dst).sum`` with map-side partial aggregation (Spark's
   analog of the reference's ``reduce_op::plus`` shuffle combine).
-- ``mode="csr"``: the reference's loop shape — the superstep loop over
-  a transposed (CSC, ``store_transposed``) graph with only a scalar
-  all-reduce between supersteps. The block store
-  (``plans/csr_blocks.py:CsrBlocks``) packs or reuses per-pid CSR
-  blocks, and its dst-keyed view (``CsrBlocks.transposed``: an
-  undirected graph's own blocks, a directed graph's ``T/`` sub-store,
-  packed once) holds each pid's in-edges. The rank vector never enters
-  a Catalyst plan. It lives in per-pid slices beside the blocks, in
-  the superstep skeleton every csr plan shares
-  (``csr_blocks.VertexSlices``); this module supplies only the numbers.
-  ``_init``: ONE setup job (routing the side inputs by pid when there
-  are any) writes each pid's out-weights (summed from its src-keyed
-  block unless given), first ranks, ``x = rank/ows`` and
-  personalization. ``_update``: each superstep is ONE map job over the
-  P pids with no exchange; each task reads every pid's ``x`` slice
-  into one O(V) vector, sums its own vertices' in-edges with the pull
-  kernel, and returns its next rank and x and one ``(l1, dangling)``
-  row that the driver adds up. Costs: each task reads O(V) state per
-  superstep (page cache on one box, P·V bytes over shared storage on a
-  cluster), and a directed graph stores its blocks twice. On a
-  multi-node cluster ``block_dir`` must be a shared filesystem
-  (HDFS-fuse/NFS/EFS); a manifest-listed block missing at read time
-  (torn deployment, non-shared dir), a missing state slice, or a slice
-  not covering a block's keys (stale blocks) RAISES — never a silent
-  zero contribution. Checkpoints are written from the slices; the
-  result is materialized before the slices are removed.
+
+Every plan checks the per-vertex side inputs with one aggregate
+(``_side_input``).
 
 Scale notes: one Spark action per convergence-checked superstep on
 every distributed plan (the L1-diff + next-dangling reduce is the
@@ -108,10 +100,9 @@ from ..graph import DST, SRC, WGT, Graph
 from ..plans import local_tail
 from ..plans.checkpoint import CheckpointManager
 from ..plans.csr_blocks import (
-    Block,
     CsrBlocks,
+    DriverBlocks,
     VertexSlices,
-    csr_arrays,
     positions_of,
     segment_reduce,
     sum_kernel,
@@ -124,140 +115,31 @@ class FailedToConvergeError(RuntimeError):
     (mirrors cugraph's error at pagerank.py:290-293)."""
 
 
-def _duplicate_vertices_error(name: str) -> ValueError:
-    return ValueError(f"{name} has more than one row for a vertex")
-
-
-def _reject_duplicate_vertices(df: DataFrame, name: str) -> None:
-    """A per-vertex input (``personalization``, ``nstart``,
-    ``precomputed_vertex_out_weight``) is left-joined onto the vertex
-    state, where two rows for one vertex would duplicate its state row;
-    both plans refuse such a frame with the same error."""
-    if df.groupBy("vertex").count().filter(F.col("count") > 1).limit(1).count():
-        raise _duplicate_vertices_error(name)
-
-
-def _per_vertex(df: DataFrame, col: str, vertices: np.ndarray, name: str):
-    """``df[col]`` left-joined onto ``vertices`` with 0 for a missing
-    row, and the column's sum over the WHOLE frame (rows for vertices
-    outside the graph included) — the dataframe plan's join + coalesce
-    and its separate normalizing aggregate."""
-    pdf = df.select(F.col("vertex").cast("long"), F.col(col).cast("double")).toPandas()
-    if pdf["vertex"].duplicated().any():
-        raise _duplicate_vertices_error(name)
-    return _column(pdf, col, vertices), pdf[col].sum()
-
-
-def _local_plan(G, edges, alpha, max_iter, tol, personalization, nstart,
-                precomputed_vertex_out_weight, checkpoint, checkpoint_every,
-                resume, superstep_seconds):
-    """The driver-local plan: the dataframe loop below, state for state
-    and superstep for superstep, on the collected ``(src, dst, weight)``
-    arrays, its SpMV the block sum kernel. Checkpoints are written
-    with the same columns, iterations and meta keys, so either plan
-    resumes the other's. Returns ``(result, converged)``."""
-    spark = G.edges.sparkSession
-    src, dst, w = edges
-    graph_verts = np.unique(np.concatenate([src, dst]))
-    V = len(graph_verts)
-    if V == 0:
-        raise ValueError("empty graph")
-    vfield = G.vertices().schema["vertex"]
-
-    pnorm = None
-    start_iter = 0
-    resuming = resume and checkpoint is not None and checkpoint.latest_iteration() is not None
-    if resuming:
-        saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
-        st = saved.select(F.col("vertex").cast("long"), "ows", "rank").toPandas()
-        st = st.sort_values("vertex")
-        verts = st["vertex"].to_numpy(np.int64)
-        ows, rank = st["ows"].to_numpy(np.float64), st["rank"].to_numpy(np.float64)
-        start_iter = meta["iteration"] + 1
-        dangling = float(meta["metrics"]["dangling_sum"])
-    else:
-        verts = graph_verts
-    # edges reach the state only through joins on it: an edge with an
-    # endpoint missing from a resumed state drops out, as it does from
-    # the dataframe plan's state joins
-    index = pd.Index(verts)
-    si, di = index.get_indexer(src), index.get_indexer(dst)
-    keep = (si >= 0) & (di >= 0)
-    if not keep.all():
-        si, di, w = si[keep], di[keep], w[keep]
-
-    if personalization is not None:
-        pval, psum = _per_vertex(personalization, "values", verts, "personalization")
-        if not psum or psum <= 0:
-            raise ValueError("personalization values must sum to > 0")
-        pnorm = pval / psum
-
-    if not resuming:
-        if precomputed_vertex_out_weight is not None:
-            ows, _ = _per_vertex(precomputed_vertex_out_weight, "ows", verts,
-                                 "precomputed_vertex_out_weight")
-        else:
-            ows = np.bincount(si, weights=w, minlength=V)
-        if nstart is not None:
-            nsval, nsum = _per_vertex(nstart, "values", verts, "nstart")
-            if not nsum or nsum <= 0:
-                raise ValueError("nstart values must sum to > 0")
-            rank = nsval / nsum
-        else:
-            rank = np.full(V, 1.0 / V)
-        dangling = float(rank[ows == 0.0].sum())
-
-    # one in-memory dense block over the state indices (P=1), built
-    # transposed (keyed by dst), run by the csr plan's own superstep
-    # function every superstep
-    blk = Block(csr_arrays(di, si, w), {"ids": "dense", "hi1": V})
-    idx = np.arange(V)
-    own = {"ows": ows, "rank": rank}
-    if pnorm is not None:
-        own["pnorm"] = pnorm
-    x = _divided(rank, ows)
-    state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
-                               StructField("rank", DoubleType(), False)])
-
-    def save(it, metrics):
-        pdf = pd.DataFrame({"vertex": verts, "ows": ows, "rank": own["rank"]})
-        checkpoint.save(spark.createDataFrame(pdf, state_schema), it, metrics)
-
-    converged = False
-    final_iter = start_iter
-    for it in range(start_iter, max_iter):
-        final_iter = it
-        t0 = time.perf_counter()
-        new, row = _update(alpha, V, dangling)(idx, own, blk, x, None)
-        own["rank"], x = new["rank"], new["x"]
-        l1, dangling = row["l1"], row["dang"]
-        if superstep_seconds is not None:
-            superstep_seconds.append(time.perf_counter() - t0)
-        if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-            save(it, {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
-        if l1 < tol:
-            converged = True
-            break
-    if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
-        save(final_iter, {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
-                          "tol": tol, "final": True})
-
-    result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
-    result = spark.createDataFrame(
-        pd.DataFrame({"vertex": verts, "pagerank": own["rank"]}), result_schema)
-    return result, converged
-
-
-def _normalized(df: DataFrame, name: str, col: str) -> DataFrame:
-    """``(vertex, col)`` of a per-vertex input: its ``values`` over their
-    sum, the sum taken over the WHOLE frame (rows for vertices outside
-    the graph included). Refuses duplicate rows and a sum ``<= 0``."""
-    _reject_duplicate_vertices(df, name)
-    vals = df.select("vertex", F.col("values").cast("double").alias(col))
-    total = vals.agg(F.sum(col)).first()[0]
+def _side_input(df: DataFrame, name: str, col: str, normalize: bool = True) -> DataFrame:
+    """``(vertex, col)`` of a per-vertex input, checked by ONE aggregate
+    the same way for every plan. It is left-joined onto the vertex
+    state, where two rows for one vertex would duplicate a state row, so
+    such a frame raises. With ``normalize`` (``personalization``,
+    ``nstart``) ``col`` is ``values`` over their sum, the sum taken over
+    the WHOLE frame (rows for vertices outside the graph included), and
+    a sum ``<= 0`` raises; otherwise (``precomputed_vertex_out_weight``)
+    ``col`` is the frame's own ``col``."""
+    vals = df.select("vertex", F.col("values" if normalize else col).cast("double").alias(col))
+    most, total = vals.groupBy("vertex").agg(F.count("*").alias("n"), F.sum(col).alias("s")) \
+        .agg(F.max("n"), F.sum("s")).first()
+    if most is not None and most > 1:
+        raise ValueError(f"{name} has more than one row for a vertex")
+    if not normalize:
+        return vals
     if not total or total <= 0:
         raise ValueError(f"{name} values must sum to > 0")
     return vals.select("vertex", (F.col(col) / F.lit(total)).alias(col))
+
+
+def _lacks_vertices(checkpoint: CheckpointManager, iteration: int) -> str:
+    """The error of a resume whose checkpoint lacks a graph vertex."""
+    return (f"PageRank checkpoint {checkpoint.base} (iteration {iteration}) lacks "
+            "vertices of the graph")
 
 
 def _column(rows: pd.DataFrame, col: str, verts: np.ndarray) -> np.ndarray:
@@ -272,13 +154,14 @@ def _divided(rank, ows):
     return rank / np.where(ows == 0.0, 1.0, ows)
 
 
-def _init(V: int, given: tuple, resumed: bool):
-    """The csr plan's setup of one pid (``VertexSlices.setup``): out-
+def _init(V: int, given: tuple, resumed: str | None):
+    """The block plan's setup of one pid (``VertexSlices.setup``): out-
     weights (segment sums of the src-keyed block unless given), first
-    ranks, ``x = rank/ows`` and personalization; on a resume, the
-    checkpoint's rows are the vertex set and must hold every block key.
-    ``given`` names the routed columns (ows, rank, pnorm). Its row is
-    the pid's dangling mass."""
+    ranks, ``x = rank/ows`` and personalization. ``resumed`` is set on a
+    resume: the checkpoint's rows are then the vertex set, and a block
+    key they lack raises ``resumed`` as the error. ``given`` names the
+    routed columns (ows, rank, pnorm). Its row is the pid's dangling
+    mass."""
 
     def init(verts, rows, out_blk):
         arrays = {}
@@ -286,7 +169,8 @@ def _init(V: int, given: tuple, resumed: bool):
             keys = verts
             verts = arrays["vertex"] = np.sort(
                 rows.loc[rows["rank"].notna(), "vertex"].to_numpy(np.int64))
-            positions_of(verts, keys)  # the checkpoint must hold every block key
+            if not np.isin(keys, verts).all():
+                raise ValueError(resumed)
         if "ows" in given:
             ows = _column(rows, "ows", verts)
         else:
@@ -302,13 +186,12 @@ def _init(V: int, given: tuple, resumed: bool):
 
 
 def _update(alpha: float, V: int, dangling: float):
-    """One PageRank superstep over one dst-keyed block — a pid's in the
-    csr plan, the driver-local plan's one in-memory block: the pull sum
-    kernel over ``x = rank/ows`` of the in-neighbours, then the
-    dataframe superstep's expressions, α·Σ contrib + (dangling·α +
-    1−α)/V (·pnorm when ``own`` holds it). Returns the next rank and x
-    and the ``(l1, dang)`` partials: the L1 diff against the previous
-    rank and the next dangling mass."""
+    """One PageRank superstep of one pid over its dst-keyed block: the
+    pull sum kernel over ``x = rank/ows`` of the in-neighbours, then the
+    Catalyst superstep's expressions, α·Σ contrib + (dangling·α + 1−α)/V
+    (·pnorm when ``own`` holds it). Returns the next rank and x and the
+    ``(l1, dang)`` partials: the L1 diff against the previous rank and
+    the next dangling mass."""
     mass = dangling * alpha + (1.0 - alpha)
 
     def update(verts, own, blk, x, at):
@@ -323,43 +206,41 @@ def _update(alpha: float, V: int, dangling: float):
     return update
 
 
-def _pull_plan(G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
+def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
                precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
                superstep_seconds):
-    """The csr plan: the rank vector stays in per-pid slices beside the
-    blocks (``csr_blocks.VertexSlices``), one setup job writes them, and
-    each superstep is ONE map job whose tasks pull their own vertices'
-    in-edges from the dst-keyed blocks. Checkpoints are written from the
-    slices with the other plans' columns, iterations and meta keys.
-    Returns ``(result, converged)``."""
+    """The block plan, placed by its store ``blocks`` (``CsrBlocks`` in
+    the executors, ``DriverBlocks`` on the driver): the rank vector
+    stays in per-pid slices (``csr_blocks.VertexSlices``), one setup
+    pass writes them, and each superstep is ONE pass whose tasks pull
+    their own vertices' in-edges from the dst-keyed blocks.
+    Checkpoints are written from the slices with the Catalyst plan's
+    columns, iterations and meta keys. Returns ``(result, converged)``."""
     spark = G.edges.sparkSession
-    V = G.vertex_stats()[0]
+    V = blocks.vertex_count()
     if V == 0:
         raise ValueError("empty graph")
     vfield = G.vertices().schema["vertex"]
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
     result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
-    with CsrBlocks(G, P, block_dir, weighted=True) as blocks, \
-            VertexSlices(blocks, ("rank", "x")) as state:
+    with blocks, VertexSlices(blocks, ("rank", "x")) as state:
         frames = []
-        start_iter, dangling = 0, None
-        resumed = resume and checkpoint is not None and checkpoint.latest_iteration() is not None
-        if resumed:
+        start_iter, dangling, resumed = 0, None, None
+        if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
             saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
             frames.append(saved.select("vertex", "ows", "rank"))
             start_iter = meta["iteration"] + 1
             dangling = float(meta["metrics"]["dangling_sum"])
+            resumed = _lacks_vertices(checkpoint, meta["iteration"])
         else:
             if precomputed_vertex_out_weight is not None:
-                _reject_duplicate_vertices(precomputed_vertex_out_weight,
-                                           "precomputed_vertex_out_weight")
-                frames.append(precomputed_vertex_out_weight.select(
-                    "vertex", F.col("ows").cast("double")))
+                frames.append(_side_input(precomputed_vertex_out_weight,
+                                          "precomputed_vertex_out_weight", "ows", normalize=False))
             if nstart is not None:
-                frames.append(_normalized(nstart, "nstart", "rank"))
+                frames.append(_side_input(nstart, "nstart", "rank"))
         if personalization is not None:
-            frames.append(_normalized(personalization, "personalization", "pnorm"))
+            frames.append(_side_input(personalization, "personalization", "pnorm"))
         given = tuple(c for f in frames for c in f.columns if c != "vertex")
         rows = state.setup(_init(V, given, resumed), "dang double", frames)
         if dangling is None:
@@ -427,6 +308,12 @@ def pagerank(
     ``tol=0.0`` runs exactly ``max_iter`` supersteps (never converges
     early) — used for fixed-iteration oracle parity.
 
+    Plan (module docstring): ``mode="csr"`` runs the block plan in the
+    executors; ``mode="dataframe"`` runs it on the driver up to
+    ``local_tail.LOCAL_TAIL_EDGES`` edge rows and the Catalyst plan
+    above. Ranks agree across plans to 1e-12, with equal superstep
+    counts, schema and checkpoints.
+
     ``block_dir`` (mode='csr' only): directory for the packed CSR
     blocks — MUST be shared storage on a multi-node cluster; default a
     fresh local temp dir (correct for local mode), cleaned up on
@@ -447,42 +334,41 @@ def pagerank(
     superstep in one action that returns the L1 diff and the next
     dangling mass together (the ``host_scalar_allreduce`` analog). Both
     loops compute the same doubles, so the results are bit-identical
-    (test_pagerank.py). The csr plan has one loop: each superstep is
-    one job returning those two partials per pid. ``superstep_seconds``
-    gets one entry per superstep: its wall time (the csr plan: that
-    job's), or on the zero-action loop its driver plan-build time,
+    (test_pagerank.py). The block plan has one loop: each superstep is
+    one pass returning those two partials per pid. ``superstep_seconds``
+    gets one entry per superstep: its wall time (the block plan: that
+    pass's), or on the zero-action loop its driver plan-build time,
     since execution lands in the terminal action.
     """
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions
 
-    P = resolve_partitions(num_partitions, G.edges)
-    if mode == "csr":
+    def block_plan(blocks):
         result, converged = _pull_plan(
-            G, P, block_dir, alpha, max_iter, tol, personalization, nstart,
+            G, blocks, alpha, max_iter, tol, personalization, nstart,
             precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
             superstep_seconds)
         return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
 
-    # plan choice: the size gate counts the edge frame as it comes,
+    P = resolve_partitions(num_partitions, G.edges)
+    if mode == "csr":
+        return block_plan(CsrBlocks(G, P, block_dir, weighted=True))
+
+    # placement: the size gate counts the edge frame as it comes,
     # persisted (a frame the caller cached is counted from that cache
-    # and stays cached). Below the cutover the local plan collects from
-    # it, with no repartition shuffle; above it the distributed plan's
-    # src-partitioned copy is built from it, so the O(E) upstream runs
-    # once whichever plan follows
+    # and stays cached). Below the cutover the block plan runs on the
+    # driver over one collect of it, with no repartition shuffle; above
+    # it the Catalyst plan's src-partitioned copy is built from it, so
+    # the O(E) upstream runs once whichever plan follows
     thr = local_tail.LOCAL_TAIL_EDGES
     own_gate = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
     if own_gate:
         G.edges.persist(StorageLevel.MEMORY_AND_DISK)
     if thr > 0 and G.edges.count() <= thr:
-        collected = local_tail.collect_edges(G.edges)
+        blocks = DriverBlocks(spark, *local_tail.collect_edges(G.edges))
         if own_gate:
             G.edges.unpersist()
-        result, converged = _local_plan(
-            G, collected, alpha, max_iter, tol, personalization, nstart,
-            precomputed_vertex_out_weight, checkpoint, checkpoint_every,
-            resume, superstep_seconds)
-        return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
+        return block_plan(blocks)
 
     # --- invariant side: edges + out-weight sums, partitioned once ---
     e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)
@@ -493,8 +379,8 @@ def pagerank(
     drop_gate = own_gate and edges is not G.edges
     chained = tol == 0.0 and checkpoint is None
     if precomputed_vertex_out_weight is not None:
-        _reject_duplicate_vertices(precomputed_vertex_out_weight, "precomputed_vertex_out_weight")
-        ows = precomputed_vertex_out_weight.select("vertex", F.col("ows").cast("double"))
+        ows = _side_input(precomputed_vertex_out_weight, "precomputed_vertex_out_weight", "ows",
+                          normalize=False)
         vstate = G.vertices().join(ows, "vertex", "left").select(
             "vertex", F.coalesce("ows", F.lit(0.0)).alias("ows"))
     else:
@@ -520,7 +406,7 @@ def pagerank(
     # --- personalization normalization (pagerank_impl.cuh:299-319) ---
     pers = None
     if personalization is not None:
-        pers = F.broadcast(_normalized(personalization, "personalization", "pnorm"))
+        pers = F.broadcast(_side_input(personalization, "personalization", "pnorm"))
 
     # --- init ranks (pagerank_impl.cuh:363-386) ---
     start_iter = 0
@@ -528,11 +414,13 @@ def pagerank(
     if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
         it0 = checkpoint.latest_iteration()
         saved, meta = checkpoint.load(spark, it0)
+        if vstate.join(saved, "vertex", "left_anti").limit(1).count():
+            raise ValueError(_lacks_vertices(checkpoint, it0))
         state = saved.repartition(P, "vertex").transform(truncate_plan)
         start_iter = meta["iteration"] + 1
         dangling = float(meta["metrics"]["dangling_sum"])
     elif nstart is not None:
-        ns = _normalized(nstart, "nstart", "nsrank")
+        ns = _side_input(nstart, "nstart", "nsrank")
         state = (
             vstate.join(ns, "vertex", "left")
             .select("vertex", "ows", F.coalesce("nsrank", F.lit(0.0)).alias("rank"))

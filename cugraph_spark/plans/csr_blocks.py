@@ -74,24 +74,31 @@ Two pull kernels, one per accumulator, serve every operator (the
 reference's one reduce primitive, ``per_v_transform_reduce_incoming_e``,
 written once for one GPU or many). Each reduces a transposed block's
 in-edges per dst from one value per neighbour slot: :func:`sum_kernel`
-is PageRank's SpMV — per pid in the executors and, on one in-memory
-block built transposed by :func:`csr_arrays`, every superstep of the
-driver-local plan; :func:`min_kernel` is WCC's hash-min over neighbour
+is PageRank's SpMV; :func:`min_kernel` is WCC's hash-min over neighbour
 labels and csr BFS's min-id frontier predecessor.
 
 Vertex state stays beside the blocks, and the superstep frame is
 written once, for every operator (:class:`VertexSlices`): per-pid
 ``.npy`` slices in a per-call ``state-<uuid>/`` directory inside
-``block_dir``, written by one setup job, then read and rewritten by one
-map job per superstep with no exchange; a missing slice raises like a
-missing block. A superstep task reads every pid's current slice of one
-column into one O(V) vector with :func:`gather` (indexed by vertex id
-on dense blocks, by searchsorted on dict ones) and hands it, with its
-own columns and its dst-keyed block, to the operator's ``update``.
-PageRank, WCC and BFS supply only ``init`` (first state of a pid) and
-``update`` (one superstep of a pid); the skeleton owns vertex
-ownership, the slice generations — the rule that a slice is never
-rewritten in place — gap pids and the final read.
+``block_dir``, written by one setup pass, then read and rewritten by
+one pass over the pids per superstep with no exchange; a missing slice
+raises like a missing block. A superstep task reads every pid's current
+slice of one column into one O(V) vector with :func:`gather` (indexed
+by vertex id on dense blocks, by searchsorted on dict ones) and hands
+it, with its own columns and its dst-keyed block, to the operator's
+``update``. PageRank, WCC and BFS supply only ``init`` (first state of
+a pid) and ``update`` (one superstep of a pid); the skeleton owns
+vertex ownership, the slice generations — the rule that a slice is
+never rewritten in place — gap pids and the final read.
+
+The skeleton runs on either of two placements, the reference building
+one ``*_impl.cuh`` for one GPU or many: the block store decides where
+its passes run. :class:`CsrBlocks` places them in the executors (P
+pids, each pass one Spark job). :class:`DriverBlocks` places them in
+this process: one pid whose src-keyed and dst-keyed blocks are built
+in memory from an edge set the driver collected (at most
+``local_tail.LOCAL_TAIL_EDGES`` rows), every pass a plain call with no
+Spark job.
 
 Per-task scratch budget: on dense blocks :func:`gather` allocates one
 ``hi1``-sized vector of the state's 8-byte type (float64 ranks, int64
@@ -147,8 +154,8 @@ def csr_arrays(src, dst, w=None, dense: bool = True) -> dict:
     """The block arrays of one edge set (module docstring layout):
     edges sorted by src (stable), ``su`` + ``indptr``, the dst side as
     ``dr`` (dense) or ``du`` + ``dc`` (dict), and ``w`` when given. The
-    pack writes them per pid; the driver-local PageRank wraps them in
-    an in-memory :class:`Block`."""
+    pack writes them per pid; :class:`DriverBlocks` keeps them in
+    memory."""
     order = np.argsort(src, kind="stable")  # radix on int32/64
     src, dst = src[order], dst[order]
     su, counts = np.unique(src, return_counts=True)
@@ -421,6 +428,7 @@ class CsrBlocks:
     ):
         self.source = source
         self.edges = source if isinstance(source, DataFrame) else source.edges
+        self.spark = self.edges.sparkSession
         self.P = P
         self.block_dir = block_dir
         self.weighted = weighted
@@ -474,6 +482,59 @@ class CsrBlocks:
         t._transpose, t._hash_t = True, self.meta["hash_t"]
         return t.__enter__()
 
+    # --- what VertexSlices reads from a store (DriverBlocks has the same) ---
+
+    def vertex_count(self) -> int:
+        """V of the source ``Graph`` (its memoized ``vertex_stats``)."""
+        return self.source.vertex_stats()[0]
+
+    def views(self) -> tuple[BlockFiles, BlockFiles]:
+        """The src-keyed and the dst-keyed block files (one object on an
+        undirected graph, whose blocks are their own transpose)."""
+        return self.files, self.transposed().files
+
+    def _tasks(self, task, schema) -> DataFrame:
+        return self.spark.range(0, self.P, 1, self.P).mapInPandas(_per_pid(task), schema)
+
+    def map(self, task, schema: str) -> list:
+        """ONE job: ``task(pid)`` once per pid, one Spark task each, no
+        shuffle. A task returns a dict (one row) or None (no row);
+        returns the collected rows."""
+        return self._tasks(task, schema).collect()
+
+    def route(self, frames: list[DataFrame], task, schema: str) -> list:
+        """ONE job: the rows of ``frames`` (each keyed by ``vertex``) go
+        to their pid by :func:`pid_of`, and every pid, with rows or not,
+        runs ``task(pid, rows)`` once (``vertex`` as long, the frames'
+        other columns with nulls where a frame lacks them). Returns the
+        collected rows."""
+        hash_t = self.meta["hash_t"]
+        # the pid-only marker rows carry typed zeros, not nulls: pandas
+        # turns an integer column holding a null into float64, which
+        # rounds ids above 2^53
+        cols = {c: t for f in frames for c, t in f.dtypes if c != "vertex"}
+        frame = self.spark.range(self.P).select(
+            F.col("id").alias("pid"), F.lit(0).cast("long").alias("vertex"),
+            F.lit(True).alias("marker"), *[F.lit(0).cast(t).alias(c) for c, t in cols.items()])
+        for f in frames:
+            frame = frame.unionByName(
+                f.select(pid_of("vertex", hash_t, self.P).alias("pid"),
+                         F.col("vertex").cast("long").alias("vertex"),
+                         F.lit(False).alias("marker"),
+                         *[c for c in f.columns if c != "vertex"]),
+                allowMissingColumns=True)
+        return frame.groupBy("pid").applyInPandas(_per_group(task), schema).collect()
+
+    def frame(self, read, schema: StructType) -> DataFrame:
+        """``read(pid)`` (a pandas frame) of every pid as one DataFrame,
+        one partition per pid. Lazy: act on it while what ``read`` reads
+        still exists."""
+        return self._tasks(read, schema)
+
+    def result(self, read, schema: StructType) -> DataFrame:
+        """:meth:`frame`, materialized now."""
+        return truncate_plan(self.frame(read, schema), eager=True)
+
     def _stats(self, count: bool) -> tuple:
         """``(n_edges, lo, hi)`` of the source. A Graph answers from its
         memoized ``vertex_stats`` and, only when asked (``n_edges`` is
@@ -517,6 +578,68 @@ class CsrBlocks:
                 "block directory"
             )
         return meta
+
+
+class MemoryFiles(NamedTuple):
+    """One in-memory block served the way :class:`BlockFiles` serves a
+    packed set, as the only pid's block."""
+
+    blk: Block
+    manifest: dict
+
+    def block(self, pid: int) -> Block:
+        return self.blk
+
+
+class DriverBlocks:
+    """The driver placement of a block store: what :class:`VertexSlices`
+    reads from :class:`CsrBlocks`, for one pid (``P = 1``) in this
+    process. ``(src, dst, w)`` are the collected edge arrays; the
+    src-keyed and the dst-keyed block are built from them by
+    :func:`csr_arrays` as dict blocks on the raw ids, so no
+    ``hi+1``-sized vector and no id map is needed. :meth:`map`,
+    :meth:`route`, :meth:`frame` and :meth:`result` are plain calls with
+    no Spark job (``route`` collects its frames), and the slices live
+    in a private temp dir removed on exit. Meant for edge sets of at
+    most ``local_tail.LOCAL_TAIL_EDGES`` rows."""
+
+    P = 1
+
+    def __init__(self, spark, src: np.ndarray, dst: np.ndarray, w: np.ndarray | None):
+        self.spark = spark
+        self.files, self.in_files = (
+            MemoryFiles(Block(csr_arrays(key, nbr, w, dense=False), {"ids": "dict"}),
+                        {0: len(src)})
+            for key, nbr in ((src, dst), (dst, src)))
+        self.V = len(block_keys(self.files.blk, self.in_files.blk))
+
+    def __enter__(self) -> DriverBlocks:
+        self.block_dir = tempfile.mkdtemp(prefix="cugraph_driver_")
+        return self
+
+    def __exit__(self, *exc) -> None:
+        shutil.rmtree(self.block_dir, ignore_errors=True)
+
+    def vertex_count(self) -> int:
+        return self.V
+
+    def views(self) -> tuple[MemoryFiles, MemoryFiles]:
+        return self.files, self.in_files
+
+    def map(self, task, schema: str | None = None) -> list:
+        row = task(0)
+        return [] if row is None else [row]
+
+    def route(self, frames: list[DataFrame], task, schema: str | None = None) -> list:
+        rows = pd.concat(
+            [f.select(F.col("vertex").cast("long"), *[c for c in f.columns if c != "vertex"])
+             .toPandas() for f in frames], ignore_index=True)
+        return self.map(lambda pid: task(pid, rows))
+
+    def frame(self, read, schema: StructType) -> DataFrame:
+        return self.spark.createDataFrame(read(0), schema)
+
+    result = frame  # built from the slices when called, so already materialized
 
 
 def _slice_path(state_dir: str, pid: int, name: str) -> str:
@@ -611,9 +734,9 @@ class VertexSlices:
     directory inside its ``block_dir`` (removed on exit). Pid ``p`` owns
     the vertices :func:`pid_of` routes to ``p`` — the keys of its
     src-keyed and dst-keyed blocks, sorted — and one array per state
-    column, so a superstep is ONE map job over the pids, no exchange,
-    whose tasks read the slices they need and write their own. An
-    operator supplies only its numbers:
+    column, so a superstep is ONE pass over the pids, no exchange, whose
+    tasks read the slices they need and write their own. An operator
+    supplies only its numbers:
 
     - ``init(verts, rows, out_blk) -> (arrays, row)``, called once per
       pid by :meth:`setup` with the pid's vertices, its routed rows (a
@@ -633,6 +756,13 @@ class VertexSlices:
     and reports no row; a pid with vertices but no in-edges gets the
     empty block :data:`NO_EDGES`.
 
+    The block store is the placement: the skeleton reads from it ``P``,
+    ``block_dir`` and :meth:`CsrBlocks.views`, and runs every pass
+    through its ``map`` (``task(pid)`` per pid), ``route`` (the side
+    inputs' rows to their pid), ``frame`` and ``result`` — Spark jobs
+    over P pids on :class:`CsrBlocks`, plain calls on one pid on
+    :class:`DriverBlocks`. The operator code is the same on both.
+
     The skeleton keeps the generation rule, so no operator names a
     slice file: a versioned column (one the supersteps change) is
     written under a new name per generation, the one before the
@@ -647,12 +777,11 @@ class VertexSlices:
     the directory must be shared storage on a multi-node cluster, like
     ``block_dir``."""
 
-    def __init__(self, blocks: CsrBlocks, versioned: tuple[str, ...]):
-        self.spark = blocks.edges.sparkSession
-        self.P, self.hash_t = blocks.P, blocks.meta["hash_t"]
-        inb = blocks.transposed()
-        self.out_files, self.in_files = blocks.files, inb.files
-        self.same = inb is blocks  # an undirected graph's blocks are their own transpose
+    def __init__(self, blocks: CsrBlocks | DriverBlocks, versioned: tuple[str, ...]):
+        self.blocks, self.P = blocks, blocks.P
+        self.out_files, self.in_files = blocks.views()
+        # an undirected graph's blocks are their own transpose
+        self.same = self.in_files is self.out_files
         self.versioned, self.gen = tuple(versioned), 0
         self.dir = os.path.join(blocks.block_dir, f"state-{uuid.uuid4().hex}")
 
@@ -664,10 +793,10 @@ class VertexSlices:
         shutil.rmtree(self.dir, ignore_errors=True)
 
     def setup(self, init, schema: str = "n long", frames: list[DataFrame] = ()) -> list:
-        """ONE job writes every pid's ``vertex`` slice and the arrays
-        ``init`` returns (generation 0 of the versioned ones): a
-        :meth:`route` job when there are side-input ``frames``, a
-        :meth:`map` job otherwise. Returns the collected rows."""
+        """ONE pass writes every pid's ``vertex`` slice and the arrays
+        ``init`` returns (generation 0 of the versioned ones): the
+        store's ``route`` when there are side-input ``frames``, its
+        ``map`` otherwise. Returns the collected rows."""
         out_files, in_files, same, state_dir = self.out_files, self.in_files, self.same, self.dir
         name = _named(self.versioned, self.gen)
 
@@ -680,13 +809,13 @@ class VertexSlices:
             return row
 
         if frames:
-            return self.route(frames, task, schema)
-        return self.map(lambda pid: task(pid, None), schema).collect()
+            return self.blocks.route(frames, task, schema)
+        return self.blocks.map(lambda pid: task(pid, None), schema)
 
     def step(self, update, reads: tuple[str, ...], col: str, schema: str) -> list:
-        """ONE superstep job (:meth:`step_task` per pid); returns the
+        """ONE superstep pass (:meth:`step_task` per pid); returns the
         collected rows and moves to the next generation."""
-        rows = self.map(self.step_task(update, reads, col), schema).collect()
+        rows = self.blocks.map(self.step_task(update, reads, col), schema)
         self.gen += 1
         return rows
 
@@ -718,47 +847,22 @@ class VertexSlices:
         """The file of ``pid``'s current ``name`` slice."""
         return _slice_path(self.dir, pid, _named(self.versioned, self.gen)(name))
 
-    def route(self, frames: list[DataFrame], task, schema: str) -> list:
-        """ONE job: the rows of ``frames`` (each keyed by ``vertex``) go
-        to their pid by :func:`pid_of`, and every pid, with rows or not,
-        runs ``task(pid, rows)`` once (``vertex`` as long, the frames'
-        other columns with nulls where a frame lacks them). Returns the
-        collected rows."""
-        # the pid-only marker rows carry typed zeros, not nulls: pandas
-        # turns an integer column holding a null into float64, which
-        # rounds ids above 2^53
-        cols = {c: t for f in frames for c, t in f.dtypes if c != "vertex"}
-        frame = self.spark.range(self.P).select(
-            F.col("id").alias("pid"), F.lit(0).cast("long").alias("vertex"),
-            F.lit(True).alias("marker"), *[F.lit(0).cast(t).alias(c) for c, t in cols.items()])
-        for f in frames:
-            frame = frame.unionByName(
-                f.select(pid_of("vertex", self.hash_t, self.P).alias("pid"),
-                         F.col("vertex").cast("long").alias("vertex"),
-                         F.lit(False).alias("marker"),
-                         *[c for c in f.columns if c != "vertex"]),
-                allowMissingColumns=True)
-        return frame.groupBy("pid").applyInPandas(_per_group(task), schema).collect()
-
-    def map(self, task, schema) -> DataFrame:
-        """``task(pid)`` once per pid, one task each, no shuffle; it
-        returns a pandas frame or a dict (one row), or None (no row)."""
-        return self.spark.range(0, self.P, 1, self.P).mapInPandas(_per_pid(task), schema)
-
-    def frame(self, schema: StructType, names: list[str]) -> DataFrame:
-        """The current generation as a DataFrame, one partition per pid:
-        field ``i`` of ``schema`` reads column ``names[i]``. Lazy — act
-        on it before the directory is removed."""
+    def _reader(self, schema: StructType, names: list[str]):
         state_dir, cols = self.dir, [f.name for f in schema.fields]
-        name = _named(self.versioned, self.gen)
-        files = [name(n) for n in names]
+        files = [_named(self.versioned, self.gen)(n) for n in names]
 
         def read(pid):
             return pd.DataFrame({c: load_slice(state_dir, pid, n) for c, n in zip(cols, files)})
 
-        return self.map(read, schema)
+        return read
+
+    def frame(self, schema: StructType, names: list[str]) -> DataFrame:
+        """The current generation as a DataFrame, one partition per pid:
+        field ``i`` of ``schema`` reads column ``names[i]``. Lazy on the
+        executors — act on it before the directory is removed."""
+        return self.blocks.frame(self._reader(schema, names), schema)
 
     def result(self, schema: StructType, names: list[str]) -> DataFrame:
-        """:meth:`frame`, materialized now: the one eager read of the
-        slices, made while they still exist."""
-        return truncate_plan(self.frame(schema, names), eager=True)
+        """:meth:`frame`, materialized now: the one read of the slices,
+        made while they still exist."""
+        return self.blocks.result(self._reader(schema, names), schema)

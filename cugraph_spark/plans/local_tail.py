@@ -23,9 +23,12 @@ comparisons, and the update expressions mirror the distributed column
 expressions operation-for-operation. ``tests/test_local_tail.py`` pins
 local == distributed on several graphs per operator.
 
-PageRank's driver-local plan has no twin here: it runs the csr plan's
-sum kernel on one in-memory block (``plans/csr_blocks.py``), and its
-tolerance-equal contract is stated with the plan in
+PageRank has no twin here: below the cutover its one block plan runs
+on the driver placement (``plans/csr_blocks.py:DriverBlocks``: the
+collected edges as one pid's two in-memory blocks, the csr superstep
+skeleton run in this process), the same code the executors run for
+``mode="csr"``. Its contract is ranks within 1e-12 of the distributed
+plan, not bit-identity, stated with the plan in
 ``operators/pagerank.py``. It shares only the cutover and
 :func:`collect_edges`.
 

@@ -176,8 +176,8 @@ def incremental_pagerank(
     returns: the ``[vertex, pagerank]`` frame, or ``(frame,
     converged)`` with ``fail_on_nonconvergence=False``. Pass
     ``superstep_seconds=[]`` in ``kw`` to count supersteps (one entry
-    each). Small logs take PageRank's driver-local plan, checkpoints
-    included."""
+    each). Small logs run PageRank's block plan on the driver,
+    checkpoints included."""
     edges = log.read(spark)
     G = Graph(edges, directed=True, weighted=True)
     nstart = None

@@ -11,7 +11,6 @@ import importlib
 import os
 import sys
 from pathlib import Path
-from types import SimpleNamespace
 
 import numpy as np
 import pytest
@@ -64,15 +63,15 @@ def tail_plan(monkeypatch):
     driver-local tail cutover (``local_tail.LOCAL_TAIL_EDGES``) so high
     that every test graph takes the local plan; ``"distributed"`` sets
     it to 0, so none does. ``calls`` records the name of every
-    driver-local kernel (``local_tail.*_local``) and driver-local
-    PageRank run (``pagerank._local_plan``) the block ran, which proves
-    the plan."""
+    driver-local kernel (``local_tail.*_local``) and every PageRank
+    block-plan run on the driver placement (``pagerank.DriverBlocks``)
+    the block ran, which proves the plan."""
     from cugraph_spark.plans import local_tail
 
     # the package re-exports the pagerank function under the module's name
     pagerank = importlib.import_module("cugraph_spark.operators.pagerank")
     spied = [(local_tail, n) for n in vars(local_tail) if n.endswith("_local")]
-    spied.append((pagerank, "_local_plan"))
+    spied.append((pagerank, "DriverBlocks"))
 
     @contextlib.contextmanager
     def plan(name):
@@ -168,62 +167,71 @@ def sym_tuples(edges):
 
 def csr_superstep(spark, op: str):
     """One csr operator's parts on a small graph, for running its
-    ``VertexSlices`` steps in-process: ``(G, weighted, versioned, init,
-    step)``, where ``step(gen)`` is the ``(update, reads, col)`` of the
-    superstep that reads generation ``gen``."""
+    ``VertexSlices`` passes step by step: ``(G, weighted, versioned,
+    setup, step)``, where ``setup`` is the ``(init, schema)`` of
+    ``VertexSlices.setup`` and ``step(gen)`` the ``(update, reads, col,
+    schema)`` of the superstep that reads generation ``gen``."""
     from cugraph_spark.graph import Graph
 
     if op == "wcc":
         wcc = importlib.import_module("cugraph_spark.operators.wcc")
         G = Graph(edges_df(spark, sym_tuples(make_edges("tiny_social"))), directed=False)
-        return G, False, ("labels",), wcc._init, lambda gen: (wcc._update, ("labels",), "labels")
+        return (G, False, ("labels",), (wcc._init, "n long"),
+                lambda gen: (wcc._update, ("labels",), "labels", "changed long"))
     G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
     if op == "pagerank":
         pr = importlib.import_module("cugraph_spark.operators.pagerank")
         V = G.number_of_vertices()
-        return (G, True, ("rank", "x"), pr._init(V, (), False),
-                lambda gen: (pr._update(0.85, V, 0.0), ("ows", "rank"), "x"))
+        return (G, True, ("rank", "x"), (pr._init(V, (), None), "dang double"),
+                lambda gen: (pr._update(0.85, V, 0.0), ("ows", "rank"), "x",
+                             "l1 double, dang double"))
     traversal = importlib.import_module("cugraph_spark.operators.traversal")
-    return (G, False, ("dist", "pred"), traversal._bfs_init(0),
-            lambda gen: (traversal._bfs_update(gen + 1), ("dist", "pred"), "dist"))
+    return (G, False, ("dist", "pred"), (traversal._bfs_init(0), "n long"),
+            lambda gen: (traversal._bfs_update(gen + 1), ("dist", "pred"), "dist", "reached long"))
 
 
-def in_process(state):
-    """Run ``state``'s map jobs in this process, pid by pid, so spies see
-    every task's writes; ``collect()`` returns the tasks' rows."""
+def block_store(G, weighted: bool, placement: str, P: int, block_dir: str):
+    """The block store of one ``VertexSlices`` placement over ``G``: the
+    executors' ``CsrBlocks`` with ``P`` pids packed into ``block_dir``,
+    or the driver's ``DriverBlocks`` over the collected edges (one pid,
+    in memory)."""
+    from cugraph_spark.plans import local_tail
+    from cugraph_spark.plans.csr_blocks import CsrBlocks, DriverBlocks
 
-    def run(task, schema):
-        rows = [task(pid) for pid in range(state.P)]
-        return SimpleNamespace(collect=lambda: [r for r in rows if r is not None])
-
-    state.map = run
-    return state
+    if placement == "driver":
+        return DriverBlocks(G.edges.sparkSession, *local_tail.collect_edges(G.edges, weighted))
+    return CsrBlocks(G, P, block_dir, weighted=weighted)
 
 
-def check_gap_and_missing(spark, tmp_path, op: str) -> None:
-    """A csr superstep task of ``op`` (run in-process after one step)
-    returns a row for a pid with vertices and none for a pid without
-    (a hash gap), and RAISES when the manifest lists a pid whose block
-    files are gone (torn deployment / non-shared block_dir) or when a
-    slice of the generation it reads is gone — never a silent zero."""
-    from cugraph_spark.plans.csr_blocks import CsrBlocks, VertexSlices
+def check_gap_and_missing(spark, tmp_path, op: str, placement: str = "executors") -> None:
+    """A csr superstep task of ``op`` (after one real superstep on
+    ``placement``) returns a row for a pid with vertices and RAISES when
+    a slice of the generation it reads is gone — never a silent zero.
+    On the executors, whose store has more pids than vertices here and
+    packed block files, a pid without vertices (a hash gap) returns no
+    row, and a pid the manifest lists whose block files are gone (torn
+    deployment / non-shared block_dir) raises too."""
+    from cugraph_spark.plans.csr_blocks import VertexSlices
 
-    G, weighted, versioned, init, step = csr_superstep(spark, op)
+    G, weighted, versioned, setup, step = csr_superstep(spark, op)
     P = 64  # more pids than vertices: some pids hold no edges
-    with CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=weighted) as blocks, \
+    with block_store(G, weighted, placement, P, str(tmp_path / "blocks")) as blocks, \
             VertexSlices(blocks, versioned) as state:
-        in_process(state).setup(init)
-        state.step(*step(state.gen), schema=None)
-        update, reads, col = step(state.gen)
+        state.setup(*setup)
+        state.step(*step(state.gen))
+        update, reads, col, _ = step(state.gen)
         task = state.step_task(update, reads, col)
         listed = sorted(state.in_files.manifest)
         assert task(listed[0]) is not None
-        gap = next(p for p in range(P)
-                   if p not in state.out_files.manifest and p not in state.in_files.manifest)
-        assert task(gap) is None
-        os.remove(os.path.join(state.in_files.block_dir, f"{listed[0]}.su.npy"))
-        with pytest.raises(RuntimeError, match="missing"):
-            task(listed[0])
-        os.remove(state.path(listed[1], col))
+        if placement == "executors":
+            gap = next(p for p in range(P)
+                       if p not in state.out_files.manifest and p not in state.in_files.manifest)
+            assert task(gap) is None
+            os.remove(os.path.join(state.in_files.block_dir, f"{listed[0]}.su.npy"))
+            with pytest.raises(RuntimeError, match="missing"):
+                task(listed[0])
+        # on the executors a task reads the other pids' slices too
+        gone, reader = (listed[1], listed[2]) if placement == "executors" else (0, 0)
+        os.remove(state.path(gone, col))
         with pytest.raises(RuntimeError, match="state slice missing"):
-            task(listed[2])
+            task(reader)

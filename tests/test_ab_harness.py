@@ -22,16 +22,20 @@ def _modes(rec):
 def test_ab_harness_wcc_arms(spark, tmp_path):
     """Each arm reaches the plan it forces (the superstep mode tags)
     and all arms give the same labels; the first arm's untimed warm-up
-    call is recorded."""
+    call is recorded, and the timed reps run round-robin over the arms,
+    the order reversed every round."""
     ab = _ab()
     by_layout = ab.run(spark, "wcc", 8, ["dataframe", "csr"], reps=1, block_root=str(tmp_path))
-    by_frontier = ab.run(spark, "wcc", 8, ["dense", "frontier"], reps=1, block_root=str(tmp_path))
-    for out, arms in ((by_layout, ("dataframe", "csr")), (by_frontier, ("dense", "frontier"))):
+    by_frontier = ab.run(spark, "wcc", 8, ["dense", "frontier"], reps=2, block_root=str(tmp_path))
+    for out, arms, reps in ((by_layout, ("dataframe", "csr"), 1),
+                            (by_frontier, ("dense", "frontier"), 2)):
         a, b = (out[arm] for arm in arms)
         assert a["signature"] == b["signature"] and a["signature"][0] == out["V"]
         for rec in (a, b):
-            assert len(rec["walls"]) == len(rec["cpu_s"]) == 1
+            assert len(rec["walls"]) == len(rec["cpu_s"]) == reps
     assert (by_layout["warmup"], by_frontier["warmup"]) == ("dataframe", "dense")
+    assert by_layout["order"] == ["dataframe", "csr"]
+    assert by_frontier["order"] == ["dense", "frontier", "frontier", "dense"]
     assert set(_modes(by_layout["csr"])) == {"csr"}
     assert "csr" not in _modes(by_layout["dataframe"])
     assert set(_modes(by_frontier["dense"])) == {"dense"}

@@ -133,6 +133,26 @@ def test_pagerank_resume_across_csr(spark, tmp_path, monkeypatch, first, second)
         assert abs(full[v] - resumed[v]) < 1e-12, v
 
 
+@pytest.mark.parametrize("plan", ["local", "distributed", "csr"])
+def test_pagerank_resume_lacking_a_vertex_raises(spark, tmp_path, monkeypatch, plan):
+    """A checkpoint written on the graph without vertex 33, resumed on
+    the whole graph, raises an error that names the checkpoint on every
+    plan — not a numpy broadcast error, a stale-blocks error, or a
+    result missing the vertex."""
+    from cugraph_spark.plans import local_tail
+
+    edges = make_edges("directed_asym")
+    part = Graph(edges_df(spark, [e for e in edges if 33 not in e[:2]]), directed=True)
+    G = Graph(edges_df(spark, edges), directed=True)
+    cp = CheckpointManager(str(tmp_path), "pr_part")
+    pagerank(part, tol=0.0, max_iter=2, checkpoint=cp, checkpoint_every=2)
+    assert cp.latest_iteration() == 1
+    monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", _PLANS[plan][0])
+    with pytest.raises(Exception, match="PageRank checkpoint .* lacks vertices"):
+        pagerank(G, tol=0.0, max_iter=4, mode=_PLANS[plan][1], checkpoint=cp,
+                 checkpoint_every=2, resume=True).collect()
+
+
 def test_wcc_resume(spark, tmp_path):
     edges = make_edges("disjoint")
     G = Graph(edges_df(spark, edges), directed=False)

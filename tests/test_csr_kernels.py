@@ -1,12 +1,13 @@
 """The two pull block kernels (``plans/csr_blocks.py``: ``sum_kernel``
 and ``min_kernel`` over transposed blocks) against numpy's unbuffered
 ``np.add.at`` / ``np.minimum.at`` over the raw edges, on the three block
-forms: packed dense, packed dict, and built in memory (the driver-local
-PageRank's form), with the state either indexed directly or read from
-per-pid slices through ``gather``, as the csr plans read it; and the
-superstep skeleton around them (``VertexSlices``), run in-process: its
-slice generations, hash-gap pids and missing blocks or slices, under
-the PageRank, WCC and BFS updates."""
+forms: packed dense, packed dict, and built in memory, with the state
+either indexed directly or read from per-pid slices through ``gather``,
+as the csr plans read it; and the superstep skeleton around them
+(``VertexSlices``) on both of its placements, the executors
+(``CsrBlocks``) and the driver (``DriverBlocks``): its slice
+generations, hash-gap pids and missing blocks or slices, under the
+PageRank, WCC and BFS updates."""
 
 from __future__ import annotations
 
@@ -29,7 +30,7 @@ from cugraph_spark.plans.csr_blocks import (
     sum_kernel,
 )
 
-from .conftest import check_gap_and_missing, csr_superstep, in_process
+from .conftest import block_store, check_gap_and_missing, csr_superstep
 
 V = 40
 _rng = np.random.default_rng(5)
@@ -94,38 +95,47 @@ def test_block_kernels_match_ufunc_at(spark, tmp_path, form, gathered):
     assert got_min == {d: int(mins[d]) for d in has_in}
 
 
-@pytest.mark.parametrize("op", ["pagerank", "wcc", "bfs"])
-def test_slice_generations(spark, tmp_path, monkeypatch, op):
-    """The skeleton's generation rule under each operator's update, run
-    in-process over four supersteps: after each, every pid holds the
-    slices written once at setup (``vertex`` among them) plus exactly
-    the current and the previous generation of each versioned column,
-    and no slice file is ever written twice (that would replace it in
-    place)."""
-    written: list = []
-    real = csr_blocks._write_atomic
-    monkeypatch.setattr(csr_blocks, "_write_atomic",
-                        lambda path, write: written.append(path) or real(path, write))
-    G, weighted, versioned, init, step = csr_superstep(spark, op)
-    P = 4
-    with csr_blocks.CsrBlocks(G, P, str(tmp_path / "blocks"), weighted=weighted) as blocks, \
+OPS = ["pagerank", "wcc", "bfs"]
+
+
+def _check_slice_generations(spark, tmp_path, op, placement):
+    """The skeleton's generation rule under ``op``'s update on
+    ``placement``, over four real supersteps: after each, every pid
+    holds the slices written once at setup (``vertex`` among them) plus
+    exactly the current and the previous generation of each versioned
+    column, and a slice kept from one superstep to the next is the same
+    file (the same inode), so no slice is ever replaced in place."""
+    G, weighted, versioned, setup, step = csr_superstep(spark, op)
+    with block_store(G, weighted, placement, 4, str(tmp_path / "blocks")) as blocks, \
             csr_blocks.VertexSlices(blocks, versioned) as state:
 
         def held(pid):
-            return {f[len(f"{pid}."):-len(".npy")] for f in os.listdir(state.dir)
-                    if f.startswith(f"{pid}.")}
+            return {f[len(f"{pid}."):-len(".npy")]: os.stat(os.path.join(state.dir, f)).st_ino
+                    for f in os.listdir(state.dir) if f.startswith(f"{pid}.")}
 
-        in_process(state).setup(init)
-        once = {pid: held(pid) - {f"{c}0" for c in versioned} for pid in range(P)}
+        state.setup(*setup)
+        before = {pid: held(pid) for pid in range(state.P)}
+        once = {pid: set(before[pid]) - {f"{c}0" for c in versioned} for pid in range(state.P)}
         for gen in range(1, 5):
-            state.step(*step(state.gen), schema=None)
+            state.step(*step(state.gen))
             assert state.gen == gen
-            for pid in range(P):
+            for pid in range(state.P):
+                now = held(pid)
                 assert "vertex" in once[pid]
-                assert held(pid) == once[pid] | {f"{c}{g}" for c in versioned
-                                                 for g in (gen - 1, gen)}, (pid, gen)
-    slices = [p for p in written if f"{os.sep}state-" in p]
-    assert slices and len(slices) == len(set(slices))
+                assert set(now) == once[pid] | {f"{c}{g}" for c in versioned
+                                                for g in (gen - 1, gen)}, (pid, gen)
+                assert all(now[n] == before[pid][n] for n in now.keys() & before[pid].keys())
+                before[pid] = now
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_slice_generations(spark, tmp_path, op):
+    _check_slice_generations(spark, tmp_path, op, "executors")
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_slice_generations_on_driver(spark, tmp_path, op):
+    _check_slice_generations(spark, tmp_path, op, "driver")
 
 
 @pytest.mark.parametrize("op", ["wcc", "bfs"])
@@ -134,3 +144,11 @@ def test_csr_update_gap_and_missing_raise(spark, tmp_path, op):
     the WCC and BFS updates: a hash-gap pid returns no row, and a
     deleted block or a deleted slice of the generation read raises."""
     check_gap_and_missing(spark, tmp_path, op)
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_gap_and_missing_on_driver(spark, tmp_path, op):
+    """The driver placement's one pid returns a row and raises on a
+    deleted slice of the generation read (its blocks are in memory, and
+    one pid leaves no hash gap)."""
+    check_gap_and_missing(spark, tmp_path, op, "driver")

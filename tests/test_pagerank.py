@@ -118,6 +118,28 @@ def test_pagerank_nstart(spark, request, plan):
     _check_plan(got, ss, expect, n_iter)
 
 
+def test_pagerank_side_inputs_checked_by_one_aggregate(spark, distributed_tail):
+    """Each per-vertex side input is checked for duplicate rows and
+    normalized by ONE aggregate (``_side_input``): on the Catalyst plan,
+    personalization and nstart together add at most 11 Spark jobs to a
+    fixed-iteration call, where a separate duplicate check and sum per
+    frame added 15 (measured on local[4])."""
+    sc = spark.sparkContext
+    pers = spark.createDataFrame([(1, 1.0), (4, 3.0), (999, 2.0)], "vertex long, values double")
+    nstart = spark.createDataFrame([(v, float(v + 1)) for v in range(21)],
+                                   "vertex long, values double")
+    jobs = {}
+    for name, kw in (("plain", {}), ("side", {"personalization": pers, "nstart": nstart})):
+        G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
+        sc.setJobGroup(f"side_input_jobs_{name}", "job count")
+        try:
+            pagerank(G, tol=0.0, max_iter=3, **kw)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"side_input_jobs_{name}"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["side"] - jobs["plain"] <= 11, jobs
+
+
 def test_pagerank_precomputed_out_weights(spark):
     edges = make_edges("weighted")
     G = Graph(edges_df(spark, edges), directed=True)

@@ -38,7 +38,11 @@ Before any timed run, the first arm is called once untimed and its
 result discarded (a ``fresh`` warm-up packs into a directory of its
 own, removed after): the session's first call pays its warm-up — JIT,
 the first Python workers — which would otherwise land in the first
-arm's first rep. Each run is timed in wall and process-tree CPU seconds
+arm's first rep. The timed reps then run round-robin over the arms,
+the arm order reversed every round (``a b``, ``b a``, ``a b``, …): the
+session keeps getting cheaper for many calls after its first, so an
+arm whose reps all ran after another arm's would read cheaper. Each
+run is timed in wall and process-tree CPU seconds
 (``perfbench/probe.py``); its result is reduced to an order-insensitive
 signature, and all arms must give the same one. The last line is
 ``ABJSON {cpus, operator, input, scale, V, edges, host, warmup, <arm>:
@@ -274,14 +278,21 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
         # the session's warm-up (JIT, first Python workers, first
         # Arrow batches) lands in its first call: one untimed call of
         # the first arm takes it, so no arm's first rep pays it
-        out["warmup"], settings = parse_arm(arms[0], operator)
+        parsed = [parse_arm(token, operator) for token in arms]
+        out["warmup"], settings = parsed[0]
         call(out["warmup"], settings, "warmup")
-        for token in arms:
-            name, settings = parse_arm(token, operator)
-            rec = {"walls": [], "cpu_s": [], "jobs": []}
+        recs = {}
+        for name, _ in parsed:
+            recs[name] = {"walls": [], "cpu_s": [], "jobs": []}
             if trace_kw:
-                rec[TRACE_KEY[trace_kw]] = []
-            for rep in range(reps):
+                recs[name][TRACE_KEY[trace_kw]] = []
+        # reps run round-robin over the arms, the order reversed every
+        # round, so the session's slow drift falls on every arm alike
+        out["order"] = []
+        for rep in range(reps):
+            for name, settings in parsed if rep % 2 == 0 else parsed[::-1]:
+                out["order"].append(name)
+                rec = recs[name]
                 wall, cpu, jobs, trace, sig = call(name, settings, str(rep))
                 rec["walls"].append(wall)
                 rec["cpu_s"].append(cpu)
@@ -293,6 +304,7 @@ def run(spark, operator: str, scale: str, arms: list[str], reps: int = 2,
                     rec["steps"].append([round(s, 2) for s in trace])
                 if not _same(sigs.setdefault(name, sig), sig):
                     raise RuntimeError(f"{name}: result changed between reps")
+        for name, rec in recs.items():
             rec["min"] = min(rec["walls"])
             rec["signature"] = list(sigs[name])
             out[name] = rec
