@@ -40,11 +40,14 @@ plan; tests force the Catalyst plan by setting the cutover to 0.
   superstep is ONE pass over the pids with no exchange; each task reads
   every pid's ``x`` slice into one O(V) vector, sums its own vertices'
   in-edges with the pull kernel, and returns its next rank and x and
-  one ``(l1, dangling)`` row that the driver adds up. The block store is
-  the placement, the reference compiling one ``*_impl.cuh`` for one GPU
-  or many:
-  - executors (``csr_blocks.CsrBlocks``): P pids, each pass one Spark
-    job, over packed or reused per-pid blocks and their dst-keyed view
+  one ``(l1, dangling)`` row; ``_fold`` adds the rows up in pid order
+  and stops at ``l1 < tol``. The block store is the placement, the
+  reference compiling one ``*_impl.cuh`` for one GPU or many:
+  - executors (``csr_blocks.CsrBlocks``): P pids; the setup is one
+    Spark job, and the supersteps ONE barrier job (one per checkpoint
+    window) whose tasks fold every superstep's rows themselves and, in
+    the last window, read the result. Over packed or reused per-pid
+    blocks and their dst-keyed view
     (a directed graph's ``T/`` sub-store, packed once). Each task reads
     O(V) state per superstep (P·V bytes over shared storage on a
     cluster, where ``block_dir`` must be a shared filesystem); a
@@ -69,14 +72,16 @@ plan; tests force the Catalyst plan by setting the cutover to 0.
   ``groupBy(dst).sum`` with map-side partial aggregation (Spark's
   analog of the reference's ``reduce_op::plus`` shuffle combine).
 
-Every plan checks the per-vertex side inputs with one aggregate
-(``_side_input``).
+Every plan checks the per-vertex side inputs the same way
+(``_side_input``): one aggregate on the Catalyst plan and in the
+executors, and on the driver a pandas check of the rows its setup
+collects anyway.
 
 Scale notes: one Spark action per convergence-checked superstep on
-every distributed plan (the L1-diff + next-dangling reduce is the
+the Catalyst plan (the L1-diff + next-dangling reduce is the
 ``host_scalar_allreduce`` analog, pagerank_impl.cuh:321-330); a
 fixed-iteration dataframe run (tol=0, no checkpoint) runs none, and
-the csr plan's one job per superstep is that action. State checkpoints
+the csr plan folds that reduce inside its one barrier job. State checkpoints
 to parquet/Iceberg every ``checkpoint_every`` supersteps for exact
 resume + lineage truncation.
 Hub skew on ``dst`` is handled by map-side partial aggregation plus AQE
@@ -115,24 +120,36 @@ class FailedToConvergeError(RuntimeError):
     (mirrors cugraph's error at pagerank.py:290-293)."""
 
 
-def _side_input(df: DataFrame, name: str, col: str, normalize: bool = True) -> DataFrame:
-    """``(vertex, col)`` of a per-vertex input, checked by ONE aggregate
-    the same way for every plan. It is left-joined onto the vertex
-    state, where two rows for one vertex would duplicate a state row, so
-    such a frame raises. With ``normalize`` (``personalization``,
-    ``nstart``) ``col`` is ``values`` over their sum, the sum taken over
-    the WHOLE frame (rows for vertices outside the graph included), and
-    a sum ``<= 0`` raises; otherwise (``precomputed_vertex_out_weight``)
-    ``col`` is the frame's own ``col``."""
+def _side_input(df: DataFrame, name: str, col: str, normalize: bool = True,
+                collect: bool = False):
+    """``(vertex, col)`` of a per-vertex input, checked the same way for
+    every plan. It is left-joined onto the vertex state, where two rows
+    for one vertex would duplicate a state row, so such a frame raises.
+    With ``normalize`` (``personalization``, ``nstart``) ``col`` is
+    ``values`` over their sum, the sum taken over the WHOLE frame (rows
+    for vertices outside the graph included), and a sum ``<= 0``
+    raises; otherwise (``precomputed_vertex_out_weight``) ``col`` is the
+    frame's own ``col``. The Catalyst and executor plans check with ONE
+    aggregate and get a DataFrame; with ``collect`` (the driver
+    placement, whose setup reads the rows in this process anyway) the
+    rows are collected once, checked in pandas and returned as a pandas
+    frame."""
     vals = df.select("vertex", F.col("values" if normalize else col).cast("double").alias(col))
-    most, total = vals.groupBy("vertex").agg(F.count("*").alias("n"), F.sum(col).alias("s")) \
-        .agg(F.max("n"), F.sum("s")).first()
-    if most is not None and most > 1:
+    if collect:
+        vals = vals.select(F.col("vertex").cast("long"), col).toPandas()
+        dup, total = vals["vertex"].duplicated().any(), vals[col].sum()
+    else:
+        most, total = vals.groupBy("vertex").agg(F.count("*").alias("n"), F.sum(col).alias("s")) \
+            .agg(F.max("n"), F.sum("s")).first()
+        dup = most is not None and most > 1
+    if dup:
         raise ValueError(f"{name} has more than one row for a vertex")
     if not normalize:
         return vals
     if not total or total <= 0:
         raise ValueError(f"{name} values must sum to > 0")
+    if collect:
+        return vals.assign(**{col: vals[col] / total})
     return vals.select("vertex", (F.col(col) / F.lit(total)).alias(col))
 
 
@@ -206,6 +223,18 @@ def _update(alpha: float, V: int, dangling: float):
     return update
 
 
+def _fold(tol: float):
+    """The block plan's allreduce over one superstep's pid rows, in pid
+    order: the carry is ``(dangling, l1)``, the sums of the rows'
+    ``dang`` and ``l1``, and the run stops when ``l1 < tol``."""
+
+    def fold(carry, rows):
+        l1 = float(sum(r["l1"] for r in rows))
+        return (float(sum(r["dang"] for r in rows)), l1), l1 < tol
+
+    return fold
+
+
 def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
                precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
                superstep_seconds):
@@ -213,7 +242,8 @@ def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
     the executors, ``DriverBlocks`` on the driver): the rank vector
     stays in per-pid slices (``csr_blocks.VertexSlices``), one setup
     pass writes them, and each superstep is ONE pass whose tasks pull
-    their own vertices' in-edges from the dst-keyed blocks.
+    their own vertices' in-edges from the dst-keyed blocks; the
+    supersteps between two checkpoints are one ``VertexSlices.run``.
     Checkpoints are written from the slices with the Catalyst plan's
     columns, iterations and meta keys. Returns ``(result, converged)``."""
     spark = G.edges.sparkSession
@@ -224,6 +254,7 @@ def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
     state_schema = StructType([vfield, StructField("ows", DoubleType(), False),
                                StructField("rank", DoubleType(), False)])
     result_schema = StructType([vfield, StructField("pagerank", DoubleType(), False)])
+    collect = blocks.in_driver
     with blocks, VertexSlices(blocks, ("rank", "x")) as state:
         frames = []
         start_iter, dangling, resumed = 0, None, None
@@ -236,11 +267,13 @@ def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
         else:
             if precomputed_vertex_out_weight is not None:
                 frames.append(_side_input(precomputed_vertex_out_weight,
-                                          "precomputed_vertex_out_weight", "ows", normalize=False))
+                                          "precomputed_vertex_out_weight", "ows",
+                                          normalize=False, collect=collect))
             if nstart is not None:
-                frames.append(_side_input(nstart, "nstart", "rank"))
+                frames.append(_side_input(nstart, "nstart", "rank", collect=collect))
         if personalization is not None:
-            frames.append(_side_input(personalization, "personalization", "pnorm"))
+            frames.append(_side_input(personalization, "personalization", "pnorm",
+                                      collect=collect))
         given = tuple(c for f in frames for c in f.columns if c != "vertex")
         rows = state.setup(_init(V, given, resumed), "dang double", frames)
         if dangling is None:
@@ -250,25 +283,27 @@ def _pull_plan(G, blocks, alpha, max_iter, tol, personalization, nstart,
         def save(it, metrics):
             checkpoint.save(state.frame(state_schema, ["vertex", "ows", "rank"]), it, metrics)
 
-        converged = False
-        final_iter = start_iter
-        for it in range(start_iter, max_iter):
-            final_iter = it
-            t0 = time.perf_counter()
-            rows = state.step(_update(alpha, V, dangling), reads, "x", "l1 double, dang double")
-            l1 = float(sum(r["l1"] for r in rows))
-            dangling = float(sum(r["dang"] for r in rows))
+        # one run per checkpoint window (the checkpoint is a Spark write);
+        # the last window's run reads the result in its own job
+        every = checkpoint_every if checkpoint is not None else 0
+        it, carry, converged, result = start_iter, (dangling, None), False, None
+        while it < max_iter and not converged:
+            n = min(max_iter - it, every - it % every) if every else max_iter - it
+            run = state.run(lambda c: _update(alpha, V, c[0]), reads, "x", _fold(tol), carry, n,
+                            (result_schema, ["vertex", "rank"]) if it + n == max_iter else None)
+            it, carry, converged = it + len(run.carries), run.carries[-1], run.stop
+            result = run.result
             if superstep_seconds is not None:
-                superstep_seconds.append(time.perf_counter() - t0)
-            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-                save(it, {"l1": l1, "dangling_sum": dangling, "alpha": alpha, "tol": tol})
-            if l1 < tol:
-                converged = True
-                break
+                superstep_seconds.extend(run.seconds)
+            if every and it % every == 0:
+                save(it - 1, {"l1": carry[1], "dangling_sum": carry[0], "alpha": alpha, "tol": tol})
+        final_iter = max(it - 1, start_iter)
         if checkpoint is not None and not (checkpoint_every and (final_iter + 1) % checkpoint_every == 0):
-            save(final_iter, {"l1": -1.0, "dangling_sum": dangling, "alpha": alpha,
+            save(final_iter, {"l1": -1.0, "dangling_sum": carry[0], "alpha": alpha,
                               "tol": tol, "final": True})
-        return state.result(result_schema, ["vertex", "rank"]), converged
+        if result is None:  # no superstep ran, or it stopped before the last window
+            result = state.result(result_schema, ["vertex", "rank"])
+        return result, converged
 
 
 def _finish(result, converged, tol, max_iter, fail_on_nonconvergence):
@@ -335,10 +370,13 @@ def pagerank(
     dangling mass together (the ``host_scalar_allreduce`` analog). Both
     loops compute the same doubles, so the results are bit-identical
     (test_pagerank.py). The block plan has one loop: each superstep is
-    one pass returning those two partials per pid. ``superstep_seconds``
-    gets one entry per superstep: its wall time (the block plan: that
-    pass's), or on the zero-action loop its driver plan-build time,
-    since execution lands in the terminal action.
+    one pass returning those two partials per pid, folded in pid order
+    (in the executors, by every task of one barrier job).
+    ``superstep_seconds`` gets one entry per superstep: its wall time
+    (in the executors by the clock of the barrier job's task 0, its
+    first superstep also carrying the job's launch and collect), or on
+    the zero-action loop its driver plan-build time, since execution
+    lands in the terminal action.
     """
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions

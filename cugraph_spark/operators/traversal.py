@@ -86,20 +86,21 @@ def _bfs_update(depth: int):
     return update
 
 
+def _bfs_fold(depth: int, rows):
+    """The csr BFS level's allreduce: the carry is the depth reached,
+    and the run stops at a level that reaches no vertex."""
+    return depth + 1, sum(r["reached"] for r in rows) == 0
+
+
 def _bfs_csr(G: Graph, source, limit: int, P: int, block_dir: str | None) -> DataFrame:
     """The csr BFS plan (``bfs`` docstring): one setup job, then ONE
-    map job per level until a level reaches nothing or ``limit``."""
+    barrier job runs the levels until one reaches nothing or ``limit``."""
     schema = StructType([G.vertices().schema["vertex"], StructField("distance", LongType()),
                          StructField("predecessor", LongType())])
     with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks, ("dist", "pred")) as state:
         state.setup(_bfs_init(source))
-        depth = 0
-        while depth < limit:
-            depth += 1
-            rows = state.step(_bfs_update(depth), ("dist", "pred"), "dist", "reached long")
-            if not sum(r["reached"] for r in rows):
-                break
-        return state.result(schema, ["vertex", "dist", "pred"])
+        return state.run(lambda depth: _bfs_update(depth + 1), ("dist", "pred"), "dist",
+                         _bfs_fold, 0, limit, (schema, ["vertex", "dist", "pred"])).result
 
 
 def bfs(
@@ -129,17 +130,18 @@ def bfs(
     packed blocks (``plans/csr_blocks.py``). ``dist``/``pred`` live in
     per-pid slices beside them, in the superstep skeleton csr PageRank
     and WCC share (``csr_blocks.VertexSlices``), and this module
-    supplies only ``_bfs_init`` and ``_bfs_update``: one setup job
-    writes them, and each level is ONE map job with no exchange, whose
-    task reads every pid's ``dist`` into one O(V) vector and gives each
-    own unvisited vertex with a frontier in-neighbour the level's
-    distance and its min-id frontier in-neighbour — the dataframe
-    plan's rule exactly. In-edges come from the dst-keyed view: an
+    supplies only ``_bfs_init``, ``_bfs_update`` and ``_bfs_fold``: one
+    setup job writes them, and the levels run in ONE barrier job with no
+    exchange, whose tasks add up each level's reached count themselves
+    and stop at a level that reaches nothing. Per level a task reads
+    every pid's ``dist`` into one O(V) vector and gives each own
+    unvisited vertex with a frontier in-neighbour the level's distance
+    and its min-id frontier in-neighbour — the dataframe plan's rule
+    exactly. In-edges come from the dst-keyed view: an
     undirected graph's own blocks, a directed graph's ``T/`` sub-store,
     packed once into ``block_dir``.
     A level costs O(V) reads plus O(E/P) edge work per task whatever
-    the frontier size; on the inputs measured, a level costs its Spark
-    job, not its edges. ``block_dir``: shared storage on a cluster; a
+    the frontier size. ``block_dir``: shared storage on a cluster; a
     pack of THIS graph is reused; a missing block or slice raises.
 
     ``num_partitions``: an int, ``"auto"`` (sized from plan

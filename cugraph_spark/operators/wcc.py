@@ -53,10 +53,11 @@ broadcast.
 (``plans/csr_blocks.py``), and the label vector never enters a Catalyst
 plan. It lives in per-pid slices beside the blocks, in the superstep
 skeleton csr PageRank and BFS share (``csr_blocks.VertexSlices``); this
-module supplies only ``_init`` and ``_update``. One setup job writes
-each pid's vertices (its block's keys) with their identity or
-checkpointed labels, and each superstep is ONE map job with no
-exchange. Its task reads every pid's current labels into one O(V)
+module supplies only ``_init``, ``_update`` and ``_fold``. One setup
+job writes each pid's vertices (its block's keys) with their identity
+or checkpointed labels, and the supersteps run in ONE barrier job (one
+per checkpoint window) with no exchange, whose tasks add up every
+superstep's changed counts themselves and stop at 0. A task reads every pid's current labels into one O(V)
 vector, and ``_update`` pulls the min over its own vertices'
 neighbours (``csr_blocks.min_kernel`` — a symmetrized graph's blocks
 are their own transpose) and pointer-jumps in the same pass:
@@ -65,8 +66,9 @@ its own component and is ≤ that vertex, so the jump target is too, and
 the fixpoint is the dataframe plan's min-id labeling; the superstep
 count may differ from the dataframe plan's by a few on high-diameter
 graphs, because the jump reads the previous labels, not this
-superstep's lowered ones. There is no frontier mode: a superstep costs
-its Spark job, not its edge work, on every input this was measured on.
+superstep's lowered ones. There is no frontier mode: a superstep cost
+its Spark job, not its edge work, on every input this was measured on
+before the supersteps shared one job.
 
 Scale notes: the O(E) edge side is persisted once — hash-partitioned on
 ``src`` only when V exceeds the broadcast cutover (below it the state is
@@ -125,6 +127,13 @@ def _init(verts, rows, out_blk):
     return {"labels": saved[positions_of(rows["vertex"].to_numpy(np.int64), verts)]}, None
 
 
+def _fold(carry, rows):
+    """The csr superstep's allreduce: the carry is the pids' changed
+    count, and the run stops when it is 0."""
+    changed = sum(r["changed"] for r in rows)
+    return changed, changed == 0
+
+
 def _update(verts, own, blk, L, at):
     """One csr superstep of one pid: the pull min over each own vertex's
     neighbours (its block is its own transpose, keyed by exactly its
@@ -138,7 +147,8 @@ def _update(verts, own, blk, L, at):
 def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
               superstep_seconds, superstep_metrics) -> DataFrame:
     """The csr plan (module docstring): one setup job writes the label
-    slices, then ONE map job per superstep until no label changes."""
+    slices, then ONE barrier job runs the supersteps until no label
+    changes (one per checkpoint window)."""
     spark = G.edges.sparkSession
     schema = StructType([StructField("vertex", LongType()), StructField("labels", LongType())])
     with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks, ("labels",)) as state:
@@ -148,22 +158,37 @@ def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
             frames.append(saved.select("vertex", F.col("labels").cast("long")))
             start_iter = meta["iteration"] + 1
         state.setup(_init, frames=frames)
-        for it in range(start_iter, max_iter):
+        # one run per checkpoint window (the checkpoint is a Spark write);
+        # the last window's run reads the result in its own job
+        every, it, result = checkpoint_every if checkpoint is not None else 0, start_iter, None
+        while it < max_iter:
+            n = min(max_iter - it, every - it % every) if every else max_iter - it
             probe = ShuffleProbe(spark) if superstep_metrics is not None else None
-            t0 = time.perf_counter()
-            rows = state.step(_update, ("labels",), "labels", "changed long")
-            changed = sum(r["changed"] for r in rows)
-            wall = time.perf_counter() - t0
+            run = state.run(lambda c: _update, ("labels",), "labels", _fold, None, n,
+                            (schema, ["vertex", "labels"]) if it + n == max_iter else None)
+            result = run.result
             if superstep_seconds is not None:
-                superstep_seconds.append(wall)
+                superstep_seconds.extend(run.seconds)
             if probe is not None:
-                superstep_metrics.append({"iteration": it, "mode": "csr", "changed": changed,
-                                          "seconds": round(wall, 3), **probe.delta()})
-            if checkpoint is not None and checkpoint_every and (it + 1) % checkpoint_every == 0:
-                checkpoint.save(state.frame(schema, ["vertex", "labels"]), it, {"changed": changed})
-            if changed == 0:
+                # the run's bytes are measured for its job as a whole: only
+                # a measured 0 is each superstep's too
+                d = probe.delta()
+                shuffle = {k: 0 if d[k] == 0 else None for k in ("shuffle_read", "shuffle_write")}
+                if d.get("shuffle_unmeasured"):
+                    shuffle["shuffle_unmeasured"] = True
+                superstep_metrics.extend(
+                    {"iteration": it + j, "mode": "csr", "changed": changed,
+                     "seconds": round(wall, 3), **shuffle}
+                    for j, (changed, wall) in enumerate(zip(run.carries, run.seconds)))
+            it += len(run.carries)
+            if every and it % every == 0:
+                checkpoint.save(state.frame(schema, ["vertex", "labels"]), it - 1,
+                                {"changed": run.carries[-1]})
+            if run.stop:
                 break
-        return state.result(schema, ["vertex", "labels"])
+        if result is None:  # no superstep ran, or it stopped before the last window
+            result = state.result(schema, ["vertex", "labels"])
+        return result
 
 
 def weakly_connected_components(
@@ -214,9 +239,12 @@ def weakly_connected_components(
 
     ``mode="csr"`` (module docstring): same labels as the dataframe
     plan, on dense-id and dictionary blocks alike; the superstep count
-    may differ. Each superstep is one Spark job that returns its
-    changed count, so ``check_every`` has no effect, and each
-    ``superstep_metrics`` entry has mode ``"csr"``. Checkpoints are
+    may differ. The supersteps run in one barrier job (one per
+    checkpoint window) that checks every superstep's changed count, so
+    ``check_every`` has no effect; each ``superstep_metrics`` entry has
+    mode ``"csr"`` and the superstep's changed count and seconds, and
+    its shuffle fields are 0 when the job's measured shuffle is 0 and
+    None otherwise (a job's bytes are not split into supersteps). Checkpoints are
     written from the slices in the dataframe plan's ``(vertex,
     labels)`` format; either plan resumes the other's. ``block_dir``
     must be shared storage on a multi-node cluster (default: a local

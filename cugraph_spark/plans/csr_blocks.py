@@ -82,7 +82,11 @@ written once, for every operator (:class:`VertexSlices`): per-pid
 ``.npy`` slices in a per-call ``state-<uuid>/`` directory inside
 ``block_dir``, written by one setup pass, then read and rewritten by
 one pass over the pids per superstep with no exchange; a missing slice
-raises like a missing block. A superstep task reads every pid's current
+raises like a missing block. The supersteps of a call run as one
+:meth:`VertexSlices.run`, the reference's loop with its barrier inside
+it: every task folds every pid's row of a superstep itself, in pid
+order, and takes the same stop decision (the ``host_scalar_allreduce``
+analog). A superstep task reads every pid's current
 slice of one column into one O(V) vector with :func:`gather` (indexed
 by vertex id on dense blocks, by searchsorted on dict ones) and hands
 it, with its own columns and its dst-keyed block, to the operator's
@@ -93,12 +97,27 @@ never rewritten in place — gap pids and the final read.
 
 The skeleton runs on either of two placements, the reference building
 one ``*_impl.cuh`` for one GPU or many: the block store decides where
-its passes run. :class:`CsrBlocks` places them in the executors (P
-pids, each pass one Spark job). :class:`DriverBlocks` places them in
-this process: one pid whose src-keyed and dst-keyed blocks are built
-in memory from an edge set the driver collected (at most
-``local_tail.LOCAL_TAIL_EDGES`` rows), every pass a plain call with no
-Spark job.
+its passes run. :class:`CsrBlocks` places them in the executors: P
+pids, the setup one Spark job, and a run of supersteps ONE barrier job
+(:meth:`CsrBlocks.gang`, which also reads the result when asked) whose
+S = min(P, slots) tasks are launched together, task ``t`` owning pids
+t, t+S, …; its tasks meet at each superstep's end through row files in the state
+directory (``BarrierTaskContext.barrier()`` measured ~1 s a call on
+local[4]: too slow for a per-superstep sync).
+:class:`DriverBlocks` places them in this process: one pid whose
+src-keyed and dst-keyed blocks are built in memory from an edge set the
+driver collected (at most ``local_tail.LOCAL_TAIL_EDGES`` rows), every
+pass a plain call with no Spark job and a run a plain loop.
+
+Costs of the barrier job: it needs S free task slots at once, and
+Spark does not run barrier stages under dynamic allocation. Spark does
+not retry a failed barrier stage, so :meth:`CsrBlocks.gang` resumes a
+failed run from its last superstep whose rows are all in, within the
+task-failure limit (:func:`task_attempts`). A task that fails writes an
+``abort`` file its peers fail on at once, and a peer that sees no new
+row for :data:`PEER_TIMEOUT_S` fails, so a dead peer is a failure,
+never a hang — and a single pid's superstep longer than that reads as a
+dead peer.
 
 Per-task scratch budget: on dense blocks :func:`gather` allocates one
 ``hi1``-sized vector of the state's 8-byte type (float64 ranks, int64
@@ -117,8 +136,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
+import time
+import traceback
 import uuid
 from typing import NamedTuple
 
@@ -132,6 +154,35 @@ from ..graph import DST, SRC, WGT, Graph
 from .lineage import truncate_plan
 
 DENSE_IDS_LIMIT = 1 << 26  # max hi+1 for the dense-id block format
+# a gang task that sees no new row of its superstep for this long takes
+# a peer for dead and fails (CsrBlocks.gang)
+PEER_TIMEOUT_S = 60.0
+_POLL_S = 0.0005  # how often a gang task looks for its peers' rows
+
+
+def task_attempts(spark) -> int:
+    """How many times Spark runs a failing task: ``F`` on
+    ``local[N, F]``, once on any other local master, and
+    ``spark.task.maxFailures`` on a cluster. A failed barrier stage is
+    not retried, so :meth:`CsrBlocks.gang` resubmits its job within this
+    limit instead. Read at call time; tests patch it."""
+    master = spark.sparkContext.master
+    m = re.fullmatch(r"local(\[[^,\]]+(?:,\s*(\d+))?\])?", master)
+    if m:
+        return int(m.group(2) or 1)
+    return int(spark.sparkContext.getConf().get("spark.task.maxFailures", "4"))
+
+
+def gang_slots(spark) -> int:
+    """The task slots the cluster has at once: what Spark holds a
+    barrier stage's task count against (a stage with more tasks waits
+    for slots that never come)."""
+    sc = spark.sparkContext
+    try:
+        jsc = sc._jsc.sc()
+        return int(jsc.maxNumConcurrentTasks(jsc.resourceProfileManager().defaultResourceProfile()))
+    except Exception:  # pragma: no cover - JVM API drift safety net
+        return sc.defaultParallelism
 
 
 def pid_of(col: str, hash_t: str, P: int):
@@ -419,6 +470,8 @@ class CsrBlocks:
     is a ``Graph`` or an edge frame with ``src``/``dst`` (and ``weight``
     when ``weighted``) columns."""
 
+    in_driver = False  # its passes run in the executors
+
     def __init__(
         self,
         source: Graph | DataFrame,
@@ -535,6 +588,71 @@ class CsrBlocks:
         """:meth:`frame`, materialized now."""
         return truncate_plan(self.frame(read, schema), eager=True)
 
+    def gang(self, body, fold, carry, max_steps: int, scratch: str,
+             result: tuple | None = None) -> Supersteps:
+        """Up to ``max_steps`` supersteps in ONE barrier job of S = min(P,
+        :func:`gang_slots`) tasks, launched together; task ``t`` owns
+        pids t, t+S, … (:func:`_gang_task`). In superstep ``k`` each task
+        runs ``body(pid, k, carry)`` for its pids, writes each pid's row
+        to ``rows-<uuid>/<k>.<pid>`` under ``scratch``, waits for all P
+        rows of ``k``, and folds them in pid order, so every task takes
+        the same stop decision. Task 0's clock gives the supersteps'
+        seconds; a job's first superstep also carries its launch and
+        collect.
+
+        A failed barrier stage is not retried by Spark, so the store
+        retries it: after a failed job the driver folds the rows of every
+        superstep whose P rows all exist — the generation they wrote is
+        intact, since no task drops it before all rows of the next
+        superstep are in — and resubmits from there, up to
+        :func:`task_attempts` jobs in all. A resubmitted job writes a new
+        ``rows-<uuid>/``, so it never reads a dead job's rows; the
+        seconds of a failed job's complete supersteps come from the
+        times their last row files were written.
+
+        ``result=(read, schema)``: the job's output is every pid's
+        ``read(pid, steps)`` of the last generation, and the job runs as
+        the eager local checkpoint of that output, which is returned."""
+        P, S, attempts = self.P, min(self.P, gang_slots(self.spark)), task_attempts(self.spark)
+        read, schema = result or (None, "s double")
+        carries, seconds, stop, out = [], [], False, None
+        for attempt in range(attempts):
+            k0 = len(carries)
+            rows_dir = os.path.join(scratch, f"rows-{uuid.uuid4().hex}")
+            os.makedirs(rows_dir)
+            began, t0 = time.time(), time.perf_counter()
+            failed = None
+            try:
+                task = _gang_task(body, fold, carry, k0, max_steps - k0, P, S, rows_dir, read)
+                frame = self.spark.range(0, S, 1, S).mapInPandas(
+                    _per_pid(task), schema, barrier=True)
+                if read is None:
+                    frame.collect()
+                else:
+                    out = truncate_plan(frame, eager=True)
+                with open(os.path.join(rows_dir, "stamps")) as f:
+                    stamps = json.load(f)
+            except Exception as exc:
+                failed = exc
+            wall = time.perf_counter() - t0
+            k = k0
+            while k < max_steps and not stop and _rows_complete(rows_dir, k, P):
+                carry, stop = fold(carry, _read_rows(rows_dir, k, P))
+                carries.append(carry)
+                k += 1
+            if failed is None:
+                seconds += [wall - sum(stamps[1:]), *stamps[1:]]
+            else:
+                ends = [max(os.stat(_row_path(rows_dir, j, q)).st_mtime for q in range(P))
+                        for j in range(k0, k)]
+                seconds += np.diff(ends, prepend=began).tolist()
+            shutil.rmtree(rows_dir, ignore_errors=True)
+            if failed is None or stop or k == max_steps:
+                break
+            if attempt == attempts - 1:
+                raise failed
+        return Supersteps(carries, seconds, stop, out)
+
     def _stats(self, count: bool) -> tuple:
         """``(n_edges, lo, hi)`` of the source. A Graph answers from its
         memoized ``vertex_stats`` and, only when asked (``n_edges`` is
@@ -604,6 +722,7 @@ class DriverBlocks:
     most ``local_tail.LOCAL_TAIL_EDGES`` rows."""
 
     P = 1
+    in_driver = True  # its passes run in this process
 
     def __init__(self, spark, src: np.ndarray, dst: np.ndarray, w: np.ndarray | None):
         self.spark = spark
@@ -630,9 +749,13 @@ class DriverBlocks:
         row = task(0)
         return [] if row is None else [row]
 
-    def route(self, frames: list[DataFrame], task, schema: str | None = None) -> list:
+    def route(self, frames: list, task, schema: str | None = None) -> list:
+        """``task(0, rows)`` over the rows of ``frames``: DataFrames are
+        collected here, pandas frames (side inputs already collected and
+        checked) are taken as they are."""
         rows = pd.concat(
-            [f.select(F.col("vertex").cast("long"), *[c for c in f.columns if c != "vertex"])
+            [f if isinstance(f, pd.DataFrame) else
+             f.select(F.col("vertex").cast("long"), *[c for c in f.columns if c != "vertex"])
              .toPandas() for f in frames], ignore_index=True)
         return self.map(lambda pid: task(pid, rows))
 
@@ -640,6 +763,25 @@ class DriverBlocks:
         return self.spark.createDataFrame(read(0), schema)
 
     result = frame  # built from the slices when called, so already materialized
+
+    def gang(self, body, fold, carry, max_steps: int, scratch: str | None = None,
+             result: tuple | None = None) -> Supersteps:
+        """:meth:`CsrBlocks.gang` on the one pid: a plain loop, each
+        superstep timed on its own."""
+        carries, seconds, stop = [], [], False
+        for k in range(max_steps):
+            t0 = time.perf_counter()
+            row = body(0, k, carry)
+            carry, stop = fold(carry, [] if row is None else [row])
+            carries.append(carry)
+            seconds.append(time.perf_counter() - t0)
+            if stop:
+                break
+        if result is None:
+            return Supersteps(carries, seconds, stop)
+        read, schema = result
+        return Supersteps(carries, seconds, stop,
+                          self.frame(lambda pid: read(pid, len(carries)), schema))
 
 
 def _slice_path(state_dir: str, pid: int, name: str) -> str:
@@ -722,6 +864,97 @@ def _per_group(task):
     return fn
 
 
+class Supersteps(NamedTuple):
+    """What :meth:`VertexSlices.run` returns: the carry each superstep's
+    fold returned and its wall seconds, in superstep order, whether the
+    stop rule fired, and the result asked for (None when not asked)."""
+
+    carries: list
+    seconds: list
+    stop: bool
+    result: DataFrame | None = None
+
+
+def _row_path(rows_dir: str, k: int, pid: int) -> str:
+    return os.path.join(rows_dir, f"{k}.{pid}")
+
+
+def _rows_complete(rows_dir: str, k: int, P: int) -> bool:
+    return all(os.path.exists(_row_path(rows_dir, k, q)) for q in range(P))
+
+
+def _read_rows(rows_dir: str, k: int, P: int) -> list:
+    """The rows of superstep ``k`` in pid order, a pid without one left
+    out."""
+    rows = []
+    for q in range(P):
+        with open(_row_path(rows_dir, k, q)) as f:
+            row = json.load(f)
+        if row is not None:
+            rows.append(row)
+    return rows
+
+
+def _await_rows(rows_dir: str, k: int, P: int) -> list:
+    """:func:`_read_rows` of superstep ``k`` once all P row files exist.
+    Raises at once when a peer has written ``abort`` (with the peer's
+    error), and after :data:`PEER_TIMEOUT_S` without a new row: a dead
+    peer becomes a failure, never a hang."""
+    abort = os.path.join(rows_dir, "abort")
+    q, last = 0, time.monotonic()
+    while q < P:
+        if os.path.exists(_row_path(rows_dir, k, q)):
+            q, last = q + 1, time.monotonic()
+        elif os.path.exists(abort):
+            with open(abort) as f:
+                raise RuntimeError(f"a peer gang task failed: {f.read()}")
+        elif time.monotonic() - last > PEER_TIMEOUT_S:
+            raise RuntimeError(
+                f"superstep {k}: no row of pid {q} in {PEER_TIMEOUT_S:.0f} s — a peer gang "
+                "task died")
+        else:
+            time.sleep(_POLL_S)
+    return _read_rows(rows_dir, k, P)
+
+
+def _gang_task(body, fold, carry, k0: int, n: int, P: int, S: int, rows_dir: str, read=None):
+    """Task ``t`` of a :meth:`CsrBlocks.gang` job: supersteps ``k0 …
+    k0+n-1`` (until ``fold`` says stop) for pids t, t+S, …; task 0 writes
+    each superstep's seconds by its own clock to ``rows_dir/stamps``.
+    Returns the pids' rows of the last generation (``read(pid, steps)``)
+    when ``read`` is given, else nothing. A task that raises first
+    writes ``abort`` with its error, so its peers fail at once."""
+
+    def task(t: int):
+        stamps, k, c = [time.perf_counter()], k0, carry
+        try:
+            for k in range(k0, k0 + n):
+                for pid in range(t, P, S):
+                    row = json.dumps(body(pid, k, c)).encode()
+                    _write_atomic(_row_path(rows_dir, k, pid), lambda f, r=row: f.write(r))
+                c, stop = fold(c, _await_rows(rows_dir, k, P))
+                stamps.append(time.perf_counter())
+                if stop:
+                    break
+        except BaseException as exc:
+            abort = os.path.join(rows_dir, "abort")
+            msg = "".join(traceback.format_exception_only(type(exc), exc)).strip()
+            try:
+                if not os.path.exists(abort):
+                    _write_atomic(abort, lambda f: f.write(f"superstep {k}, task {t}: {msg}".encode()))
+            except OSError:
+                pass  # the driver already removed the directory
+            raise
+        if t == 0:
+            secs = json.dumps(np.diff(stamps).tolist()).encode()
+            _write_atomic(os.path.join(rows_dir, "stamps"), lambda f: f.write(secs))
+        if read is not None:
+            return pd.concat([read(pid, k + 1) for pid in range(t, P, S)], ignore_index=True)
+        return None
+
+    return task
+
+
 def _named(versioned: tuple, gen: int):
     """A column's slice name in generation ``gen``: a versioned column
     carries the generation, any other is written once."""
@@ -744,24 +977,30 @@ class VertexSlices:
       src-keyed block. ``arrays`` maps column names to arrays aligned
       with ``verts``; a ``vertex`` entry replaces the vertex set (a
       resumed checkpoint's rows).
-    - ``update(verts, own, blk, x, at) -> (arrays, row)``, called once
-      per pid by :meth:`step`: ``own`` maps the columns the operator
-      reads to the pid's current arrays, ``blk`` is its dst-keyed block
-      and ``x, at`` are :func:`gather` of the one column read from every
-      pid. ``arrays`` is the next generation of every versioned column.
+    - ``update(carry)(verts, own, blk, x, at) -> (arrays, row)``,
+      called once per pid and superstep by :meth:`run`: ``own`` maps the
+      columns the operator reads to the pid's current arrays, ``blk`` is
+      its dst-keyed block and ``x, at`` are :func:`gather` of the one
+      column read from every pid. ``arrays`` is the next generation of
+      every versioned column.
+    - ``fold(carry, rows) -> (carry, stop)`` over a superstep's rows in
+      pid order, and the first ``carry``: PageRank's dangling mass (stop
+      when Σ l1 < tol), WCC's changed count (stop at 0), BFS's depth
+      (stop when a level reaches nothing).
 
-    ``row`` is the pid's partial row (a dict; None for none), which
-    :meth:`setup` and :meth:`step` collect for the driver to reduce. A
-    pid without vertices (a hash gap) carries its empty slices forward
-    and reports no row; a pid with vertices but no in-edges gets the
-    empty block :data:`NO_EDGES`.
+    ``row`` is the pid's partial row (a dict of JSON numbers; None for
+    none): :meth:`setup` returns the rows to the driver, and :meth:`run`
+    folds them on every task. A pid without vertices (a hash gap)
+    carries its empty slices forward and reports no row; a pid with
+    vertices but no in-edges gets the empty block :data:`NO_EDGES`.
 
     The block store is the placement: the skeleton reads from it ``P``,
     ``block_dir`` and :meth:`CsrBlocks.views`, and runs every pass
     through its ``map`` (``task(pid)`` per pid), ``route`` (the side
-    inputs' rows to their pid), ``frame`` and ``result`` — Spark jobs
-    over P pids on :class:`CsrBlocks`, plain calls on one pid on
-    :class:`DriverBlocks`. The operator code is the same on both.
+    inputs' rows to their pid), ``gang`` (a run of supersteps),
+    ``frame`` and ``result`` — Spark jobs over P pids on
+    :class:`CsrBlocks` (``gang`` one barrier job), plain calls on one
+    pid on :class:`DriverBlocks`. The operator code is the same on both.
 
     The skeleton keeps the generation rule, so no operator names a
     slice file: a versioned column (one the supersteps change) is
@@ -775,7 +1014,9 @@ class VertexSlices:
     Costs: a task that reads every pid's slice reads O(V) state — page
     cache on one box, P·V bytes over shared storage on a cluster — and
     the directory must be shared storage on a multi-node cluster, like
-    ``block_dir``."""
+    ``block_dir``; so must the run's row files in it. A run on
+    :class:`CsrBlocks` holds S task slots for all its supersteps (module
+    docstring: the barrier job's costs)."""
 
     def __init__(self, blocks: CsrBlocks | DriverBlocks, versioned: tuple[str, ...]):
         self.blocks, self.P = blocks, blocks.P
@@ -812,28 +1053,54 @@ class VertexSlices:
             return self.blocks.route(frames, task, schema)
         return self.blocks.map(lambda pid: task(pid, None), schema)
 
-    def step(self, update, reads: tuple[str, ...], col: str, schema: str) -> list:
-        """ONE superstep pass (:meth:`step_task` per pid); returns the
-        collected rows and moves to the next generation."""
-        rows = self.blocks.map(self.step_task(update, reads, col), schema)
-        self.gen += 1
-        return rows
+    def run(self, update, reads: tuple[str, ...], col: str, fold, carry,
+            max_steps: int, result: tuple[StructType, list[str]] | None = None) -> Supersteps:
+        """Supersteps until ``fold`` says stop or ``max_steps`` have run,
+        on the store's placement (:meth:`CsrBlocks.gang`: one barrier
+        job; :meth:`DriverBlocks.gang`: a plain loop). Superstep ``k`` of
+        the run reads generation ``gen + k`` and runs, per pid,
+        ``update(carry)`` (the pid function :meth:`step_task` runs), with
+        ``carry`` the value the previous superstep's fold returned (the
+        given one first). ``fold(carry, rows) -> (carry, stop)`` reduces
+        the pids' rows, in pid order, on every task alike: the
+        allreduce. Returns the carries and seconds of the supersteps run
+        and moves to the generation after the last. With ``result``
+        (``(schema, names)`` of :meth:`result`) the run's last generation
+        comes back as a materialized DataFrame too, read by the tasks of
+        the job that ran the supersteps, not by a job of its own."""
+        if max_steps < 1:
+            return Supersteps([], [], False, result and self.result(*result))
+        out = self.blocks.gang(self._body(update, reads, col), fold, carry, max_steps, self.dir,
+                               result and (self._reader(*result), result[0]))
+        self.gen += len(out.carries)
+        if result and out.result is None:  # its job failed after the last superstep
+            out = out._replace(result=self.result(*result))
+        return out
 
     def step_task(self, update, reads: tuple[str, ...], col: str):
-        """The superstep of one pid: load its ``reads`` columns, open its
-        dst-keyed block, gather ``col`` from every pid, run ``update``,
-        write the next generation, drop the one before the current, and
-        return the pid's row. A missing block or slice raises."""
-        in_files, state_dir, P, versioned = self.in_files, self.dir, self.P, self.versioned
-        prev, cur, nxt = (_named(versioned, g) for g in (self.gen - 1, self.gen, self.gen + 1))
+        """The superstep of one pid on the current generation, as
+        ``task(pid) -> row`` with ``update`` the pid function itself:
+        what :meth:`run` runs for each pid."""
+        body = self._body(lambda _: update, reads, col)
+        return lambda pid: body(pid, 0, None)
 
-        def task(pid: int):
+    def _body(self, update, reads: tuple[str, ...], col: str):
+        """``step(pid, k, carry)``, superstep ``k`` of a run for one pid:
+        load its ``reads`` columns, open its dst-keyed block, gather
+        ``col`` from every pid, run ``update(carry)``, write the next
+        generation, drop the one before the current, and return the
+        pid's row. A missing block or slice raises."""
+        in_files, state_dir, P, versioned, gen = (
+            self.in_files, self.dir, self.P, self.versioned, self.gen)
+
+        def step(pid: int, k: int, carry):
+            prev, cur, nxt = (_named(versioned, gen + k + d) for d in (-1, 0, 1))
             verts = load_slice(state_dir, pid, "vertex")
             if len(verts):
                 own = {c: load_slice(state_dir, pid, cur(c)) for c in reads}
                 blk = in_files.block(pid)
                 x, at = gather(blk, state_dir, P, cur(col))
-                new, row = update(verts, own, blk, x, at)
+                new, row = update(carry)(verts, own, blk, x, at)
             else:
                 new, row = {c: load_slice(state_dir, pid, cur(c)) for c in versioned}, None
             for c, arr in new.items():
@@ -841,18 +1108,22 @@ class VertexSlices:
             drop_slices(state_dir, pid, [prev(c) for c in versioned])
             return row
 
-        return task
+        return step
 
     def path(self, pid: int, name: str) -> str:
         """The file of ``pid``'s current ``name`` slice."""
         return _slice_path(self.dir, pid, _named(self.versioned, self.gen)(name))
 
     def _reader(self, schema: StructType, names: list[str]):
-        state_dir, cols = self.dir, [f.name for f in schema.fields]
-        files = [_named(self.versioned, self.gen)(n) for n in names]
+        """``read(pid, steps=0)``: the pid's rows of the generation
+        ``steps`` past the current one; field ``i`` of ``schema`` reads
+        column ``names[i]``."""
+        state_dir, versioned, gen = self.dir, self.versioned, self.gen
+        cols = [f.name for f in schema.fields]
 
-        def read(pid):
-            return pd.DataFrame({c: load_slice(state_dir, pid, n) for c, n in zip(cols, files)})
+        def read(pid, steps=0):
+            name = _named(versioned, gen + steps)
+            return pd.DataFrame({c: load_slice(state_dir, pid, name(n)) for c, n in zip(cols, names)})
 
         return read
 
@@ -864,5 +1135,6 @@ class VertexSlices:
 
     def result(self, schema: StructType, names: list[str]) -> DataFrame:
         """:meth:`frame`, materialized now: the one read of the slices,
-        made while they still exist."""
+        made while they still exist. A :meth:`run` asked for its
+        ``result`` makes this read inside its own job instead."""
         return self.blocks.result(self._reader(schema, names), schema)

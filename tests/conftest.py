@@ -168,26 +168,28 @@ def sym_tuples(edges):
 def csr_superstep(spark, op: str):
     """One csr operator's parts on a small graph, for running its
     ``VertexSlices`` passes step by step: ``(G, weighted, versioned,
-    setup, step)``, where ``setup`` is the ``(init, schema)`` of
-    ``VertexSlices.setup`` and ``step(gen)`` the ``(update, reads, col,
-    schema)`` of the superstep that reads generation ``gen``."""
+    setup, run)``, where ``setup`` is the ``(init, schema)`` of
+    ``VertexSlices.setup`` and ``run`` the ``(update, reads, col, fold,
+    carry)`` of ``VertexSlices.run``: ``update(carry)`` is a superstep's
+    pid function, and ``carry`` the first superstep's."""
     from cugraph_spark.graph import Graph
 
     if op == "wcc":
         wcc = importlib.import_module("cugraph_spark.operators.wcc")
         G = Graph(edges_df(spark, sym_tuples(make_edges("tiny_social"))), directed=False)
         return (G, False, ("labels",), (wcc._init, "n long"),
-                lambda gen: (wcc._update, ("labels",), "labels", "changed long"))
+                (lambda c: wcc._update, ("labels",), "labels", wcc._fold, None))
     G = Graph(edges_df(spark, make_edges("directed_asym")), directed=True)
     if op == "pagerank":
         pr = importlib.import_module("cugraph_spark.operators.pagerank")
         V = G.number_of_vertices()
         return (G, True, ("rank", "x"), (pr._init(V, (), None), "dang double"),
-                lambda gen: (pr._update(0.85, V, 0.0), ("ows", "rank"), "x",
-                             "l1 double, dang double"))
+                (lambda c: pr._update(0.85, V, c[0]), ("ows", "rank"), "x", pr._fold(0.0),
+                 (0.0, None)))
     traversal = importlib.import_module("cugraph_spark.operators.traversal")
     return (G, False, ("dist", "pred"), (traversal._bfs_init(0), "n long"),
-            lambda gen: (traversal._bfs_update(gen + 1), ("dist", "pred"), "dist", "reached long"))
+            (lambda depth: traversal._bfs_update(depth + 1), ("dist", "pred"), "dist",
+             traversal._bfs_fold, 0))
 
 
 def block_store(G, weighted: bool, placement: str, P: int, block_dir: str):
@@ -213,14 +215,14 @@ def check_gap_and_missing(spark, tmp_path, op: str, placement: str = "executors"
     deployment / non-shared block_dir) raises too."""
     from cugraph_spark.plans.csr_blocks import VertexSlices
 
-    G, weighted, versioned, setup, step = csr_superstep(spark, op)
+    G, weighted, versioned, setup, run = csr_superstep(spark, op)
     P = 64  # more pids than vertices: some pids hold no edges
     with block_store(G, weighted, placement, P, str(tmp_path / "blocks")) as blocks, \
             VertexSlices(blocks, versioned) as state:
         state.setup(*setup)
-        state.step(*step(state.gen))
-        update, reads, col, _ = step(state.gen)
-        task = state.step_task(update, reads, col)
+        carry = state.run(*run, max_steps=1).carries[-1]
+        update, reads, col, _, _ = run
+        task = state.step_task(update(carry), reads, col)
         listed = sorted(state.in_files.manifest)
         assert task(listed[0]) is not None
         if placement == "executors":

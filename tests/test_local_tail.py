@@ -311,22 +311,26 @@ def test_pagerank_local_equals_distributed_id_types(spark, tail_plan, id_type, s
 
 
 def test_pagerank_local_errors_match_distributed(spark, tail_plan):
+    """The same errors on every plan: the driver placement (which checks
+    the side inputs in pandas), the Catalyst plan and the executor
+    placement (``mode="csr"``; one aggregate each)."""
     empty = Graph(spark.createDataFrame([], "src long, dst long, weight double"), directed=True)
     G = _directed(spark, "directed_asym")
     zero = spark.createDataFrame([(1, 0.0)], "vertex long, values double")
     twice = spark.createDataFrame([(1, 1.0), (2, 1.0), (1, 2.0)], "vertex long, values double")
-    for plan in ("local", "distributed"):
-        with tail_plan(plan):
-            with pytest.raises(ValueError, match="empty graph"):
-                pagerank(empty)
-            with pytest.raises(ValueError, match="personalization"):
-                pagerank(G, personalization=zero)
-            with pytest.raises(ValueError, match="nstart"):
-                pagerank(G, nstart=zero)
+    for plan in ("local", "distributed", "csr"):
+        with tail_plan("local" if plan == "csr" else plan):
+            mode = "csr" if plan == "csr" else "dataframe"
+            if plan != "csr":
+                with pytest.raises(ValueError, match="empty graph"):
+                    pagerank(empty)
+            for name in ("personalization", "nstart"):
+                with pytest.raises(ValueError, match=f"{name} values must sum to > 0"):
+                    pagerank(G, mode=mode, **{name: zero})
             for name in ("personalization", "nstart", "precomputed_vertex_out_weight"):
                 with pytest.raises(ValueError, match=f"{name} has more than one row"):
-                    pagerank(G, **{name: twice if name != "precomputed_vertex_out_weight"
-                                   else twice.withColumnRenamed("values", "ows")})
+                    pagerank(G, mode=mode, **{name: twice if name != "precomputed_vertex_out_weight"
+                                              else twice.withColumnRenamed("values", "ows")})
 
 
 def test_pagerank_local_plan_runs_one_collect(spark):
@@ -346,6 +350,27 @@ def test_pagerank_local_plan_runs_one_collect(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(ss) > 10
     assert len(jobs) <= 5, jobs
+
+
+def test_pagerank_local_side_inputs_cost_one_collect(spark):
+    """On the driver placement a side input costs one Spark job, the
+    collect its setup reads, and is checked in pandas: nstart adds one
+    job to the five of a plain call, personalization one more (the
+    Spark check aggregate cost 3 more per side input)."""
+    sc = spark.sparkContext
+    pers = spark.createDataFrame([(1, 1.0), (4, 3.0), (999, 2.0)], "vertex long, values double")
+    nstart = spark.createDataFrame([(v, float(v + 1)) for v in range(21)],
+                                   "vertex long, values double")
+    for name, kw, most in (("nstart", {"nstart": nstart}, 6),
+                           ("both", {"nstart": nstart, "personalization": pers}, 7)):
+        G = _directed(spark, "directed_asym")
+        sc.setJobGroup(f"pagerank_local_side_{name}", "job count")
+        try:
+            pagerank(G, tol=1e-6, max_iter=500, **kw)
+            jobs = sc.statusTracker().getJobIdsForGroup(f"pagerank_local_side_{name}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) <= most, (name, jobs)
 
 
 @pytest.mark.parametrize("given_ows", [False, True])

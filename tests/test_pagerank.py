@@ -328,9 +328,9 @@ def test_pagerank_csr_packs_transpose_once(spark, tmp_path, monkeypatch):
 
 
 def test_pagerank_csr_one_job_per_superstep(spark, tmp_path):
-    """Each pull superstep is ONE Spark job: the call's jobs are the
-    supersteps' plus a fixed setup and finalize count, whatever the
-    superstep count."""
+    """The pull supersteps of a call run in ONE Spark job (a barrier
+    job), so the call's jobs are that one plus a fixed setup and
+    finalize count, whatever the superstep count."""
     G = Graph(edges_df(spark, make_edges("weighted")), directed=False)
     bdir = str(tmp_path / "blocks")
     _pack(G, bdir, 4, dense=True)
@@ -349,8 +349,8 @@ def test_pagerank_csr_one_job_per_superstep(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         G.edges.unpersist()
-    assert jobs[9] - jobs[3] == 6, jobs
-    assert jobs[3] <= 3 + 8, jobs
+    assert jobs[9] == jobs[3], jobs
+    assert jobs[3] <= 1 + 8, jobs
 
 
 def test_pagerank_csr_missing_block_raises(spark, tmp_path):
