@@ -166,3 +166,16 @@ def test_mst_long_merge_chain(spark):
     got = sorted((r["src"], r["dst"], r["weight"]) for r in minimum_spanning_tree(G).collect())
     ref = sorted(mst_ref(edges))
     assert got == ref  # a path IS its own MST: exact edge set
+
+
+def test_mst_merge_fails_closed_on_small_round_budget(spark):
+    """A round budget too small for the component merge raises instead
+    of returning a forest built on half-merged components: round 1 on a
+    10-vertex path picks every edge, and one merge superstep cannot
+    label that chain as one component."""
+    from cugraph_spark.operators.pagerank import FailedToConvergeError
+
+    edges = [(i, i + 1, 1.0) for i in range(9)]
+    G = Graph(edges_df(spark, edges), directed=False)
+    with pytest.raises(FailedToConvergeError, match="MST component merge"):
+        minimum_spanning_tree(G, max_rounds=1).collect()
