@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
 from .triangle_count import edge_triangle_count
+from .wcc import weakly_connected_components
 
 
 def coarsen_graph(G: Graph, labels: DataFrame) -> DataFrame:
@@ -319,27 +320,17 @@ def louvain(
     return assignment.select("vertex", "labels"), best_q
 
 
-def _refine_partition(
-    edges: DataFrame,
-    labels: DataFrame,
-    n_edges: int | None = None,
-) -> DataFrame:
+def _refine_partition(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Leiden refinement: split every move-community into its connected
-    components (hash-min label propagation over edges restricted to
-    same-community endpoints; refined label = min vertex id in the
-    component). This enforces Leiden's headline guarantee — every
-    returned community is internally connected (Traag, Waltman &
-    van Eck 2019; reference ``community/leiden_impl.cuh`` refinement
-    phase) — and splitting a disconnected community can only increase
-    modularity (in-weights unchanged, Σdeg² strictly drops).
-    Returns [vertex, refined]."""
-    if n_edges is not None and n_edges <= local_tail.LOCAL_TAIL_EDGES:
-        src, dst, _w = local_tail.collect_edges(edges, weighted=False)
-        lab_pdf = labels.select("vertex", "labels").toPandas()
-        out = local_tail.refine_partition_local(src, dst, lab_pdf)
-        return edges.sparkSession.createDataFrame(
-            out, "vertex long, refined long"
-        )
+    components — :func:`weakly_connected_components` over the edges
+    whose endpoints share a community (self-loops dropped), so the
+    refined label is the min vertex id of the component, and a vertex
+    with no such edge is a component of its own. This enforces Leiden's
+    headline guarantee — every returned community is internally
+    connected (Traag, Waltman & van Eck 2019; reference
+    ``community/leiden_impl.cuh`` refinement phase) — and splitting a
+    disconnected community can only increase modularity (in-weights
+    unchanged, Σdeg² strictly drops). Returns [vertex, refined]."""
     lab = labels.select(F.col("vertex").alias("lv"), F.col("labels").alias("ll"))
     intra = (
         edges.filter(F.col(SRC) != F.col(DST))
@@ -347,49 +338,14 @@ def _refine_partition(
         .join(lab.withColumnRenamed("lv", DST).withColumnRenamed("ll", "l_dst"), DST)
         .filter(F.col("l_src") == F.col("l_dst"))
         .select(SRC, DST)
+    )
+    comp = weakly_connected_components(Graph(intra, directed=False, weighted=False))
+    return (
+        labels.select("vertex")
+        .join(comp.withColumnRenamed("labels", "refined"), "vertex", "left")
+        .select("vertex", F.coalesce("refined", "vertex").alias("refined"))
         .transform(truncate_plan)
     )
-    state = labels.select("vertex", F.col("vertex").alias("refined")).transform(truncate_plan)
-    while True:
-        msgs = (
-            intra.join(state.withColumnRenamed("vertex", SRC)
-                       .withColumnRenamed("refined", "r_src"), SRC)
-            .groupBy(DST)
-            .agg(F.min("r_src").alias("nbr_min"))
-        )
-        lowered = (
-            state.join(msgs, state["vertex"] == msgs[DST], "left")
-            .select(
-                state["vertex"],
-                F.least(
-                    state["refined"], F.coalesce("nbr_min", state["refined"])
-                ).alias("refined"),
-                state["refined"].alias("old"),
-            )
-            .transform(truncate_plan)
-        )
-        # pointer jump: refined ← refined(refined) — same O(log d)
-        # contraction as wcc.py, so long path-shaped communities don't
-        # cost one superstep per hop
-        lab = lowered.select(
-            F.col("vertex").alias("lv"), F.col("refined").alias("ll")
-        )
-        new_state = (
-            lowered.join(lab, lowered["refined"] == lab["lv"], "left")
-            .select(
-                lowered["vertex"],
-                F.coalesce(lab["ll"], lowered["refined"]).alias("refined"),
-                lowered["old"],
-            )
-            .transform(truncate_plan)
-        )
-        changed = new_state.agg(
-            F.sum(F.when(F.col("refined") != F.col("old"), 1).otherwise(0))
-        ).first()[0]
-        state = new_state.select("vertex", "refined")
-        if not changed:
-            break
-    return state
 
 
 def leiden(
@@ -470,9 +426,7 @@ def leiden(
         # distinct over the edge list for the contraction check
         n_cur = moved.count()
         move_labels = moved.select("vertex", "labels")
-        refined = _refine_partition(
-            edges, move_labels, n_edges=n_edges,
-        )  # [vertex, refined]
+        refined = _refine_partition(edges, move_labels)  # [vertex, refined]
         n_refined = refined.select("refined").distinct().count()
 
         # push refined labels down to original vertices

@@ -19,9 +19,9 @@ Two plan bodies, same semantics (validated equal in tests), picked by
 size alone: ``mode="csr"`` runs the block plan in the executors;
 ``mode="dataframe"`` (the default) runs the block plan on the driver
 when the edge frame has at most ``local_tail.LOCAL_TAIL_EDGES`` rows
-(150k), and the Catalyst plan otherwise. The size gate is a ``count()``
-of the edge frame as it comes, persisted (a frame the caller already
-cached is counted from that cache and left cached): the driver
+(150k), and the Catalyst plan otherwise. The size gate is the block
+store's placement rule (``csr_blocks.size_gate``, which WCC runs too):
+a ``count()`` of the edge frame as it comes, persisted; the driver
 placement collects from it with no repartition shuffle, and the
 Catalyst plan builds its src-partitioned copy from it and drops it once
 that copy is filled, so the O(E) upstream (e.g. the constructor's dedup
@@ -102,14 +102,13 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark import StorageLevel
 
 from ..graph import DST, SRC, WGT, Graph
-from ..plans import local_tail
 from ..plans.checkpoint import CheckpointManager
 from ..plans.csr_blocks import (
     CsrBlocks,
-    DriverBlocks,
     VertexSlices,
     positions_of,
     segment_reduce,
+    size_gate,
     sum_kernel,
 )
 from ..plans.strategy import vertex_join_side
@@ -381,32 +380,19 @@ def pagerank(
     spark = G.edges.sparkSession
     from ..plans.strategy import resolve_partitions
 
-    def block_plan(blocks):
+    P = resolve_partitions(num_partitions, G.edges)
+    # placement: mode="csr" in the executors; otherwise csr_blocks.size_gate,
+    # the driver over one collect of the gate's cache (no repartition
+    # shuffle) below the cutover, and above it the Catalyst plan, whose
+    # src-partitioned copy is built from that cache
+    blocks, own_gate = ((CsrBlocks(G, P, block_dir, weighted=True), False) if mode == "csr"
+                        else size_gate(G, weighted=True))
+    if blocks is not None:
         result, converged = _pull_plan(
             G, blocks, alpha, max_iter, tol, personalization, nstart,
             precomputed_vertex_out_weight, checkpoint, checkpoint_every, resume,
             superstep_seconds)
         return _finish(result, converged, tol, max_iter, fail_on_nonconvergence)
-
-    P = resolve_partitions(num_partitions, G.edges)
-    if mode == "csr":
-        return block_plan(CsrBlocks(G, P, block_dir, weighted=True))
-
-    # placement: the size gate counts the edge frame as it comes,
-    # persisted (a frame the caller cached is counted from that cache
-    # and stays cached). Below the cutover the block plan runs on the
-    # driver over one collect of it, with no repartition shuffle; above
-    # it the Catalyst plan's src-partitioned copy is built from it, so
-    # the O(E) upstream runs once whichever plan follows
-    thr = local_tail.LOCAL_TAIL_EDGES
-    own_gate = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
-    if own_gate:
-        G.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    if thr > 0 and G.edges.count() <= thr:
-        blocks = DriverBlocks(spark, *local_tail.collect_edges(G.edges))
-        if own_gate:
-            G.edges.unpersist()
-        return block_plan(blocks)
 
     # --- invariant side: edges + out-weight sums, partitioned once ---
     e = G.edges if G.partitioned_on(SRC) else G.edges.repartition(P, SRC)

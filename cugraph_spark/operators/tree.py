@@ -6,9 +6,10 @@ undirected weighted graph.
 
 Spark-first Borůvka: each round every component picks its minimum
 outgoing edge (deterministic tie-break on (weight, src, dst)), the
-picked edges merge components via hash-min label propagation on the
-contracted component graph, and rounds repeat until no cross-component
-edge remains — O(log V) rounds, each a groupBy + small fixpoint.
+picked edges merge components through ``weakly_connected_components``
+on the contracted component graph (the picked component pairs), and
+rounds repeat until no cross-component edge remains — O(log V) rounds,
+each a groupBy + one WCC call over at most one pair per component.
 Result is the classic MSF (forest if disconnected).
 """
 
@@ -22,12 +23,18 @@ from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, WGT, Graph
 from .pagerank import FailedToConvergeError
+from .wcc import weakly_connected_components
 
 
 def minimum_spanning_tree(G: Graph, max_rounds: int = 64) -> DataFrame:
     """Returns the MSF edge list [src, dst, weight] (src < dst) of the
     undirected graph; deterministic for ties via (weight, src, dst)
-    lexicographic minimum."""
+    lexicographic minimum. ``max_rounds`` bounds the Borůvka rounds and
+    each round's component merge (one ``weakly_connected_components``
+    call with ``max_iter=max_rounds``, on the driver placement while the
+    picked pairs fit it); a budget too small for either raises
+    ``FailedToConvergeError``, never a forest on half-merged
+    components."""
     if G.directed:
         raise ValueError("minimum_spanning_tree requires an undirected graph")
     und = (
@@ -70,61 +77,32 @@ def minimum_spanning_tree(G: Graph, max_rounds: int = 64) -> DataFrame:
         chosen = picked if chosen is None else chosen.unionByName(picked).distinct()
         chosen = chosen.transform(truncate_plan)
 
-        # merge components: hash-min over the picked component-pairs
+        # merge components: WCC over the picked component pairs labels
+        # each merged component by its min id; a merge out of supersteps
+        # leaves a picked pair split between two labels, and a silent
+        # fall-through would let the next round add a cycle edge — fail
+        # loudly instead
         pe = (
             picked.join(lab.withColumnRenamed("v", SRC).withColumnRenamed("c", "a"), SRC)
             .join(lab.withColumnRenamed("v", DST).withColumnRenamed("c", "b"), DST)
-            .select("a", "b")
+            .select(F.col("a").alias(SRC), F.col("b").alias(DST))
         )
-        pe_sym = pe.unionByName(pe.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        relabel = comp.select(F.col("c").alias("node")).distinct().withColumn("lbl", F.col("node"))
-        for _ in range(max_rounds):
-            mins = (
-                pe_sym.join(relabel, pe_sym["a"] == relabel["node"])
-                .groupBy("b").agg(F.min("lbl").alias("nm"))
-            )
-            lowered = (
-                relabel.join(mins, relabel["node"] == mins["b"], "left")
-                .select(
-                    relabel["node"],
-                    F.least(relabel["lbl"], F.coalesce("nm", relabel["lbl"])).alias("lbl"),
-                    relabel["lbl"].alias("old"),
-                )
-                .transform(truncate_plan)
-            )
-            # pointer jump (lbl ← lbl(lbl), same idiom as wcc.py): the
-            # picked edges form merge chains up to #components long, so
-            # plain hash-min alone needs O(chain) rounds — jumping makes
-            # it O(log chain), and max_rounds=64 then covers any input
-            lab2 = lowered.select(
-                F.col("node").alias("ln"), F.col("lbl").alias("ll")
-            )
-            jumped = (
-                lowered.join(lab2, lowered["lbl"] == lab2["ln"], "left")
-                .select(
-                    lowered["node"],
-                    F.coalesce("ll", lowered["lbl"]).alias("lbl"),
-                    lowered["old"],
-                )
-                .transform(truncate_plan)
-            )
-            ch = jumped.agg(
-                F.sum(F.when(F.col("lbl") != F.col("old"), 1).otherwise(0))
-            ).first()[0]
-            relabel = jumped.select("node", "lbl")
-            if not ch:
-                break
-        else:
-            # a silent fall-through would leave two halves of one merged
-            # component labeled differently and let round 2 add a cycle
-            # edge — fail loudly instead
+        merged = weakly_connected_components(
+            Graph(pe, directed=False, weighted=False), max_iter=max_rounds)
+        m = merged.select(F.col("vertex").alias("node"), F.col("labels").alias("lbl"))
+        split = (
+            pe.join(m.withColumnRenamed("node", SRC).withColumnRenamed("lbl", "la"), SRC)
+            .join(m.withColumnRenamed("node", DST).withColumnRenamed("lbl", "lb"), DST)
+            .filter(F.col("la") != F.col("lb"))
+        )
+        if not split.isEmpty():
             und.unpersist()
             raise FailedToConvergeError(
                 f"MST component merge did not converge in {max_rounds} rounds"
             )
         comp = (
-            comp.join(relabel, comp["c"] == relabel["node"])
-            .select(comp["vertex"], F.col("lbl").alias("c"))
+            comp.join(m, comp["c"] == m["node"], "left")
+            .select(comp["vertex"], F.coalesce("lbl", comp["c"]).alias("c"))
             .transform(truncate_plan)
         )
     else:

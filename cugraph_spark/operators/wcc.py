@@ -70,6 +70,18 @@ superstep's lowered ones. There is no frontier mode: a superstep cost
 its Spark job, not its edge work, on every input this was measured on
 before the supersteps shared one job.
 
+The block plan has two placements, picked by size alone, as
+PageRank's: ``mode="csr"`` runs it in the executors
+(``csr_blocks.CsrBlocks``); the default runs it on the driver
+(``csr_blocks.DriverBlocks``: one pid's two in-memory blocks, every
+pass a plain call, no Spark job per superstep) when the edge frame has
+at most ``local_tail.LOCAL_TAIL_EDGES`` rows, and the Catalyst plan
+above. The size gate is the block store's (``csr_blocks.size_gate``):
+above the cutover the Catalyst plan's edge cache is built from the
+gate's persisted copy, so the source is scanned once. Leiden's
+refinement and MST's component merge call this operator, so they take
+the same placement and the same min-id labels.
+
 Scale notes: the O(E) edge side is persisted once — hash-partitioned on
 ``src`` only when V exceeds the broadcast cutover (below it the state is
 broadcast and the edge cache is scanned in place, so pre-partitioning
@@ -100,7 +112,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import DST, SRC, Graph
 from ..plans.checkpoint import CheckpointManager
-from ..plans.csr_blocks import CsrBlocks, VertexSlices, min_kernel, positions_of
+from ..plans.csr_blocks import CsrBlocks, VertexSlices, min_kernel, positions_of, size_gate
 from ..plans.metrics import ShuffleProbe
 from ..plans import strategy
 from ..plans.strategy import vertex_join_side
@@ -144,14 +156,16 @@ def _update(verts, own, blk, L, at):
     return {"labels": new}, {"changed": int((new != old).sum())}
 
 
-def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
+def _csr_plan(G, blocks, max_iter, checkpoint, checkpoint_every, resume,
               superstep_seconds, superstep_metrics) -> DataFrame:
-    """The csr plan (module docstring): one setup job writes the label
-    slices, then ONE barrier job runs the supersteps until no label
-    changes (one per checkpoint window)."""
+    """The block plan (module docstring), placed by its store ``blocks``
+    (``CsrBlocks`` in the executors, ``DriverBlocks`` on the driver):
+    one setup pass writes the label slices, then ONE run of supersteps
+    goes until no label changes (one per checkpoint window)."""
     spark = G.edges.sparkSession
     schema = StructType([StructField("vertex", LongType()), StructField("labels", LongType())])
-    with CsrBlocks(G, P, block_dir) as blocks, VertexSlices(blocks, ("labels",)) as state:
+    mode = "driver" if blocks.in_driver else "csr"
+    with blocks, VertexSlices(blocks, ("labels",)) as state:
         frames, start_iter = [], 0
         if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
             saved, meta = checkpoint.load(spark, checkpoint.latest_iteration())
@@ -177,7 +191,7 @@ def _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
                 if d.get("shuffle_unmeasured"):
                     shuffle["shuffle_unmeasured"] = True
                 superstep_metrics.extend(
-                    {"iteration": it + j, "mode": "csr", "changed": changed,
+                    {"iteration": it + j, "mode": mode, "changed": changed,
                      "seconds": round(wall, 3), **shuffle}
                     for j, (changed, wall) in enumerate(zip(run.carries, run.seconds)))
             it += len(run.carries)
@@ -216,8 +230,12 @@ def weakly_connected_components(
     convergence by up to k−1 supersteps returns identical labels
     (same batching contract as label_propagation's ``check_every``).
 
-    The dataframe plan is chosen from V and the measured changed-count,
-    with no tuning parameter (the reference's WCC has none either):
+    Placement (module docstring): ``mode="dataframe"`` (the default)
+    runs the block plan on the driver up to
+    ``local_tail.LOCAL_TAIL_EDGES`` edge rows and the Catalyst plan
+    above; ``mode="csr"`` runs the block plan in the executors. The
+    Catalyst plan is chosen from V and the measured changed-count, with
+    no tuning parameter (the reference's WCC has none either):
 
     - broadcast-state mode while V ≤
       ``strategy.NARROW_STATE_BROADCAST_LIMIT`` (read at call time).
@@ -237,16 +255,18 @@ def weakly_connected_components(
     (``plans/metrics.py`` — the instrumented form of the zero-exchange
     claim) plus the superstep's changed-count and mode.
 
-    ``mode="csr"`` (module docstring): same labels as the dataframe
+    The block plan (module docstring): same labels as the Catalyst
     plan, on dense-id and dictionary blocks alike; the superstep count
-    may differ. The supersteps run in one barrier job (one per
-    checkpoint window) that checks every superstep's changed count, so
-    ``check_every`` has no effect; each ``superstep_metrics`` entry has
-    mode ``"csr"`` and the superstep's changed count and seconds, and
-    its shuffle fields are 0 when the job's measured shuffle is 0 and
-    None otherwise (a job's bytes are not split into supersteps). Checkpoints are
-    written from the slices in the dataframe plan's ``(vertex,
-    labels)`` format; either plan resumes the other's. ``block_dir``
+    may differ. Its supersteps run in one barrier job (one per
+    checkpoint window), or on the driver in one loop with no job, that
+    checks every superstep's changed count, so ``check_every`` has no
+    effect; each ``superstep_metrics`` entry has the placement as its
+    mode (``"csr"`` in the executors, ``"driver"`` on the driver) and
+    the superstep's changed count and seconds, and its shuffle fields
+    are 0 when the run's measured shuffle is 0 and None otherwise (a
+    job's bytes are not split into supersteps). Checkpoints are
+    written from the slices in the Catalyst plan's ``(vertex,
+    labels)`` format; every plan resumes the others'. ``block_dir``
     must be shared storage on a multi-node cluster (default: a local
     temp dir, removed on return). A dir holding a pack of THIS graph is
     reused; one packed from another graph or P, a manifest-listed block
@@ -262,8 +282,14 @@ def weakly_connected_components(
     from ..plans.strategy import resolve_partitions
 
     P = resolve_partitions(num_partitions, G.edges)
-    if mode == "csr":
-        return _csr_plan(G, P, block_dir, max_iter, checkpoint, checkpoint_every, resume,
+    # placement: mode="csr" in the executors; otherwise csr_blocks.size_gate,
+    # the driver below the cutover and above it the Catalyst plan, whose
+    # edge cache is built from the gate's cache (released once the first
+    # check has filled it)
+    blocks, own_gate = ((CsrBlocks(G, P, block_dir), False) if mode == "csr"
+                        else size_gate(G, weighted=False))
+    if blocks is not None:
+        return _csr_plan(G, blocks, max_iter, checkpoint, checkpoint_every, resume,
                          superstep_seconds, superstep_metrics)
 
     # V + id bounds come from ONE memoized job (Graph.vertex_stats —
@@ -485,7 +511,7 @@ def weakly_connected_components(
                 ).alias("c")
             )
             .first()["c"]
-        )
+        ) or 0  # the sum over no vertex (an empty graph) is NULL
         _step_wall = time.perf_counter() - _t0
         _t0 = time.perf_counter()
         if superstep_seconds is not None:
@@ -504,6 +530,9 @@ def weakly_connected_components(
                     **probe.delta(),
                 }
             )
+        if own_gate:
+            G.edges.unpersist()
+            own_gate = False
         state = jumped.select("vertex", "labels")
         prev_full = jumped
         last_changed = int(changed)
@@ -517,6 +546,8 @@ def weakly_connected_components(
             break
 
     edges.unpersist()
+    if own_gate:
+        G.edges.unpersist()
     if state is None:  # max_iter == 0: the identity labeling
         state = G.vertices().select(
             F.col("vertex").cast(id_t).alias("vertex"),

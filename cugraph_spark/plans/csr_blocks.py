@@ -107,7 +107,9 @@ local[4]: too slow for a per-superstep sync).
 :class:`DriverBlocks` places them in this process: one pid whose
 src-keyed and dst-keyed blocks are built in memory from an edge set the
 driver collected (at most ``local_tail.LOCAL_TAIL_EDGES`` rows), every
-pass a plain call with no Spark job and a run a plain loop.
+pass a plain call with no Spark job and a run a plain loop. A default
+PageRank or WCC call picks its placement by one rule, :func:`size_gate`:
+the driver up to that cutover, the operator's Catalyst plan above.
 
 Costs of the barrier job: it needs S free task slots at once, and
 Spark does not run barrier stages under dynamic allocation. Spark does
@@ -146,11 +148,13 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..graph import DST, SRC, WGT, Graph
+from . import local_tail
 from .lineage import truncate_plan
 
 DENSE_IDS_LIMIT = 1 << 26  # max hi+1 for the dense-id block format
@@ -782,6 +786,30 @@ class DriverBlocks:
         read, schema = result
         return Supersteps(carries, seconds, stop,
                           self.frame(lambda pid: read(pid, len(carries)), schema))
+
+
+def size_gate(G: Graph, weighted: bool) -> tuple[DriverBlocks | None, bool]:
+    """The placement rule of a block-plan operator's default call: the
+    edge frame as it comes is persisted (a frame the caller cached is
+    counted from that cache and left cached) and counted. At most
+    ``local_tail.LOCAL_TAIL_EDGES`` rows: one collect of the cache
+    becomes a :class:`DriverBlocks`, the cache is released, and
+    ``(blocks, False)`` is returned. Above the cutover, ``(None,
+    owned)``: the caller's Catalyst plan builds its own edge copy from
+    the cache, so the O(E) upstream (e.g. the constructor's dedup
+    shuffle) runs once whichever plan follows, and when ``owned`` (the
+    gate persisted ``G.edges``) unpersists ``G.edges`` once that copy is
+    filled. A cutover of 0 runs no job and returns ``(None, False)``."""
+    thr = local_tail.LOCAL_TAIL_EDGES
+    owned = thr > 0 and G.edges.storageLevel == StorageLevel.NONE
+    if owned:
+        G.edges.persist(StorageLevel.MEMORY_AND_DISK)
+    if thr > 0 and G.edges.count() <= thr:
+        blocks = DriverBlocks(G.edges.sparkSession, *local_tail.collect_edges(G.edges, weighted))
+        if owned:
+            G.edges.unpersist()
+        return blocks, False
+    return None, owned
 
 
 def _slice_path(state_dir: str, pid: int, name: str) -> str:

@@ -23,13 +23,16 @@ comparisons, and the update expressions mirror the distributed column
 expressions operation-for-operation. ``tests/test_local_tail.py`` pins
 local == distributed on several graphs per operator.
 
-PageRank has no twin here: below the cutover its one block plan runs
-on the driver placement (``plans/csr_blocks.py:DriverBlocks``: the
-collected edges as one pid's two in-memory blocks, the csr superstep
-skeleton run in this process), the same code the executors run for
-``mode="csr"``. Its contract is ranks within 1e-12 of the distributed
-plan, not bit-identity, stated with the plan in
-``operators/pagerank.py``. It shares only the cutover and
+PageRank and WCC have no twin here: below the cutover their block
+plans run on the driver placement (``plans/csr_blocks.py:size_gate``
+picks it and builds a ``DriverBlocks``: the collected edges as one
+pid's two in-memory blocks, the csr superstep skeleton run in this
+process), the same code the executors run for ``mode="csr"``. PageRank's
+contract is ranks within 1e-12 of the distributed plan, not
+bit-identity, stated with the plan in ``operators/pagerank.py``; WCC's
+labels are equal on every plan. Nor does Leiden's refinement or MST's
+component merge: both call ``weakly_connected_components``, so they
+take its placement. They share only the cutover and
 :func:`collect_edges`.
 
 Threshold: ``LOCAL_TAIL_EDGES`` (default 150k edge rows ≈ a few MB on
@@ -181,49 +184,6 @@ def move_phase_local(
             break
 
     return pd.DataFrame({"vertex": verts, "k": k, "labels": labels})
-
-
-# ---------------------------------------------------------------------------
-# Leiden refinement: connected components within communities (min-id label)
-# ---------------------------------------------------------------------------
-
-def refine_partition_local(
-    src: np.ndarray, dst: np.ndarray, label_of: pd.DataFrame
-) -> pd.DataFrame:
-    """Local twin of ``community._refine_partition``: split every
-    community into its connected components; refined label = min vertex
-    id in the component (the hash-min fixpoint). ``label_of`` is a
-    pandas frame [vertex, labels]. Returns [vertex, refined]."""
-    verts = label_of["vertex"].to_numpy(np.int64)
-    order = np.argsort(verts)
-    verts = verts[order]
-    labels = label_of["labels"].to_numpy(np.int64)[order]
-    n = len(verts)
-
-    lab = dict(zip(verts.tolist(), labels.tolist()))
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    nz = src != dst
-    for s, d in zip(src[nz].tolist(), dst[nz].tolist()):
-        if lab.get(s) == lab.get(d) and s in lab and d in lab:
-            si = int(np.searchsorted(verts, s))
-            di = int(np.searchsorted(verts, d))
-            ra, rb = find(si), find(di)
-            if ra != rb:
-                parent[rb] = ra
-
-    roots = np.array([find(i) for i in range(n)], dtype=np.int64)
-    # min vertex id per component
-    comp_min = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-    np.minimum.at(comp_min, roots, verts)
-    refined = comp_min[roots]
-    return pd.DataFrame({"vertex": verts, "refined": refined})
 
 
 # ---------------------------------------------------------------------------

@@ -57,29 +57,39 @@ def _spy(calls, name, real, *args, **kwargs):
     return real(*args, **kwargs)
 
 
+def _spy_gate(calls, name, real, *args, **kwargs):
+    blocks, owned = real(*args, **kwargs)
+    if blocks is not None:
+        calls.append(name)
+    return blocks, owned
+
+
 @pytest.fixture
 def tail_plan(monkeypatch):
     """``with tail_plan("local") as calls:`` runs a block with the
     driver-local tail cutover (``local_tail.LOCAL_TAIL_EDGES``) so high
     that every test graph takes the local plan; ``"distributed"`` sets
     it to 0, so none does. ``calls`` records the name of every
-    driver-local kernel (``local_tail.*_local``) and every PageRank
-    block-plan run on the driver placement (``pagerank.DriverBlocks``)
-    the block ran, which proves the plan."""
+    driver-local kernel (``local_tail.*_local``) and every driver
+    placement the size gate picked (``csr_blocks.size_gate`` as
+    PageRank and WCC call it, and through WCC Leiden's refinement and
+    MST's merge) the block ran, which proves the plan."""
     from cugraph_spark.plans import local_tail
 
-    # the package re-exports the pagerank function under the module's name
-    pagerank = importlib.import_module("cugraph_spark.operators.pagerank")
-    spied = [(local_tail, n) for n in vars(local_tail) if n.endswith("_local")]
-    spied.append((pagerank, "DriverBlocks"))
+    spied = [(local_tail, n, _spy) for n in vars(local_tail) if n.endswith("_local")]
+    # the package re-exports each operator function under its module's
+    # name, so the modules are imported by path
+    for op in ("pagerank", "wcc"):
+        spied.append((importlib.import_module(f"cugraph_spark.operators.{op}"), "size_gate",
+                      _spy_gate))
 
     @contextlib.contextmanager
     def plan(name):
         calls: list = []
         with monkeypatch.context() as m:
             m.setattr(local_tail, "LOCAL_TAIL_EDGES", {"local": 10**9, "distributed": 0}[name])
-            for mod, k in spied:
-                m.setattr(mod, k, functools.partial(_spy, calls, k, getattr(mod, k)))
+            for mod, k, spy in spied:
+                m.setattr(mod, k, functools.partial(spy, calls, k, getattr(mod, k)))
             yield calls
 
     return plan

@@ -61,7 +61,7 @@ def test_pagerank_matches_on_bucketed_graph(spark, tmp_path, distributed_tail):
         assert abs(a[v] - b[v]) < 1e-12
 
 
-def test_wcc_matches_on_bucketed_symmetric_graph(spark, tmp_path):
+def test_wcc_matches_on_bucketed_symmetric_graph(spark, tmp_path, distributed_tail):
     # writer contract: undirected graphs are bucketed in their
     # symmetrized physical form; the reader trusts it (directed=False)
     Gn = Graph(edges_df(spark, make_edges("tiny_social")), directed=False)
@@ -94,7 +94,7 @@ def test_pagerank_ignores_dst_layout(spark, tmp_path, distributed_tail):
         assert abs(a[v] - b[v]) < 1e-12
 
 
-def test_dst_bucketed_int32_wcc_lpa_match_and_skip_shuffle(spark, tmp_path):
+def test_dst_bucketed_int32_wcc_lpa_match_and_skip_shuffle(spark, tmp_path, distributed_tail):
     """dst-bucketed table with int32 ids: the broadcast-mode
     zero-exchange superstep trusts the stored layout — labels identical
     to the plain path, and the plan-side guarantee is that neither a

@@ -153,7 +153,7 @@ def test_pagerank_resume_lacking_a_vertex_raises(spark, tmp_path, monkeypatch, p
                  checkpoint_every=2, resume=True).collect()
 
 
-def test_wcc_resume(spark, tmp_path):
+def test_wcc_resume(spark, tmp_path, distributed_tail):
     edges = make_edges("disjoint")
     G = Graph(edges_df(spark, edges), directed=False)
     full = {r["vertex"]: r["labels"] for r in weakly_connected_components(G).collect()}
@@ -170,23 +170,35 @@ def test_wcc_resume(spark, tmp_path):
     assert resumed == full
 
 
-@pytest.mark.parametrize("first,second", [("csr", "dataframe"), ("dataframe", "csr")])
-def test_wcc_resume_across_csr(spark, tmp_path, first, second):
-    """A WCC run checkpointed on the csr plan (written from its label
-    slices) resumes on the dataframe plan, and the reverse, matching an
-    uninterrupted run — on ids above 2^53, which no double holds
-    exactly (2^60 + 1 rounds to 2^60, not a vertex here)."""
+# WCC plan -> (LOCAL_TAIL_EDGES, mode)
+_WCC_PLANS = {"driver": (10**9, "dataframe"), "dataframe": (0, "dataframe"), "csr": (0, "csr")}
+
+
+@pytest.mark.parametrize("first,second", [("csr", "dataframe"), ("dataframe", "csr"),
+                                          ("driver", "dataframe"), ("dataframe", "driver")])
+def test_wcc_resume_across_csr(spark, tmp_path, monkeypatch, first, second):
+    """A WCC run checkpointed by the block plan (in the executors or on
+    the driver, written from its label slices) resumes on the Catalyst
+    plan, and the reverse, matching an uninterrupted run — on ids above
+    2^53, which no double holds exactly (2^60 + 1 rounds to 2^60, not a
+    vertex here)."""
+    from cugraph_spark.plans import local_tail
+
+    def run(plan, **kw):
+        monkeypatch.setattr(local_tail, "LOCAL_TAIL_EDGES", _WCC_PLANS[plan][0])
+        return weakly_connected_components(G, mode=_WCC_PLANS[plan][1], checkpoint=cp,
+                                           checkpoint_every=1, **kw)
+
     big = 2**60 + 1
     p = [(big + i, big + i + 1, 1.0) for i in range(80)]
     G = Graph(edges_df(spark, p + [(b, a, w) for a, b, w in p]), directed=False)
     full = {r["vertex"]: r["labels"] for r in weakly_connected_components(G).collect()}
     cp = CheckpointManager(str(tmp_path), "wcc_csr")
-    weakly_connected_components(G, mode=first, max_iter=2, checkpoint=cp, checkpoint_every=1)
+    run(first, max_iter=2)
     assert cp.latest_iteration() == 1
     assert [f.name for f in cp.load(spark, 1)[0].schema] == ["vertex", "labels"]
     ss: list = []
-    resumed = weakly_connected_components(G, mode=second, checkpoint=cp, checkpoint_every=1,
-                                          resume=True, superstep_seconds=ss)
+    resumed = run(second, resume=True, superstep_seconds=ss)
     assert {r["vertex"]: r["labels"] for r in resumed.collect()} == full
     assert ss and cp.latest_iteration() == 1 + len(ss)
 
@@ -220,7 +232,7 @@ def test_pagerank_parallelism_invariant(spark, parts, distributed_tail):
 
 
 @pytest.mark.parametrize("parts", [3, 16])
-def test_wcc_parallelism_invariant(spark, parts):
+def test_wcc_parallelism_invariant(spark, parts, distributed_tail):
     edges = make_edges("disjoint")
     G = Graph(edges_df(spark, edges), directed=False)
     base = {r["vertex"]: r["labels"]

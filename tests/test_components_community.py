@@ -82,7 +82,7 @@ def test_wcc_self_loops_ok(spark):
 
 
 @pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
-def test_wcc_frontier_mode_identical(spark, kind, plan_cutover):
+def test_wcc_frontier_mode_identical(spark, kind, plan_cutover, distributed_tail):
     """Frontier/delta supersteps (announce-only-changed + partial
     pointer jump) must produce the exact dense-mode labels — forced on
     from superstep 1 (huge threshold), at the auto threshold, and
@@ -100,7 +100,7 @@ def test_wcc_frontier_mode_identical(spark, kind, plan_cutover):
     assert dense == {v: int(ref[v]) for v in sorted(dense)}
 
 
-def test_wcc_frontier_long_path_converges(spark, plan_cutover):
+def test_wcc_frontier_long_path_converges(spark, plan_cutover, distributed_tail):
     """A diameter-heavy path under forced-frontier mode: the partial
     jump only accelerates changed rows, so this exercises many frontier
     supersteps; labels must still reach the exact fixpoint."""
@@ -132,7 +132,7 @@ def test_lpa_frontier_mode_identical(spark, kind, plan_cutover):
         assert dense == forced == auto, (kind, kw)
 
 
-def test_wcc_superstep_metrics_contract(spark, plan_cutover):
+def test_wcc_superstep_metrics_contract(spark, plan_cutover, distributed_tail):
     """superstep_metrics emits one dict per checking action with the
     measured shuffle deltas, changed-count, wall, and mode — and
     frontier mode actually engages when forced."""
@@ -212,7 +212,7 @@ def test_tc_packed_closing_leg_identical(spark, monkeypatch):
     monkeypatch.undo()
 
 
-def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
+def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch, distributed_tail):
     """The broadcast-mode dst-partitioned layout (taken when
     DST_PARTITION_MIN_V ≤ V ≤ NARROW_STATE_BROADCAST_LIMIT) must produce
     labels identical to the default path — exercised here by dropping
@@ -234,7 +234,7 @@ def test_wcc_dst_partitioned_broadcast_mode_identical(spark, monkeypatch):
         assert got3 == base, kind
 
 
-def test_wcc_shuffle_mode_forced_identical(spark, plan_cutover, monkeypatch):
+def test_wcc_shuffle_mode_forced_identical(spark, plan_cutover, monkeypatch, distributed_tail):
     """A broadcast cutover of 0 forces the shuffle-hash path on graphs
     that would otherwise broadcast; labels must match, and the join
     spy shows which plan each run took."""
@@ -280,7 +280,7 @@ def test_lpa_dst_partitioned_broadcast_mode_identical(spark, monkeypatch, plan_c
         assert forced == base, kind
 
 
-def test_narrow_state_cutover_is_read_at_call_time(spark, monkeypatch, plan_cutover):
+def test_narrow_state_cutover_is_read_at_call_time(spark, monkeypatch, plan_cutover, distributed_tail):
     """WCC and LPA read their broadcast cutover from
     ``strategy.NARROW_STATE_BROADCAST_LIMIT`` on every call, so
     lowering that one constant at run time moves both onto the
@@ -309,7 +309,7 @@ def test_lpa_matches_oracle(spark, kind):
     assert got == {v: int(ref[v]) for v in sorted(got)}
 
 
-def test_wcc_check_every_identical(spark):
+def test_wcc_check_every_identical(spark, distributed_tail):
     """Batched WCC convergence checks must not change labels: a stable
     labeling is a fixpoint of hash-min + pointer-jump, so overshooting
     convergence inside a lazy chain is a no-op."""
@@ -366,7 +366,7 @@ def test_total_triangles_is_sum_over_three(spark):
     assert counts.sum() % 3 == 0
 
 
-def test_wcc_large_ids_use_long_path(spark):
+def test_wcc_large_ids_use_long_path(spark, distributed_tail):
     """Vertex ids beyond int32 range must skip the narrow-id compaction
     and still produce correct min-id labels (the compact branch is
     bounds-checked, simpleGraph.py:253-258 analog)."""
@@ -385,27 +385,48 @@ def test_wcc_large_ids_use_long_path(spark):
 # ---------------------------------------------------------------- round 5
 
 
-@pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub"])
-def test_wcc_csr_mode_identical(spark, kind, tmp_path, plan_cutover):
-    """mode='csr' (label slices beside packed mmap blocks, a pull-min
-    and pointer-jump pass per superstep) must produce the exact
-    dataframe-mode labels — on the dense-id blocks the operator packs
+def _wcc_edges(kind: str):
+    """A WCC fixture's edges: ``make_edges(kind)``, or one of two inputs
+    the oracle's dense id range cannot hold — ids above 2^31, and no
+    edge at all."""
+    if kind == "empty":
+        return []
+    if kind == "big_ids":
+        big = 5_000_000_000
+        return [(big, big + 1, 1.0), (big + 1, big + 2, 1.0), (7, 8, 1.0)]
+    return make_edges(kind)
+
+
+@pytest.mark.parametrize("kind", ["tiny_social", "disjoint", "line", "hub", "self_loops",
+                                  "isolated", "big_ids", "empty"])
+def test_wcc_csr_mode_identical(spark, kind, tmp_path, plan_cutover, tail_plan):
+    """The block plan gives the exact labels of the Catalyst plan on
+    both placements: on the driver (default WCC below the cutover, the
+    size gate's spy shows it ran) and in the executors (mode='csr',
+    label slices beside packed mmap blocks, a pull-min and pointer-jump
+    pass per superstep) — on the dense-id blocks the operator packs
     itself AND on dictionary blocks (packed externally without
-    id_bounds, reused via block_dir). Every superstep is tagged
-    ``csr``."""
+    id_bounds, reused via block_dir). Every superstep is tagged with
+    the placement that ran it, ``driver`` or ``csr``."""
     from cugraph_spark.plans.csr_blocks import pack_edges
 
-    edges = make_edges(kind)
+    edges = _wcc_edges(kind)
     G = Graph(edges_df(spark, edges), directed=False)
-    base = _as_map(weakly_connected_components(G).collect())
+    with tail_plan("distributed") as calls:
+        base, modes = _run(weakly_connected_components, G, plan_cutover)
+    assert not calls and modes and not {"driver", "csr"} & set(modes)
+    with tail_plan("local") as calls:
+        got, modes = _run(weakly_connected_components, G, plan_cutover)
+    assert calls == ["size_gate"] and got == base and set(modes) == {"driver"}, kind
     dict_dir = str(tmp_path / "dict_blocks")
     pack_edges(G.edges, dict_dir, 8)
     for kw in ({}, {"block_dir": dict_dir, "num_partitions": 8}):
         got, modes = _run(weakly_connected_components, G, plan_cutover, mode="csr", **kw)
         assert got == base, (kind, kw)
         assert modes and set(modes) == {"csr"}, (kind, kw)
-    ref = wcc_ref(edges)
-    assert base == {v: int(ref[v]) for v in sorted(base)}
+    if kind not in ("big_ids", "empty"):
+        ref = wcc_ref(edges)
+        assert base == {v: int(ref[v]) for v in sorted(base)}
 
 
 def test_wcc_csr_frontier_engages_and_long_path(spark):
@@ -433,7 +454,9 @@ def test_wcc_bfs_csr_one_job_per_superstep(spark, tmp_path):
     """The csr WCC supersteps and the csr BFS levels of a call run in
     ONE Spark job (a barrier job) with no shuffle: two runs with
     different ``max_iter`` / ``max_depth`` run the same number of jobs,
-    and every WCC superstep's measured shuffle is 0 bytes."""
+    and every WCC superstep's measured shuffle is 0 bytes. Default WCC
+    on this graph (below the cutover) runs its supersteps on the driver
+    with no Spark job at all: its two runs start equal job counts too."""
     from cugraph_spark.operators.traversal import bfs
 
     p = [(i, i + 1, 1.0) for i in range(200)]
@@ -444,8 +467,12 @@ def test_wcc_bfs_csr_one_job_per_superstep(spark, tmp_path):
         G.edge_rows()
         G.vertex_stats()
         weakly_connected_components(G, mode="csr", block_dir=bdir, max_iter=1)  # packs
-        wcc_jobs, bfs_jobs, steps = {}, {}, {}
+        wcc_jobs, bfs_jobs, steps, driver_jobs = {}, {}, {}, {}
         for n in (2, 5):
+            m = []
+            driver_jobs[n] = _group_jobs(spark, f"wcc_driver_jobs_{n}", lambda: (
+                weakly_connected_components(G, max_iter=n, superstep_metrics=m)))
+            assert len(m) == n and all(e["mode"] == "driver" for e in m), m
             ss: list = []
             m: list = []
             wcc_jobs[n] = _group_jobs(spark, f"wcc_jobs_{n}", lambda: weakly_connected_components(
@@ -460,6 +487,7 @@ def test_wcc_bfs_csr_one_job_per_superstep(spark, tmp_path):
         G.edges.unpersist()
     assert steps == {2: 2, 5: 5}
     assert wcc_jobs[5] == wcc_jobs[2], wcc_jobs
+    assert driver_jobs[5] == driver_jobs[2], driver_jobs
     assert bfs_jobs[5] == bfs_jobs[2], bfs_jobs
     assert wcc_jobs[2] <= 1 + 6 and bfs_jobs[2] <= 1 + 6, (wcc_jobs, bfs_jobs)
 

@@ -27,11 +27,12 @@ from cugraph_spark.operators.community import ecg, leiden, louvain
 from cugraph_spark.operators.cores import core_number
 from cugraph_spark.operators.mis import maximal_independent_set, vertex_coloring
 from cugraph_spark.operators.pagerank import FailedToConvergeError, pagerank
+from cugraph_spark.operators.wcc import weakly_connected_components
 from cugraph_spark.plans import local_tail
 from cugraph_spark.plans.checkpoint import CheckpointManager
 from cugraph_spark.plans.xxh64 import pmod2, xxhash64
 
-from .conftest import edges_df, make_edges
+from .conftest import edges_df, make_edges, sym_tuples
 
 def _graph(spark, kind="weighted"):
     e = spark.createDataFrame(make_edges(kind), "src long, dst long, weight double")
@@ -373,14 +374,16 @@ def test_pagerank_local_side_inputs_cost_one_collect(spark):
         assert len(jobs) <= most, (name, jobs)
 
 
-@pytest.mark.parametrize("given_ows", [False, True])
-def test_pagerank_gate_scans_source_once(spark, tail_plan, plan_cutover, given_ows):
-    """Just above the cutover the size gate's count, the src-partitioned
-    copy the distributed plan builds from the gate's cache and the
-    vertex state all read ONE scan of the source: a row counter in the
-    source shows each source row read once in the whole call — also
-    when precomputed out-weights mean the vertex state never reads the
-    edges."""
+@pytest.mark.parametrize("op,given_ows", [pytest.param("pagerank", False, id="False"),
+                                           pytest.param("pagerank", True, id="True"),
+                                           pytest.param("wcc", False, id="wcc")])
+def test_pagerank_gate_scans_source_once(spark, tail_plan, plan_cutover, op, given_ows):
+    """Just above the cutover the size gate's count and all the Catalyst
+    plan reads — PageRank's src-partitioned copy and vertex state,
+    WCC's vertex stats and edge cache — read ONE scan of the source: a
+    row counter in the source shows each source row read once in the
+    whole call — also when precomputed out-weights mean PageRank's
+    vertex state never reads the edges."""
     n = 600
     scanned = spark.sparkContext.accumulator(0)
 
@@ -388,34 +391,54 @@ def test_pagerank_gate_scans_source_once(spark, tail_plan, plan_cutover, given_o
         for pdf in batches:
             scanned.add(len(pdf))
             ids = pdf["id"].to_numpy()
-            yield pd.DataFrame({"src": ids % 97, "dst": (ids * 7 + 1) % 97, "weight": 1.0})
+            src, dst = ids % 97, (ids * 7 + 1) % 97
+            if op == "wcc":  # the symmetrized form, both directions of each row
+                src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+            yield pd.DataFrame({"src": src, "dst": dst, "weight": 1.0})
 
     e = spark.range(n, numPartitions=4).mapInPandas(source, "src long, dst long, weight double")
-    G = Graph(e, directed=True)  # the multi-edge dedup shuffles the source
+    # the multi-edge dedup shuffles the source (a symmetrized source:
+    # the constructor's own symmetrize reads its input twice)
+    G = Graph(e, directed=op == "pagerank", assume_symmetric=op == "wcc")
     ids = np.arange(n)
-    n_edges = len(set(zip(ids % 97, (ids * 7 + 1) % 97)))
+    pairs = set(zip(ids % 97, (ids * 7 + 1) % 97))
+    if op == "wcc":
+        pairs |= {(b, a) for a, b in pairs}
     kw = {}
     if given_ows:
         kw["precomputed_vertex_out_weight"] = spark.createDataFrame(
             [(v, 1.0) for v in range(97)], "vertex long, ows double")
     with tail_plan("distributed") as calls:
-        with plan_cutover(local_tail, "LOCAL_TAIL_EDGES", n_edges - 1):
-            ranks = pagerank(G, tol=1e-6, max_iter=100, **kw).collect()
-    assert not calls and len(ranks) == 97
+        with plan_cutover(local_tail, "LOCAL_TAIL_EDGES", len(pairs) - 1):
+            if op == "wcc":
+                rows = weakly_connected_components(G).collect()
+            else:
+                rows = pagerank(G, tol=1e-6, max_iter=100, **kw).collect()
+    assert not calls and len(rows) == 97
     assert scanned.value == n
 
 
-@pytest.mark.parametrize("plan", ["local", "distributed"])
-def test_pagerank_keeps_callers_edge_cache(spark, tail_plan, plan):
+@pytest.mark.parametrize("op,plan", [pytest.param("pagerank", p, id=p) for p in ("local", "distributed")]
+                         + [pytest.param("wcc", p, id=f"wcc-{p}") for p in ("local", "distributed")])
+def test_pagerank_keeps_callers_edge_cache(spark, tail_plan, op, plan):
     """A caller's cache of the edge frame outlives the call on both
-    plans, also for a src-partitioned graph, whose edge frame the
-    distributed plan reads in place."""
-    e = spark.createDataFrame(make_edges("directed_asym"), "src long, dst long, weight double")
-    G = Graph(e, directed=True, multi_edge=True, pre_partitioned=True)
+    plans, also for a src-partitioned graph, whose edge frame
+    PageRank's Catalyst plan reads in place."""
+    edges = make_edges("directed_asym")
+    if op == "wcc":
+        edges = sym_tuples(edges)
+    e = spark.createDataFrame(edges, "src long, dst long, weight double")
+    G = Graph(e, directed=op == "pagerank", multi_edge=True, pre_partitioned=True,
+              assume_symmetric=op == "wcc")
+    assert G.partitioned_on("src")
     G.edges.persist()
     try:
-        with tail_plan(plan):
-            pagerank(G, tol=1e-6).count()
+        with tail_plan(plan) as calls:
+            if op == "wcc":
+                weakly_connected_components(G).count()
+            else:
+                pagerank(G, tol=1e-6).count()
+        assert bool(calls) == (plan == "local")
         assert G.edges.storageLevel != StorageLevel.NONE
     finally:
         G.edges.unpersist()

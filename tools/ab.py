@@ -19,20 +19,25 @@ the plan cutovers the tests patch, set for the arm's runs only:
                (wcc, lpa; 0 = every superstep dense)
   broadcast=N  ``strategy.NARROW_STATE_BROADCAST_LIMIT``, the
                broadcast-state cutover (wcc, lpa; 0 = shuffle-hash)
+  tail=N       ``local_tail.LOCAL_TAIL_EDGES``, the driver-placement
+               cutover (0 = no call runs on the driver)
 
-Both shape only dataframe plans: a wcc arm with ``mode=csr`` rejects
-them.
+All three shape only dataframe plans: a wcc arm with ``mode=csr``
+rejects them.
 
 ``N`` may be ``always`` (10**18). ``block_dir=fresh`` packs into a new
 directory per run (pack in the wall); ``block_dir=shared`` reuses one
 directory packed before the first timed run, its transposed ``T/`` set
 included (stored blocks). Presets:
 
-  dataframe  {}                         the automatic dataframe plan
+  dataframe  tail=0                     the automatic Catalyst plan
   csr        mode=csr,block_dir=fresh
   stored     mode=csr,block_dir=shared
-  dense      frontier=0
-  frontier   frontier=always            frontier from superstep 1
+  dense      frontier=0,tail=0
+  frontier   frontier=always,tail=0     frontier from superstep 1
+
+(below the cutover default PageRank and WCC run the block plan on the
+driver, so the Catalyst presets set ``tail=0``).
 
 Before any timed run, the first arm is called once untimed and its
 result discarded (a ``fresh`` warm-up packs into a directory of its
@@ -101,11 +106,11 @@ from perfbench.probe import cpu_seconds, host_marker  # noqa: E402
 ALWAYS = 10**18
 
 PRESETS = {
-    "dataframe": {},
+    "dataframe": {"tail": 0},
     "csr": {"mode": "csr", "block_dir": "fresh"},
     "stored": {"mode": "csr", "block_dir": "shared"},
-    "dense": {"frontier": 0},
-    "frontier": {"frontier": ALWAYS},
+    "dense": {"frontier": 0, "tail": 0},
+    "frontier": {"frontier": ALWAYS, "tail": 0},
 }
 
 # operator -> (module, function, default kwargs, per-superstep out-list kwarg)
@@ -120,9 +125,10 @@ OPERATORS = {
                   "fail_on_nonconvergence": False}, "superstep_seconds"),
 }
 TRACE_KEY = {"superstep_metrics": "metrics", "superstep_seconds": "steps"}
-PATCH_KEYS = ("frontier", "broadcast")
-# the operators that read each patch key
-PATCHABLE = {"frontier": ("wcc", "lpa"), "broadcast": ("wcc", "lpa")}
+PATCH_KEYS = ("frontier", "broadcast", "tail")
+# the operators each patch key applies to (tail=0 keeps any operator
+# off the driver, so every one takes it)
+PATCHABLE = {"frontier": ("wcc", "lpa"), "broadcast": ("wcc", "lpa"), "tail": tuple(OPERATORS)}
 
 
 def _value(text: str):
@@ -156,11 +162,12 @@ def parse_arm(token: str, operator: str) -> tuple[str, dict]:
 @contextlib.contextmanager
 def patched(module, settings: dict):
     """Set the arm's plan cutovers for the block; restore them after."""
-    from cugraph_spark.plans import strategy
+    from cugraph_spark.plans import local_tail, strategy
 
     targets = {
         "frontier": (module, "_frontier_threshold"),
         "broadcast": (strategy, "NARROW_STATE_BROADCAST_LIMIT"),
+        "tail": (local_tail, "LOCAL_TAIL_EDGES"),
     }
     saved = []
     try:
@@ -171,7 +178,7 @@ def patched(module, settings: dict):
             old = getattr(mod, name)
             saved.append((mod, name, old))
             value = settings[key]
-            setattr(mod, name, (lambda *a: value) if callable(old) else value)
+            setattr(mod, name, (lambda *a, v=value: v) if callable(old) else value)
         yield
     finally:
         for mod, name, old in reversed(saved):

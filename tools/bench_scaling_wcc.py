@@ -57,7 +57,11 @@ from cugraph_spark.sources.rmat import rmat_edges
 from cugraph_spark.graph import Graph, symmetrize
 from cugraph_spark.operators import wcc as wcc_mod
 from cugraph_spark.operators.wcc import weakly_connected_components
+from cugraph_spark.plans import local_tail
 
+# the harness times the distributed plans: at or under the cutover
+# WCC would run on the driver, so force them the way the tests do
+local_tail.LOCAL_TAIL_EDGES = 0
 spark = get_spark(app_name="bench_scaling_wcc")
 e = rmat_edges(spark, scale={scale}, edgefactor=16, seed=42)
 se = (
