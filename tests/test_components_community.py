@@ -456,7 +456,7 @@ def test_wcc_bfs_csr_one_job_per_superstep(spark, tmp_path):
     different ``max_iter`` / ``max_depth`` run the same number of jobs,
     and every WCC superstep's measured shuffle is 0 bytes. Default WCC
     on this graph (below the cutover) runs its supersteps on the driver
-    with no Spark job at all: its two runs start equal job counts too."""
+    in no Spark job at all: its two runs run equal job counts too."""
     from cugraph_spark.operators.traversal import bfs
 
     p = [(i, i + 1, 1.0) for i in range(200)]
