@@ -30,10 +30,10 @@ pid's two in-memory blocks, the csr superstep skeleton run in this
 process), the same code the executors run for ``mode="csr"``. PageRank's
 contract is ranks within 1e-12 of the distributed plan, not
 bit-identity, stated with the plan in ``operators/pagerank.py``; WCC's
-labels are equal on every plan. Nor does Leiden's refinement or MST's
-component merge: both call ``weakly_connected_components``, so they
-take its placement. They share only the cutover and
-:func:`collect_edges`.
+labels are equal on every plan. Both share only the cutover and
+:func:`collect_edges` with this module. Leiden's refinement and MST's
+component merge have no twin either: both call
+``weakly_connected_components``, so they take its placement.
 
 Threshold: ``LOCAL_TAIL_EDGES`` (default 150k edge rows ≈ a few MB on
 the driver — far below the footprint of collecting a query result).
